@@ -134,8 +134,8 @@ def encode_run(cpus: int, src_path: str, out_dir: str,
         cluster the block write goes to distributed storage whose
         bandwidth scales with the nodes, but this sandbox has exactly
         one disk, so including the write would measure that disk.
-      * full job: encode_table incl. block parquet write + manifest,
-        reported alongside for transparency.
+      * full job: encode_parquet_dir_direct incl. block parquet write
+        + manifest, reported alongside for transparency.
     The scaling legs use the zero-shuffle mapside layout: on a real
     cluster the token table is already source-clustered (Iceberg
     write layout), so the at-scale encode path has no reason to move
@@ -143,22 +143,19 @@ def encode_run(cpus: int, src_path: str, out_dir: str,
     full-data shuffle measures the one shared disk, not the engine.
     The clustered layout is benchmarked separately in BENCH.md.
 
-    Transport: the file-granular source (rle_spark.sources) by
-    default — Spark's JVM row->Arrow conversion of array<int> columns
-    is 2-4x slower than each task reading its own row groups with
-    pyarrow (measured in sources.py's docstring); set
-    RLE_BENCH_TRANSPORT=dataframe for the JVM-scan path.
+    Transport: the file-granular source (rle_spark.sources) — Spark's
+    JVM row->Arrow conversion of array<int> columns is 2-4x slower
+    than each task reading its own row groups with pyarrow (measured
+    in sources.py's docstring).
     """
     from pyspark.sql import functions as F
-    from rle_spark.engine import (EngineConfig, encode_dataframe,
-                                  encode_table, warm_python_workers)
+    from rle_spark.engine import EngineConfig, warm_python_workers
     from rle_spark.sources import (decode_parquet_dir_summary,
                                    encode_parquet_dir_direct,
                                    encode_parquet_dir_summary)
-    use_files = os.environ.get("RLE_BENCH_TRANSPORT", "files") != "dataframe"
     # one task wave per core by default: the bench corpus has uniform
     # row groups, and every extra wave pays ~200 ms/task python-worker
-    # setup on this host (see sources._split_df)
+    # setup (see sources._map_splits)
     n_tasks = cpus * int(os.environ.get("RLE_BENCH_TASKS_PER_CPU", "1"))
     spark = (make_spark(cpus, f"bench-encode-{cpus}"))
     spark.sparkContext.setLogLevel("ERROR")
@@ -178,15 +175,12 @@ def encode_run(cpus: int, src_path: str, out_dir: str,
         def blocks_df(rep: int, path: str = src_path):
             # fresh lineage per run (the _rep literal changes the plan)
             # so Spark cannot serve a repeat from reused stage output.
-            # files transport: summary kernel (payload dropped in-task;
-            # the real job writes it python-side, never IPCs it back)
-            if use_files:
-                return (encode_parquet_dir_summary(
-                    spark, path, cfg, target_split_bytes=16 << 20,
-                    n_tasks=n_tasks)
-                    .withColumn("_rep", F.lit(rep)))
-            return encode_dataframe(spark.read.parquet(path)
-                                    .withColumn("_rep", F.lit(rep)), cfg)
+            # summary kernel: payload dropped in-task (the real job
+            # writes it python-side, never IPCs it back)
+            return (encode_parquet_dir_summary(
+                spark, path, cfg, target_split_bytes=16 << 20,
+                n_tasks=n_tasks)
+                .withColumn("_rep", F.lit(rep)))
 
         # untimed dry encode (reference protocol src/main.c:808-811):
         # first runs are consistently slowest (codegen/JIT + allocator
@@ -215,33 +209,22 @@ def encode_run(cpus: int, src_path: str, out_dir: str,
         for _ in range(job_runs):
             shutil.rmtree(out_dir, ignore_errors=True)
             t0 = time.time()
-            if use_files:
-                summary = encode_parquet_dir_direct(
-                    spark, src_path, out_dir, cfg,
-                    target_split_bytes=16 << 20, n_tasks=n_tasks)
-            else:
-                summary = encode_table(spark, spark.read.parquet(src_path),
-                                       out_dir, cfg, resume=False)
+            summary = encode_parquet_dir_direct(
+                spark, src_path, out_dir, cfg,
+                target_split_bytes=16 << 20, n_tasks=n_tasks)
             job_walls.append(time.time() - t0)
         # decode throughput over the written blocks (the reference
-        # reports decode alongside encode for every codec). files
-        # transport: tasks read block files with pyarrow and
-        # materialize the decoded arrays python-side (where a training
-        # dataloader consumes them), returning only counts
-        from rle_spark.engine import decode_dataframe, read_encoded
+        # reports decode alongside encode for every codec): tasks read
+        # block files with pyarrow and materialize the decoded arrays
+        # python-side (where a training dataloader consumes them),
+        # returning only counts
         decode_walls = []
         for i in range(stage_runs):
-            if use_files:
-                dec = (decode_parquet_dir_summary(spark, out_dir,
-                                                  n_tasks=n_tasks)
-                       .withColumn("_rep", F.lit(i)))
-                t0 = time.time()
-                dec.agg(F.sum("n_tokens")).collect()
-            else:
-                dec = decode_dataframe(
-                    read_encoded(spark, out_dir).withColumn("_rep", F.lit(i)))
-                t0 = time.time()
-                dec.agg(F.sum(F.size("tokens"))).collect()
+            dec = (decode_parquet_dir_summary(spark, out_dir,
+                                              n_tasks=n_tasks)
+                   .withColumn("_rep", F.lit(i)))
+            t0 = time.time()
+            dec.agg(F.sum("n_tokens")).collect()
             decode_walls.append(time.time() - t0)
         wall = min(stage_walls)
         dwall = min(decode_walls)

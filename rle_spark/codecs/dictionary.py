@@ -54,6 +54,8 @@ def dict_encode(arr: np.ndarray) -> bytes:
     # int64 promotion was a full extra pass); only the SMALL dict
     # table is widened for the exact delta math below
     a = np.ascontiguousarray(arr)
+    if not np.issubdtype(a.dtype, np.integer):
+        raise TypeError(f"dict_encode needs an integer array, got {a.dtype}")
     uniq, inv = _unique_inverse(a)
     uniq = uniq.astype(np.int64, copy=False)
     deltas = np.diff(uniq, prepend=uniq[:1]) if len(uniq) else uniq

@@ -48,6 +48,11 @@ from .base import (
 )
 
 DEFAULT_MIN_RUN = 3
+# k runs over n symbols take the O(k) slice-copy kernels when
+# k * SPARSE_RUN_SPAN < n (on average more than this many symbols per
+# run), and the vectorized mask/repeat kernels otherwise; encode and
+# decode must agree on the cut
+SPARSE_RUN_SPAN = 2500
 
 
 def split_runs_literals(sym: np.ndarray, min_run: int = DEFAULT_MIN_RUN):
@@ -69,7 +74,7 @@ def split_runs_literals(sym: np.ndarray, min_run: int = DEFAULT_MIN_RUN):
     k = len(run_lens)
     if not total_lit:
         lit_values = sym[:0]
-    elif k * 2500 < n:
+    elif k * SPARSE_RUN_SPAN < n:
         # few runs (the token-corpus shape: ~0.3 runs/ktok): copy the
         # k+1 contiguous literal spans with plain slices — memcpy
         # speed, no O(n) mask build. The python loop is over RUNS, not
@@ -274,7 +279,7 @@ def rle_decode_symbols(buf: bytes | memoryview, dtype) -> np.ndarray:
     k = len(run_lens)
     if k == 0:
         out = lit_values
-    elif k * 2500 < (n := int(lit_lens.sum() + run_lens.sum())):
+    elif k * SPARSE_RUN_SPAN < (n := int(lit_lens.sum() + run_lens.sum())):
         # sparse runs (the token-corpus shape): alternate O(k) slice
         # copies (literal spans, memcpy speed) and scalar fills (runs,
         # memset speed) into a preallocated output — np.repeat walks

@@ -137,10 +137,6 @@ def apply_buckets(df: DataFrame, buckets: dict[str, int]) -> DataFrame:
     )
 
 
-def plan_buckets(df: DataFrame, cfg: EngineConfig) -> DataFrame:
-    return apply_buckets(df, bucket_counts(df, cfg))
-
-
 def _arrange(bucketed: DataFrame, buckets: dict[str, int]) -> DataFrame:
     """One explicit shuffle sized to the bucket count.
 
@@ -375,13 +371,24 @@ def encode_dataframe(df: DataFrame, cfg: EngineConfig | None = None) -> DataFram
 
     Lazy: returns the block DataFrame; one shuffle (source, bucket).
     """
-    cfg = cfg or EngineConfig()
+    return _encode_plan(df, cfg or EngineConfig())
+
+
+def _encode_plan(df: DataFrame, cfg: EngineConfig,
+                 done: DataFrame | None = None) -> DataFrame:
+    """The one encode plan: mapside runs the kernel over the scan
+    partitions; clustered buckets, drops the (source, bucket) pairs in
+    `done` (resume), and shuffles before the kernel."""
     if cfg.layout == "mapside":
         return df.mapInArrow(_encode_iter_factory(cfg, mapside=True),
                              BLOCK_SCHEMA_DDL)
     buckets = bucket_counts(df, cfg)
-    arranged = _arrange(apply_buckets(df, buckets), buckets)
-    return arranged.mapInArrow(_encode_iter_factory(cfg), BLOCK_SCHEMA_DDL)
+    bucketed = apply_buckets(df, buckets)
+    if done is not None:
+        bucketed = bucketed.join(F.broadcast(done), ["source", "bucket"],
+                                 "left_anti")
+    return _arrange(bucketed, buckets).mapInArrow(_encode_iter_factory(cfg),
+                                                  BLOCK_SCHEMA_DDL)
 
 
 def encode_table(spark: SparkSession, df: DataFrame, out_dir: str,
@@ -405,19 +412,7 @@ def encode_table(spark: SparkSession, df: DataFrame, out_dir: str,
         done = spark.read.parquet(manifest_path).select("source", "bucket")
         skipped = done.count()
 
-    if cfg.layout == "mapside":
-        blocks = df.mapInArrow(_encode_iter_factory(cfg, mapside=True),
-                               BLOCK_SCHEMA_DDL)
-    else:
-        buckets = bucket_counts(df, cfg)
-        bucketed = apply_buckets(df, buckets)
-        if done is not None and skipped:
-            bucketed = bucketed.join(F.broadcast(done), ["source", "bucket"],
-                                     "left_anti")
-        arranged = _arrange(bucketed, buckets)
-        blocks = arranged.mapInArrow(_encode_iter_factory(cfg),
-                                     BLOCK_SCHEMA_DDL)
-
+    blocks = _encode_plan(df, cfg, done if skipped else None)
     writer = (blocks.write.mode("overwrite")
               .option("compression", cfg.parquet_codec))
     if cfg.layout != "mapside":

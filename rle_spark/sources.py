@@ -2,78 +2,123 @@
 
 Why this exists (measured on the bench corpus, local[1], page-cached):
 Spark's JVM parquet reader + row->Arrow conversion of `array<int>`
-columns delivers token batches to a Python worker at ~0.08 GB/s
-(scan-only of the list column: 5.5-7.9 s for 845 MB; scan+IPC+no-op
-kernel: 9-13.7 s), while pyarrow reads the same files at 0.31 GB/s
-(2.7 s) — the nested-list row conversion, not the codecs, dominates
-the pipeline. For a full-scan encode job there is no predicate to push
-down, so the idiomatic fix is the same one petastorm / Ray Data use:
-ship SPLITS (path + row-group range) through the DataFrame, and let
-each task read its own row groups with pyarrow inside the kernel.
-Column pruning still happens (the reader is given exactly the needed
-columns); partition-level parallelism and skew bounds now come from
-row-group size, which is what governs a 1000-executor scan of a
-100 TB Iceberg table anyway.
+columns delivers token batches to a Python worker at ~0.08 GB/s, while
+pyarrow reads the same files at 0.31 GB/s — the nested-list row
+conversion, not the codecs, dominates the pipeline. For a full-scan
+encode job there is no predicate to push down, so the idiomatic fix is
+the one petastorm / Ray Data use: ship SPLITS (path + row-group range)
+through the DataFrame, and let each task read its own row groups with
+pyarrow inside the kernel.
 
-The codec kernel is byte-for-byte the one the DataFrame path uses
-(engine._encode_iter_factory) — this module only swaps the transport.
+Every entry point is the same task skeleton — split source, then the
+one kernel, then a sink — built from three helpers: `_map_splits`
+(plan splits, byte-balance them over tasks, mapInArrow),
+`_iter_row_groups` (a task's split rows -> parquet batches) and
+`_bounded_thread` (one helper thread, a bounded number of calls ahead,
+that overlaps the scan with the kernel and the kernel with the
+task-file write). Entry points and their sinks:
+
+  encode_parquet_dir_summary  token splits -> encode kernel -> block
+                              metadata rows (payload dropped in-task)
+  encode_parquet_dir_direct   token splits -> encode kernel -> one
+                              parquet file + lineage JSON per task,
+                              manifest folded from the lineage
+  decode_parquet_dir          block splits -> decode kernel ->
+                              (doc_id, tokens) rows
+  decode_parquet_dir_summary  block splits -> per-block decode ->
+                              per-task (n_docs, n_tokens)
+
+The codec kernels are byte-for-byte the ones the DataFrame path uses
+(engine._encode_iter_factory, engine._decode_iter) — this module only
+swaps the transport.
 """
 
 from __future__ import annotations
 
 import glob
 import os
+from collections import deque
+from concurrent.futures import ThreadPoolExecutor
+from contextlib import closing
+from functools import partial
+from itertools import count
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .blocks import BLOCK_SCHEMA_DDL
 from .engine import EngineConfig, _encode_iter_factory, refresh_manifest
 
 _READ_COLUMNS = ["doc_id", "tokens", "source"]
 SPLIT_SCHEMA_DDL = "path string, rg0 int, rg1 int"
 
-# scan readahead depth (batches in flight); 0 disables the thread
-_READAHEAD_DEPTH = int(os.environ.get("RLE_SCAN_READAHEAD", "2"))
-# rows per scan batch: with readahead, in-flight memory is
-# ~depth x batch bytes per task — keep it a few block sizes, not 100+ MB
-_SCAN_BATCH_ROWS = int(os.environ.get("RLE_SCAN_BATCH_ROWS", "2048"))
+# batches in flight between the scan and the kernel
+_READAHEAD_DEPTH = 2
+# block batches in flight between the encode kernel and the task file
+_WRITE_BEHIND_DEPTH = 4
+# rows per token-scan batch: in-flight memory is ~depth x batch bytes
+# per task, so keep it a few block sizes, not 100+ MB
+_SCAN_BATCH_ROWS = 2048
+# rows per block-scan batch (each row is one ~0.5 MB encoded block)
+_BLOCK_BATCH_ROWS = 64
 
 
-def _readahead(gen_fn, depth: int | None = None):
-    """Overlap the parquet scan with the codec kernel: a producer
-    thread runs the row-group decode (pyarrow C++ releases the GIL)
-    while the consumer encodes — the task-side analogue of the JVM
-    scanner's own IO/decode threads in the normal DataFrame path, and
-    of the reference benchmark reading the next file while crunching
-    the current one. Measured single-thread: 0.124 -> 0.214 GB/s
-    pipeline encode (the scan was ~40% of the wall, BENCH.md). The
-    bounded queue caps in-flight batches at `depth`; producer
-    exceptions re-raise in the consumer."""
-    depth = _READAHEAD_DEPTH if depth is None else depth
-    if depth <= 0:
-        yield from gen_fn()
-        return
-    import queue as _queue
-    import threading
-    q: _queue.Queue = _queue.Queue(maxsize=depth)
-    _END, _ERR = object(), object()
-
-    def produce():
+def _bounded_thread(calls, depth: int):
+    """The one bounded producer/consumer helper: run the callables that
+    the generator `calls` yields, in order, on one helper thread, at
+    most `depth` calls ahead of the consumer, and yield their results
+    in order. The consumer's thread pulls `calls`, so whatever creates
+    them stays on it: the encode kernel that feeds the task-file writes
+    (write-behind), or nothing but `next` on a generator whose work
+    then moves to the helper thread (readahead, `_read_ahead`). Keeping
+    the kernel on the task thread keeps its allocations in the main
+    malloc arena that warm_python_workers pre-faults. A call's
+    exception re-raises in the consumer. When the consumer stops early
+    (close(), or an exception in its loop body), calls not yet started
+    are cancelled, the running one finishes and the thread is joined
+    before `calls` is closed, so no thread outlives its task."""
+    with closing(calls), ThreadPoolExecutor(1) as pool:
+        pending: deque = deque()
         try:
-            for item in gen_fn():
-                q.put(item)
-            q.put(_END)
-        except BaseException as e:  # noqa: BLE001 — relayed, not dropped
-            q.put((_ERR, e))
+            for call in calls:
+                pending.append(pool.submit(call))
+                if len(pending) > depth:
+                    yield pending.popleft().result()
+            while pending:
+                yield pending.popleft().result()
+        finally:
+            for f in pending:
+                f.cancel()
 
-    threading.Thread(target=produce, daemon=True).start()
-    while True:
-        item = q.get()
-        if item is _END:
-            return
-        if isinstance(item, tuple) and len(item) == 2 and item[0] is _ERR:
-            raise item[1]
-        yield item
+
+def _read_ahead(gen, depth: int):
+    """Yield the items of the generator `gen`, each pulled on a helper
+    thread up to `depth` items ahead of the consumer: how a task
+    overlaps the parquet scan (pyarrow's decode releases the GIL) with
+    the kernel."""
+    end = object()
+    calls = (partial(next, gen, end) for _ in count())
+    with closing(gen), closing(_bounded_thread(calls, depth)) as items:
+        for item in items:
+            if item is end:
+                return
+            yield item
+
+
+def _split_rows(split_batches):
+    """A task's split-plan rows as (path, rg0, rg1) tuples."""
+    for rb in split_batches:
+        yield from zip(rb.column("path").to_pylist(),
+                       rb.column("rg0").to_pylist(),
+                       rb.column("rg1").to_pylist())
+
+
+def _iter_row_groups(split_batches, columns: list[str], batch_rows: int):
+    """Read a task's splits with pyarrow: `columns` of every row group
+    the split rows name, in `batch_rows`-row record batches."""
+    import pyarrow.parquet as pq
+    for path, g0, g1 in _split_rows(split_batches):
+        yield from pq.ParquetFile(path).iter_batches(
+            batch_size=batch_rows, row_groups=list(range(g0, g1)),
+            columns=columns)
 
 
 def _balanced_contiguous_groups(units, n_tasks: int) -> list[list]:
@@ -125,39 +170,34 @@ def _balanced_contiguous_groups(units, n_tasks: int) -> list[list]:
     return groups
 
 
-def _split_df(spark: SparkSession, units, n_tasks: int | None) -> DataFrame:
-    """Distribute splits over FAT tasks (~3x cores by default): python
-    worker task setup costs ~200 ms on this host (measured: 32 tasks
-    added 6-8 s to a 3 s read at local[1]), and a real cluster also
-    wants a small multiple of total cores, not one task per row
-    group — each task loops over its list of splits.
+def _map_splits(spark: SparkSession, src_dir: str, task, schema: str,
+                target_bytes: int = 128 << 20,
+                n_tasks: int | None = None
+                ) -> tuple[DataFrame, list[tuple], int]:
+    """The one split planner: plan `src_dir`'s splits, assign them to
+    tasks, and run `task` over each task's split rows with mapInArrow.
+    Returns (the lazy result DataFrame, the sized units, the task
+    count); an empty directory gives an empty DataFrame of `schema`.
 
-    Sized units (4-tuples from plan_parquet_splits(with_bytes=True))
-    get byte-balanced contiguous groups, one group per task — the
-    stage wall is the slowest task, so task bytes, not unit counts,
-    are what must be equal. Plain 3-tuple units keep the positional
-    parallelize slicing."""
+    Tasks are FAT (~3x cores by default): python worker task setup
+    costs ~200 ms per task, and a real cluster also wants a small
+    multiple of total cores, not one task per row group. Each task gets
+    one byte-balanced contiguous group of units — the stage wall is the
+    slowest task, so task bytes, not unit counts, must be equal."""
+    units = plan_parquet_splits(src_dir, target_bytes, with_bytes=True)
     if n_tasks is None:
         n_tasks = max(1, spark.sparkContext.defaultParallelism * 3)
-    n_tasks = min(n_tasks, len(units))
-    sc = spark.sparkContext
-    if (units and len(units[0]) == 4
-            and os.environ.get("RLE_SPLIT_BALANCE", "1") != "0"):
-        groups = [[(p, g0, g1) for p, g0, g1, _ in g]
-                  for g in _balanced_contiguous_groups(units, n_tasks)]
-        # one group per partition: parallelize a list of exactly
-        # len(groups) elements with numSlices=len(groups), then
-        # flatten inside the partition — no shuffle, no repartition
-        rdd = sc.parallelize(groups, len(groups)).flatMap(lambda g: g)
-        return spark.createDataFrame(rdd, SPLIT_SCHEMA_DDL)
-    # deterministic contiguous slices via parallelize: no shuffle
-    # exchange stage (repartition scheduled a whole extra task wave
-    # per run), consecutive row groups stay in one task (read
-    # locality), and the task->splits assignment is a pure function of
-    # (units, n_tasks) — which the resume plan signature fingerprints
-    rows = [u[:3] for u in units]
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, n_tasks), SPLIT_SCHEMA_DDL)
+    n_tasks = min(n_tasks, max(len(units), 1))
+    if not units:
+        return spark.createDataFrame([], schema), units, n_tasks
+    groups = [[u[:3] for u in g]
+              for g in _balanced_contiguous_groups(units, n_tasks)]
+    # one group per partition: parallelize exactly len(groups) elements
+    # into len(groups) slices, flatten inside the partition — no shuffle
+    rdd = spark.sparkContext.parallelize(groups, len(groups)).flatMap(
+        lambda g: g)
+    splits = spark.createDataFrame(rdd, SPLIT_SCHEMA_DDL)
+    return splits.mapInArrow(task, schema), units, n_tasks
 
 
 def plan_parquet_splits(src_dir: str,
@@ -175,7 +215,7 @@ def plan_parquet_splits(src_dir: str,
     DataFrame (round-2 advice).
 
     with_bytes=True appends each unit's total row-group byte size as a
-    4th field — _split_df uses it to byte-balance the task groups."""
+    4th field — _map_splits uses it to byte-balance the task groups."""
     import pyarrow.parquet as pq
     units: list[tuple[str, int, int]] = []
     base = os.path.normpath(src_dir)
@@ -215,42 +255,19 @@ def plan_parquet_splits(src_dir: str,
 
 
 def _file_encode_iter(cfg: EngineConfig):
-    """mapInArrow kernel over split rows: read own row groups with
-    pyarrow, stream batches through the standard encode state machine."""
+    """The encode kernel over split rows: the task's row groups, read
+    one readahead stage ahead, through the standard encode state
+    machine."""
     inner = _encode_iter_factory(cfg, mapside=True)
 
     def it(split_batches):
-        def gen():
-            import pyarrow.parquet as pq
-            for rb in split_batches:
-                paths = rb.column("path").to_pylist()
-                rg0s = rb.column("rg0").to_pylist()
-                rg1s = rb.column("rg1").to_pylist()
-                for path, g0, g1 in zip(paths, rg0s, rg1s):
-                    pf = pq.ParquetFile(path)
-                    yield from pf.iter_batches(
-                        batch_size=_SCAN_BATCH_ROWS,
-                        row_groups=list(range(g0, g1)),
-                        columns=_READ_COLUMNS)
-        yield from inner(_readahead(gen))
+        with closing(_read_ahead(
+                _iter_row_groups(split_batches, _READ_COLUMNS,
+                                 _SCAN_BATCH_ROWS),
+                _READAHEAD_DEPTH)) as batches:
+            yield from inner(batches)
 
     return it
-
-
-def encode_parquet_dir(spark: SparkSession, src_dir: str,
-                       cfg: EngineConfig | None = None,
-                       target_split_bytes: int = 128 << 20,
-                       n_tasks: int | None = None) -> DataFrame:
-    """Lazy block DataFrame over a parquet directory via the
-    file-granular source (zero-shuffle; bucket = task ordinal, exactly
-    like the mapside DataFrame path)."""
-    cfg = cfg or EngineConfig(layout="mapside")
-    units = plan_parquet_splits(src_dir, target_split_bytes,
-                                with_bytes=True)
-    if not units:
-        return spark.createDataFrame([], BLOCK_SCHEMA_DDL)
-    splits = _split_df(spark, units, n_tasks)
-    return splits.mapInArrow(_file_encode_iter(cfg), BLOCK_SCHEMA_DDL)
 
 
 BLOCK_SUMMARY_DDL = ("block_id string, source string, bucket int, seq int, "
@@ -269,20 +286,16 @@ def encode_parquet_dir_summary(spark: SparkSession, src_dir: str,
     read + codecs, not an artificial payload round-trip to the JVM
     (the real job hands payloads straight to the python-side writer,
     encode_parquet_dir_direct)."""
-    cfg = cfg or EngineConfig(layout="mapside")
-    inner = _file_encode_iter(cfg)
+    encode = _file_encode_iter(cfg or EngineConfig(layout="mapside"))
 
-    def it(batches):
+    def it(split_batches):
         import pyarrow as pa
-        for rb in inner(batches):
+        for rb in encode(split_batches):
             yield pa.record_batch([rb.column(c) for c in _SUMMARY_COLS],
                                   names=_SUMMARY_COLS)
 
-    units = plan_parquet_splits(src_dir, target_split_bytes,
-                                with_bytes=True)
-    if not units:
-        return spark.createDataFrame([], BLOCK_SUMMARY_DDL)
-    return _split_df(spark, units, n_tasks).mapInArrow(it, BLOCK_SUMMARY_DDL)
+    return _map_splits(spark, src_dir, it, BLOCK_SUMMARY_DDL,
+                       target_split_bytes, n_tasks)[0]
 
 
 def manifest_from_lineage(out_dir: str) -> bool:
@@ -358,6 +371,9 @@ def manifest_from_lineage(out_dir: str) -> bool:
     return True
 
 
+_TOTAL_COLS = ["n_blocks", "n_docs", "n_tokens", "orig_bytes", "comp_bytes"]
+
+
 def encode_parquet_dir_direct(spark: SparkSession, src_dir: str,
                               out_dir: str,
                               cfg: EngineConfig | None = None,
@@ -373,8 +389,9 @@ def encode_parquet_dir_direct(spark: SparkSession, src_dir: str,
     sink shape: executors write straight to object storage, the driver
     only aggregates manifests. Deterministic task file names make a
     re-run (or a speculative duplicate attempt) overwrite, not
-    duplicate. The manifest is rebuilt from the committed files like
-    every other path.
+    duplicate. The manifest is folded from the per-task lineage
+    records (or rebuilt from the committed files when they don't
+    cover them).
 
     resume=True: an interrupted job (executor/driver loss mid-write)
     re-runs skipping every task whose committed file already exists —
@@ -383,35 +400,111 @@ def encode_parquet_dir_direct(spark: SparkSession, src_dir: str,
     if the recorded plan differs (input grew, task count changed), the
     task->file mapping is stale, so the job falls back to a clean
     rewrite instead of silently mixing layouts."""
+    import dataclasses
     import hashlib
     import json
     cfg = cfg or EngineConfig(layout="mapside")
     blocks_dir = os.path.join(out_dir, "blocks")
-    os.makedirs(blocks_dir, exist_ok=True)
-    inner = _file_encode_iter(cfg)
+    lineage_dir = os.path.join(out_dir, "lineage")
+    encode = _file_encode_iter(cfg)
     codec = cfg.parquet_codec
 
-    units = plan_parquet_splits(src_dir, target_split_bytes,
-                                with_bytes=True)
-    if n_tasks is None:
-        n_tasks = max(1, spark.sparkContext.defaultParallelism * 3)
-    n_tasks = min(n_tasks, max(len(units), 1))
-    # defaultParallelism is part of the fingerprint: createDataFrame's
-    # initial slicing feeds the round-robin repartition, so the same
-    # (units, n_tasks) on a different-sized session yields a DIFFERENT
-    # task->split assignment — resuming across that would skip and
-    # duplicate splits silently. The FULL EngineConfig (selector
-    # effort/allow-list, parquet codec, layout, ...) is included too:
-    # resuming after any codec-affecting settings change must take the
-    # clean-rewrite path, not mix blocks encoded under two configs.
-    import dataclasses as _dc
+    def it(split_batches):
+        import time
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark import TaskContext
+        task_t0 = time.time()
+        tc = TaskContext.get()
+        pid = tc.partitionId() if tc is not None else 0
+        # attempt-scoped tmp name: a speculative/zombie duplicate attempt
+        # must never write into the same tmp file the live attempt is
+        # streaming to; whichever attempt finishes last commits its OWN
+        # complete file via the atomic rename
+        attempt = tc.taskAttemptId() if tc is not None else 0
+        tmp = os.path.join(blocks_dir, f".part-{pid:05d}.{attempt}.tmp")
+        final = os.path.join(blocks_dir, f"part-{pid:05d}.parquet")
+        lineage = os.path.join(lineage_dir, f"part-{pid:05d}.json")
+        # the input is the task's few split-plan rows, not source data
+        split_batches = list(split_batches)
+        # per-(source, bucket, codec) rollup — O(blocks) per task; lets
+        # the driver assemble the manifest from the lineage records with
+        # NO post-job Spark rescan of the blocks
+        groups: dict[tuple, list] = {}
+
+        def roll(tbl):
+            cols = [tbl.column(c).to_pylist()
+                    for c in ("source", "bucket", "codec", *_TOTAL_COLS[1:])]
+            for s, b, c, *vals in zip(*cols):
+                g = groups.setdefault((s, int(b), c), [0, 0, 0, 0, 0])
+                g[0] += 1
+                for i, v in enumerate(vals, 1):
+                    g[i] += int(v)
+
+        if os.path.exists(final):
+            # committed by a previous attempt: skip the encode. A crash
+            # between the data commit and the lineage commit heals here:
+            # the rollup is rebuilt from the committed file's metadata
+            # columns and the lineage re-written.
+            roll(pq.read_table(final, columns=["source", "bucket", "codec",
+                                               *_TOTAL_COLS[1:]]))
+            commit = not os.path.exists(lineage)
+        else:
+            writer = None
+
+            def write(rb):
+                nonlocal writer
+                if writer is None:
+                    writer = pq.ParquetWriter(tmp, rb.schema,
+                                              compression=codec)
+                writer.write_batch(rb)
+
+            def writes():
+                for rb in encode(split_batches):
+                    roll(rb)
+                    yield partial(write, rb)
+
+            # write-behind: the parquet write (zstd releases the GIL)
+            # overlaps the kernel; a writer error re-raises here, before
+            # the atomic rename can commit a broken file
+            try:
+                for _ in _bounded_thread(writes(), _WRITE_BEHIND_DEPTH):
+                    pass
+            finally:
+                if writer is not None:
+                    writer.close()
+            commit = writer is not None
+            if commit:
+                os.replace(tmp, final)  # atomic commit of this task's file
+        totals = [sum(g[i] for g in groups.values()) for i in range(5)]
+        if commit:
+            # per-task LINEAGE (atomic like the data): which input splits
+            # produced the file, its metrics and per-codec rollup, and
+            # task_wall_sec — the skew audit (which task straggled)
+            # without any cluster-UI scrape
+            rec = {"file": os.path.basename(final),
+                   "splits": [list(s) for s in _split_rows(split_batches)],
+                   **dict(zip(_TOTAL_COLS, totals)),
+                   "task_wall_sec": round(time.time() - task_t0, 3),
+                   "groups": [[s, b, c, *v]
+                              for (s, b, c), v in sorted(groups.items())]}
+            ltmp = os.path.join(lineage_dir, f".part-{pid:05d}.tmp")
+            with open(ltmp, "w") as fh:
+                json.dump(rec, fh)
+            os.replace(ltmp, lineage)
+        yield pa.record_batch([pa.array([x], pa.int64()) for x in totals],
+                              names=_TOTAL_COLS)
+
+    job, units, n_tasks = _map_splits(
+        spark, src_dir, it, ", ".join(f"{c} long" for c in _TOTAL_COLS),
+        target_split_bytes, n_tasks)
+    # The FULL EngineConfig (selector effort/allow-list, parquet codec,
+    # layout, ...) is in the fingerprint: resuming after any
+    # codec-affecting settings change must take the clean-rewrite path,
+    # not mix blocks encoded under two configs. "split_v3" versions the
+    # task-assignment function (byte-balanced contiguous groups).
     plan_sig = hashlib.sha256(
-        json.dumps(["split_v3",  # task-assignment function version:
-                    # byte-balanced contiguous groups (v2: positional
-                    # parallelize slices; v1: round-robin repartition) —
-                    # outputs written under a different assignment must
-                    # take the clean-rewrite path
-                    units, n_tasks, _dc.asdict(cfg),
+        json.dumps(["split_v3", units, n_tasks, dataclasses.asdict(cfg),
                     spark.sparkContext.defaultParallelism],
                    sort_keys=True).encode()
     ).hexdigest()
@@ -422,198 +515,29 @@ def encode_parquet_dir_direct(spark: SparkSession, src_dir: str,
             prev_sig = json.load(open(plan_path)).get("sig")
         except (ValueError, OSError):
             prev_sig = None
+    os.makedirs(blocks_dir, exist_ok=True)
+    os.makedirs(lineage_dir, exist_ok=True)
     # uncommitted attempt tmps are garbage under any plan
     for f in glob.glob(os.path.join(blocks_dir, ".part-*")):
         os.remove(f)
     if not (resume and prev_sig == plan_sig):
         # clean rewrite: drop every stale part/lineage file
         for f in (glob.glob(os.path.join(blocks_dir, "*.parquet"))
-                  + glob.glob(os.path.join(out_dir, "lineage", "*"))):
+                  + glob.glob(os.path.join(lineage_dir, "*"))):
             os.remove(f)
     with open(plan_path, "w") as fh:
         json.dump({"sig": plan_sig, "n_tasks": n_tasks,
                    "n_units": len(units)}, fh)
 
-    lineage_dir = os.path.join(out_dir, "lineage")
-    os.makedirs(lineage_dir, exist_ok=True)
-
-    def it(batches):
-        import time as _t
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark import TaskContext
-        _task_t0 = _t.time()
-        tc = TaskContext.get()
-        pid = tc.partitionId() if tc is not None else 0
-        # attempt-scoped tmp name: a speculative/zombie duplicate attempt
-        # must never write into the same tmp file the live attempt is
-        # streaming to; whichever attempt finishes last commits its OWN
-        # complete file via the atomic rename
-        attempt = tc.taskAttemptId() if tc is not None else 0
-        tmp = os.path.join(blocks_dir, f".part-{pid:05d}.{attempt}.tmp")
-        final = os.path.join(blocks_dir, f"part-{pid:05d}.parquet")
-        consumed: list[list] = []
-
-        def tee(bs):
-            for rb in bs:
-                consumed.extend(
-                    [p, int(a), int(b)] for p, a, b in
-                    zip(rb.column("path").to_pylist(),
-                        rb.column("rg0").to_pylist(),
-                        rb.column("rg1").to_pylist()))
-                yield rb
-
-        n_blocks = n_docs = n_tokens = orig = comp = 0
-        # per-(source, bucket, codec) rollup — O(blocks) per task, a few
-        # hundred rows; lets the driver assemble the manifest from the
-        # lineage records with NO post-job Spark rescan of the blocks
-        # (at 100 TB that rescan is a full metadata pass over the sink)
-        groups: dict[tuple, list] = {}
-
-        def roll(tbl):
-            srcs = tbl.column("source").to_pylist()
-            bks = tbl.column("bucket").to_pylist()
-            cds = tbl.column("codec").to_pylist()
-            nds = tbl.column("n_docs").to_pylist()
-            nts = tbl.column("n_tokens").to_pylist()
-            obs = tbl.column("orig_bytes").to_pylist()
-            cbs = tbl.column("comp_bytes").to_pylist()
-            for s, b, c, nd, nt, ob, cb in zip(srcs, bks, cds, nds, nts,
-                                               obs, cbs):
-                g = groups.setdefault((s, int(b), c), [0, 0, 0, 0, 0])
-                g[0] += 1
-                g[1] += int(nd)
-                g[2] += int(nt)
-                g[3] += int(ob)
-                g[4] += int(cb)
-
-        def lineage_record():
-            # task_wall_sec: per-partition timing metric — the skew
-            # audit column (which task was the straggler, and was it
-            # bytes or content) without any cluster-UI scrape
-            return {"file": os.path.basename(final), "splits": consumed,
-                    "n_blocks": n_blocks, "n_docs": n_docs,
-                    "n_tokens": n_tokens, "orig_bytes": orig,
-                    "comp_bytes": comp,
-                    "task_wall_sec": round(_t.time() - _task_t0, 3),
-                    "groups": [[s, b, c, *v]
-                               for (s, b, c), v in sorted(groups.items())]}
-
-        def commit_lineage():
-            import json as _json
-            ltmp = os.path.join(lineage_dir, f".part-{pid:05d}.tmp")
-            with open(ltmp, "w") as fh:
-                _json.dump(lineage_record(), fh)
-            os.replace(ltmp,
-                       os.path.join(lineage_dir, f"part-{pid:05d}.json"))
-
-        if os.path.exists(final):
-            # committed by a previous attempt: report its totals, skip.
-            # The input batches are split-PLAN rows (path, rg0, rg1) —
-            # tee() records them without touching source data, so a
-            # crash between the data commit and the lineage commit
-            # heals here: the rollup is rebuilt from the committed
-            # file's metadata columns and the lineage re-written.
-            for _ in tee(batches):
-                pass
-            t = pq.read_table(final, columns=["source", "bucket", "codec",
-                                              "n_docs", "n_tokens",
-                                              "orig_bytes", "comp_bytes"])
-            n_blocks = t.num_rows
-            n_docs = int(sum(t.column("n_docs").to_pylist()))
-            n_tokens = int(sum(t.column("n_tokens").to_pylist()))
-            orig = int(sum(t.column("orig_bytes").to_pylist()))
-            comp = int(sum(t.column("comp_bytes").to_pylist()))
-            roll(t)
-            lpath = os.path.join(lineage_dir, f"part-{pid:05d}.json")
-            if not os.path.exists(lpath):
-                commit_lineage()
-        else:
-            # write-behind: the parquet write (zstd compression releases
-            # the GIL) runs on its own thread so the sink overlaps the
-            # encode kernel, like an executor's async output committer;
-            # bounded queue caps in-flight blocks, metrics stay on the
-            # consumer side, and a writer error re-raises here before
-            # the atomic rename can commit a broken file
-            import queue as _q
-            import threading as _th
-            writer = None
-            werr: list = []
-            wq: _q.Queue = _q.Queue(maxsize=max(_READAHEAD_DEPTH, 1) * 2)
-
-            def _write_loop():
-                nonlocal writer
-                while True:
-                    rb = wq.get()
-                    if rb is None:
-                        return
-                    if werr:
-                        continue  # drain: the producer must never block
-                    try:
-                        if writer is None:
-                            writer = pq.ParquetWriter(tmp, rb.schema,
-                                                      compression=codec)
-                        writer.write_batch(rb)
-                    except BaseException as e:  # noqa: BLE001
-                        werr.append(e)
-
-            wth = _th.Thread(target=_write_loop, daemon=True)
-            wth.start()
-            try:
-                for rb in inner(tee(batches)):
-                    if werr:
-                        break
-                    wq.put(rb)
-                    n_blocks += rb.num_rows
-                    n_docs += sum(rb.column("n_docs").to_pylist())
-                    n_tokens += sum(rb.column("n_tokens").to_pylist())
-                    orig += sum(rb.column("orig_bytes").to_pylist())
-                    comp += sum(rb.column("comp_bytes").to_pylist())
-                    roll(rb)
-            finally:
-                wq.put(None)
-                wth.join()
-                if writer is not None:
-                    writer.close()
-            if werr:
-                raise werr[0]
-            if writer is not None:
-                os.replace(tmp, final)  # atomic commit of this task's file
-                # per-task LINEAGE: which input splits produced this
-                # file, plus its metrics and the per-codec rollup — the
-                # audit/incremental-recompute record the north rule's
-                # "per-partition lineage + metrics" asks for (atomic
-                # like the data), and the manifest's building blocks
-                commit_lineage()
-        yield pa.record_batch(
-            [pa.array([x], pa.int64()) for x in
-             (n_blocks, n_docs, n_tokens, orig, comp)],
-            names=["n_blocks", "n_docs", "n_tokens", "orig", "comp"])
-
-    import time as _time
-    _t0 = _time.time()
-    if units:
-        splits = _split_df(spark, units, n_tasks)
-        totals = (splits.mapInArrow(
-            it, "n_blocks long, n_docs long, n_tokens long, "
-                "orig long, comp long")
-            .agg(F.sum("n_docs").alias("d"), F.sum("n_tokens").alias("t"),
-                 F.sum("orig").alias("o"), F.sum("comp").alias("c"))
-            .collect()[0])
-    else:
-        totals = {"d": 0, "t": 0, "o": 0, "c": 0}
-    _t1 = _time.time()
+    totals = job.agg(*[F.sum(c).alias(c)
+                       for c in _TOTAL_COLS[1:]]).collect()[0]
     if not manifest_from_lineage(out_dir):
         refresh_manifest(spark, out_dir)  # lineage gap: authoritative rescan
-    if os.environ.get("RLE_DEBUG_TIMING"):
-        import sys as _sys
-        print(f"direct: spark job {_t1 - _t0:.2f}s, manifest "
-              f"{_time.time() - _t1:.2f}s", file=_sys.stderr, flush=True)
-    orig, comp = int(totals["o"] or 0), int(totals["c"] or 0)
+    orig, comp = int(totals["orig_bytes"] or 0), int(totals["comp_bytes"] or 0)
     return {"orig_bytes": orig, "comp_bytes": comp,
             "ratio": (comp / orig) if orig else 1.0,
-            "n_tokens": int(totals["t"] or 0),
-            "n_docs": int(totals["d"] or 0)}
+            "n_tokens": int(totals["n_tokens"] or 0),
+            "n_docs": int(totals["n_docs"] or 0)}
 
 
 def decode_parquet_dir(spark: SparkSession, out_dir: str,
@@ -622,29 +546,19 @@ def decode_parquet_dir(spark: SparkSession, out_dir: str,
     tasks read their own block files with pyarrow and run the standard
     decode kernel (engine._decode_iter) — the file-source twin of
     engine.decode_dataframe(read_encoded(...))."""
+    from .blocks import DECODED_SCHEMA_DDL
     from .engine import _decode_iter
 
-    def it(batches):
-        import pyarrow.parquet as pq
+    def it(split_batches):
+        with closing(_read_ahead(
+                _iter_row_groups(split_batches,
+                                 ["payload", "doc_ids", "doc_lens"],
+                                 _BLOCK_BATCH_ROWS),
+                _READAHEAD_DEPTH)) as batches:
+            yield from _decode_iter(batches)
 
-        def gen():
-            for rb in batches:
-                for path, g0, g1 in zip(rb.column("path").to_pylist(),
-                                        rb.column("rg0").to_pylist(),
-                                        rb.column("rg1").to_pylist()):
-                    pf = pq.ParquetFile(path)
-                    yield from pf.iter_batches(
-                        batch_size=64, row_groups=list(range(g0, g1)),
-                        columns=["payload", "doc_ids", "doc_lens"])
-        yield from _decode_iter(_readahead(gen))
-
-    units = plan_parquet_splits(os.path.join(out_dir, "blocks"),
-                                with_bytes=True)
-    if not units:
-        from .blocks import DECODED_SCHEMA_DDL
-        return spark.createDataFrame([], DECODED_SCHEMA_DDL)
-    from .blocks import DECODED_SCHEMA_DDL
-    return _split_df(spark, units, n_tasks).mapInArrow(it, DECODED_SCHEMA_DDL)
+    return _map_splits(spark, os.path.join(out_dir, "blocks"), it,
+                       DECODED_SCHEMA_DDL, n_tasks=n_tasks)[0]
 
 
 def decode_parquet_dir_summary(spark: SparkSession, out_dir: str,
@@ -653,67 +567,27 @@ def decode_parquet_dir_summary(spark: SparkSession, out_dir: str,
     reading block files directly with pyarrow, returning per-task
     (n_docs, n_tokens) — the decode-throughput measurement shape: the
     decoded arrays materialize in the python worker (where a training
-    dataloader consumes them) without an artificial 845 MB Arrow IPC
-    hop back to the JVM."""
+    dataloader consumes them) without an artificial Arrow IPC hop back
+    to the JVM. Reads only payload/doc_lens: the doc ids and the
+    per-doc ListArray of the full decode kernel are not needed here."""
     from .blocks import decode_block
 
-    def it(batches):
+    def it(split_batches):
         import pyarrow as pa
         import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-        n_docs = 0
-        n_tokens = 0
-
-        def gen():
-            for rb in batches:
-                for path, g0, g1 in zip(rb.column("path").to_pylist(),
-                                        rb.column("rg0").to_pylist(),
-                                        rb.column("rg1").to_pylist()):
-                    pf = pq.ParquetFile(path)
-                    yield from pf.iter_batches(
-                        batch_size=64, row_groups=list(range(g0, g1)),
-                        columns=["payload", "doc_lens"])
-
-        for blk in _readahead(gen):
-            payloads = blk.column("payload")
-            lens_col = blk.column("doc_lens")
-            for i in range(blk.num_rows):
-                # as_buffer: zero-copy view of the Arrow payload
-                # (as_py copied every ~0.5 MB payload to bytes)
-                toks = decode_block(payloads[i].as_buffer())
-                n_tokens += len(toks)
+        n_docs = n_tokens = 0
+        for blk in _read_ahead(
+                _iter_row_groups(split_batches, ["payload", "doc_lens"],
+                                 _BLOCK_BATCH_ROWS),
+                _READAHEAD_DEPTH):
+            # as_buffer: zero-copy view of the Arrow payload
+            for p in blk.column("payload"):
+                n_tokens += len(decode_block(p.as_buffer()))
             n_docs += int(pc.sum(
-                pc.list_value_length(lens_col)).as_py() or 0)
+                pc.list_value_length(blk.column("doc_lens"))).as_py() or 0)
         yield pa.record_batch(
             [pa.array([n_docs], pa.int64()), pa.array([n_tokens], pa.int64())],
             names=["n_docs", "n_tokens"])
 
-    units = plan_parquet_splits(os.path.join(out_dir, "blocks"),
-                                with_bytes=True)
-    if not units:
-        return spark.createDataFrame([], "n_docs long, n_tokens long")
-    return _split_df(spark, units, n_tasks).mapInArrow(
-        it, "n_docs long, n_tokens long")
-
-
-def encode_parquet_dir_to_table(spark: SparkSession, src_dir: str,
-                                out_dir: str,
-                                cfg: EngineConfig | None = None,
-                                target_split_bytes: int = 128 << 20) -> dict:
-    """Full job over the file source: blocks + manifest on disk,
-    summary dict — the encode_table equivalent for a source-clustered
-    corpus that needs no re-bucketing."""
-    cfg = cfg or EngineConfig(layout="mapside")
-    blocks = encode_parquet_dir(spark, src_dir, cfg, target_split_bytes)
-    (blocks.write.mode("overwrite")
-     .option("compression", cfg.parquet_codec)
-     .parquet(os.path.join(out_dir, "blocks")))
-    refresh_manifest(spark, out_dir)
-    row = (spark.read.parquet(os.path.join(out_dir, "manifest"))
-           .agg(F.sum("orig_bytes").alias("o"), F.sum("comp_bytes").alias("c"),
-                F.sum("n_tokens").alias("t"), F.sum("n_docs").alias("d"))
-           .collect()[0])
-    orig, comp = int(row["o"] or 0), int(row["c"] or 0)
-    return {"orig_bytes": orig, "comp_bytes": comp,
-            "ratio": (comp / orig) if orig else 1.0,
-            "n_tokens": int(row["t"] or 0), "n_docs": int(row["d"] or 0)}
+    return _map_splits(spark, os.path.join(out_dir, "blocks"), it,
+                       "n_docs long, n_tokens long", n_tasks=n_tasks)[0]

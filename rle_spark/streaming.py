@@ -5,8 +5,8 @@ The reference is a batch library with no streaming surface
 (/root/reference/src/main.c — single whole-file read), so this module
 is the Spark-native extension for continuous training-data ingest:
 new parquet files landing under the input path are encoded per
-micro-batch with the SAME mapInArrow kernel the batch engine uses
-(engine._encode_iter_factory), appended to <out>/blocks, and the
+micro-batch with the SAME mapside encode plan the batch engine uses
+(engine.encode_dataframe), appended to <out>/blocks, and the
 manifest is rebuilt from the committed files.
 
 Delivery semantics: the checkpoint gives each micro-batch a stable
@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .blocks import BLOCK_SCHEMA_DDL
 from .datagen import TOKEN_SCHEMA_DDL
-from .engine import EngineConfig, _encode_iter_factory, refresh_manifest
+from .engine import EngineConfig, encode_dataframe, refresh_manifest
 
 
 def encode_stream(spark: SparkSession, input_path: str, out_dir: str,
@@ -56,9 +56,7 @@ def encode_stream(spark: SparkSession, input_path: str, out_dir: str,
            .parquet(input_path))
 
     def _epoch(df: DataFrame, epoch_id: int) -> None:
-        blocks = df.mapInArrow(_encode_iter_factory(cfg, mapside=True),
-                               BLOCK_SCHEMA_DDL)
-        blocks = blocks.withColumn(
+        blocks = encode_dataframe(df, cfg).withColumn(
             "block_id", F.concat(F.lit(f"e{epoch_id}:"), F.col("block_id")))
         # epoch-scoped overwrite: a replayed epoch rewrites its own
         # directory, so at-least-once foreachBatch delivery can never

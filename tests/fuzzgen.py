@@ -14,6 +14,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from rle_spark.codecs.rle import SPARSE_RUN_SPAN
+
 SYMBOL_LENS = [1, 2, 3, 4, 6, 8, 16]  # rle_fuzz.c:291-296
 LEN_REGIMES = [(1, 280), (768, 8192), (65528, 65560)]  # rle_fuzz.c:30-39
 
@@ -87,4 +89,11 @@ def boundary_cases() -> dict[str, np.ndarray]:
         parts.append(np.full(run_len, run_len % 97, np.int32))
         parts.append(rng.integers(0, 1000, 3).astype(np.int32))
     cases["escape_boundaries"] = np.concatenate(parts)
+    # the sparse/dense kernel cut of the symbol RLE codecs: k = 2 runs
+    # over n = k * SPARSE_RUN_SPAN + d tokens, d in (-1, 0, +1)
+    for d in (-1, 0, 1):
+        arr = np.arange(2 * SPARSE_RUN_SPAN + d, dtype=np.int32)
+        for start in (len(arr) // 3, 2 * len(arr) // 3):
+            arr[start:start + 8] = -7  # neighbours differ: one run each
+        cases[f"sparse_run_cut{d:+d}"] = arr
     return cases

@@ -63,6 +63,12 @@ def test_roundtrip_small_vocab_fuzz(seed):
         _roundtrip(name, arr)
 
 
+def test_dict_encode_rejects_non_integer_dtype():
+    from rle_spark.codecs.dictionary import dict_encode
+    with pytest.raises(TypeError, match="float64"):
+        dict_encode(np.array([1.5, 2.5, 1.5, 7.25] * 10))
+
+
 # ---------------------------------------------------------------------------
 # primitives
 # ---------------------------------------------------------------------------

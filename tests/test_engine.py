@@ -108,8 +108,8 @@ def test_resume_after_partial_manifest(spark, tokens_df, tmp_path_factory):
 def test_bucket_skew_bounded(spark, tokens_df):
     """Skew handling: no (source,bucket) partition should dwarf the
     target size by more than one max-doc overshoot."""
-    from rle_spark.engine import plan_buckets
-    b = plan_buckets(tokens_df, CFG)
+    from rle_spark.engine import apply_buckets, bucket_counts
+    b = apply_buckets(tokens_df, bucket_counts(tokens_df, CFG))
     sizes = (b.groupBy("source", "bucket").agg(F.sum("n_tok").alias("t"))
              .collect())
     max_doc = tokens_df.agg(F.max("n_tok")).collect()[0][0]

@@ -1,6 +1,9 @@
 """File-granular parquet source: same kernel, pyarrow transport."""
 
 import os
+import threading
+import time
+from functools import partial
 
 import pytest
 
@@ -9,47 +12,26 @@ from pyspark.sql import functions as F
 from rle_spark.datagen import token_table
 from rle_spark.engine import (EngineConfig, decode_dataframe, encode_dataframe,
                               roundtrip_mismatch_count)
-from rle_spark.sources import (encode_parquet_dir, encode_parquet_dir_to_table,
-                               plan_parquet_splits)
+from rle_spark.sources import (_bounded_thread, _read_ahead,
+                               encode_parquet_dir_summary, plan_parquet_splits)
 
 CFG = EngineConfig(block_tokens=1 << 15, layout="mapside")
 
 
 def test_file_source_roundtrip(spark, tmp_path_factory):
+    """The file transport's encode kernel sees exactly the corpus the
+    DataFrame-transport mapside path sees (bit-identity of the file
+    transport is checked by the direct-writer tests)."""
     src = str(tmp_path_factory.mktemp("fsrc"))
-    df = token_table(spark, 120, seed=21).cache()
-    df.count()
+    df = token_table(spark, 120, seed=21)
     df.repartition(4).write.mode("overwrite").parquet(src)
 
-    blocks = encode_parquet_dir(spark, src, CFG)
-    decoded = decode_dataframe(blocks)
-    assert roundtrip_mismatch_count(df, decoded) == 0
-
-    # identical corpus totals as the DataFrame-transport mapside path
+    cols = [F.sum("n_docs"), F.sum("n_tokens"), F.sum("orig_bytes")]
     want = (encode_dataframe(spark.read.parquet(src), CFG)
-            .agg(F.sum("n_docs"), F.sum("n_tokens"), F.sum("orig_bytes"))
-            .collect()[0])
-    got = (encode_parquet_dir(spark, src, CFG)
-           .agg(F.sum("n_docs"), F.sum("n_tokens"), F.sum("orig_bytes"))
-           .collect()[0])
+            .agg(*cols).collect()[0])
+    got = encode_parquet_dir_summary(spark, src, CFG).agg(*cols).collect()[0]
     assert tuple(got) == tuple(want)
-    df.unpersist()
-
-
-def test_file_source_full_job(spark, tmp_path_factory):
-    src = str(tmp_path_factory.mktemp("fsrc2"))
-    out = str(tmp_path_factory.mktemp("fout"))
-    df = token_table(spark, 80, seed=22).cache()
-    df.count()
-    df.repartition(3).write.mode("overwrite").parquet(src)
-    s = encode_parquet_dir_to_table(spark, src, out, CFG)
-    assert s["n_docs"] == 80
-    assert 0 < s["ratio"] < 1.0
-    assert os.path.exists(os.path.join(out, "manifest"))
-    from rle_spark.engine import read_encoded
-    decoded = decode_dataframe(read_encoded(spark, out))
-    assert roundtrip_mismatch_count(df, decoded) == 0
-    df.unpersist()
+    assert got[0] == 120
 
 
 def test_balanced_groups_cover_order_and_bytes():
@@ -315,17 +297,28 @@ def test_manifest_from_lineage_matches_spark_rescan(spark, tmp_path_factory):
     assert manifest_from_lineage(out) is False
 
 
-def test_readahead_order_errors_and_disable():
-    """The scan readahead must preserve order, re-raise producer
-    exceptions in the consumer, and pass through untouched at depth 0."""
-    from rle_spark.sources import _readahead
+def _lingering(before: set, timeout: float = 5.0) -> list:
+    """Threads started since `before` that are still alive after
+    waiting up to `timeout` seconds for them to exit."""
+    deadline = time.monotonic() + timeout
+    while True:
+        extra = [t for t in threading.enumerate()
+                 if t not in before and t.is_alive()]
+        if not extra or time.monotonic() > deadline:
+            return extra
+        time.sleep(0.01)
 
-    def gen():
-        yield from range(100)
 
-    assert list(_readahead(gen)) == list(range(100))
-    assert list(_readahead(gen, depth=0)) == list(range(100))
-    assert list(_readahead(gen, depth=1)) == list(range(100))
+def _count(n=1000):
+    yield from range(n)
+
+
+def test_bounded_thread_order_and_errors():
+    """Readahead preserves order and re-raises producer exceptions in
+    the consumer; so does a failing call handed to the helper thread
+    (how a task-file write error arrives)."""
+    assert list(_read_ahead(_count(), 2)) == list(range(1000))
+    assert list(_read_ahead(_count(), 1)) == list(range(1000))
 
     def boom():
         yield 1
@@ -333,6 +326,55 @@ def test_readahead_order_errors_and_disable():
 
     out = []
     with pytest.raises(ValueError, match="scan failed"):
-        for x in _readahead(boom):
+        for x in _read_ahead(boom(), 2):
             out.append(x)
     assert out == [1]
+
+    def fail(x):
+        if x == 5:
+            raise OSError("disk full")
+        return x
+
+    before = set(threading.enumerate())
+    out = []
+    with pytest.raises(OSError, match="disk full"):
+        for x in _bounded_thread((partial(fail, x) for x in _count()), 4):
+            out.append(x)
+    assert out == list(range(5))
+    assert not _lingering(before)
+
+
+def test_bounded_thread_close_mid_stream_stops_producer():
+    before = set(threading.enumerate())
+    it = _read_ahead(_count(), 2)
+    assert [next(it), next(it)] == [0, 1]
+    it.close()
+    assert not _lingering(before)
+
+
+def test_bounded_thread_consumer_error_stops_producer():
+    """A failing loop body in the consumer stops and joins the
+    producer."""
+    before = set(threading.enumerate())
+    with pytest.raises(RuntimeError, match="kernel failed"):
+        for x in _read_ahead(_count(), 2):
+            if x == 3:
+                raise RuntimeError("kernel failed")
+    assert not _lingering(before)
+
+
+def test_bounded_thread_nested_close_stops_both():
+    """kernel over scan, as in the direct writer: the scan is read
+    ahead on one thread, the kernel runs on the caller's thread and
+    hands its output to a second helper thread. Closing the outer
+    helper from outside stops and joins both threads."""
+    before = set(threading.enumerate())
+
+    def kernel():
+        for x in _read_ahead(_count(), 2):
+            yield partial(abs, -x)
+
+    it = _bounded_thread(kernel(), 4)
+    assert [next(it), next(it), next(it)] == [0, 1, 2]
+    it.close()
+    assert not _lingering(before)

@@ -154,8 +154,8 @@ def encode_run(cpus: int, src_path: str, out_dir: str,
                                    encode_parquet_dir_direct,
                                    encode_parquet_dir_summary)
     # one task wave per core by default: the bench corpus has uniform
-    # row groups, and every extra wave pays ~200 ms/task python-worker
-    # setup (see sources._map_splits)
+    # row groups, and every extra wave pays a fixed ~75 ms/task
+    # (scheduling + python worker round trip; see sources._map_splits)
     n_tasks = cpus * int(os.environ.get("RLE_BENCH_TASKS_PER_CPU", "1"))
     spark = (make_spark(cpus, f"bench-encode-{cpus}"))
     spark.sparkContext.setLogLevel("ERROR")

@@ -91,11 +91,12 @@ def warm_python_workers(spark: SparkSession, cpus: int, mb: int = 128) -> None:
     """One dry pass that spawns a python worker per core and touches
     `mb` MiB of heap in each — the engine's analogue of the reference
     benchmark's untimed dry run (/root/reference/src/main.c:808-811),
-    here also defeating this host's first-touch page-fault stalls
-    (see memtune)."""
+    here also defeating this host's first-touch page-fault stalls and
+    making each worker's zip-import caches lazy (see memtune)."""
     from .memtune import warm_heap
 
     def it(batches):
+        memtune.lazy_zip_invalidation()
         warm_heap(mb)
         yield from batches
 
@@ -210,6 +211,7 @@ def _encode_iter_factory(cfg: EngineConfig, mapside: bool = False):
     out_schema = _block_arrow_schema()
 
     def encode_iter(batches):
+        memtune.lazy_zip_invalidation()
         sticky = StickySelector(sel_cfg)
         seqs: dict = {}
         if mapside:
@@ -485,6 +487,7 @@ def _decode_iter(batches):
     """
     import pyarrow as pa
 
+    memtune.lazy_zip_invalidation()
     for rb in batches:
         if rb.num_rows == 0:
             continue

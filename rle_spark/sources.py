@@ -7,13 +7,19 @@ pyarrow reads the same files at 0.31 GB/s — the nested-list row
 conversion, not the codecs, dominates the pipeline. For a full-scan
 encode job there is no predicate to push down, so the idiomatic fix is
 the one petastorm / Ray Data use: ship SPLITS (path + row-group range)
-through the DataFrame, and let each task read its own row groups with
-pyarrow inside the kernel.
+to the tasks, and let each task read its own row groups with pyarrow
+inside the kernel.
+
+The split source is `spark.range(n_tasks)`: task i gets id i and looks
+up its group of splits in the closure. The plan is MapInArrow <- Range,
+so each task runs ONE python worker. A DataFrame of split rows built
+from an RDD (Scan ExistingRDD) would start a second python worker per
+task just to hand the rows over, and pay the worker handshake twice.
 
 Every entry point is the same task skeleton — split source, then the
 one kernel, then a sink — built from three helpers: `_map_splits`
-(plan splits, byte-balance them over tasks, mapInArrow),
-`_iter_row_groups` (a task's split rows -> parquet batches) and
+(plan splits, byte-balance them over tasks, mapInArrow over the range),
+`_iter_row_groups` (a task's splits -> parquet batches) and
 `_bounded_thread` (one helper thread, a bounded number of calls ahead,
 that overlaps the scan with the kernel and the kernel with the
 task-file write). Entry points and their sinks:
@@ -43,12 +49,12 @@ from contextlib import closing
 from functools import partial
 from itertools import count
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from .engine import EngineConfig, _encode_iter_factory, refresh_manifest
+from .memtune import lazy_zip_invalidation
 
 _READ_COLUMNS = ["doc_id", "tokens", "source"]
-SPLIT_SCHEMA_DDL = "path string, rg0 int, rg1 int"
 
 # batches in flight between the scan and the kernel
 _READAHEAD_DEPTH = 2
@@ -103,19 +109,11 @@ def _read_ahead(gen, depth: int):
             yield item
 
 
-def _split_rows(split_batches):
-    """A task's split-plan rows as (path, rg0, rg1) tuples."""
-    for rb in split_batches:
-        yield from zip(rb.column("path").to_pylist(),
-                       rb.column("rg0").to_pylist(),
-                       rb.column("rg1").to_pylist())
-
-
-def _iter_row_groups(split_batches, columns: list[str], batch_rows: int):
-    """Read a task's splits with pyarrow: `columns` of every row group
-    the split rows name, in `batch_rows`-row record batches."""
+def _iter_row_groups(splits, columns: list[str], batch_rows: int):
+    """Read a task's (path, rg0, rg1) splits with pyarrow: `columns` of
+    every row group they name, in `batch_rows`-row record batches."""
     import pyarrow.parquet as pq
-    for path, g0, g1 in _split_rows(split_batches):
+    for path, g0, g1 in splits:
         yield from pq.ParquetFile(path).iter_batches(
             batch_size=batch_rows, row_groups=list(range(g0, g1)),
             columns=columns)
@@ -175,15 +173,17 @@ def _map_splits(spark: SparkSession, src_dir: str, task, schema: str,
                 n_tasks: int | None = None
                 ) -> tuple[DataFrame, list[tuple], int]:
     """The one split planner: plan `src_dir`'s splits, assign them to
-    tasks, and run `task` over each task's split rows with mapInArrow.
-    Returns (the lazy result DataFrame, the sized units, the task
-    count); an empty directory gives an empty DataFrame of `schema`.
+    tasks, and run `task` over each task's list of (path, rg0, rg1)
+    splits with mapInArrow. Returns (the lazy result DataFrame, the
+    sized units, the task count); an empty directory gives an empty
+    DataFrame of `schema`.
 
-    Tasks are FAT (~3x cores by default): python worker task setup
-    costs ~200 ms per task, and a real cluster also wants a small
-    multiple of total cores, not one task per row group. Each task gets
-    one byte-balanced contiguous group of units — the stage wall is the
-    slowest task, so task bytes, not unit counts, must be equal."""
+    Tasks are FAT (~3x cores by default): a task that does nothing
+    still costs ~75 ms of scheduling and python worker round trip
+    (local[4], warm workers), and a real cluster also wants a small
+    multiple of total cores, not one task per row group. Each task gets one byte-balanced contiguous group of units —
+    the stage wall is the slowest task, so task bytes, not unit counts,
+    must be equal."""
     units = plan_parquet_splits(src_dir, target_bytes, with_bytes=True)
     if n_tasks is None:
         n_tasks = max(1, spark.sparkContext.defaultParallelism * 3)
@@ -192,12 +192,18 @@ def _map_splits(spark: SparkSession, src_dir: str, task, schema: str,
         return spark.createDataFrame([], schema), units, n_tasks
     groups = [[u[:3] for u in g]
               for g in _balanced_contiguous_groups(units, n_tasks)]
-    # one group per partition: parallelize exactly len(groups) elements
-    # into len(groups) slices, flatten inside the partition — no shuffle
-    rdd = spark.sparkContext.parallelize(groups, len(groups)).flatMap(
-        lambda g: g)
-    splits = spark.createDataFrame(rdd, SPLIT_SCHEMA_DDL)
-    return splits.mapInArrow(task, schema), units, n_tasks
+
+    def run(id_batches):
+        lazy_zip_invalidation()
+        for rb in id_batches:
+            for i in rb.column("id").to_pylist():
+                yield from task(groups[i])
+
+    # partition i of the range holds exactly id i, so task i runs group
+    # i; the plan is MapInArrow <- Range, so no second python worker
+    # feeds the task its input rows
+    return (spark.range(len(groups), numPartitions=len(groups))
+            .mapInArrow(run, schema), units, n_tasks)
 
 
 def plan_parquet_splits(src_dir: str,
@@ -260,9 +266,9 @@ def _file_encode_iter(cfg: EngineConfig):
     machine."""
     inner = _encode_iter_factory(cfg, mapside=True)
 
-    def it(split_batches):
+    def it(splits):
         with closing(_read_ahead(
-                _iter_row_groups(split_batches, _READ_COLUMNS,
+                _iter_row_groups(splits, _READ_COLUMNS,
                                  _SCAN_BATCH_ROWS),
                 _READAHEAD_DEPTH)) as batches:
             yield from inner(batches)
@@ -288,9 +294,9 @@ def encode_parquet_dir_summary(spark: SparkSession, src_dir: str,
     encode_parquet_dir_direct)."""
     encode = _file_encode_iter(cfg or EngineConfig(layout="mapside"))
 
-    def it(split_batches):
+    def it(splits):
         import pyarrow as pa
-        for rb in encode(split_batches):
+        for rb in encode(splits):
             yield pa.record_batch([rb.column(c) for c in _SUMMARY_COLS],
                                   names=_SUMMARY_COLS)
 
@@ -409,7 +415,7 @@ def encode_parquet_dir_direct(spark: SparkSession, src_dir: str,
     encode = _file_encode_iter(cfg)
     codec = cfg.parquet_codec
 
-    def it(split_batches):
+    def it(splits):
         import time
         import pyarrow as pa
         import pyarrow.parquet as pq
@@ -425,8 +431,6 @@ def encode_parquet_dir_direct(spark: SparkSession, src_dir: str,
         tmp = os.path.join(blocks_dir, f".part-{pid:05d}.{attempt}.tmp")
         final = os.path.join(blocks_dir, f"part-{pid:05d}.parquet")
         lineage = os.path.join(lineage_dir, f"part-{pid:05d}.json")
-        # the input is the task's few split-plan rows, not source data
-        split_batches = list(split_batches)
         # per-(source, bucket, codec) rollup — O(blocks) per task; lets
         # the driver assemble the manifest from the lineage records with
         # NO post-job Spark rescan of the blocks
@@ -460,7 +464,7 @@ def encode_parquet_dir_direct(spark: SparkSession, src_dir: str,
                 writer.write_batch(rb)
 
             def writes():
-                for rb in encode(split_batches):
+                for rb in encode(splits):
                     roll(rb)
                     yield partial(write, rb)
 
@@ -483,7 +487,7 @@ def encode_parquet_dir_direct(spark: SparkSession, src_dir: str,
             # task_wall_sec — the skew audit (which task straggled)
             # without any cluster-UI scrape
             rec = {"file": os.path.basename(final),
-                   "splits": [list(s) for s in _split_rows(split_batches)],
+                   "splits": [list(s) for s in splits],
                    **dict(zip(_TOTAL_COLS, totals)),
                    "task_wall_sec": round(time.time() - task_t0, 3),
                    "groups": [[s, b, c, *v]
@@ -529,15 +533,16 @@ def encode_parquet_dir_direct(spark: SparkSession, src_dir: str,
         json.dump({"sig": plan_sig, "n_tasks": n_tasks,
                    "n_units": len(units)}, fh)
 
-    totals = job.agg(*[F.sum(c).alias(c)
-                       for c in _TOTAL_COLS[1:]]).collect()[0]
+    # one row per task, summed here rather than in a second stage
+    rows = job.collect()
     if not manifest_from_lineage(out_dir):
         refresh_manifest(spark, out_dir)  # lineage gap: authoritative rescan
-    orig, comp = int(totals["orig_bytes"] or 0), int(totals["comp_bytes"] or 0)
+    orig, comp, n_tokens, n_docs = (
+        sum(r[c] for r in rows)
+        for c in ("orig_bytes", "comp_bytes", "n_tokens", "n_docs"))
     return {"orig_bytes": orig, "comp_bytes": comp,
             "ratio": (comp / orig) if orig else 1.0,
-            "n_tokens": int(totals["n_tokens"] or 0),
-            "n_docs": int(totals["n_docs"] or 0)}
+            "n_tokens": n_tokens, "n_docs": n_docs}
 
 
 def decode_parquet_dir(spark: SparkSession, out_dir: str,
@@ -549,9 +554,9 @@ def decode_parquet_dir(spark: SparkSession, out_dir: str,
     from .blocks import DECODED_SCHEMA_DDL
     from .engine import _decode_iter
 
-    def it(split_batches):
+    def it(splits):
         with closing(_read_ahead(
-                _iter_row_groups(split_batches,
+                _iter_row_groups(splits,
                                  ["payload", "doc_ids", "doc_lens"],
                                  _BLOCK_BATCH_ROWS),
                 _READAHEAD_DEPTH)) as batches:
@@ -572,12 +577,12 @@ def decode_parquet_dir_summary(spark: SparkSession, out_dir: str,
     per-doc ListArray of the full decode kernel are not needed here."""
     from .blocks import decode_block
 
-    def it(split_batches):
+    def it(splits):
         import pyarrow as pa
         import pyarrow.compute as pc
         n_docs = n_tokens = 0
         for blk in _read_ahead(
-                _iter_row_groups(split_batches, ["payload", "doc_lens"],
+                _iter_row_groups(splits, ["payload", "doc_lens"],
                                  _BLOCK_BATCH_ROWS),
                 _READAHEAD_DEPTH):
             # as_buffer: zero-copy view of the Arrow payload

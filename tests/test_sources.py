@@ -225,26 +225,38 @@ def test_decode_parquet_dir_full(spark, tmp_path_factory):
 
 def test_direct_writer_lineage(spark, tmp_path_factory):
     """Every committed task file carries a lineage record naming the
-    exact input splits it consumed; metrics sum to the job summary and
-    split coverage equals the plan."""
-    import glob
+    exact input splits it consumed: part-i's splits are group i of the
+    plan, in order (the split_v3 resume fingerprint relies on this
+    task <-> group mapping), and metrics sum to the job summary. The
+    split source is a Range, so each task runs one python worker."""
     import json
-    from rle_spark.sources import encode_parquet_dir_direct, plan_parquet_splits
+    from rle_spark.sources import (_balanced_contiguous_groups, _map_splits,
+                                   encode_parquet_dir_direct,
+                                   plan_parquet_splits)
     src = str(tmp_path_factory.mktemp("lsrc"))
     out = str(tmp_path_factory.mktemp("lout"))
     df = token_table(spark, 60, seed=27)
     df.repartition(5).write.mode("overwrite").parquet(src)
-    s = encode_parquet_dir_direct(spark, src, out, CFG, n_tasks=5)
-    recs = [json.load(open(p))
-            for p in glob.glob(os.path.join(out, "lineage", "*.json"))]
-    assert recs
+    s = encode_parquet_dir_direct(spark, src, out, CFG, n_tasks=3)
+    groups = _balanced_contiguous_groups(
+        plan_parquet_splits(src, with_bytes=True), 3)
+    assert len(groups) == 3 and max(len(g) for g in groups) > 1
+    assert len(os.listdir(os.path.join(out, "lineage"))) == 3
+    recs = []
+    for i, group in enumerate(groups):
+        rec = json.load(open(os.path.join(out, "lineage",
+                                          f"part-{i:05d}.json")))
+        assert rec["file"] == f"part-{i:05d}.parquet"
+        assert rec["splits"] == [list(u[:3]) for u in group]
+        assert os.path.exists(os.path.join(out, "blocks", rec["file"]))
+        recs.append(rec)
     assert sum(r["n_docs"] for r in recs) == s["n_docs"]
     assert sum(r["comp_bytes"] for r in recs) == s["comp_bytes"]
-    covered = {tuple(sp) for r in recs for sp in r["splits"]}
-    planned = {(p, g0, g1) for p, g0, g1 in plan_parquet_splits(src)}
-    assert covered == planned
-    for r in recs:
-        assert os.path.exists(os.path.join(out, "blocks", r["file"]))
+
+    job = _map_splits(spark, src, lambda splits: iter(()), "n long",
+                      n_tasks=3)[0]
+    plan = job._jdf.queryExecution().executedPlan().toString()
+    assert "Range" in plan and "ExistingRDD" not in plan
 
 
 def test_manifest_from_lineage_matches_spark_rescan(spark, tmp_path_factory):

@@ -258,7 +258,7 @@ def per_codec_entropy(out_dir: str) -> dict:
     `rh` = ratio * info_ratio is the reference benchmark-table column.
     `dec_GBps` is the single-thread decode throughput over the same
     blocks (the reference benchmark's per-codec decode MiB/s column,
-    README.md tables): orig bytes / wall of decode_with replaying every
+    README.md tables): orig bytes / wall of decode_block replaying every
     block of that codec once, payloads pre-materialized so the timing
     excludes parquet IO."""
     import glob as g

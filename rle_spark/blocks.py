@@ -26,6 +26,7 @@ from .codecs import BY_ID, REGISTRY
 from .codecs.base import MAGIC
 
 BLOCK_FRAME_VERSION = 1
+_HEADER_BYTES = len(MAGIC) + struct.calcsize("<BHQ")  # 15
 
 # Spark-side schemas (DDL strings keep this module Spark-import-free)
 BLOCK_SCHEMA_DDL = (
@@ -51,18 +52,23 @@ def frame_payload(codec_name: str, n_tokens: int, payload: bytes) -> bytes:
 
 def unframe_payload(buf: bytes) -> tuple[str, int, memoryview]:
     mv = memoryview(buf)
+    if len(mv) < _HEADER_BYTES:
+        raise ValueError(f"block frame of {len(mv)} bytes is shorter than "
+                         f"its {_HEADER_BYTES}-byte header")
     if bytes(mv[:4]) != MAGIC:
         raise ValueError("bad block magic")
     ver, codec_id, n_tokens = struct.unpack_from("<BHQ", mv, 4)
     if ver != BLOCK_FRAME_VERSION:
         raise ValueError(f"unsupported block version {ver}")
-    return BY_ID[codec_id].name, n_tokens, mv[15:]
+    if codec_id not in BY_ID:
+        raise ValueError(f"unknown codec id {codec_id} in block frame")
+    return BY_ID[codec_id].name, n_tokens, mv[_HEADER_BYTES:]
 
 
 def decode_block(buf: bytes) -> np.ndarray:
     """Decode a framed block payload to the int32 token array."""
     name, n_tokens, body = unframe_payload(buf)
-    return BY_ID[REGISTRY[name].codec_id].decode(body, n_tokens)
+    return REGISTRY[name].decode(body, n_tokens)
 
 
 def split_docs(tokens: np.ndarray, doc_lens: np.ndarray) -> list[np.ndarray]:

@@ -5,7 +5,6 @@ from .registry import (  # noqa: F401
     MAX_EFFORT_CODECS,
     PROBE_CODECS,
     REGISTRY,
+    TIERS,
     Codec,
-    decode_with,
-    encode_with,
 )

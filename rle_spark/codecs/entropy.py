@@ -14,26 +14,13 @@ from __future__ import annotations
 
 import zlib
 
-import numpy as np
-
-from .base import tokens_to_bytes
-
 LEVEL = 6
-
-
-def zlib_raw_encode(arr: np.ndarray) -> bytes:
-    return zlib.compress(tokens_to_bytes(arr).tobytes(), LEVEL)
 
 
 def _decompress_tail_safe(buf: bytes) -> bytes:
     """decompressobj stops at the DEFLATE stream end — appended garbage
     lands in unused_data instead of raising (tail-scramble safety)."""
     return zlib.decompressobj().decompress(bytes(buf))
-
-
-def zlib_raw_decode(buf: bytes, n: int) -> np.ndarray:
-    img = _decompress_tail_safe(buf)
-    return np.frombuffer(img, dtype="<i4", count=n).copy()
 
 
 def compose_zlib(payload: bytes) -> bytes:

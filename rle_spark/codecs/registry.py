@@ -1,41 +1,61 @@
-"""Codec registry — the codec_funcs.h analogue.
+"""Codec registry — the codec_funcs.h analogue, as one table.
 
 The reference registers every codec as a (compress, decompress) pair in
-a single table (/root/reference/src/codec_funcs.h:270-410) keyed by a
-codec enum; the benchmark loop iterates that table. Here each codec is
-a (encode, decode, estimate) triple over int32 token arrays, keyed by a
-stable string id that is persisted in block headers.
+one function-pointer table (src/codec_funcs.h:270-410) keyed by a codec
+enum; its benchmark loop iterates that table. `CODECS` is the same
+table, one row per codec:
 
-Codec ids are frozen once shipped (format stability): never renumber,
-only append.
+    codec_id  stable integer persisted in every block frame
+    name      stable string id (block metadata, selector allow-lists)
+    encode    int32 tokens -> payload bytes, or None if the codec declines
+    decode    (payload, n_tokens) -> int32 tokens
+    tier      how the selector uses the codec (below)
+    estimate  block_stats -> approx payload bytes (estimate tier only)
+
+Rows are built from two adapters. `_tokens` hands the int32 tokens to
+the kernel. `_image` hands it the tokens' little-endian byte image and
+turns the first n*4 decoded bytes back into tokens. The symbol width
+is a codec parameter, not a property of the data
+(src/rleX_extreme_cpu.c:4-64).
+
+Tiers:
+
+    estimate  token codecs with a closed-form size estimate; the
+              selector ranks them and trial-encodes the best two (all
+              of them at effort="max")
+    probe     byte-image codecs cheap enough to trial-encode when the
+              estimates are weak or the block is run-heavy
+    max       ratio-oriented codecs, trialed only at effort="max" (the
+              reference's greedy-encoder tier, README.md:251-254)
+    fidelity  reference formats kept byte-exact and tested, never
+              trialed: the canonical formats are never larger
+
+Within a tier the rows are in trial order. The selector keeps the first
+of two payloads of equal size, so reordering rows can change the codec
+a block gets, and so the bytes on disk. Codec ids are frozen: never
+renumber, only append.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import partial
 from typing import Callable, Optional
 
 import numpy as np
 
-from . import base
 from .base import (
     bit_width,
     byte_image_symbols,
     pack_ints,
     pack_ints_size,
-    pack_sections,
     tokens_to_bytes,
     unpack_ints,
-    unpack_sections,
 )
 from .dictionary import dict_decode, dict_encode
-from .entropy import (
-    compose_zlib,
-    decompose_zlib,
-    zlib_raw_decode,
-    zlib_raw_encode,
-)
+from .entropy import compose_zlib, decompose_zlib
 from .fsst import fsst_decode_bytes, fsst_encode_bytes
+from .interleaved import rlex_decode_bytes, rlex_encode_bytes
 from .low_entropy import low_entropy_decode_bytes, low_entropy_encode_bytes
 from .lut import lut_decode_symbols, lut_encode_symbols
 from .mtf import (
@@ -52,9 +72,8 @@ from .rle import (
     rle_stride_decode_bytes,
     rle_stride_encode_bytes,
 )
+from .sh import sh_decode_bytes, sh_encode_bytes
 from .short import (
-    short32_greedy_decode_bytes,
-    short32_greedy_encode_bytes,
     short_decode_bytes,
     short_encode_bytes,
     short_greedy_decode_bytes,
@@ -62,8 +81,6 @@ from .short import (
     short_sym_decode_bytes,
     short_sym_encode_bytes,
 )
-from .interleaved import rlex_decode_bytes, rlex_encode_bytes
-from .sh import sh_decode_bytes, sh_encode_bytes
 from .single import single_decode_symbols, single_encode_symbols
 
 TOKEN_DTYPE = np.dtype("<i4")
@@ -75,238 +92,86 @@ class Codec:
     name: str
     encode: Callable[[np.ndarray], Optional[bytes]]
     decode: Callable[[bytes, int], np.ndarray]
-    # estimate(stats) -> approx encoded bytes, or None if this codec
-    # should only be chosen via explicit trial (probe) encodes
-    estimate: Callable[[dict], Optional[float]]
-
-
-def _as_tokens(a: np.ndarray) -> np.ndarray:
-    return np.ascontiguousarray(a, dtype=TOKEN_DTYPE)
+    tier: str
+    estimate: Optional[Callable[[dict], float]] = None
 
 
 # ---------------------------------------------------------------------------
-# token-level codecs (symbols are the int32 tokens themselves)
+# adapters: each returns an (encode, decode) pair for one row
 # ---------------------------------------------------------------------------
 
 
-def _raw_encode(arr):
-    return _as_tokens(arr).tobytes()
+def _tokens(encode, decode):
+    """`encode(tokens)` sees contiguous int32 tokens; `decode(buf)`
+    returns them."""
+    return (lambda a: encode(np.ascontiguousarray(a, dtype=TOKEN_DTYPE)),
+            lambda buf, n: decode(buf))
 
 
-def _raw_decode(buf, n):
-    return np.frombuffer(buf, dtype=TOKEN_DTYPE, count=n).copy()
+def _image(encode, decode, **params):
+    """`encode(img, **params)` sees the byte image; `decode(buf,
+    **params)` returns a buffer whose first n*4 bytes are the image."""
+    enc, dec = partial(encode, **params), partial(decode, **params)
+    return (lambda a: enc(tokens_to_bytes(a)),
+            lambda buf, n: np.frombuffer(dec(buf), TOKEN_DTYPE, count=n).copy())
 
 
-def _for_encode(arr):
-    return pack_ints(_as_tokens(arr))
+def _sym_rle(width_bits):
+    """The canonical RLE over width_bits-wide symbols of the image."""
+    dt = np.dtype(f"<u{width_bits // 8}")
+    return _image(
+        lambda img: rle_encode_symbols(byte_image_symbols(img, width_bits)[0],
+                                       packed=True),
+        partial(rle_decode_symbols, dtype=dt))
 
 
-def _for_decode(buf, n):
-    return unpack_ints(buf, out_dtype=TOKEN_DTYPE).astype(TOKEN_DTYPE,
-                                                          copy=False)
-
-
-def _delta_encode(arr):
-    a = _as_tokens(arr).astype(np.int64)
-    d = np.diff(a, prepend=0)
-    return pack_ints(d)
-
-
-def _delta_decode(buf, n):
-    return np.cumsum(unpack_ints(buf)).astype(TOKEN_DTYPE)
-
-
-def _dict_encode(arr):
-    return dict_encode(_as_tokens(arr))
-
-
-def _dict_decode(buf, n):
-    return dict_decode(buf, TOKEN_DTYPE)
-
-
-def _rle32_encode(arr):
-    # int32 goes straight in: pack_ints promotes internally, and the
-    # 8 B/token upcast was a full extra pass + allocation per block
-    return rle_encode_symbols(_as_tokens(arr), packed=True)
-
-
-def _rle32_decode(buf, n):
-    return rle_decode_symbols(buf, TOKEN_DTYPE)
-
-
-def _single32_encode(arr):
-    return single_encode_symbols(_as_tokens(arr))
-
-
-def _single32_decode(buf, n):
-    return single_decode_symbols(buf, TOKEN_DTYPE)
-
-
-# ---------------------------------------------------------------------------
-# byte-image codecs (symbol width is a codec parameter —
-# /root/reference/src/rleX_extreme_cpu.c:4-64)
-# ---------------------------------------------------------------------------
-
-
-def _img_rle_encode(width_bits):
-    def enc(arr):
-        img = tokens_to_bytes(_as_tokens(arr))
-        sym, _pad = byte_image_symbols(img, width_bits)
-        return rle_encode_symbols(sym, packed=True)
-    return enc
-
-
-def _img_rle_decode(width_bits):
-    step = width_bits // 8
-    dt = np.dtype(f"<u{step}")
-
-    def dec(buf, n):
-        sym = rle_decode_symbols(buf, dt)
-        img = sym.view(np.uint8)[: n * 4]
-        return img.view(TOKEN_DTYPE).copy()
-    return dec
-
-
-def _img_single8_encode(arr):
-    img = tokens_to_bytes(_as_tokens(arr))
-    return single_encode_symbols(img)
-
-
-def _img_single8_decode(buf, n):
-    img = single_decode_symbols(buf, np.uint8)[: n * 4]
-    return img.view(TOKEN_DTYPE).copy()
-
-
-def _mtf_rle_encode(lanes):
-    def enc(arr):
-        img = tokens_to_bytes(_as_tokens(arr))
-        t = mtf_encode_bytes(img, lanes)
-        return rle_encode_symbols(t)
-    return enc
-
-
-def _mtf_rle_decode(lanes):
-    def dec(buf, n):
-        t = rle_decode_symbols(buf, np.uint8)[: n * 4]
-        img = mtf_decode_bytes(t, lanes)
-        return img.view(TOKEN_DTYPE).copy()
-    return dec
-
-
-def _fsst_encode(arr):
-    img = tokens_to_bytes(_as_tokens(arr))
-    return fsst_encode_bytes(img)
-
-
-def _fsst_decode(buf, n):
-    img = fsst_decode_bytes(buf)[: n * 4]
-    return np.ascontiguousarray(img).view(TOKEN_DTYPE).copy()
-
-
-def _rle128_encode(arr):
-    img = tokens_to_bytes(_as_tokens(arr))
-    pad = (-len(img)) % 16
-    if pad:
-        img = np.concatenate([img, np.zeros(pad, dtype=np.uint8)])
-    lanes = img.view("<u8").reshape(-1, 2)
-    return rle_encode_multi([np.ascontiguousarray(lanes[:, 0]),
-                             np.ascontiguousarray(lanes[:, 1])])
-
-
-def _rle128_decode(buf, n):
-    a, b = rle_decode_multi(buf, 2, np.uint64)
-    lanes = np.empty((len(a), 2), dtype="<u8")
-    lanes[:, 0] = a
-    lanes[:, 1] = b
-    return lanes.reshape(-1).view(np.uint8)[: n * 4].view(TOKEN_DTYPE).copy()
-
-
-def _rle32_lut_encode(arr, window=7):
-    return lut_encode_symbols(_as_tokens(arr), window=window)
-
-
-def _rle32_lut_decode(buf, n):
-    return lut_decode_symbols(buf, TOKEN_DTYPE)
-
-
-def _bitmmtf_rle_encode(stride):
-    def enc(arr):
-        img = tokens_to_bytes(_as_tokens(arr))
-        t = bitmmtf_encode_bytes(img, stride)
-        return rle_encode_symbols(t)
-    return enc
-
-
-def _bitmmtf_rle_decode(stride):
-    def dec(buf, n):
-        t = rle_decode_symbols(buf, np.uint8)[: n * 4]
-        img = bitmmtf_decode_bytes(t, stride)
-        return img.view(TOKEN_DTYPE).copy()
-    return dec
-
-
-def _img_components(img: np.ndarray, comp_bytes: int, n_comp: int):
-    """Pad a byte image to a multiple of comp_bytes*n_comp and view it
-    as n_comp parallel component columns (one composite symbol per
-    row) — the 24/48-bit sym-aligned instantiation
-    (/root/reference/src/rle24_extreme_cpu.c:1-28,
-    src/rle48_extreme_cpu.c:1-27): 24-bit = 3 u8 lanes, 48-bit = 3 u16
-    lanes, run boundaries on whole symbols only."""
-    step = comp_bytes * n_comp
-    pad = (-len(img)) % step
-    if pad:
-        img = np.concatenate([img, np.zeros(pad, dtype=np.uint8)])
-    m = img.view(np.dtype(f"<u{comp_bytes}")).reshape(-1, n_comp)
-    return [np.ascontiguousarray(m[:, c]) for c in range(n_comp)]
-
-
-def _rle_sym_wide_encode(comp_bytes, n_comp):
-    def enc(arr):
-        img = tokens_to_bytes(_as_tokens(arr))
-        return rle_encode_multi(_img_components(img, comp_bytes, n_comp))
-    return enc
-
-
-def _rle_sym_wide_decode(comp_bytes, n_comp):
+def _components(comp_bytes, n_comp):
+    """Sym-aligned RLE over a symbol of n_comp comp_bytes-wide lanes:
+    the image, zero-padded to whole symbols, becomes n_comp parallel
+    columns and runs end on whole symbols only. 24-bit = 3 u8 lanes,
+    48-bit = 3 u16 lanes (src/rle24_extreme_cpu.c:1-28,
+    src/rle48_extreme_cpu.c:1-27), 128-bit = 2 u64 lanes."""
     dt = np.dtype(f"<u{comp_bytes}")
 
-    def dec(buf, n):
-        comps = rle_decode_multi(buf, n_comp, dt)
-        m = np.empty((len(comps[0]), n_comp), dtype=dt)
-        for c in range(n_comp):
-            m[:, c] = comps[c]
-        return m.reshape(-1).view(np.uint8)[: n * 4].view(TOKEN_DTYPE).copy()
-    return dec
+    def encode(img):
+        pad = np.zeros((-len(img)) % (comp_bytes * n_comp), np.uint8)
+        m = np.concatenate([img, pad]).view(dt).reshape(-1, n_comp)
+        return rle_encode_multi([np.ascontiguousarray(c) for c in m.T])
+
+    return _image(encode,
+                  lambda buf: np.stack(rle_decode_multi(buf, n_comp, dt), axis=1))
 
 
-def _rle8_le_encode(arr):
-    img = tokens_to_bytes(_as_tokens(arr))
-    return compose_zlib(low_entropy_encode_bytes(img))
+def _rle_after(transform, inverse, **params):
+    """A byte transform of the image, then byte RLE of its output."""
+    fwd, inv = partial(transform, **params), partial(inverse, **params)
+    return _image(lambda img: rle_encode_symbols(fwd(img)),
+                  lambda buf: inv(rle_decode_symbols(buf, np.uint8)))
 
 
-def _rle8_le_decode(buf, n):
-    img = low_entropy_decode_bytes(decompose_zlib(bytes(buf)))
-    return img[: n * 4].view(TOKEN_DTYPE).copy()
+def _zlib_after(stream):
+    """Another codec's payload through zlib (the Low Entropy F7
+    analogues: the reference shapes these streams for an entropy
+    coder)."""
+    enc, dec = stream
+    return (lambda a: compose_zlib(enc(a)),
+            lambda buf, n: dec(decompose_zlib(buf), n))
 
 
-def _rle8_le_single_encode(arr):
-    # F7 "single"/only_max_frequency variant: only the argmax-savings
-    # symbol is run-length coded (rle8_low_entropy_cpu.c:340-439);
-    # shares _rle8_le_decode — the bitmap drives both variants
-    img = tokens_to_bytes(_as_tokens(arr))
-    return compose_zlib(low_entropy_encode_bytes(img, single=True))
+_short8 = partial(_image, short_encode_bytes, short_decode_bytes)
+_short_sym = partial(_image, short_sym_encode_bytes, short_sym_decode_bytes)
+_greedy = partial(_image, short_greedy_encode_bytes, short_greedy_decode_bytes)
+_rlex = partial(_image, rlex_encode_bytes, rlex_decode_bytes)
 
 
-def _rle8_lz_encode(arr):
-    img = tokens_to_bytes(_as_tokens(arr))
-    sym, _ = byte_image_symbols(img, 8)
-    return compose_zlib(rle_encode_symbols(sym, packed=True))
+def _stride(stride):
+    return _image(partial(rle_stride_encode_bytes, stride=stride),
+                  rle_stride_decode_bytes)
 
 
-def _rle8_lz_decode(buf, n):
-    inner = decompose_zlib(bytes(buf))
-    sym = rle_decode_symbols(inner, np.uint8)
-    return sym[: n * 4].view(TOKEN_DTYPE).copy()
+def _lut(window):
+    return _tokens(partial(lut_encode_symbols, window=window),
+                   partial(lut_decode_symbols, dtype=TOKEN_DTYPE))
 
 
 # ---------------------------------------------------------------------------
@@ -353,251 +218,130 @@ def _est_single32(st):
     return (k * (lw + lw) + lit * vw) / 8.0 + 4 * _HDR
 
 
-REGISTRY: dict[str, Codec] = {}
+# ---------------------------------------------------------------------------
+# the table: grouped by tier, each tier in trial order
+# ---------------------------------------------------------------------------
 
+CODECS: list[Codec] = [
+    Codec(0, "raw", *_image(bytes, memoryview), "estimate", _est_raw),
+    Codec(1, "for_bitpack",
+          *_tokens(pack_ints, lambda buf: unpack_ints(buf, out_dtype=TOKEN_DTYPE)
+                   .astype(TOKEN_DTYPE, copy=False)),
+          "estimate", _est_for),
+    Codec(2, "delta_bitpack",
+          *_tokens(lambda a: pack_ints(np.diff(a.astype(np.int64), prepend=0)),
+                   lambda buf: np.cumsum(unpack_ints(buf)).astype(TOKEN_DTYPE)),
+          "estimate", _est_delta),
+    Codec(3, "dict_bitpack",
+          *_tokens(dict_encode, partial(dict_decode, dtype=TOKEN_DTYPE)),
+          "estimate", _est_dict),
+    # int32 goes straight in: pack_ints promotes internally
+    Codec(4, "rle32_sym",
+          *_tokens(partial(rle_encode_symbols, packed=True),
+                   partial(rle_decode_symbols, dtype=TOKEN_DTYPE)),
+          "estimate", _est_rle32),
+    Codec(5, "rle32_single",
+          *_tokens(single_encode_symbols,
+                   partial(single_decode_symbols, dtype=TOKEN_DTYPE)),
+          "estimate", _est_single32),
 
-def _register(codec_id, name, encode, decode, estimate):
-    REGISTRY[name] = Codec(codec_id, name, encode, decode, estimate)
+    Codec(8, "rle64_sym", *_sym_rle(64), "probe"),
+    Codec(15, "rle128_sym", *_components(8, 2), "probe"),
+    Codec(6, "rle8", *_sym_rle(8), "probe"),
+    Codec(7, "rle16_sym", *_sym_rle(16), "probe"),
+    Codec(9, "rle8_single",
+          *_image(single_encode_symbols, partial(single_decode_symbols, dtype=np.uint8)),
+          "probe"),
+    Codec(12, "fsst8", *_image(fsst_encode_bytes, fsst_decode_bytes), "probe"),
+    # byte-aligned (UNBOUND) family: stride in bytes = 16/24/32/48/64/128-bit
+    Codec(19, "rle32_byte", *_stride(4), "probe"),
 
+    Codec(10, "mtf16_rle8", *_rle_after(mtf_encode_bytes, mtf_decode_bytes, lanes=16),
+          "max"),
+    Codec(11, "mtf32_rle8", *_rle_after(mtf_encode_bytes, mtf_decode_bytes, lanes=32),
+          "max"),
+    Codec(13, "zlib_raw", *_zlib_after(_image(bytes, memoryview)), "max"),
+    Codec(14, "rle8_lz", *_zlib_after(_sym_rle(8)), "max"),
+    # true Low Entropy: eligibility bitmap + count-byte stream; the
+    # single variant run-codes only the argmax-savings symbol
+    # (rle8_low_entropy_cpu.c:340-439) and shares the decoder
+    Codec(27, "rle8_le",
+          *_zlib_after(_image(low_entropy_encode_bytes, low_entropy_decode_bytes)),
+          "max"),
+    Codec(30, "rle8_le_single",
+          *_zlib_after(_image(partial(low_entropy_encode_bytes, single=True),
+                              low_entropy_decode_bytes)),
+          "max"),
+    # F4 LUT recency windows of 7, 1 and 3 symbols
+    Codec(16, "rle32_lut", *_lut(7), "max"),
+    Codec(28, "rle32_lut1", *_lut(1), "max"),
+    Codec(29, "rle32_lut3", *_lut(3), "max"),
+    Codec(17, "rle16_byte", *_stride(2), "max"),
+    Codec(18, "rle24_byte", *_stride(3), "max"),
+    Codec(20, "rle48_byte", *_stride(6), "max"),
+    Codec(21, "rle64_byte", *_stride(8), "max"),
+    Codec(22, "rle128_byte", *_stride(16), "max"),
+    # bit-plane MMTF (F9 bitmmtf8/16): XOR-vs-previous transform + RLE
+    Codec(23, "bitmmtf8_rle",
+          *_rle_after(bitmmtf_encode_bytes, bitmmtf_decode_bytes, stride=1), "max"),
+    Codec(24, "bitmmtf16_rle",
+          *_rle_after(bitmmtf_encode_bytes, bitmmtf_decode_bytes, stride=2), "max"),
+    # 24/48-bit sym-aligned widths (byte-aligned strides 3/6 are ids 18/20)
+    Codec(25, "rle24_sym", *_components(1, 3), "max"),
+    Codec(26, "rle48_sym", *_components(2, 3), "max"),
+    # true F5 short-command streams with the reference's exact byte
+    # sizes (src/rleX_Xsl_short.h): width 8, then sym mode at the
+    # multi-byte widths (at width 32 one symbol is one token)
+    Codec(31, "rle8_1sl_short", *_short8(sym_count=1), "max"),
+    Codec(32, "rle8_3sl_short", *_short8(sym_count=3), "max"),
+    Codec(33, "rle8_7sl_short", *_short8(sym_count=7), "max"),
+    Codec(36, "rle16_3sl_short", *_short_sym(sym_count=3, sym_bytes=2), "max"),
+    Codec(39, "rle24_3sl_short", *_short_sym(sym_count=3, sym_bytes=3), "max"),
+    Codec(35, "rle32_3sl_short", *_short_sym(sym_count=3, sym_bytes=4), "max"),
+    Codec(40, "rle48_3sl_short", *_short_sym(sym_count=3, sym_bytes=6), "max"),
+    Codec(37, "rle64_3sl_short", *_short_sym(sym_count=3, sym_bytes=8), "max"),
+    # F6 greedy partial-symbol tier: only width 32 is trialed (five
+    # greedy trials per block would dominate effort="max" walls)
+    Codec(34, "rle32_3sl_byte_short_greedy", *_greedy(sym_bytes=4), "max"),
+    Codec(53, "rle32_1sl_short", *_short_sym(sym_count=1, sym_bytes=4), "max"),
+    Codec(58, "rle32_7sl_short", *_short_sym(sym_count=7, sym_bytes=4), "max"),
+    # F11: the reference's ratio-over-speed outlier (bit-level
+    # prefix-coded command stream, src/rle_sh.c); huge blocks are split
+    # into independent rle8m-style subsections
+    Codec(38, "rle8_sh", *_image(sh_encode_bytes, sh_decode_bytes), "max"),
 
-_register(0, "raw", _raw_encode, _raw_decode, _est_raw)
-_register(1, "for_bitpack", _for_encode, _for_decode, _est_for)
-_register(2, "delta_bitpack", _delta_encode, _delta_decode, _est_delta)
-_register(3, "dict_bitpack", _dict_encode, _dict_decode, _est_dict)
-_register(4, "rle32_sym", _rle32_encode, _rle32_decode, _est_rle32)
-_register(5, "rle32_single", _single32_encode, _single32_decode, _est_single32)
-_register(6, "rle8", _img_rle_encode(8), _img_rle_decode(8), lambda st: None)
-_register(7, "rle16_sym", _img_rle_encode(16), _img_rle_decode(16), lambda st: None)
-_register(8, "rle64_sym", _img_rle_encode(64), _img_rle_decode(64), lambda st: None)
-_register(9, "rle8_single", _img_single8_encode, _img_single8_decode, lambda st: None)
-_register(10, "mtf16_rle8", _mtf_rle_encode(16), _mtf_rle_decode(16), lambda st: None)
-_register(11, "mtf32_rle8", _mtf_rle_encode(32), _mtf_rle_decode(32), lambda st: None)
-_register(12, "fsst8", _fsst_encode, _fsst_decode, lambda st: None)
-def _stride_encode(stride):
-    def enc(arr):
-        return rle_stride_encode_bytes(tokens_to_bytes(_as_tokens(arr)), stride)
-    return enc
+    Codec(41, "rle16_3sl_byte_short_greedy", *_greedy(sym_bytes=2), "fidelity"),
+    Codec(42, "rle24_3sl_byte_short_greedy", *_greedy(sym_bytes=3), "fidelity"),
+    Codec(43, "rle48_3sl_byte_short_greedy", *_greedy(sym_bytes=6), "fidelity"),
+    Codec(44, "rle64_3sl_byte_short_greedy", *_greedy(sym_bytes=8), "fidelity"),
+    # true interleaved F1/F2 command streams (F1 byte-exact against
+    # refmodel.ref_rle_size_exact; F2 = the packed same-as-last-symbol
+    # bit + 7-bit counts); unbound = byte counts, runs start anywhere
+    # and may end inside a partial trailing symbol
+    Codec(45, "rle32_sym_interleaved", *_rlex(sym_bytes=4, packed=False), "fidelity"),
+    Codec(46, "rle32_sym_packed", *_rlex(sym_bytes=4, packed=True), "fidelity"),
+    Codec(47, "rle8_interleaved", *_rlex(sym_bytes=1, packed=False), "fidelity"),
+    Codec(48, "rle8_packed", *_rlex(sym_bytes=1, packed=True), "fidelity"),
+    Codec(49, "rle32_byte_interleaved",
+          *_rlex(sym_bytes=4, packed=False, unbound=True), "fidelity"),
+    Codec(50, "rle32_byte_packed",
+          *_rlex(sym_bytes=4, packed=True, unbound=True), "fidelity"),
+    # F5 grid completion: the reference registers the full {1,3,7}-LUT
+    # grid (src/rleX_Xsl_short.c:7-270, src/codec_funcs.h:298-388)
+    Codec(51, "rle16_1sl_short", *_short_sym(sym_count=1, sym_bytes=2), "fidelity"),
+    Codec(52, "rle24_1sl_short", *_short_sym(sym_count=1, sym_bytes=3), "fidelity"),
+    Codec(54, "rle48_1sl_short", *_short_sym(sym_count=1, sym_bytes=6), "fidelity"),
+    Codec(55, "rle64_1sl_short", *_short_sym(sym_count=1, sym_bytes=8), "fidelity"),
+    Codec(56, "rle16_7sl_short", *_short_sym(sym_count=7, sym_bytes=2), "fidelity"),
+    Codec(57, "rle24_7sl_short", *_short_sym(sym_count=7, sym_bytes=3), "fidelity"),
+    Codec(59, "rle48_7sl_short", *_short_sym(sym_count=7, sym_bytes=6), "fidelity"),
+    Codec(60, "rle64_7sl_short", *_short_sym(sym_count=7, sym_bytes=8), "fidelity"),
+]
 
-
-def _stride_decode(stride):
-    def dec(buf, n):
-        img = rle_stride_decode_bytes(buf)[: n * 4]
-        return np.ascontiguousarray(img).view(TOKEN_DTYPE).copy()
-    return dec
-
-
-_register(13, "zlib_raw", zlib_raw_encode, zlib_raw_decode, lambda st: None)
-_register(14, "rle8_lz", _rle8_lz_encode, _rle8_lz_decode, lambda st: None)
-_register(15, "rle128_sym", _rle128_encode, _rle128_decode, lambda st: None)
-_register(16, "rle32_lut", _rle32_lut_encode, _rle32_lut_decode, lambda st: None)
-# byte-aligned (UNBOUND) family: stride in bytes = 16/24/32/48/64/128-bit
-_register(17, "rle16_byte", _stride_encode(2), _stride_decode(2), lambda st: None)
-_register(18, "rle24_byte", _stride_encode(3), _stride_decode(3), lambda st: None)
-_register(19, "rle32_byte", _stride_encode(4), _stride_decode(4), lambda st: None)
-_register(20, "rle48_byte", _stride_encode(6), _stride_decode(6), lambda st: None)
-_register(21, "rle64_byte", _stride_encode(8), _stride_decode(8), lambda st: None)
-_register(22, "rle128_byte", _stride_encode(16), _stride_decode(16), lambda st: None)
-# bit-plane MMTF (F9 bitmmtf8/16): XOR-vs-previous transform + RLE
-_register(23, "bitmmtf8_rle", _bitmmtf_rle_encode(1), _bitmmtf_rle_decode(1),
-          lambda st: None)
-_register(24, "bitmmtf16_rle", _bitmmtf_rle_encode(2), _bitmmtf_rle_decode(2),
-          lambda st: None)
-# 24/48-bit SYM-aligned widths (byte-aligned strides 3/6 are ids 18/20)
-_register(25, "rle24_sym", _rle_sym_wide_encode(1, 3), _rle_sym_wide_decode(1, 3),
-          lambda st: None)
-_register(26, "rle48_sym", _rle_sym_wide_encode(2, 3), _rle_sym_wide_decode(2, 3),
-          lambda st: None)
-# true Low Entropy: eligibility bitmap + count-byte stream, then zlib
-_register(27, "rle8_le", _rle8_le_encode, _rle8_le_decode, lambda st: None)
-# F4 LUT grid completion: 1- and 3-symbol recency windows (id 16 = 7)
-_register(28, "rle32_lut1", lambda a: _rle32_lut_encode(a, 1),
-          _rle32_lut_decode, lambda st: None)
-_register(29, "rle32_lut3", lambda a: _rle32_lut_encode(a, 3),
-          _rle32_lut_decode, lambda st: None)
-_register(30, "rle8_le_single", _rle8_le_single_encode, _rle8_le_decode,
-          lambda st: None)
-
-
-# true F5 short-command format (width 8, 1/3/7-symbol MTF LUT) and the
-# F6 greedy partial-symbol tier (width-32 byte mode) — real interleaved
-# command streams with the reference's exact byte sizes
-# (/root/reference/src/rleX_Xsl_short.h). Ratio tier: per-command
-# emission, not the vectorized speed path.
-def _short8_encode(sym_count):
-    def enc(arr):
-        return short_encode_bytes(tokens_to_bytes(_as_tokens(arr)),
-                                  sym_count)
-    return enc
-
-
-def _short8_decode(sym_count):
-    def dec(buf, n):
-        img = short_decode_bytes(buf, sym_count)[: n * 4]
-        return np.ascontiguousarray(img).view(TOKEN_DTYPE).copy()
-    return dec
-
-
-def _short_sym_encode(sym_bytes, sym_count=3):
-    def enc(arr):
-        return short_sym_encode_bytes(tokens_to_bytes(_as_tokens(arr)),
-                                      sym_count, sym_bytes)
-    return enc
-
-
-def _short_sym_decode(sym_bytes, sym_count=3):
-    def dec(buf, n):
-        img = short_sym_decode_bytes(buf, sym_count, sym_bytes)[: n * 4]
-        return np.ascontiguousarray(img).view(TOKEN_DTYPE).copy()
-    return dec
-
-
-def _short32_greedy_encode(arr):
-    return short32_greedy_encode_bytes(tokens_to_bytes(_as_tokens(arr)))
-
-
-def _short32_greedy_decode(buf, n):
-    img = short32_greedy_decode_bytes(buf)[: n * 4]
-    return np.ascontiguousarray(img).view(TOKEN_DTYPE).copy()
-
-
-def _short_greedy_encode(sym_bytes):
-    def enc(arr):
-        return short_greedy_encode_bytes(tokens_to_bytes(_as_tokens(arr)),
-                                         sym_bytes)
-    return enc
-
-
-def _short_greedy_decode(sym_bytes):
-    def dec(buf, n):
-        img = short_greedy_decode_bytes(buf, sym_bytes)[: n * 4]
-        return np.ascontiguousarray(img).view(TOKEN_DTYPE).copy()
-    return dec
-
-
-_register(31, "rle8_1sl_short", _short8_encode(1), _short8_decode(1),
-          lambda st: None)
-_register(32, "rle8_3sl_short", _short8_encode(3), _short8_decode(3),
-          lambda st: None)
-_register(33, "rle8_7sl_short", _short8_encode(7), _short8_decode(7),
-          lambda st: None)
-_register(34, "rle32_3sl_byte_short_greedy", _short32_greedy_encode,
-          _short32_greedy_decode, lambda st: None)
-# SYM-mode short at widths 16/32/64 (rle{16,32,64}_3symlut_short):
-# at width 32 one symbol == one token, so that one is the short
-# grammar running natively on token runs
-_register(35, "rle32_3sl_short", _short_sym_encode(4),
-          _short_sym_decode(4), lambda st: None)
-
-
-def _sh_encode(arr):
-    return sh_encode_bytes(tokens_to_bytes(_as_tokens(arr)))
-
-
-def _sh_decode(buf, n):
-    img = sh_decode_bytes(buf)[: n * 4]
-    return np.ascontiguousarray(img).view(TOKEN_DTYPE).copy()
-
-
-# F11: the reference's ratio-over-speed outlier (bit-level prefix-coded
-# command stream, /root/reference/src/rle_sh.c) — per-byte python in
-# literal regions, trialed only at effort="max"; huge blocks are split
-# into independent rle8m-style subsections
-_register(38, "rle8_sh", _sh_encode, _sh_decode, lambda st: None)
-_register(36, "rle16_3sl_short", _short_sym_encode(2),
-          _short_sym_decode(2), lambda st: None)
-_register(37, "rle64_3sl_short", _short_sym_encode(8),
-          _short_sym_decode(8), lambda st: None)
-_register(39, "rle24_3sl_short", _short_sym_encode(3),
-          _short_sym_decode(3), lambda st: None)
-_register(40, "rle48_3sl_short", _short_sym_encode(6),
-          _short_sym_decode(6), lambda st: None)
-# F6 greedy at the remaining reference widths (format-complete and
-# fuzz-covered; only the width-32 form rides the max-effort trial tier
-# — five greedy trials per block would dominate effort="max" walls)
-_register(41, "rle16_3sl_byte_short_greedy", _short_greedy_encode(2),
-          _short_greedy_decode(2), lambda st: None)
-_register(42, "rle24_3sl_byte_short_greedy", _short_greedy_encode(3),
-          _short_greedy_decode(3), lambda st: None)
-_register(43, "rle48_3sl_byte_short_greedy", _short_greedy_encode(6),
-          _short_greedy_decode(6), lambda st: None)
-_register(44, "rle64_3sl_byte_short_greedy", _short_greedy_encode(8),
-          _short_greedy_decode(8), lambda st: None)
-
-
-def _rlex_encode(sym_bytes, packed, unbound=False):
-    def enc(arr):
-        return rlex_encode_bytes(tokens_to_bytes(_as_tokens(arr)),
-                                 sym_bytes, packed, unbound)
-    return enc
-
-
-def _rlex_decode(sym_bytes, packed, unbound=False):
-    def dec(buf, n):
-        img = rlex_decode_bytes(buf, sym_bytes, packed,
-                                unbound)[: n * 4]
-        return np.ascontiguousarray(img).view(TOKEN_DTYPE).copy()
-    return dec
-
-
-# TRUE interleaved F1/F2 command streams (format fidelity: F1 byte-
-# exact vs refmodel.ref_rle_size_exact, F2 = the packed same-as-last-
-# symbol bit + 7-bit counts). Registered + fuzz-covered but OUTSIDE the
-# trial tiers: the canonical SoA formats are provably never larger
-# (tests assert engine <= ref size), so trialing these wastes walls.
-_register(45, "rle32_sym_interleaved", _rlex_encode(4, False),
-          _rlex_decode(4, False), lambda st: None)
-_register(46, "rle32_sym_packed", _rlex_encode(4, True),
-          _rlex_decode(4, True), lambda st: None)
-_register(47, "rle8_interleaved", _rlex_encode(1, False),
-          _rlex_decode(1, False), lambda st: None)
-_register(48, "rle8_packed", _rlex_encode(1, True),
-          _rlex_decode(1, True), lambda st: None)
-# UNBOUND (byte-aligned) true streams: byte counts, runs start
-# anywhere and may end inside a partial trailing symbol
-_register(49, "rle32_byte_interleaved", _rlex_encode(4, False, True),
-          _rlex_decode(4, False, True), lambda st: None)
-_register(50, "rle32_byte_packed", _rlex_encode(4, True, True),
-          _rlex_decode(4, True, True), lambda st: None)
-
-# F5 grid completion: 1- and 7-symbol-LUT SYM-mode short at every
-# multi-byte width — the reference registers the full {1,3,7}-LUT
-# grid (src/rleX_Xsl_short.c:7-270, src/codec_funcs.h:298-388) and its
-# best non-entropy ratios live in the 7-LUT forms (README.md:48). Same
-# grammar/budgets as ids 35-40, only the LUT depth differs; sizes stay
-# byte-identical to refmodel's replay (test_short_sym_stream_...).
-for _i, _sb in zip(range(51, 56), (2, 3, 4, 6, 8)):
-    _register(_i, f"rle{8 * _sb}_1sl_short", _short_sym_encode(_sb, 1),
-              _short_sym_decode(_sb, 1), lambda st: None)
-for _i, _sb in zip(range(56, 61), (2, 3, 4, 6, 8)):
-    _register(_i, f"rle{8 * _sb}_7sl_short", _short_sym_encode(_sb, 7),
-              _short_sym_decode(_sb, 7), lambda st: None)
-
-BY_ID: dict[int, Codec] = {c.codec_id: c for c in REGISTRY.values()}
-
-# codecs cheap enough to probe (trial-encode) when estimates are close
-PROBE_CODECS = ["rle64_sym", "rle128_sym", "rle8", "rle16_sym",
-                "rle8_single", "fsst8", "rle32_byte"]
-# ratio-oriented codecs, only tried at effort="max"
-# (the reference's greedy-encoder tier, README.md:251-254); zlib-backed
-# entries are the Low Entropy (F7) analogues
-MAX_EFFORT_CODECS = ["mtf16_rle8", "mtf32_rle8", "zlib_raw", "rle8_lz",
-                     "rle8_le", "rle8_le_single",
-                     "rle32_lut", "rle32_lut1", "rle32_lut3",
-                     "rle16_byte", "rle24_byte",
-                     "rle48_byte", "rle64_byte", "rle128_byte",
-                     "bitmmtf8_rle", "bitmmtf16_rle", "rle24_sym",
-                     "rle48_sym",
-                     "rle8_1sl_short", "rle8_3sl_short", "rle8_7sl_short",
-                     "rle16_3sl_short", "rle24_3sl_short",
-                     "rle32_3sl_short", "rle48_3sl_short",
-                     "rle64_3sl_short", "rle32_3sl_byte_short_greedy",
-                     "rle32_1sl_short", "rle32_7sl_short",
-                     "rle8_sh"]
-
-
-def encode_with(name: str, tokens: np.ndarray) -> Optional[bytes]:
-    return REGISTRY[name].encode(tokens)
-
-
-def decode_with(name: str, payload: bytes, n_tokens: int) -> np.ndarray:
-    return REGISTRY[name].decode(payload, n_tokens)
+REGISTRY: dict[str, Codec] = {c.name: c for c in CODECS}
+BY_ID: dict[int, Codec] = {c.codec_id: c for c in CODECS}
+TIERS: dict[str, list[str]] = {
+    t: [c.name for c in CODECS if c.tier == t]
+    for t in ("estimate", "probe", "max", "fidelity")}
+PROBE_CODECS = TIERS["probe"]
+MAX_EFFORT_CODECS = TIERS["max"]

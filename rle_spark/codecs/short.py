@@ -22,13 +22,13 @@ including its 20-bit-vs-16-bit escape-penalty quirk
 (rleX_Xsl_short.h:197 uses 0xFFFFF where the emitter switches at
 0xFFFF).
 
-Width-32 byte-mode greedy (`short32_greedy_encode_bytes`, F6) adds the
-partial-symbol tier (/root/reference/src/rleX_extreme_cpu_encode.h:
-114-164, greedy LUT restart rleX_Xsl_short.h:858-983): runs are byte
-intervals that may end inside a trailing symbol (ctz-of-xor prefix
-extension), and after a run ends the encoder may restart a run from a
-LUT symbol on a >=2-byte prefix match — the feature behind the
-reference's best pixel-art ratios.
+Byte-mode greedy (`short_greedy_encode_bytes`, F6) adds the
+partial-symbol tier (src/rleX_extreme_cpu_encode.h:114-164, greedy
+LUT restart rleX_Xsl_short.h:858-983): runs are byte intervals that
+may end inside a trailing symbol (ctz-of-xor prefix extension), and
+after a run ends the encoder may restart a run from a LUT symbol on a
+>=2-byte prefix match — the feature behind the reference's best
+pixel-art ratios.
 
 Throughput position: command emission is per-RUN / per-EVENT work
 (runs << bytes on the corpora where this family wins); run/event
@@ -487,15 +487,6 @@ def short_sym_decode_bytes(buf: bytes | memoryview, sym_count: int = 3,
     return out
 
 
-def short32_encode_bytes(img: np.ndarray, sym_count: int = 3) -> bytes:
-    return short_sym_encode_bytes(img, sym_count, 4)
-
-
-def short32_decode_bytes(buf: bytes | memoryview,
-                         sym_count: int = 3) -> np.ndarray:
-    return short_sym_decode_bytes(buf, sym_count, 4)
-
-
 # ---------------------------------------------------------------------------
 # F6: byte-mode greedy at widths 16/24/32/48/64 (partial-symbol runs +
 # LUT restart)
@@ -658,10 +649,6 @@ def short_greedy_encode_bytes(img: np.ndarray,
     return bytes(out)
 
 
-def short32_greedy_encode_bytes(img: np.ndarray) -> bytes:
-    return short_greedy_encode_bytes(img, 4)
-
-
 def short_greedy_decode_bytes(buf: bytes | memoryview,
                               sym_bytes: int = 4) -> np.ndarray:
     """Decode a byte-mode greedy stream: commands replay the same MTF
@@ -731,7 +718,3 @@ def short_greedy_decode_bytes(buf: bytes | memoryview,
         w += count
     assert w == n, f"short greedy decode length {w} != {n}"
     return out
-
-
-def short32_greedy_decode_bytes(buf: bytes | memoryview) -> np.ndarray:
-    return short_greedy_decode_bytes(buf, 4)

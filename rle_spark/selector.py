@@ -21,10 +21,19 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
-from .codecs import PROBE_CODECS, MAX_EFFORT_CODECS, REGISTRY
+from .codecs import PROBE_CODECS, MAX_EFFORT_CODECS, REGISTRY, TIERS
 from .codecs.base import find_runs
 
 SAMPLE_DISTINCT = 1 << 13
+TRIAL_TOP = 2  # estimate-ranked candidates to trial-encode
+# probe byte-image codecs when n_runs/n is below 1 - PROBE_RUN_FRAC
+# (repetitive data)
+PROBE_RUN_FRAC = 0.7
+# full re-selection every Nth block per group; in between, encode with
+# the sticky winner (raw-guarded). At 32 the amortized stats+trial
+# overhead is ~5% of the winner's encode cost; the raw guard still
+# catches a distribution collapse on EVERY block in between.
+MEMO_EVERY = 32
 
 
 def block_stats(arr: np.ndarray) -> dict:
@@ -83,17 +92,12 @@ def block_stats(arr: np.ndarray) -> dict:
 @dataclass
 class SelectorConfig:
     effort: str = "balanced"  # fast | balanced | max
-    trial_top: int = 2        # estimate-ranked candidates to trial-encode
     allow: list[str] = field(default_factory=list)  # allow-list; [] = all
-    probe_run_frac: float = 0.7  # probe byte-image codecs when
-                                 # n_runs/n below this (repetitive data)
-    memo_every: int = 32  # full re-selection every Nth block per group;
-                          # in between, encode with the sticky winner
-                          # (raw-guarded). 1 = always full selection.
-                          # 32: the amortized stats+trial overhead is
-                          # ~5% of the winner's encode cost; the raw
-                          # guard still catches a distribution collapse
-                          # on EVERY block in between.
+
+    def __post_init__(self):
+        unknown = [c for c in self.allow if c not in REGISTRY]
+        if unknown:
+            raise ValueError(f"unknown codec(s) in allow-list: {unknown}")
 
 
 def select_and_encode(arr: np.ndarray, cfg: SelectorConfig | None = None,
@@ -111,29 +115,27 @@ def select_and_encode(arr: np.ndarray, cfg: SelectorConfig | None = None,
     raw_size = 4 * n + 16
     best_name, best_payload = "raw", None
 
-    if n == 0 or cfg.effort == "raw-only":
+    if n == 0:
         payload = REGISTRY["raw"].encode(arr)
         st["est_raw"] = raw_size
         return "raw", payload, st
 
-    # rank estimate-capable codecs
     ests = []
-    for name, codec in REGISTRY.items():
+    for name in TIERS["estimate"]:
         if name == "raw" or name not in allowed:
             continue
-        e = codec.estimate(st)
-        if e is not None:
-            st[f"est_{name}"] = float(e)
-            ests.append((e, name))
+        e = REGISTRY[name].estimate(st)
+        st[f"est_{name}"] = float(e)
+        ests.append((e, name))
     ests.sort()
 
-    trial = [name for _, name in ests[: cfg.trial_top]]
+    trial = [name for _, name in ests[:TRIAL_TOP]]
     if probes and cfg.effort in ("balanced", "max"):
         # probe byte-image codecs only when token-level prospects are
         # weak or the data shows byte-level structure worth chasing
         best_est_ratio = (ests[0][0] / raw_size) if ests else 1.0
         run_frac = st["n_runs"] / max(n, 1)
-        if best_est_ratio > 0.5 or run_frac < (1 - cfg.probe_run_frac):
+        if best_est_ratio > 0.5 or run_frac < (1 - PROBE_RUN_FRAC):
             trial += [c for c in PROBE_CODECS if c in allowed and c not in trial]
     if cfg.effort == "max":
         extra = [c for c in MAX_EFFORT_CODECS if c in allowed and c not in trial]
@@ -144,7 +146,7 @@ def select_and_encode(arr: np.ndarray, cfg: SelectorConfig | None = None,
             # (mean run < 2 tokens) and the block is big
             extra = [c for c in extra if not c.startswith("mtf")]
         trial += extra
-        trial += [name for _, name in ests[cfg.trial_top:]]
+        trial += [name for _, name in ests[TRIAL_TOP:]]
 
     best_size = raw_size
     for name in trial:
@@ -163,7 +165,7 @@ def select_and_encode(arr: np.ndarray, cfg: SelectorConfig | None = None,
 class StickySelector:
     """Per-group codec memo: blocks of one (source, bucket) stream are
     near-identically distributed, so the full stats+trial selection
-    runs on every `memo_every`-th block and the winner is reused in
+    runs on every `MEMO_EVERY`-th block and the winner is reused in
     between (always raw-guarded so data can never inflate).
 
     This is the per-partition mirror of the reference's 'pick a codec
@@ -178,7 +180,7 @@ class StickySelector:
     def encode(self, group, arr: np.ndarray) -> tuple[str, bytes]:
         cfg = self.cfg
         memo = self._memo.get(group)
-        if memo is not None and memo[1] > 0 and cfg.memo_every > 1:
+        if memo is not None and memo[1] > 0:
             name, left = memo
             payload = REGISTRY[name].encode(arr)
             raw_size = 4 * len(arr) + 16
@@ -192,5 +194,5 @@ class StickySelector:
         name, payload, _st = select_and_encode(
             arr, cfg, probes=group not in self._probed)
         self._probed.add(group)
-        self._memo[group] = (name, cfg.memo_every - 1)
+        self._memo[group] = (name, MEMO_EVERY - 1)
         return name, payload

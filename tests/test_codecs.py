@@ -5,10 +5,13 @@ Every codec must: encode, decode bit-identically, and survive tail
 scramble (garbage appended after the payload must not change the
 decode — /root/reference/src/main.c:942-948)."""
 
+import hashlib
+import struct
+
 import numpy as np
 import pytest
 
-from rle_spark.codecs import REGISTRY, decode_with, encode_with
+from rle_spark.codecs import BY_ID, MAX_EFFORT_CODECS, PROBE_CODECS, REGISTRY, TIERS
 from rle_spark.codecs.base import (
     pack_bits, unpack_bits, pack_ints, unpack_ints,
     pack_sections, unpack_sections, find_runs,
@@ -16,6 +19,7 @@ from rle_spark.codecs.base import (
 from rle_spark.codecs.mtf import mtf_decode_bytes, mtf_encode_bytes
 from rle_spark.codecs.fsst import fsst_decode_bytes, fsst_encode_bytes
 from rle_spark.codecs.refmodel import ref_rle_size_exact, ref_rle_size_model_v1
+from rle_spark.codecs.registry import CODECS
 
 from fuzzgen import boundary_cases, fuzz_tokens
 
@@ -24,15 +28,16 @@ CASES = boundary_cases()
 
 
 def _roundtrip(name: str, arr: np.ndarray):
-    payload = encode_with(name, arr)
+    codec = REGISTRY[name]
+    payload = codec.encode(arr)
     if payload is None:
         return  # codec declined (e.g. no profitable single symbol)
-    out = decode_with(name, payload, len(arr))
+    out = codec.decode(payload, len(arr))
     assert out.dtype == np.dtype("<i4") or np.array_equal(
         out.astype(np.int32), arr)
     np.testing.assert_array_equal(np.asarray(out, dtype=np.int32), arr)
     # tail scramble: decoder must never read past declared lengths
-    scrambled = decode_with(name, bytes(payload) + b"\xa5" * 129, len(arr))
+    scrambled = codec.decode(bytes(payload) + b"\xa5" * 129, len(arr))
     np.testing.assert_array_equal(np.asarray(scrambled, dtype=np.int32), arr)
 
 
@@ -379,11 +384,12 @@ def test_exhaustive_length_sweep(codec):
     live."""
     from tests.fuzzgen import exhaustive_cases
     n = 0
+    c = REGISTRY[codec]
     for case_id, toks in exhaustive_cases():
-        payload = encode_with(codec, toks)
+        payload = c.encode(toks)
         if payload is None:  # codec declined (selector falls back) — fine
             continue
-        got = decode_with(codec, payload, len(toks))
+        got = c.decode(payload, len(toks))
         assert np.array_equal(got, toks), f"{codec} failed on {case_id}"
         n += 1
     assert n > 2000  # the sweep really is exhaustive, not sampled
@@ -652,16 +658,16 @@ def test_short_beats_reference_base_rle_on_runny_corpora():
 def test_short32_partial_symbol_runs():
     """F6: a run ending inside a trailing symbol must be encoded as one
     command (count not a multiple of 4) and decode bit-identically."""
-    from rle_spark.codecs.short import (short32_greedy_encode_bytes,
-                                        short32_greedy_decode_bytes)
+    from rle_spark.codecs.short import (short_greedy_encode_bytes,
+                                        short_greedy_decode_bytes)
     pat = np.array([10, 20, 30, 40], dtype=np.uint8)
     # 40 full repeats + 2 partial trailing bytes, then noise: the
     # periodic region (162 bytes, count NOT a multiple of 4) must be
     # one command including the partial tail
     img = np.concatenate([np.tile(pat, 40), pat[:2],
                           np.array([99, 98, 97], dtype=np.uint8)])
-    enc = short32_greedy_encode_bytes(img)
-    dec = short32_greedy_decode_bytes(enc)
+    enc = short_greedy_encode_bytes(img, 4)
+    dec = short_greedy_decode_bytes(enc, 4)
     np.testing.assert_array_equal(dec, img)
     # 8B header + one ~3B command + 4B miss symbol + 9B terminal + 3
     # literals — far below raw
@@ -671,8 +677,8 @@ def test_short32_partial_symbol_runs():
 def test_short32_lut_restart_gains():
     """Greedy LUT restart: short reappearances of a recent symbol that
     would NOT self-start (needs 2 full words) are still captured."""
-    from rle_spark.codecs.short import (short32_greedy_encode_bytes,
-                                        short32_greedy_decode_bytes)
+    from rle_spark.codecs.short import (short_greedy_encode_bytes,
+                                        short_greedy_decode_bytes)
     rng = np.random.default_rng(3)
     pat = np.array([1, 2, 3, 4], dtype=np.uint8)
     parts = [np.tile(pat, 10)]  # establish pat in the LUT
@@ -680,8 +686,8 @@ def test_short32_lut_restart_gains():
         parts.append(rng.integers(5, 250, 7, dtype=np.uint8))
         parts.append(pat)  # single occurrence: no self-start possible
     img = np.concatenate(parts)
-    enc = short32_greedy_encode_bytes(img)
-    np.testing.assert_array_equal(short32_greedy_decode_bytes(enc), img)
+    enc = short_greedy_encode_bytes(img, 4)
+    np.testing.assert_array_equal(short_greedy_decode_bytes(enc, 4), img)
     # without LUT restarts every single `pat` occurrence stays literal
     # (raw-ish); with them the stream drops clearly below that
     no_restart_floor = len(img) - 40 + 17
@@ -746,3 +752,64 @@ def test_short_stream_bytes_match_ref_replay(sc, sym_bytes):
            else lambda im, c: short_sym_encode_bytes(im, c, sym_bytes))
     for img in cases:
         assert enc(img, sc) == ref_short_bytes_exact(img, sc, sym_bytes)
+
+
+# --- the codec table: wire bytes, tiers, block frame ------------------------
+
+GOLDEN_WIRE_SHA256 = (
+    "bd3efafe60601e5f73997a29bb4d15bf4d1d5639dd8cf3425c428e36c1bb7287")
+
+
+def test_wire_bytes_golden_digest():
+    """Pins the payload bytes of every codec, the never-trialed fidelity
+    ids included: a refactor of the codec table must keep this digest."""
+    inputs = sorted(CASES.items())
+    inputs += [(f"fuzz{s}", fuzz_tokens(s)[:20_000]) for s in range(4)]
+    inputs.append(("fuzz_vocab256", fuzz_tokens(100, vocab=256)[:20_000]))
+    h = hashlib.sha256()
+    for cid in sorted(BY_ID):
+        codec = BY_ID[cid]
+        for case, arr in inputs:
+            payload = codec.encode(arr)
+            size = -1 if payload is None else len(payload)
+            h.update(f"{cid}:{codec.name}:{case}:{size}\n".encode())
+            if payload is not None:
+                h.update(bytes(payload))
+    assert h.hexdigest() == GOLDEN_WIRE_SHA256
+
+
+def test_codec_table_ids_and_tiers():
+    assert sorted(c.codec_id for c in CODECS) == list(range(61))
+    assert len(REGISTRY) == len(BY_ID) == 61
+    assert set(TIERS) == {"estimate", "probe", "max", "fidelity"}
+    assert sorted(n for names in TIERS.values() for n in names) == sorted(REGISTRY)
+    for c in CODECS:
+        assert c.name in TIERS[c.tier]
+        assert (c.estimate is not None) == (c.tier == "estimate"), c.name
+    # trial order: the selector keeps the first of two equal-size payloads
+    assert PROBE_CODECS == ["rle64_sym", "rle128_sym", "rle8", "rle16_sym",
+                            "rle8_single", "fsst8", "rle32_byte"]
+    assert MAX_EFFORT_CODECS == [
+        "mtf16_rle8", "mtf32_rle8", "zlib_raw", "rle8_lz", "rle8_le",
+        "rle8_le_single", "rle32_lut", "rle32_lut1", "rle32_lut3",
+        "rle16_byte", "rle24_byte", "rle48_byte", "rle64_byte", "rle128_byte",
+        "bitmmtf8_rle", "bitmmtf16_rle", "rle24_sym", "rle48_sym",
+        "rle8_1sl_short", "rle8_3sl_short", "rle8_7sl_short",
+        "rle16_3sl_short", "rle24_3sl_short", "rle32_3sl_short",
+        "rle48_3sl_short", "rle64_3sl_short", "rle32_3sl_byte_short_greedy",
+        "rle32_1sl_short", "rle32_7sl_short", "rle8_sh"]
+    assert ({REGISTRY[n].codec_id for n in TIERS["fidelity"]}
+            == set(range(41, 61)) - {53, 58})
+
+
+def test_unframe_rejects_short_frame_and_unknown_codec():
+    from rle_spark.blocks import decode_block, frame_payload, unframe_payload
+    arr = np.array([7, 7, 7, 9], np.int32)
+    framed = frame_payload("rle32_sym", len(arr), REGISTRY["rle32_sym"].encode(arr))
+    np.testing.assert_array_equal(decode_block(framed), arr)
+    with pytest.raises(ValueError, match="shorter than its 15-byte header"):
+        unframe_payload(framed[:14])
+    bad = bytearray(framed)
+    struct.pack_into("<H", bad, 5, 999)  # the codec id field
+    with pytest.raises(ValueError, match="unknown codec id 999"):
+        decode_block(bytes(bad))

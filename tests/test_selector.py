@@ -1,6 +1,7 @@
 """Selector sanity (SURVEY.md §5 ported strategy, items c & f)."""
 
 import numpy as np
+import pytest
 
 from rle_spark.selector import SelectorConfig, block_stats, select_and_encode
 
@@ -43,6 +44,11 @@ def test_allow_list_respected():
     arr = np.repeat(np.arange(50, dtype=np.int32), 1000)
     name, _, _ = select_and_encode(arr, SelectorConfig(allow=["raw", "for_bitpack"]))
     assert name in ("raw", "for_bitpack")
+
+
+def test_allow_list_rejects_unknown_codec():
+    with pytest.raises(ValueError, match="rle32_symm"):
+        SelectorConfig(allow=["raw", "rle32_symm"])
 
 
 def test_stats_keys():

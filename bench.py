@@ -58,6 +58,11 @@ SCALE_PAIR = (int(_SP[0]), int(_SP[1]))
 # all recorded alongside for variance audit.
 SCALE_BLOCKS = int(os.environ.get("RLE_BENCH_SCALE_BLOCKS", "3"))
 SCALE_RUNS = int(os.environ.get("RLE_BENCH_SCALE_RUNS", "2"))
+# timed encode stages and full encode jobs per scaling leg
+STAGE_RUNS = 3
+JOB_RUNS = 3
+# back-to-back walls per headline query, fastest reported
+QUERY_RUNS = int(os.environ.get("RLE_BENCH_QUERY_RUNS", "2"))
 
 HEADLINE = [
     "encode_manifest", "roundtrip_matches", "tokenize_stats",
@@ -109,11 +114,10 @@ def run_queries(spark) -> tuple[dict[str, float], dict[str, list]]:
     alongside the best-of headline."""
     import __spark_entry__ as em
     qs = em.queries()
-    runs = int(os.environ.get("RLE_BENCH_QUERY_RUNS", "2"))
     out, walls = {}, {}
     for name in HEADLINE:
         ws = []
-        for _ in range(runs):
+        for _ in range(QUERY_RUNS):
             t0 = time.time()
             n = qs[name](spark, SF_DIR).count()
             ws.append(round(time.time() - t0, 3))
@@ -124,7 +128,6 @@ def run_queries(spark) -> tuple[dict[str, float], dict[str, list]]:
 
 
 def encode_run(cpus: int, src_path: str, out_dir: str,
-               stage_runs: int = 3, job_runs: int = 3,
                dry_src: str | None = None) -> dict:
     """Encode measurements (mapside layout) at the given parallelism.
 
@@ -188,7 +191,7 @@ def encode_run(cpus: int, src_path: str, out_dir: str,
         blocks_df(-1, dry_path).agg(F.sum("comp_bytes")).collect()
         stage_walls = []
         orig = comp = 0
-        for i in range(stage_runs):
+        for i in range(STAGE_RUNS):
             blocks = blocks_df(i)
             t0 = time.time()
             row = blocks.agg(F.sum("orig_bytes").alias("o"),
@@ -197,7 +200,7 @@ def encode_run(cpus: int, src_path: str, out_dir: str,
             orig, comp = int(row["o"]), int(row["c"])
         job_walls = []
         summary = None
-        # FIXED job_runs timed full jobs, fastest recorded, EVERY wall
+        # FIXED JOB_RUNS timed full jobs, fastest recorded, EVERY wall
         # in the artifact. No separate dry job: the stage reps already
         # warmed scan/encode, and the remaining writer-path warm-up
         # (zstd contexts, parquet writer import) decays over the first
@@ -206,7 +209,7 @@ def encode_run(cpus: int, src_path: str, out_dir: str,
         # still-warming second-run position ~35% above steady state;
         # min-of-3 observes steady state directly (reference
         # fastest-run protocol, src/main.c:828)
-        for _ in range(job_runs):
+        for _ in range(JOB_RUNS):
             shutil.rmtree(out_dir, ignore_errors=True)
             t0 = time.time()
             summary = encode_parquet_dir_direct(
@@ -219,7 +222,7 @@ def encode_run(cpus: int, src_path: str, out_dir: str,
         # python-side (where a training dataloader consumes them),
         # returning only counts
         decode_walls = []
-        for i in range(stage_runs):
+        for i in range(STAGE_RUNS):
             dec = (decode_parquet_dir_summary(spark, out_dir,
                                               n_tasks=n_tasks)
                    .withColumn("_rep", F.lit(i)))
@@ -345,13 +348,33 @@ def encode_run_subprocess(cpus: int, src: str, out_dir: str,
     return json.loads(p.stdout.strip().splitlines()[-1])
 
 
+def protocol() -> dict:
+    """How this run measured, written into the result so BENCH_*
+    artifacts from different rounds can be compared."""
+    return {
+        "version": "bench-2",
+        "query_runs": QUERY_RUNS,
+        "query_record": "min wall per query",
+        "scale_pair": list(SCALE_PAIR),
+        "scale_blocks": SCALE_BLOCKS,
+        "scale_runs": SCALE_RUNS,
+        "leg": "fresh JVM per leg, legs interleaved lo/hi",
+        "dry_stage": "one untimed encode stage per leg, full-size corpus",
+        "stage_runs": STAGE_RUNS,
+        "job_runs": JOB_RUNS,
+        "dry_job": "none: the timed jobs follow the stage runs",
+        "scale_record": "min wall per leg over all rounds",
+    }
+
+
 def main():
     if len(sys.argv) > 1 and sys.argv[1] == "--encode-run":
         print(json.dumps(encode_run(
             int(sys.argv[2]), sys.argv[3], sys.argv[4],
             dry_src=sys.argv[5] if len(sys.argv) > 5 else None)))
         return
-    results: dict = {"sf": SF_DIR.rstrip("/").split("sf")[-1], "unit": "sec"}
+    results: dict = {"sf": SF_DIR.rstrip("/").split("sf")[-1], "unit": "sec",
+                     "protocol": protocol()}
 
     do_queries = os.environ.get("RLE_BENCH_SKIP_QUERIES") != "1"
     do_scaling = os.environ.get("RLE_BENCH_SKIP_SCALING") != "1"

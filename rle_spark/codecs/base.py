@@ -46,6 +46,11 @@ def pack_sections(parts: list[bytes]) -> bytes:
     return header + b"".join(parts)
 
 
+def sections_size(sizes: list[int]) -> int:
+    """len(pack_sections(parts)) for parts of the given byte lengths."""
+    return 2 + 8 * len(sizes) + sum(sizes)
+
+
 def unpack_sections(buf: bytes | memoryview) -> list[memoryview]:
     mv = memoryview(buf)
     (n,) = struct.unpack_from("<H", mv, 0)
@@ -289,6 +294,11 @@ def pack_ints_size(n: int, lo: int, hi: int) -> int:
     return 17 + (n * bit_width(hi - lo) + 7) // 8
 
 
+def packed_size(a: np.ndarray) -> int:
+    """len(pack_ints(a)), without packing."""
+    return pack_ints_size(len(a), int(a.min()), int(a.max())) if len(a) else 17
+
+
 # ---------------------------------------------------------------------------
 # segment expansion (the vectorized memcpy/memset decode pipeline —
 # reference analogue: /root/reference/src/rleX_extreme_cpu_decode.h:27-164)
@@ -360,6 +370,28 @@ def find_runs(a: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     lens = np.empty(k + 1, dtype=np.int64)
     np.subtract(starts[1:], starts[:-1], out=lens[:k])
     lens[k] = n - starts[k]
+    return starts, lens
+
+
+def long_runs(a: np.ndarray, min_len: int) -> tuple[np.ndarray, np.ndarray]:
+    """`find_runs` filtered to runs of length >= min_len (min_len >= 2).
+
+    Built from the equal-neighbour positions instead of the change
+    positions: on token data nearly every run has length 1, so this
+    index array is sparse where `find_runs` fills two n-length arrays."""
+    if min_len < 2:
+        raise ValueError(f"long_runs needs min_len >= 2, got {min_len}")
+    eq = np.flatnonzero(a[1:] == a[:-1]) if len(a) > 1 else np.zeros(0, np.int64)
+    if len(eq) == 0:
+        return eq, eq.copy()
+    # a run of length L is L-1 consecutive equal-neighbour positions
+    brk = np.flatnonzero(np.diff(eq) != 1)
+    first = np.concatenate(([0], brk + 1))
+    last = np.concatenate((brk, [len(eq) - 1]))
+    starts, lens = eq[first], last - first + 2
+    if min_len > 2:
+        keep = lens >= min_len
+        starts, lens = starts[keep], lens[keep]
     return starts, lens
 
 

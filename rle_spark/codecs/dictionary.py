@@ -12,33 +12,70 @@ from __future__ import annotations
 
 import numpy as np
 
-from .base import pack_ints, pack_sections, unpack_ints, unpack_sections
+from .base import (
+    pack_ints,
+    pack_ints_size,
+    pack_sections,
+    sections_size,
+    unpack_ints,
+    unpack_sections,
+)
 
 
 _DENSE_SPAN = 1 << 20
 
 
+def _present(offs: np.ndarray, span: int) -> np.ndarray:
+    """The sorted distinct values of offs, all in [0, span), from a
+    dense presence bitmap: O(n + span), no sort."""
+    present = np.zeros(span, dtype=bool)
+    present[offs] = True
+    return np.flatnonzero(present)
+
+
+def sorted_uniques(a: np.ndarray, lo: int, hi: int) -> np.ndarray:
+    """np.unique(a) for a non-empty array with min lo and max hi: the
+    presence bitmap when the span is at most _DENSE_SPAN, else
+    np.unique's sort (on 262144 random wide values that is ~4x faster
+    than pandas' hash unique plus a sort of the uniques)."""
+    span = hi - lo + 1
+    if span > _DENSE_SPAN:
+        return np.unique(a)
+    return _present(a - lo, span) + lo
+
+
+def dict_size(uniq: np.ndarray, n: int) -> int:
+    """len(dict_encode(a)), without encoding, for n tokens whose sorted
+    uniques are uniq (non-empty)."""
+    k = len(uniq)
+    first = int(uniq[0])  # delta-coded against 0
+    gaps = np.subtract(uniq[1:], uniq[:-1], dtype=np.int64)
+    lo, hi = ((min(int(gaps.min()), first), max(int(gaps.max()), first))
+              if k > 1 else (first, first))
+    return sections_size([pack_ints_size(k, lo, hi),
+                          pack_ints_size(n, 0, k - 1)])
+
+
 def _unique_inverse(a: np.ndarray):
-    """np.unique(return_inverse) with an O(n + span) dense fast path
-    for narrow value ranges (token vocabularies), avoiding the
-    O(n log n) sort."""
+    """np.unique(return_inverse), with the ranks built on the presence
+    bitmap of `sorted_uniques` for narrow value ranges (token
+    vocabularies), avoiding the O(n log n) sort."""
     if len(a) == 0:
         return a, np.zeros(0, dtype=np.int64)
     lo = int(a.min())
     span = int(a.max()) - lo + 1
-    if 0 < span <= _DENSE_SPAN:
+    if span <= _DENSE_SPAN:
         offs = (a - lo).astype(np.int64)
-        present = np.zeros(span, dtype=bool)
-        present[offs] = True
-        uniq_off = np.flatnonzero(present)
+        uniq_off = _present(offs, span)
         rank = np.empty(span, dtype=np.int64)
         rank[uniq_off] = np.arange(len(uniq_off))
         return uniq_off + lo, rank[offs]
     try:
-        # wide spans: pandas' hash-based factorize is ~1.8x numpy's
-        # sort-based unique on high-vocab blocks; sort the (small)
-        # dict table after and remap the codes so the output — sorted
-        # uniques + ranks — is identical to np.unique(return_inverse)
+        # wide spans: pandas' hash-based factorize beats numpy's sort
+        # when the inverse is needed too and the dictionary is small
+        # (~4x on 262144 tokens of 300 values); sort the dict table
+        # after and remap the codes so the output is identical to
+        # np.unique(return_inverse)
         import pandas as pd
         codes, uniq_seen = pd.factorize(a, sort=False)
         order = np.argsort(uniq_seen, kind="stable")

@@ -10,7 +10,8 @@ table, one row per codec:
     encode    int32 tokens -> payload bytes, or None if the codec declines
     decode    (payload, n_tokens) -> int32 tokens
     tier      how the selector uses the codec (below)
-    estimate  block_stats -> approx payload bytes (estimate tier only)
+    estimate  block_stats -> exact payload bytes, inf if the codec
+              declines (estimate tier only)
 
 Rows are built from two adapters. `_tokens` hands the int32 tokens to
 the kernel. `_image` hands it the tokens' little-endian byte image and
@@ -20,11 +21,11 @@ is a codec parameter, not a property of the data
 
 Tiers:
 
-    estimate  token codecs with a closed-form size estimate; the
-              selector ranks them and trial-encodes the best two (all
-              of them at effort="max")
+    estimate  token codecs whose payload size follows exactly from
+              block_stats; the selector encodes only the smallest
     probe     byte-image codecs cheap enough to trial-encode when the
-              estimates are weak or the block is run-heavy
+              estimates are weak or the block is run-heavy, each
+              gated by a trial on a sample of the block
     max       ratio-oriented codecs, trialed only at effort="max" (the
               reference's greedy-encoder tier, README.md:251-254)
     fidelity  reference formats kept byte-exact and tested, never
@@ -45,14 +46,13 @@ from typing import Callable, Optional
 import numpy as np
 
 from .base import (
-    bit_width,
     byte_image_symbols,
     pack_ints,
     pack_ints_size,
     tokens_to_bytes,
     unpack_ints,
 )
-from .dictionary import dict_decode, dict_encode
+from .dictionary import dict_decode, dict_encode, dict_size
 from .entropy import compose_zlib, decompose_zlib
 from .fsst import fsst_decode_bytes, fsst_encode_bytes
 from .interleaved import rlex_decode_bytes, rlex_encode_bytes
@@ -69,6 +69,7 @@ from .rle import (
     rle_decode_symbols,
     rle_encode_multi,
     rle_encode_symbols,
+    rle_size,
     rle_stride_decode_bytes,
     rle_stride_encode_bytes,
 )
@@ -81,7 +82,7 @@ from .short import (
     short_sym_decode_bytes,
     short_sym_encode_bytes,
 )
-from .single import single_decode_symbols, single_encode_symbols
+from .single import single_decode_symbols, single_encode_symbols, single_size
 
 TOKEN_DTYPE = np.dtype("<i4")
 
@@ -175,10 +176,9 @@ def _lut(window):
 
 
 # ---------------------------------------------------------------------------
-# estimates (cost model inputs: see selector.block_stats)
+# estimates (cost model inputs: see selector.block_stats). Each is the
+# exact payload size, or inf when the codec would decline the block.
 # ---------------------------------------------------------------------------
-
-_HDR = 64  # per-stream framing slop
 
 
 def _est_raw(st):
@@ -194,28 +194,15 @@ def _est_delta(st):
 
 
 def _est_dict(st):
-    k = st["distinct_est"]
-    if k <= 0:
-        return _HDR
-    dict_bytes = pack_ints_size(k, 0, max((st["vmax"] - st["vmin"]) // max(k, 1), 1) * 4)
-    return dict_bytes + pack_ints_size(st["n"], 0, k - 1) + _HDR
+    return dict_size(st["uniq"], st["n"])
 
 
 def _est_rle32(st):
-    k = st["k_runs"]
-    lit = st["lit_count"]
-    vw = bit_width(st["vmax"] - st["vmin"]) if st["vmax"] >= st["vmin"] else 32
-    lw = bit_width(max(st["max_run"], 1))
-    return (k * (vw + lw + lw) + lit * vw) / 8.0 + 4 * _HDR
+    return rle_size(st["tokens"], st["runs"], st["vmin"], st["vmax"])
 
 
 def _est_single32(st):
-    # best case: the dominant symbol's runs become free-ish
-    k = st["k_runs"]
-    lit = st["lit_count"] + st["runnable"] - st["best_sym_runnable"]
-    vw = bit_width(st["vmax"] - st["vmin"]) if st["vmax"] >= st["vmin"] else 32
-    lw = bit_width(max(st["max_run"], 1))
-    return (k * (lw + lw) + lit * vw) / 8.0 + 4 * _HDR
+    return single_size(st["tokens"], st["runs"], st["vmin"], st["vmax"])
 
 
 # ---------------------------------------------------------------------------

@@ -40,9 +40,13 @@ from .base import (
     fill_runs,
     find_runs,
     inner_offsets,
+    long_runs,
     pack_ints,
+    pack_ints_size,
     pack_sections,
+    packed_size,
     scatter_segments,
+    sections_size,
     unpack_ints,
     unpack_sections,
 )
@@ -61,12 +65,17 @@ def split_runs_literals(sym: np.ndarray, min_run: int = DEFAULT_MIN_RUN):
     Returns (run_starts, run_lens, run_values, lit_lens, lit_values)
     where lit_lens has len(runs)+1 entries (spans between/around runs).
     """
-    n = len(sym)
-    starts, lens = find_runs(sym)
-    keep = lens >= min_run
-    run_starts = starts[keep]
-    run_lens = lens[keep]
+    run_starts, run_lens = long_runs(sym, min_run)
     run_values = sym[run_starts] if len(run_starts) else sym[:0]
+    return (run_starts, run_lens, run_values,
+            *literal_spans(sym, run_starts, run_lens))
+
+
+def literal_spans(sym: np.ndarray, run_starts: np.ndarray,
+                  run_lens: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(lit_lens, lit_values): the k+1 spans around k sorted,
+    disjoint runs and the symbols in them, in order."""
+    n = len(sym)
     lit_starts = np.concatenate(([0], run_starts + run_lens))
     lit_ends = np.concatenate((run_starts, [n]))
     lit_lens = (lit_ends - lit_starts).astype(np.int64)
@@ -96,7 +105,39 @@ def split_runs_literals(sym: np.ndarray, min_run: int = DEFAULT_MIN_RUN):
         flags = np.zeros(2 * k + 1, dtype=bool)
         flags[0::2] = True
         lit_values = sym[np.repeat(flags, seg)]
-    return run_starts, run_lens, run_values, lit_lens, lit_values
+    return lit_lens, lit_values
+
+
+def literal_sizes(sym: np.ndarray, run_starts: np.ndarray,
+                  run_lens: np.ndarray, lo: int, hi: int,
+                  run_syms: np.ndarray) -> list[int]:
+    """pack_ints sizes of the lit_lens and lit_values streams around
+    these runs of run_syms. lo and hi are the min and max of sym: the
+    literals span them unless a run symbol is one of them, and only
+    then are the literals gathered to find their range."""
+    n = len(sym)
+    lit_lens = (np.concatenate((run_starts, [n]))
+                - np.concatenate(([0], run_starts + run_lens)))
+    n_lit = n - int(run_lens.sum())
+    if n_lit and np.isin(run_syms, (lo, hi)).any():
+        lit = packed_size(literal_spans(sym, run_starts, run_lens)[1])
+    else:
+        lit = pack_ints_size(n_lit, lo, hi)
+    return [packed_size(lit_lens), lit]
+
+
+def rle_size(sym: np.ndarray, runs, lo: int, hi: int) -> int:
+    """len(rle_encode_symbols(sym, packed=True)), without encoding, from
+    `runs = long_runs(sym, 2)` and sym's min lo and max hi."""
+    starts, lens = runs
+    keep = lens >= DEFAULT_MIN_RUN
+    run_starts, run_lens = starts[keep], lens[keep]
+    run_values = sym[run_starts]
+    rv = run_values.astype(np.int64)
+    rv[1:] -= run_values[:-1]  # the packed form delta-codes run symbols
+    return sections_size([packed_size(rv), packed_size(run_lens),
+                          *literal_sizes(sym, run_starts, run_lens, lo, hi,
+                                         run_values), 1])
 
 
 def rle_encode_symbols(sym: np.ndarray, min_run: int = DEFAULT_MIN_RUN,

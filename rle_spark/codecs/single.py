@@ -22,65 +22,66 @@ import numpy as np
 
 from .base import (
     fill_runs,
-    find_runs,
-    inner_offsets,
+    long_runs,
     pack_ints,
+    pack_ints_size,
     pack_sections,
+    packed_size,
     scatter_segments,
+    sections_size,
     unpack_ints,
     unpack_sections,
 )
+from .rle import literal_sizes, literal_spans
 
 
-def choose_symbol(sym: np.ndarray) -> int | None:
-    """Argmax-savings symbol per the reference heuristic; None if no
-    symbol has positive savings."""
-    starts, lens = find_runs(sym)
-    vals = sym[starts]
-    runnable = lens >= 2
-    if not runnable.any():
+def single_runs(sym: np.ndarray, runs=None):
+    """(symbol, run_starts, run_lens) for the argmax-savings symbol per
+    the reference heuristic, or None if no symbol has positive savings.
+    A symbol saves sum(len - 2) over its runs of length >= 2, which is
+    positive exactly when one of them has length >= 3. `runs` may pass
+    in `long_runs(sym, 2)`."""
+    starts, lens = runs if runs is not None else long_runs(sym, 2)
+    if not len(starts):
         return None
-    v = vals[runnable].astype(np.int64)
-    ln = lens[runnable]
-    uniq, inv = np.unique(v, return_inverse=True)
-    total_len = np.bincount(inv, weights=ln.astype(np.float64))
-    count = np.bincount(inv)
-    savings = total_len - 2.0 * count
+    uniq, inv = np.unique(sym[starts], return_inverse=True)
+    savings = np.bincount(inv, weights=(lens - 2).astype(np.float64))
     best = int(np.argmax(savings))
     if savings[best] <= 0:
         return None
-    return int(uniq[best])
+    keep = inv == best
+    return int(uniq[best]), starts[keep], lens[keep]
 
 
-def single_encode_symbols(sym: np.ndarray, min_run: int = 2,
-                          symbol: int | None = None) -> bytes | None:
+def single_encode_symbols(sym: np.ndarray) -> bytes | None:
     """Encode runs of one chosen symbol only; everything else literal.
 
     Returns None when no profitable symbol exists (caller falls back)."""
-    if symbol is None:
-        symbol = choose_symbol(sym)
-        if symbol is None:
-            return None
-    n = len(sym)
-    starts, lens = find_runs(sym)
-    vals = sym[starts].astype(np.int64) if len(starts) else sym[:0].astype(np.int64)
-    keep = (vals == np.int64(symbol)) & (lens >= min_run)
-    run_starts = starts[keep]
-    run_lens = lens[keep]
-    lit_starts = np.concatenate(([0], run_starts + run_lens))
-    lit_ends = np.concatenate((run_starts, [n]))
-    lit_lens = (lit_ends - lit_starts).astype(np.int64)
-    if lit_lens.sum():
-        pos = np.repeat(lit_starts, lit_lens) + inner_offsets(lit_lens)
-        lit_values = sym[pos]
-    else:
-        lit_values = sym[:0]
+    chosen = single_runs(sym)
+    if chosen is None:
+        return None
+    symbol, run_starts, run_lens = chosen
+    lit_lens, lit_values = literal_spans(sym, run_starts, run_lens)
     return pack_sections([
         pack_ints(np.array([symbol], dtype=np.int64)),
         pack_ints(run_lens),
         pack_ints(lit_lens),
         pack_ints(lit_values),
     ])
+
+
+def single_size(sym: np.ndarray, runs, lo: int, hi: int) -> float:
+    """len(single_encode_symbols(sym)), or inf when it declines, without
+    encoding, from `runs = long_runs(sym, 2)` and sym's min lo and max
+    hi."""
+    chosen = single_runs(sym, runs)
+    if chosen is None:
+        return float("inf")
+    symbol, run_starts, run_lens = chosen
+    return sections_size([
+        pack_ints_size(1, symbol, symbol), packed_size(run_lens),
+        *literal_sizes(sym, run_starts, run_lens, lo, hi,
+                       np.array([symbol]))])
 
 
 def single_decode_symbols(buf: bytes | memoryview, dtype) -> np.ndarray:

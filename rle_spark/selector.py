@@ -1,4 +1,16 @@
-"""Per-block codec selection: cheap stats -> cost model -> trial encode.
+"""Per-block codec selection: one stats pass, then one encode.
+
+Trial rule. `block_stats` records, besides value/delta/run features,
+the block's runs and sorted uniques, from which every estimate-tier
+codec (for/delta/dict bitpack, rle32_sym, rle32_single) computes its
+exact payload size before any encode, or inf when it would decline. The selector encodes only the leader,
+the lowest estimate; no runner-up is trialed, since with exact sizes
+there is no near-tie to settle. The byte-image probe codecs have no
+estimate: when the leader's ratio is weak (> 0.5) or the block is
+run-heavy, each is encoded on PROBE_WINDOWS spread windows of the
+block first, and trialed on the whole block only if that sample beats
+the best ratio so far. effort="max" trials probe and max-tier codecs
+on the whole block.
 
 The reference's only "optimizer" is manual codec choice plus the
 benchmark loop trying everything (/root/reference/src/main.c:803-1076);
@@ -22,40 +34,47 @@ from dataclasses import dataclass, field
 import numpy as np
 
 from .codecs import PROBE_CODECS, MAX_EFFORT_CODECS, REGISTRY, TIERS
-from .codecs.base import find_runs
+from .codecs.base import long_runs
+from .codecs.dictionary import sorted_uniques
 
-SAMPLE_DISTINCT = 1 << 13
-TRIAL_TOP = 2  # estimate-ranked candidates to trial-encode
+# the probe gate's sample: PROBE_WINDOWS evenly spread windows of
+# PROBE_WINDOW tokens (with one or two windows the rle128_sym win on
+# fuzz_tokens(11) is missed; four catch it)
+PROBE_WINDOWS = 4
+PROBE_WINDOW = 1 << 12
 # probe byte-image codecs when n_runs/n is below 1 - PROBE_RUN_FRAC
 # (repetitive data)
 PROBE_RUN_FRAC = 0.7
 # full re-selection every Nth block per group; in between, encode with
-# the sticky winner (raw-guarded). At 32 the amortized stats+trial
-# overhead is ~5% of the winner's encode cost; the raw guard still
+# the sticky winner (raw-guarded). A full selection costs about 3x the
+# winner's encode, most of it on a group's first, probing selection;
+# over a traced task (perfbench --trace 1, seed 7) the sticky stream
+# costs 1.1-1.4x the winners' encodes alone. The raw guard still
 # catches a distribution collapse on EVERY block in between.
 MEMO_EVERY = 32
 
 
 def block_stats(arr: np.ndarray) -> dict:
-    """O(n) vectorized feature pass (the --analyze analogue).
+    """Vectorized feature pass (the --analyze analogue).
 
-    Runs in the source dtype: the old int64 promotion was a full
-    extra pass + 8 B/elem allocation per stats call, and the delta
-    min/max only needs the int64 range in the SUBTRACT output dtype
-    (fused, no intermediate)."""
+    Besides the value, delta and run features it keeps what the exact
+    estimates share: the block (`tokens`), its runs of length >= 2
+    (`runs`, from `long_runs`) and its sorted uniques (`uniq`). Each
+    codec's estimate turns them into its payload size. Runs in the
+    source dtype: the delta min/max only needs the int64 range in the
+    SUBTRACT output dtype (fused, no intermediate)."""
     a = np.ascontiguousarray(arr)
     n = len(a)
     st: dict = {"n": n}
     if n == 0:
         st.update(vmin=0, vmax=0, dmin=0, dmax=0, n_runs=0, k_runs=0,
-                  lit_count=0, max_run=0, runnable=0, best_sym_runnable=0,
-                  distinct_est=0)
+                  max_run=0, distinct=0)
         return st
     st["vmin"] = int(a.min())
     st["vmax"] = int(a.max())
     # delta stats with d[0] = a[0] - 0 (the np.diff(prepend=0)
-    # convention the estimates were calibrated on), a[0] folded in
-    # scalar-side instead of materializing the prepended array
+    # convention of delta_bitpack), a[0] folded in scalar-side instead
+    # of materializing the prepended array
     a0 = int(a[0])
     if n > 1:
         d = np.subtract(a[1:], a[:-1], dtype=np.int64)
@@ -63,29 +82,14 @@ def block_stats(arr: np.ndarray) -> dict:
         st["dmax"] = max(int(d.max()), a0)
     else:
         st["dmin"] = st["dmax"] = a0
-    starts, lens = find_runs(a)
-    st["n_runs"] = len(lens)
-    emit = lens >= 3
-    st["k_runs"] = int(emit.sum())
-    st["lit_count"] = int(lens[~emit].sum())
-    st["max_run"] = int(lens.max())
-    st["runnable"] = int(lens[emit].sum())
-    if emit.any():
-        vals = a[starts[emit]]
-        uniq, inv = np.unique(vals, return_inverse=True)
-        per_sym = np.bincount(inv, weights=lens[emit].astype(np.float64))
-        st["best_sym_runnable"] = int(per_sym.max())
-    else:
-        st["best_sym_runnable"] = 0
-    if n <= SAMPLE_DISTINCT:
-        st["distinct_est"] = int(len(np.unique(a)))
-    else:
-        idx = np.linspace(0, n - 1, SAMPLE_DISTINCT).astype(np.int64)
-        sample_distinct = len(np.unique(a[idx]))
-        # first-order scale-up, capped by value span
-        est = int(sample_distinct * (n / SAMPLE_DISTINCT) ** 0.5)
-        st["distinct_est"] = min(max(sample_distinct, est),
-                                 st["vmax"] - st["vmin"] + 1, n)
+    st["tokens"] = a
+    st["runs"] = long_runs(a, 2)
+    lens = st["runs"][1]
+    st["n_runs"] = n - int(lens.sum()) + len(lens)
+    st["max_run"] = int(lens.max()) if len(lens) else 1
+    st["k_runs"] = int((lens >= 3).sum())
+    st["uniq"] = sorted_uniques(a, st["vmin"], st["vmax"])
+    st["distinct"] = len(st["uniq"])
     return st
 
 
@@ -100,12 +104,32 @@ class SelectorConfig:
             raise ValueError(f"unknown codec(s) in allow-list: {unknown}")
 
 
+def _probe_sample(arr: np.ndarray) -> np.ndarray:
+    """PROBE_WINDOWS evenly spread windows of the block, concatenated
+    (the block itself when it is no longer than that)."""
+    n = len(arr)
+    if n <= PROBE_WINDOWS * PROBE_WINDOW:
+        return arr
+    starts = np.linspace(0, n - PROBE_WINDOW, PROBE_WINDOWS).astype(np.int64)
+    return np.concatenate([arr[s:s + PROBE_WINDOW] for s in starts])
+
+
 def select_and_encode(arr: np.ndarray, cfg: SelectorConfig | None = None,
                       probes: bool = True) -> tuple[str, bytes, dict]:
     """Choose the cheapest codec for this block and encode with it.
 
-    Returns (codec_name, payload, stats). Guaranteed:
-    len(payload) <= 4*len(arr) + 16 (RAW fallback).
+    Trial rule: every estimate-tier estimate is the exact payload size
+    (or inf when the codec would decline), so only the leader, the
+    lowest estimate, is encoded, and only if it beats raw. The
+    byte-image probe sweep, when the leader's prospects are weak or
+    the block is run-heavy, encodes each probe codec on a spread
+    sample first and trials it on the whole block only if the sample
+    beats the best ratio so far. effort="max" also trials the
+    ratio-oriented codecs, on the whole block.
+
+    Returns (codec_name, payload, stats), with an `est_<name>` stat per
+    estimated codec. Guaranteed: len(payload) <= 4*len(arr) + 16 (RAW
+    fallback).
     """
     cfg = cfg or SelectorConfig()
     st = block_stats(arr)
@@ -113,8 +137,6 @@ def select_and_encode(arr: np.ndarray, cfg: SelectorConfig | None = None,
     allowed = set(cfg.allow) if cfg.allow else set(REGISTRY)
 
     raw_size = 4 * n + 16
-    best_name, best_payload = "raw", None
-
     if n == 0:
         payload = REGISTRY["raw"].encode(arr)
         st["est_raw"] = raw_size
@@ -127,35 +149,40 @@ def select_and_encode(arr: np.ndarray, cfg: SelectorConfig | None = None,
         e = REGISTRY[name].estimate(st)
         st[f"est_{name}"] = float(e)
         ests.append((e, name))
-    ests.sort()
 
-    trial = [name for _, name in ests[:TRIAL_TOP]]
+    best_name, best_payload, best_size = "raw", None, raw_size
+
+    def trial(name):
+        nonlocal best_name, best_payload, best_size
+        payload = REGISTRY[name].encode(arr)
+        if payload is not None and len(payload) < best_size:
+            best_name, best_payload, best_size = name, payload, len(payload)
+
+    leader_size, leader = min(ests, default=(raw_size, None))
+    if leader_size < raw_size:
+        trial(leader)
     if probes and cfg.effort in ("balanced", "max"):
         # probe byte-image codecs only when token-level prospects are
         # weak or the data shows byte-level structure worth chasing
-        best_est_ratio = (ests[0][0] / raw_size) if ests else 1.0
-        run_frac = st["n_runs"] / max(n, 1)
-        if best_est_ratio > 0.5 or run_frac < (1 - PROBE_RUN_FRAC):
-            trial += [c for c in PROBE_CODECS if c in allowed and c not in trial]
+        run_frac = st["n_runs"] / n
+        if best_size / raw_size > 0.5 or run_frac < (1 - PROBE_RUN_FRAC):
+            sample = _probe_sample(arr) if cfg.effort == "balanced" else arr
+            for name in (c for c in PROBE_CODECS if c in allowed):
+                if sample is not arr:
+                    p = REGISTRY[name].encode(sample)
+                    if p is None or len(p) * n >= best_size * len(sample):
+                        continue
+                trial(name)
     if cfg.effort == "max":
-        extra = [c for c in MAX_EFFORT_CODECS if c in allowed and c not in trial]
-        if st["n_runs"] / max(n, 1) > 0.5 and n > 4096:
+        extra = [c for c in MAX_EFFORT_CODECS if c in allowed]
+        if st["n_runs"] / n > 0.5 and n > 4096:
             # lane-MTF's Python loop visits every change step; its
             # run-skip fast path only pays on run-heavy blocks, so
             # time-bound the trial: skip MTF when runs are scarce
             # (mean run < 2 tokens) and the block is big
             extra = [c for c in extra if not c.startswith("mtf")]
-        trial += extra
-        trial += [name for _, name in ests[TRIAL_TOP:]]
-
-    best_size = raw_size
-    for name in trial:
-        payload = REGISTRY[name].encode(arr)
-        if payload is None:
-            continue
-        if len(payload) < best_size:
-            best_size = len(payload)
-            best_name, best_payload = name, payload
+        for name in extra:
+            trial(name)
 
     if best_payload is None:
         best_payload = REGISTRY["raw"].encode(arr)

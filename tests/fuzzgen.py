@@ -97,3 +97,24 @@ def boundary_cases() -> dict[str, np.ndarray]:
             arr[start:start + 8] = -7  # neighbours differ: one run each
         cases[f"sparse_run_cut{d:+d}"] = arr
     return cases
+
+
+def selection_blocks(datagen: bool = True):
+    """The selector's winner-diff set, as (name, tokens): up to four
+    262144-token blocks per datagen source for seeds 11-14 (3000 docs
+    each, tokens concatenated per source), then boundary_cases(),
+    fuzz_tokens(0..11) and fuzz_tokens(100..111, vocab=256). 102
+    blocks in all."""
+    if datagen:
+        from rle_spark.datagen import generate_docs_pandas
+        for seed in range(11, 15):
+            df = generate_docs_pandas(range(3000), seed)
+            for src, g in df.groupby("source", sort=True):
+                toks = np.concatenate(list(g["tokens"]))
+                for i in range(0, min(len(toks), 4 << 18), 1 << 18):
+                    yield f"dg{seed}_{src}_{i >> 18}", toks[i:i + (1 << 18)]
+    yield from boundary_cases().items()
+    for s in range(12):
+        yield f"fuzz{s}", fuzz_tokens(s)
+    for s in range(100, 112):
+        yield f"fuzz{s}_vocab256", fuzz_tokens(s, vocab=256)

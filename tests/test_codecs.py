@@ -169,6 +169,33 @@ def test_find_runs():
     np.testing.assert_array_equal(lens, [2, 1, 3])
 
 
+def _long_run_inputs():
+    from tests.fuzzgen import exhaustive_cases
+    yield from CASES.items()
+    yield from exhaustive_cases()
+    for s in range(4):
+        yield f"fuzz{s}", fuzz_tokens(s)
+    for n in (0, 1, 2):
+        yield f"n{n}", np.full(n, 5, np.int32)
+    yield "n2_differ", np.array([1, 2], np.int32)
+    yield "all_equal", np.full(1000, -3, np.int32)
+    yield "alternating", np.tile(np.array([4, 9], np.int32), 500)
+    yield "run_at_end", np.array([1, 2, 3, 7, 7, 7, 7], np.int32)
+    yield "int64", np.array([2**40, 2**40, 2**40, -1, -1, 0], np.int64)
+    yield "uint8", np.array([255, 255, 0, 0, 0, 1, 255, 255, 255], np.uint8)
+
+
+@pytest.mark.parametrize("min_len", [2, 3])
+def test_long_runs_match_filtered_find_runs(min_len):
+    from rle_spark.codecs.base import long_runs
+    for case_id, a in _long_run_inputs():
+        starts, lens = find_runs(a)
+        keep = lens >= min_len
+        got_starts, got_lens = long_runs(a, min_len)
+        assert np.array_equal(got_starts, starts[keep]), case_id
+        assert np.array_equal(got_lens, lens[keep]), case_id
+
+
 @pytest.mark.parametrize("lanes", [16, 32])
 def test_mtf_transform(lanes):
     rng = np.random.default_rng(lanes)

@@ -400,8 +400,6 @@ def long_runs(a: np.ndarray, min_len: int) -> tuple[np.ndarray, np.ndarray]:
 # /root/reference/src/rleX_extreme_cpu.c:4-64)
 # ---------------------------------------------------------------------------
 
-_WIDTH_DTYPE = {8: np.uint8, 16: np.uint16, 32: np.uint32, 64: np.uint64}
-
 
 def tokens_to_bytes(tokens: np.ndarray) -> np.ndarray:
     """Little-endian byte image of an int32 token array."""
@@ -416,3 +414,14 @@ def byte_image_symbols(img: np.ndarray, width_bits: int) -> tuple[np.ndarray, in
     if pad:
         img = np.concatenate([img, np.zeros(pad, dtype=np.uint8)])
     return img.view(np.dtype(f"<u{step}")), pad
+
+
+def sym_int_view(img: np.ndarray, sym_bytes: int, n_sym: int) -> np.ndarray:
+    """Little-endian integers of the aligned symbol prefix. Native
+    widths (1/2/4/8 bytes) are a free view; 24/48-bit (the reference's
+    SYMBOL_MASK widths, masked u32/u64 loads) synthesize the ints from
+    the byte matrix — no u3/u6 dtype exists."""
+    if sym_bytes in (1, 2, 4, 8):
+        return img[: sym_bytes * n_sym].view(f"<u{sym_bytes}")
+    m = img[: sym_bytes * n_sym].reshape(n_sym, sym_bytes).astype(np.int64)
+    return m @ (np.int64(1) << (8 * np.arange(sym_bytes, dtype=np.int64)))

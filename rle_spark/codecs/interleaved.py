@@ -36,8 +36,7 @@ import struct
 
 import numpy as np
 
-from .base import find_runs
-from .short import sym_int_view
+from .base import find_runs, sym_int_view
 
 
 def _constants(sym_bytes: int, packed: bool):
@@ -230,5 +229,6 @@ def rlex_decode_bytes(buf: bytes | memoryview, sym_bytes: int = 4,
         pat = int(v).to_bytes(S, "little") * (cb // S + 1)
         pieces.append(np.frombuffer(pat[:cb], np.uint8))
     out = (np.concatenate(pieces) if pieces else np.zeros(0, np.uint8))
-    assert len(out) == n, f"rlex decode length {len(out)} != {n}"
+    if len(out) != n:
+        raise ValueError(f"rlex decode length {len(out)} != header {n}")
     return out

@@ -258,7 +258,7 @@ def ref_short_bytes_exact(img: np.ndarray, sym_count: int = 7,
     {1, 0}), :352-356 (LUT-miss symbol), :455-517 (terminal forms),
     :390 (8-byte header, [1] = compressed length). Deliberately NOT
     implemented in terms of short.py: stream equality between this
-    replay and short_encode_bytes/short_sym_encode_bytes is the
+    replay and short_sym_encode_bytes (width 8 = symbol width 1) is the
     byte-exactness proof for the F5 family."""
     img = np.ascontiguousarray(img, dtype=np.uint8)
     n = len(img)

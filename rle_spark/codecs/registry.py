@@ -75,8 +75,6 @@ from .rle import (
 )
 from .sh import sh_decode_bytes, sh_encode_bytes
 from .short import (
-    short_decode_bytes,
-    short_encode_bytes,
     short_greedy_decode_bytes,
     short_greedy_encode_bytes,
     short_sym_decode_bytes,
@@ -159,7 +157,6 @@ def _zlib_after(stream):
             lambda buf, n: dec(decompose_zlib(buf), n))
 
 
-_short8 = partial(_image, short_encode_bytes, short_decode_bytes)
 _short_sym = partial(_image, short_sym_encode_bytes, short_sym_decode_bytes)
 _greedy = partial(_image, short_greedy_encode_bytes, short_greedy_decode_bytes)
 _rlex = partial(_image, rlex_encode_bytes, rlex_decode_bytes)
@@ -276,12 +273,13 @@ CODECS: list[Codec] = [
     # 24/48-bit sym-aligned widths (byte-aligned strides 3/6 are ids 18/20)
     Codec(25, "rle24_sym", *_components(1, 3), "max"),
     Codec(26, "rle48_sym", *_components(2, 3), "max"),
-    # true F5 short-command streams with the reference's exact byte
-    # sizes (src/rleX_Xsl_short.h): width 8, then sym mode at the
-    # multi-byte widths (at width 32 one symbol is one token)
-    Codec(31, "rle8_1sl_short", *_short8(sym_count=1), "max"),
-    Codec(32, "rle8_3sl_short", *_short8(sym_count=3), "max"),
-    Codec(33, "rle8_7sl_short", *_short8(sym_count=7), "max"),
+    # true F5 short-command streams with the reference's exact bytes
+    # (src/rleX_Xsl_short.h), one sym-mode format at every width: width
+    # 8 is symbol width 1, where a stored count is a byte count (at
+    # width 32 one symbol is one token)
+    Codec(31, "rle8_1sl_short", *_short_sym(sym_count=1, sym_bytes=1), "max"),
+    Codec(32, "rle8_3sl_short", *_short_sym(sym_count=3, sym_bytes=1), "max"),
+    Codec(33, "rle8_7sl_short", *_short_sym(sym_count=7, sym_bytes=1), "max"),
     Codec(36, "rle16_3sl_short", *_short_sym(sym_count=3, sym_bytes=2), "max"),
     Codec(39, "rle24_3sl_short", *_short_sym(sym_count=3, sym_bytes=3), "max"),
     Codec(35, "rle32_3sl_short", *_short_sym(sym_count=3, sym_bytes=4), "max"),

@@ -325,5 +325,6 @@ def _sh_decode_single(mv: memoryview) -> np.ndarray:
                     st.last_occ = st.third
                     out.append(st.third)
     result = np.frombuffer(bytes(out), dtype=np.uint8)
-    assert len(result) == n, f"rle8_sh decode length {len(result)} != {n}"
+    if len(result) != n:
+        raise ValueError(f"rle8_sh decode length {len(result)} != header {n}")
     return result

@@ -1,4 +1,4 @@
-"""True F5 short-command block format (+ F6 greedy tier).
+"""True F5 short-command block format (+ the F6 greedy tier that shares it).
 
 The reference's best-ratio non-entropy family is the `Xsymlut_short`
 grid: a 1-byte command packs [LUT-idx | count | range] for tiny runs, a
@@ -9,17 +9,21 @@ out on a miss (/root/reference/src/rleX_Xsl_short.h:13-53 bit budgets,
 :156-372 process_symbol, :440-525 stream framing + terminal).
 
 This module implements that grammar as a REAL stream format (not a
-size model): encode emits the reference's exact byte sizes — 8-byte
-header, per-command 1 or 3(+2/4)(+2/4) bytes, +symbol on LUT miss,
-interleaved literals, 7-byte / 9+tail terminal — with a canonical
-little-endian bit order inside the command word (the budgets, field
-widths and escape thresholds match the reference; only the in-word bit
-placement is canonicalized, SURVEY §2.1's declared position).
+size model): 8-byte header, per-command 1 or 3(+2/4)(+2/4) bytes,
++symbol on LUT miss, interleaved literals, 7-byte / 9+tail terminal,
+byte for byte the reference's emit expressions
+(refmodel.ref_short_bytes_exact replays them independently).
 
-Width-8 (`short_encode_bytes`, SYMBOL_COUNT 1/3/7) walks maximal byte
-runs; the accept rule replicates the reference's penalty calculus
-including its 20-bit-vs-16-bit escape-penalty quirk
-(rleX_Xsl_short.h:197 uses 0xFFFFF where the emitter switches at
+The reference writes the format once, as a template instantiated at
+every width (rleX_Xsl_short.c:7-270), and so does this module: one
+sym-mode encoder/decoder pair over symbols of 1, 2, 3, 4, 6 or 8
+bytes. Width 8 (`rle8_*sl_short`) is symbol width 1. Runs are
+whole-symbol runs and the command count field stores SYMBOLS (the
+reference divides the byte count by TYPE_SIZE/8 when storing,
+rleX_Xsl_short.h:171-174); range stays a byte distance; a LUT miss
+spells the sym_bytes-wide symbol. The accept rule replicates the
+reference's penalty calculus including its 20-bit-vs-16-bit
+escape-penalty quirk (:197 uses 0xFFFFF where the emitter switches at
 0xFFFF).
 
 Byte-mode greedy (`short_greedy_encode_bytes`, F6) adds the
@@ -28,7 +32,10 @@ LUT restart rleX_Xsl_short.h:858-983): runs are byte intervals that
 may end inside a trailing symbol (ctz-of-xor prefix extension), and
 after a run ends the encoder may restart a run from a LUT symbol on a
 >=2-byte prefix match — the feature behind the reference's best
-pixel-art ratios.
+pixel-art ratios. Its counts are bytes, and otherwise its stream is
+the F5 one: it goes through the same accept-and-emit step and is read
+back by the same command parser, as the reference's F6 encoders reuse
+the F5 decoder (src/codec_funcs.h:298-388).
 
 Throughput position: command emission is per-RUN / per-EVENT work
 (runs << bytes on the corpora where this family wins); run/event
@@ -44,7 +51,7 @@ import struct
 
 import numpy as np
 
-from .base import find_runs
+from .base import find_runs, sym_int_view
 
 # bit budgets per SYMBOL_COUNT (rleX_Xsl_short.h:13-53)
 # lut_bits, count_bits_packed; range_bits_packed = 8 - lut - cbp
@@ -58,12 +65,24 @@ _MAX_TINY_COUNT = (1 << _COUNT_BITS) - 1          # 511
 _COUNT_OFFSET = 2
 _RANGE_OFFSET = 2
 
-# reference LUT seeds (rleX_Xsl_short.h:393-404)
-_INIT_LUT = {
-    1: [0x00],
-    3: [0x00, 0x7F, 0xFF],
-    7: [0x00, 0x7F, 0xFF, 0x01, 0x7E, 0x80, 0xFE],
-}
+# LUT seeds are the byte seeds broadcast across the symbol
+# (rleX_Xsl_short.h:393-404, :762-770: 0x00/0x7F/0xFF * VALUE_BROADCAST)
+_SEED_BYTES = {1: [0x00], 3: [0x00, 0x7F, 0xFF],
+               7: [0x00, 0x7F, 0xFF, 0x01, 0x7E, 0x80, 0xFE]}
+
+# the greedy tier's LUT is the 3-symbol one
+_GREEDY_SC = 3
+
+
+def _lut_seed(sym_count: int, sym_bytes: int) -> list[int]:
+    bc = int.from_bytes(b"\x01" * sym_bytes, "little")  # VALUE_BROADCAST
+    return [s * bc for s in _SEED_BYTES[sym_count]]
+
+
+def _stored_offset(sym_bytes: int) -> int:
+    """Stored count minus symbol count in sym mode: storedCount =
+    count/(TS/8) - MIN_RANGE_SHORT/(TS/8) + 2 (rleX_Xsl_short.h:171-174)."""
+    return _COUNT_OFFSET - (2 // sym_bytes)
 
 
 def _budgets(sym_count: int, sym_bytes: int):
@@ -85,16 +104,14 @@ def _budgets(sym_count: int, sym_bytes: int):
     )
 
 
-def _cmd_parts(b, idx, sym_count, count, rng):
-    """(cmd_bytes, count_escape, range_escape) for one accepted run.
-    storedCount == count for width-8 / UNBOUND byte mode."""
-    stored = count
+def _command(b, idx: int, stored: int, rng: int) -> bytes:
+    """Command bytes for one accepted run: the 1-byte tiny command, or
+    the 3-byte medium one followed by its count and range escapes."""
     count3 = stored - _COUNT_OFFSET
     range3 = rng - _RANGE_OFFSET
     if range3 <= b["max_packed_range"] and count3 <= b["max_packed_count"]:
-        word = ((idx << (b["cbp"] + b["rbp"]))
-                | (count3 << b["rbp"]) | range3)
-        return bytes([word]), b"", b""
+        return bytes(((idx << (b["cbp"] + b["rbp"]))
+                      | (count3 << b["rbp"]) | range3,))
     if stored <= _MAX_TINY_COUNT:
         scx, cesc = stored, b""
     elif stored <= 0xFFFF:
@@ -107,7 +124,7 @@ def _cmd_parts(b, idx, sym_count, count, rng):
         rx, resc = 1, struct.pack("<H", rng)
     else:
         rx, resc = 0, struct.pack("<I", rng)
-    return _pack_medium(b, idx, scx, rx), cesc, resc
+    return _pack_medium(b, idx, scx, rx) + cesc + resc
 
 
 def _pack_medium(b, idx: int, scx: int, rx: int) -> bytes:
@@ -120,16 +137,7 @@ def _pack_medium(b, idx: int, scx: int, rx: int) -> bytes:
     return bytes([vp1, (payload >> 8) & 0xFF, payload & 0xFF])
 
 
-def _parse_medium(b, first: int, b1: int, b2: int):
-    idx = first >> (b["cbp"] + b["rbp"])
-    payload = ((first & ((1 << b["rbp"]) - 1)) << 16) | (b1 << 8) | b2
-    scx = (payload >> b["range_bits"]) & _MAX_TINY_COUNT
-    rx = payload & ((1 << b["range_bits"]) - 1)
-    return idx, scx, rx
-
-
-def _penalty(b, miss: bool, sym_bytes: int, count: int, rng: int) -> int:
-    stored = count
+def _penalty(b, miss: bool, sym_bytes: int, stored: int, rng: int) -> int:
     count3 = stored - _COUNT_OFFSET
     range3 = rng - _RANGE_OFFSET
     pen = sym_bytes if miss else 0
@@ -147,289 +155,101 @@ def _penalty(b, miss: bool, sym_bytes: int, count: int, rng: int) -> int:
     return pen
 
 
-def short_encode_bytes(img: np.ndarray, sym_count: int = 7) -> bytes:
-    """Width-8 Xsymlut_short encode: true command stream, exact
-    reference byte sizes."""
-    img = np.ascontiguousarray(img, dtype=np.uint8)
+def _emit(img: np.ndarray, sym_count: int, sym_bytes: int, runs,
+          lut: list[int]) -> bytes:
+    """The one accept-and-emit step of both encoders. `runs` yields
+    candidate runs in stream order as (byte start, byte count, stored
+    count, symbol). A run is kept if its bytes pay for its command (the
+    reference's accept rule) and is written as command, missed symbol,
+    then the literals before it. `lut` is the MTF cache this step keeps
+    current; the greedy scan, a lazy `runs`, reads it between runs."""
     n = len(img)
-    b = _budgets(sym_count, 1)
-    out = bytearray(struct.pack("<II", n, 0))
-    lut = list(_INIT_LUT[sym_count])
-    if n == 0:
-        out += _terminal(b, sym_count, accepted=False, tail=b"")
-        struct.pack_into("<I", out, 4, len(out))
-        return bytes(out)
-    starts, lens = find_runs(img)
-    last_rle = 0
+    b = _budgets(sym_count, sym_bytes)
     min_long = b["min_long"]
-    mv = img  # numpy view; sliced per emit
-    for s, ln, v in zip(starts.tolist(), lens.tolist(),
-                        img[starts].tolist()):
-        if ln < 2:
-            continue
-        rng = s - last_rle + _RANGE_OFFSET
-        try:
-            idx = lut.index(v)
-            miss = False
-        except ValueError:
-            idx = sym_count
-            miss = True
-        if not (ln >= min_long
-                or ln >= 2 + _penalty(b, miss, 1, ln, rng)):
-            continue
-        cmd, cesc, resc = _cmd_parts(b, idx, sym_count, ln, rng)
-        out += cmd
-        out += cesc
-        out += resc
-        if miss:
-            out.append(v)
-            lut.insert(0, v)
-            lut.pop()
-        elif idx:
-            lut.insert(0, lut.pop(idx))
-        out += mv[last_rle:s].tobytes()
-        last_rle = s + ln
-    out += _terminal(b, sym_count, accepted=(last_rle == n),
-                     tail=mv[last_rle:].tobytes())
-    struct.pack_into("<I", out, 4, len(out))
-    return bytes(out)
-
-
-def _terminal(b, sym_count: int, accepted: bool, tail: bytes) -> bytes:
-    """Reference terminal: medium command with count escape == 0
-    (rleX_Xsl_short.h:460-525). Accepted-final: both escapes u16 zero
-    (7 bytes); else u16 zero count + u32 range carrying the tail copy
-    size (9 bytes + tail)."""
-    if accepted:
-        return _pack_medium(b, 0, 1, 1) + struct.pack("<HH", 0, 0)
-    return (_pack_medium(b, 0, 1, 0)
-            + struct.pack("<HI", 0, len(tail) + _RANGE_OFFSET) + tail)
-
-
-def short_decode_bytes(buf: bytes | memoryview,
-                       sym_count: int = 7) -> np.ndarray:
-    """Parse the width-8 command stream back to the byte image.
-
-    Sequential per-COMMAND parse collecting (literal span, run value,
-    run length); the byte image materializes in one vectorized
-    np.repeat at the end (commands << bytes)."""
-    mv = memoryview(buf)
-    n = struct.unpack_from("<I", mv, 0)[0]
-    b = _budgets(sym_count, 1)
-    lut = list(_INIT_LUT[sym_count])
-    pos = 8
-    lit_spans: list[tuple[int, int]] = []  # (offset, length) into buf
-    run_vals: list[int] = []
-    run_lens: list[int] = []
-    cbp, rbp = b["cbp"], b["rbp"]
-    range_bits, invalid = b["range_bits"], b["invalid"]
-    tail_span = (0, 0)
-    while True:
-        first = mv[pos]
-        count3f = (first >> rbp) & ((1 << cbp) - 1)
-        if count3f != invalid:
-            idx = first >> (cbp + rbp)
-            count = (count3f & ((1 << cbp) - 1)) + _COUNT_OFFSET
-            lit_len = first & ((1 << rbp) - 1)
-            pos += 1
-        else:
-            idx, scx, rx = _parse_medium(b, first, mv[pos + 1],
-                                         mv[pos + 2])
-            pos += 3
-            if scx == 1:
-                stored = struct.unpack_from("<H", mv, pos)[0]
-                pos += 2
-            elif scx == 0:
-                stored = struct.unpack_from("<I", mv, pos)[0]
-                pos += 4
-            else:
-                stored = scx
-            if rx == 1:
-                rng = struct.unpack_from("<H", mv, pos)[0]
-                pos += 2
-            elif rx == 0:
-                rng = struct.unpack_from("<I", mv, pos)[0]
-                pos += 4
-            else:
-                rng = rx
-            if stored == 0:  # terminal (accepted-final carries rng 0)
-                tail_span = (pos, max(rng - _RANGE_OFFSET, 0))
-                break
-            count = stored
-            lit_len = rng - _RANGE_OFFSET
-        if idx == sym_count:
-            v = mv[pos]
-            pos += 1
-            lut.insert(0, v)
-            lut.pop()
-        else:
-            v = lut[idx]
-            if idx:
-                lut.insert(0, lut.pop(idx))
-        lit_spans.append((pos, lit_len))
-        pos += lit_len
-        run_vals.append(v)
-        run_lens.append(count)
-    base = np.frombuffer(mv, dtype=np.uint8)
-    k = len(run_vals)
-    segs = np.empty(2 * k + 1, dtype=np.int64)
-    segs[0:2 * k:2] = [sp[1] for sp in lit_spans]
-    segs[1:2 * k:2] = run_lens
-    segs[2 * k] = tail_span[1]
-    lit_parts = [base[o:o + ln] for o, ln in lit_spans]
-    lit_parts.append(base[tail_span[0]:tail_span[0] + tail_span[1]])
-    lits = (np.concatenate(lit_parts) if lit_parts
-            else np.zeros(0, np.uint8))
-    # one-repeat materialization: literals are length-1 runs
-    values = np.empty(len(lits) + k, dtype=np.uint8)
-    counts = np.ones(len(lits) + k, dtype=np.int64)
-    lit_cum = np.cumsum(segs[0::2])[:-1] if k else np.zeros(0, np.int64)
-    ins = lit_cum + np.arange(k)
-    mask = np.zeros(len(values), dtype=bool)
-    mask[ins] = True
-    values[~mask] = lits
-    values[ins] = run_vals
-    counts[ins] = run_lens
-    out = np.repeat(values, counts)
-    assert len(out) == n, f"short decode length {len(out)} != {n}"
-    return out
-
-
-# ---------------------------------------------------------------------------
-# F5 at widths 16/24/32/48/64, SYM-aligned: rle{16..64}_Xsymlut_short
-# ---------------------------------------------------------------------------
-
-# LUT seeds are the byte seeds broadcast across the symbol
-# (rleX_Xsl_short.h:762-770: 0x00/0x7F/0xFF * VALUE_BROADCAST)
-_SEED_BYTES = {1: [0x00], 3: [0x00, 0x7F, 0xFF],
-               7: [0x00, 0x7F, 0xFF, 0x01, 0x7E, 0x80, 0xFE]}
-
-
-def _init_lut_wide(sym_count: int, sym_bytes: int) -> list[int]:
-    bc = int.from_bytes(b"\x01" * sym_bytes, "little")  # VALUE_BROADCAST
-    return [s * bc for s in _SEED_BYTES[sym_count]]
-
-
-def sym_int_view(img: np.ndarray, sym_bytes: int, n_sym: int) -> np.ndarray:
-    """Little-endian integers of the aligned symbol prefix. Native
-    widths are a free view; 24/48-bit (the reference's SYMBOL_MASK
-    widths, masked u32/u64 loads) synthesize the ints from the byte
-    matrix — no u3/u6 dtype exists."""
-    if sym_bytes in (2, 4, 8):
-        return img[: sym_bytes * n_sym].view(f"<u{sym_bytes}")
-    m = img[: sym_bytes * n_sym].reshape(n_sym, sym_bytes).astype(np.int64)
-    return m @ (np.int64(1) << (8 * np.arange(sym_bytes, dtype=np.int64)))
-
-
-def short_sym_encode_bytes(img: np.ndarray, sym_count: int = 3,
-                           sym_bytes: int = 4) -> bytes:
-    """SYM-mode Xsymlut_short at widths 16/32/64: the same command
-    grammar as the width-8 form, but runs are whole-symbol runs and the
-    command count field stores SYMBOLS — the reference divides the byte
-    count by TYPE_SIZE/8 when storing (rleX_Xsl_short.h:171-174:
-    storedCount = count/(TS/8) - MIN_RANGE_SHORT/(TS/8) + 2); range
-    stays a byte distance; a LUT miss spells the sym_bytes-wide symbol
-    (penalty sym_bytes, :187). Unaligned trailing bytes ride the
-    terminal copy."""
-    img = np.ascontiguousarray(img, dtype=np.uint8)
-    n = len(img)
-    b = _budgets(sym_count, sym_bytes)
+    raw = memoryview(img)
     out = bytearray(struct.pack("<II", n, 0))
-    lut = _init_lut_wide(sym_count, sym_bytes)
-    n_sym = n // sym_bytes
-    if n_sym == 0:
-        out += _terminal(b, sym_count, accepted=False, tail=img.tobytes())
-        struct.pack_into("<I", out, 4, len(out))
-        return bytes(out)
-    sym = sym_int_view(img, sym_bytes, n_sym)
-    starts, lens = find_runs(sym)
-    last_rle = 0  # byte offset
-    min_long = b["min_long"]  # 3 + 4 + 4 + sym_bytes
-    stored_off = _COUNT_OFFSET - (2 // sym_bytes)
-    for s, ln, v in zip(starts.tolist(), lens.tolist(),
-                        sym[starts].tolist()):
-        cb = sym_bytes * ln  # run bytes
-        sb = sym_bytes * s
-        rng = sb - last_rle + _RANGE_OFFSET
+    last_rle = 0
+    for start, cb, stored, v in runs:
+        rng = start - last_rle + _RANGE_OFFSET
         try:
             idx = lut.index(v)
             miss = False
         except ValueError:
             idx = sym_count
             miss = True
-        stored = ln + stored_off  # symbols (see docstring)
-        if not (cb >= min_long
-                or cb >= 2 + _penalty(b, miss, sym_bytes, stored, rng)):
+        if (cb < min_long
+                and cb < 2 + _penalty(b, miss, sym_bytes, stored, rng)):
             continue
-        cmd, cesc, resc = _cmd_parts(b, idx, sym_count, stored, rng)
-        out += cmd
-        out += cesc
-        out += resc
+        out += _command(b, idx, stored, rng)
         if miss:
-            out += int(v).to_bytes(sym_bytes, "little")
+            out += v.to_bytes(sym_bytes, "little")
             lut.insert(0, v)
             lut.pop()
         elif idx:
             lut.insert(0, lut.pop(idx))
-        out += img[last_rle:sb].tobytes()
-        last_rle = sb + cb
-    out += _terminal(b, sym_count, accepted=(last_rle == n),
-                     tail=img[last_rle:].tobytes())
+        out += raw[last_rle:start]
+        last_rle = start + cb
+    # terminal: a medium command with count escape 0
+    # (rleX_Xsl_short.h:460-525). Accepted-final: both escapes u16 zero
+    # (7 bytes); else u16 zero count + u32 range carrying the tail copy
+    # size (9 bytes + tail)
+    if 0 < last_rle == n:
+        out += _pack_medium(b, 0, 1, 1) + struct.pack("<HH", 0, 0)
+    else:
+        out += _pack_medium(b, 0, 1, 0) + struct.pack(
+            "<HI", 0, n - last_rle + _RANGE_OFFSET)
+        out += raw[last_rle:]
     struct.pack_into("<I", out, 4, len(out))
     return bytes(out)
 
 
-def short_sym_decode_bytes(buf: bytes | memoryview, sym_count: int = 3,
-                           sym_bytes: int = 4) -> np.ndarray:
-    """Parse a sym-mode stream back to the byte image: same command
-    walk as width-8, counts are symbols, misses carry sym_bytes-wide
-    symbols; materialization is one symbol-wide np.repeat + byte tail."""
-    mv = memoryview(buf)
-    n = struct.unpack_from("<I", mv, 0)[0]
+def _escaped(data: bytes, pos: int, x: int) -> tuple[int, int]:
+    """A medium-command field and the position after it: markers 1 and
+    0 say the value follows as u16 / u32."""
+    if x == 1:
+        return struct.unpack_from("<H", data, pos)[0], pos + 2
+    if x == 0:
+        return struct.unpack_from("<I", data, pos)[0], pos + 4
+    return x, pos
+
+
+def _parse(buf: bytes | memoryview, sym_count: int, sym_bytes: int):
+    """The one command parser of both decoders: header, 1-byte and
+    3-byte commands, u16/u32 escapes, the LUT move-to-front update and
+    the terminal. Returns (n, payload bytes, literal offsets, literal
+    lengths, run symbols, stored counts, tail span); literal i precedes
+    run i, and the tail (offset, length) follows the last run."""
+    data = bytes(buf)
+    n = struct.unpack_from("<I", data, 0)[0]
     b = _budgets(sym_count, sym_bytes)
-    lut = _init_lut_wide(sym_count, sym_bytes)
+    cbp, rbp, invalid = b["cbp"], b["rbp"], b["invalid"]
+    range_bits, rmask = b["range_bits"], (1 << b["rbp"]) - 1
+    lut = _lut_seed(sym_count, sym_bytes)
+    lit_offs: list[int] = []
+    lit_lens: list[int] = []
+    syms: list[int] = []
+    stored_counts: list[int] = []
     pos = 8
-    lit_spans: list[tuple[int, int]] = []  # (offset, BYTE length)
-    run_vals: list[int] = []
-    run_lens: list[int] = []               # SYMBOL counts
-    cbp, rbp = b["cbp"], b["rbp"]
-    stored_off = _COUNT_OFFSET - (2 // sym_bytes)
-    tail_span = (0, 0)
     while True:
-        first = mv[pos]
-        count3f = (first >> rbp) & ((1 << cbp) - 1)
-        if count3f != b["invalid"]:
-            idx = first >> (cbp + rbp)
-            n_syms = count3f + _COUNT_OFFSET - stored_off
-            lit_len = first & ((1 << rbp) - 1)
+        first = data[pos]
+        count3f = (first >> rbp) & invalid
+        idx = first >> (cbp + rbp)
+        if count3f != invalid:
+            stored = count3f + _COUNT_OFFSET
+            lit_len = first & rmask
             pos += 1
         else:
-            idx, scx, rx = _parse_medium(b, first, mv[pos + 1],
-                                         mv[pos + 2])
-            pos += 3
-            if scx == 1:
-                stored = struct.unpack_from("<H", mv, pos)[0]
-                pos += 2
-            elif scx == 0:
-                stored = struct.unpack_from("<I", mv, pos)[0]
-                pos += 4
-            else:
-                stored = scx
-            if rx == 1:
-                rng = struct.unpack_from("<H", mv, pos)[0]
-                pos += 2
-            elif rx == 0:
-                rng = struct.unpack_from("<I", mv, pos)[0]
-                pos += 4
-            else:
-                rng = rx
-            if stored == 0:  # terminal
-                tail_span = (pos, max(rng - _RANGE_OFFSET, 0))
-                break
-            n_syms = stored - stored_off
+            payload = (((first & rmask) << 16) | (data[pos + 1] << 8)
+                       | data[pos + 2])
+            stored, pos = _escaped(data, pos + 3,
+                                   (payload >> range_bits) & _MAX_TINY_COUNT)
+            rng, pos = _escaped(data, pos, payload & ((1 << range_bits) - 1))
+            if stored == 0:  # terminal (accepted-final carries rng 0)
+                return (n, data, lit_offs, lit_lens, syms, stored_counts,
+                        (pos, max(rng - _RANGE_OFFSET, 0)))
             lit_len = rng - _RANGE_OFFSET
         if idx == sym_count:
-            v = int.from_bytes(mv[pos:pos + sym_bytes], "little")
+            v = int.from_bytes(data[pos:pos + sym_bytes], "little")
             pos += sym_bytes
             lut.insert(0, v)
             lut.pop()
@@ -437,54 +257,85 @@ def short_sym_decode_bytes(buf: bytes | memoryview, sym_count: int = 3,
             v = lut[idx]
             if idx:
                 lut.insert(0, lut.pop(idx))
-        lit_spans.append((pos, lit_len))
+        lit_offs.append(pos)
+        lit_lens.append(lit_len)
         pos += lit_len
-        run_vals.append(v)
-        run_lens.append(n_syms)
-    base = np.frombuffer(mv, dtype=np.uint8)
-    k = len(run_vals)
-    tail = base[tail_span[0]:tail_span[0] + tail_span[1]]
-    if sym_bytes in (2, 4, 8):
-        # aligned body in symbol space (mid-stream literals are
-        # sym_bytes multiples in sym mode), one-repeat materialization;
-        # the byte tail is appended. frombuffer(offset=...) tolerates
-        # the arbitrary byte offsets the command stream leaves literals
-        # at (a .view would require alignment)
-        dt = f"<u{sym_bytes}"
-        lit_parts = [np.frombuffer(mv, dt, count=ln // sym_bytes,
-                                   offset=o)
-                     for o, ln in lit_spans]
-        lits = (np.concatenate(lit_parts) if lit_parts
-                else np.zeros(0, dt))
-        values = np.empty(len(lits) + k, dtype=dt)
-        counts = np.ones(len(lits) + k, dtype=np.int64)
-        lit_cum = (np.cumsum([sp[1] // sym_bytes for sp in lit_spans])
-                   if k else np.zeros(0, np.int64))
-        ins = lit_cum + np.arange(k)
-        mask = np.zeros(len(values), dtype=bool)
-        mask[ins] = True
-        values[~mask] = lits
-        # explicit dtype: a plain list assignment coerces through int64
-        # and overflows for 64-bit symbols >= 2^63
-        values[ins] = np.array(run_vals, dtype=dt)
-        counts[ins] = run_lens
-        body = np.repeat(values, counts).view(np.uint8)
-        out = np.concatenate((body, tail)) if len(tail) else body
-    else:
-        # 24/48-bit: no u3/u6 dtype — per-command byte pieces (literal
-        # slices + bytes-repeated symbols), one concatenate at the end
-        pieces = []
-        for (o, ln), v, c in zip(lit_spans, run_vals, run_lens):
-            if ln:
-                pieces.append(base[o:o + ln])
-            pieces.append(np.frombuffer(
-                int(v).to_bytes(sym_bytes, "little") * c, np.uint8))
-        if len(tail):
-            pieces.append(tail)
-        out = (np.concatenate(pieces) if pieces
-               else np.zeros(0, np.uint8))
-    assert len(out) == n, f"short sym decode length {len(out)} != {n}"
+        syms.append(v)
+        stored_counts.append(stored)
+
+
+def _fill(data: bytes, lit_offs, lit_lens, syms, run_bytes,
+          sym_bytes: int, tail: tuple[int, int]) -> np.ndarray:
+    """Byte-wise materialization: each run is its literals, then its
+    symbol's little-endian bytes repeated over its byte count (a
+    partial trailing symbol is a truncation), then the tail."""
+    parts = []
+    for o, ln, v, cb in zip(lit_offs, lit_lens, syms, run_bytes):
+        parts.append(data[o:o + ln])
+        parts.append((v.to_bytes(sym_bytes, "little")
+                      * (cb // sym_bytes + 1))[:cb])
+    parts.append(data[tail[0]:tail[0] + tail[1]])
+    return np.frombuffer(bytearray().join(parts), np.uint8)
+
+
+def _checked(out: np.ndarray, n: int) -> np.ndarray:
+    if len(out) != n:
+        raise ValueError(f"short decode length {len(out)} != header {n}")
     return out
+
+
+def short_sym_encode_bytes(img: np.ndarray, sym_count: int = 3,
+                           sym_bytes: int = 4) -> bytes:
+    """Sym-mode Xsymlut_short at symbol widths 1/2/3/4/6/8 bytes:
+    whole-symbol runs, counts stored in symbols; unaligned trailing
+    bytes ride the terminal copy."""
+    img = np.ascontiguousarray(img, dtype=np.uint8)
+    sym = sym_int_view(img, sym_bytes, len(img) // sym_bytes)
+    starts, lens = find_runs(sym)
+    # runs under 2 bytes (length-1 runs at width 1) are exactly the
+    # ones the accept rule rejects at every width
+    keep = lens * sym_bytes >= 2
+    starts, lens = starts[keep], lens[keep]
+    runs = zip((starts * sym_bytes).tolist(), (lens * sym_bytes).tolist(),
+               (lens + _stored_offset(sym_bytes)).tolist(),
+               sym[starts].tolist())
+    return _emit(img, sym_count, sym_bytes, runs,
+                 _lut_seed(sym_count, sym_bytes))
+
+
+def short_sym_decode_bytes(buf: bytes | memoryview, sym_count: int = 3,
+                           sym_bytes: int = 4) -> np.ndarray:
+    """Parse a sym-mode stream back to the byte image. Native widths
+    materialize in one symbol-wide np.repeat plus the byte tail; 24/48
+    bits (no u3/u6 dtype) fill byte-wise."""
+    n, data, lit_offs, lit_lens, syms, stored, tail = _parse(
+        buf, sym_count, sym_bytes)
+    off = _stored_offset(sym_bytes)
+    if sym_bytes in (3, 6):
+        run_bytes = [(s - off) * sym_bytes for s in stored]
+        return _checked(_fill(data, lit_offs, lit_lens, syms, run_bytes,
+                              sym_bytes, tail), n)
+    # mid-stream literals are whole symbols in sym mode: join their
+    # slices of the payload and view the result once
+    dt = np.dtype(f"<u{sym_bytes}")
+    lits = np.frombuffer(
+        b"".join([data[o:o + ln] for o, ln in zip(lit_offs, lit_lens)]), dt)
+    k = len(syms)
+    ins = np.cumsum(np.array(lit_lens, np.int64) // sym_bytes) + np.arange(k)
+    values = np.empty(len(lits) + k, dtype=dt)
+    counts = np.ones(len(lits) + k, dtype=np.int64)
+    mask = np.zeros(len(values), dtype=bool)
+    mask[ins] = True
+    values[~mask] = lits
+    # explicit dtype: a plain list assignment coerces through int64
+    # and overflows for 64-bit symbols >= 2^63
+    values[ins] = np.array(syms, dtype=dt)
+    counts[ins] = np.array(stored, np.int64) - off
+    out = np.repeat(values, counts).view(np.uint8)
+    if tail[1]:
+        out = np.concatenate(
+            (out, np.frombuffer(data, np.uint8, tail[1], tail[0])))
+    return _checked(out, n)
 
 
 # ---------------------------------------------------------------------------
@@ -492,15 +343,12 @@ def short_sym_decode_bytes(buf: bytes | memoryview, sym_count: int = 3,
 # LUT restart)
 # ---------------------------------------------------------------------------
 
-_W32_SC = 3
-_W32_INIT = [0x00000000, 0x7F7F7F7F, 0xFFFFFFFF]
 
-
-def _word_at(img: np.ndarray, p: int, sym_bytes: int = 4) -> int:
+def _word_at(img: np.ndarray, p: int, sym_bytes: int) -> int:
     return int.from_bytes(img[p:p + sym_bytes].tobytes(), "little")
 
 
-def _prefix_len(a: int, b_: int, sym_bytes: int = 4) -> int:
+def _prefix_len(a: int, b_: int, sym_bytes: int) -> int:
     """Matching little-endian prefix bytes of two symbol words
     (ctz(xor)/8, rleX_extreme_cpu_encode.h:127-137)."""
     d = a ^ b_
@@ -534,23 +382,13 @@ class _MatchIndex:
         return p if p < limit else limit
 
 
-def short_greedy_encode_bytes(img: np.ndarray,
-                              sym_bytes: int = 4) -> bytes:
-    """3symlut byte-mode SHORT encode with the reference's greedy scan
-    at widths 16/24/32/48/64: self-runs need two full symbols, extend
-    through the partial trailing symbol (ctz), and runs may restart
-    from a LUT symbol on a >=2-byte prefix match — partial LUT runs
-    are emitted immediately (rleX_Xsl_short.h:858-983)."""
-    S = sym_bytes
-    img = np.ascontiguousarray(img, dtype=np.uint8)
+def _greedy_runs(img: np.ndarray, S: int, lut: list[int]):
+    """The greedy scan's candidate runs (rleX_Xsl_short.h:858-983) as
+    `_emit` takes them, counts in bytes: self-runs need two full
+    symbols and extend through the partial trailing symbol (ctz); runs
+    may restart from a LUT symbol on a >=2-byte prefix match. Reads
+    `lut`, which `_emit` moves to front as it accepts runs."""
     n = len(img)
-    b = _budgets(_W32_SC, S)
-    out = bytearray(struct.pack("<II", n, 0))
-    lut = _init_lut_wide(_W32_SC, S)
-    if n == 0:
-        out += _terminal(b, _W32_SC, accepted=False, tail=b"")
-        struct.pack_into("<I", out, 4, len(out))
-        return bytes(out)
     # periodicity mask + event indices (vectorized once)
     if n > S:
         eqS = img[S:] == img[:-S]
@@ -565,38 +403,8 @@ def short_greedy_encode_bytes(img: np.ndarray,
         self_pos = []
     false_pos = np.flatnonzero(~eqS).tolist()
     midx = _MatchIndex(img)
-    last_rle = 0
     i = 0
-    min_long = b["min_long"]
     limit = n - S  # last position where a full symbol fits (<= limit)
-
-    def accept_emit(sym: int, count: int, run_start: int) -> bool:
-        nonlocal last_rle
-        rng = run_start - last_rle + _RANGE_OFFSET
-        try:
-            idx = lut.index(sym)
-            miss = False
-        except ValueError:
-            idx = _W32_SC
-            miss = True
-        if not (count >= min_long
-                or count >= 2 + _penalty(b, miss, S, count, rng)):
-            return False
-        cmd, cesc, resc = _cmd_parts(b, idx, _W32_SC, count, rng)
-        out_local = out
-        out_local += cmd
-        out_local += cesc
-        out_local += resc
-        if miss:
-            out_local += sym.to_bytes(S, "little")
-            lut.insert(0, sym)
-            lut.pop()
-        elif idx:
-            lut.insert(0, lut.pop(idx))
-        out_local += img[last_rle:run_start].tobytes()
-        last_rle = run_start + count
-        return True
-
     while i <= limit:
         # next self-run start
         j = bisect.bisect_left(self_pos, i)
@@ -605,116 +413,59 @@ def short_greedy_encode_bytes(img: np.ndarray,
         p_lut = min(midx.next_match(s, i, limit + 1) for s in lut)
         p = min(p_self, p_lut)
         if p > limit:
-            break
+            return
         if p == p_self:
             # self run: periodic region [p, f+S), f = first eqS False
             jf = bisect.bisect_left(false_pos, p)
             f = false_pos[jf] if jf < len(false_pos) else len(eqS)
             count = f + S - p
-            sym = _word_at(img, p, S)
-            accept_emit(sym, count, p)
+            yield p, count, count, _word_at(img, p, S)
             i = p + count
-        else:
-            # LUT restart at p: first exact match wins, else longest
-            # strict-max prefix (rleX_Xsl_short.h:899-948)
-            w = _word_at(img, p, S)
-            best_len, best_idx = 0, 0
-            for jj, s in enumerate(lut):
-                pl = _prefix_len(w, s, S)
-                if pl == S:
-                    best_len, best_idx = S, jj
-                    break
-                if pl > best_len:
-                    best_len, best_idx = pl, jj
-            if best_len < 2:
-                i = p + 1
-                continue
-            sym = lut[best_idx]
-            if best_len < S:
-                count = best_len
-                accept_emit(sym, count, p)
-                i = p + count
-            else:
-                # full match: extend while symbols repeat + partial tail
-                pat = np.frombuffer(sym.to_bytes(S, "little"), np.uint8)
-                e = p + S
-                while e < n and img[e] == pat[(e - p) % S]:
-                    e += 1
-                count = e - p
-                accept_emit(sym, count, p)
-                i = e
-    out += _terminal(b, _W32_SC, accepted=(last_rle == n),
-                     tail=img[last_rle:].tobytes())
-    struct.pack_into("<I", out, 4, len(out))
-    return bytes(out)
+            continue
+        # LUT restart at p: first exact match wins, else longest
+        # strict-max prefix (rleX_Xsl_short.h:899-948)
+        w = _word_at(img, p, S)
+        best_len, best_idx = 0, 0
+        for jj, s in enumerate(lut):
+            pl = _prefix_len(w, s, S)
+            if pl == S:
+                best_len, best_idx = S, jj
+                break
+            if pl > best_len:
+                best_len, best_idx = pl, jj
+        if best_len < 2:
+            i = p + 1
+            continue
+        sym = lut[best_idx]
+        count = best_len
+        if best_len == S:
+            # full match: extend while symbols repeat + partial tail
+            pat = np.frombuffer(sym.to_bytes(S, "little"), np.uint8)
+            e = p + S
+            while e < n and img[e] == pat[(e - p) % S]:
+                e += 1
+            count = e - p
+        yield p, count, count, sym
+        i = p + count
+
+
+def short_greedy_encode_bytes(img: np.ndarray,
+                              sym_bytes: int = 4) -> bytes:
+    """3symlut byte-mode SHORT encode with the reference's greedy scan
+    at widths 16/24/32/48/64; partial LUT runs are emitted
+    immediately."""
+    img = np.ascontiguousarray(img, dtype=np.uint8)
+    lut = _lut_seed(_GREEDY_SC, sym_bytes)
+    return _emit(img, _GREEDY_SC, sym_bytes,
+                 _greedy_runs(img, sym_bytes, lut), lut)
 
 
 def short_greedy_decode_bytes(buf: bytes | memoryview,
                               sym_bytes: int = 4) -> np.ndarray:
-    """Decode a byte-mode greedy stream: commands replay the same MTF
-    LUT; `count` bytes are a pattern fill of the sym_bytes-wide symbol
+    """Decode a byte-mode greedy stream: the F5 parser, then each
+    `count` bytes are a pattern fill of the sym_bytes-wide symbol
     (partial trailing symbol = truncation)."""
-    S = sym_bytes
-    mv = memoryview(buf)
-    n = struct.unpack_from("<I", mv, 0)[0]
-    b = _budgets(_W32_SC, S)
-    lut = _init_lut_wide(_W32_SC, S)
-    pos = 8
-    cbp, rbp = b["cbp"], b["rbp"]
-    range_bits, invalid = b["range_bits"], b["invalid"]
-    out = np.empty(n, dtype=np.uint8)
-    w = 0
-    base = np.frombuffer(mv, dtype=np.uint8)
-    while True:
-        first = mv[pos]
-        count3f = (first >> rbp) & ((1 << cbp) - 1)
-        if count3f != invalid:
-            idx = first >> (cbp + rbp)
-            count = count3f + _COUNT_OFFSET
-            lit_len = first & ((1 << rbp) - 1)
-            pos += 1
-        else:
-            idx, scx, rx = _parse_medium(b, first, mv[pos + 1],
-                                         mv[pos + 2])
-            pos += 3
-            if scx == 1:
-                stored = struct.unpack_from("<H", mv, pos)[0]
-                pos += 2
-            elif scx == 0:
-                stored = struct.unpack_from("<I", mv, pos)[0]
-                pos += 4
-            else:
-                stored = scx
-            if rx == 1:
-                rng = struct.unpack_from("<H", mv, pos)[0]
-                pos += 2
-            elif rx == 0:
-                rng = struct.unpack_from("<I", mv, pos)[0]
-                pos += 4
-            else:
-                rng = rx
-            if stored == 0:
-                tail = max(rng - _RANGE_OFFSET, 0)
-                out[w:w + tail] = base[pos:pos + tail]
-                w += tail
-                break
-            count = stored
-            lit_len = rng - _RANGE_OFFSET
-        if idx == _W32_SC:
-            sym = int.from_bytes(mv[pos:pos + S], "little")
-            pos += S
-            lut.insert(0, sym)
-            lut.pop()
-        else:
-            sym = lut[idx]
-            if idx:
-                lut.insert(0, lut.pop(idx))
-        out[w:w + lit_len] = base[pos:pos + lit_len]
-        pos += lit_len
-        w += lit_len
-        pat = np.frombuffer(sym.to_bytes(S, "little"), np.uint8)
-        reps = count // S + 1
-        out[w:w + count] = np.tile(pat, reps)[:count]
-        w += count
-    assert w == n, f"short greedy decode length {w} != {n}"
-    return out
+    n, data, lit_offs, lit_lens, syms, counts, tail = _parse(
+        buf, _GREEDY_SC, sym_bytes)
+    return _checked(_fill(data, lit_offs, lit_lens, syms, counts,
+                          sym_bytes, tail), n)

@@ -428,22 +428,26 @@ def encode_table(spark: SparkSession, df: DataFrame, out_dir: str,
     writer.parquet(blocks_path)
 
     refresh_manifest(spark, out_dir)
+    return {**manifest_summary(spark, out_dir),
+            "skipped_partitions": int(skipped)}
 
-    summary_row = (spark.read.parquet(manifest_path)
-                   .agg(F.sum("orig_bytes").alias("orig"),
-                        F.sum("comp_bytes").alias("comp"),
-                        F.sum("n_tokens").alias("n_tokens"),
-                        F.sum("n_docs").alias("n_docs"))
-                   .collect()[0])
-    orig = summary_row["orig"] or 0
-    comp = summary_row["comp"] or 0
+
+def manifest_summary(spark: SparkSession, out_dir: str) -> dict:
+    """Corpus totals over <out_dir>/manifest: bytes, ratio, tokens, docs
+    (zeros and ratio 1.0 for an empty manifest)."""
+    row = (spark.read.parquet(os.path.join(out_dir, "manifest"))
+           .agg(F.sum("orig_bytes").alias("orig"),
+                F.sum("comp_bytes").alias("comp"),
+                F.sum("n_tokens").alias("n_tokens"),
+                F.sum("n_docs").alias("n_docs"))
+           .collect()[0])
+    orig, comp = int(row["orig"] or 0), int(row["comp"] or 0)
     return {
-        "orig_bytes": int(orig),
-        "comp_bytes": int(comp),
+        "orig_bytes": orig,
+        "comp_bytes": comp,
         "ratio": (comp / orig) if orig else 1.0,
-        "n_tokens": int(summary_row["n_tokens"] or 0),
-        "n_docs": int(summary_row["n_docs"] or 0),
-        "skipped_partitions": int(skipped),
+        "n_tokens": int(row["n_tokens"] or 0),
+        "n_docs": int(row["n_docs"] or 0),
     }
 
 

@@ -28,7 +28,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .blocks import BLOCK_SCHEMA_DDL
 from .datagen import TOKEN_SCHEMA_DDL
-from .engine import EngineConfig, encode_dataframe, refresh_manifest
+from .engine import (EngineConfig, encode_dataframe, manifest_summary,
+                     refresh_manifest)
 
 
 def encode_stream(spark: SparkSession, input_path: str, out_dir: str,
@@ -179,11 +180,4 @@ def encode_stream_backfill(spark: SparkSession, input_path: str,
     q = encode_stream(spark, input_path, out_dir, cfg, available_now=True)
     q.awaitTermination()
     refresh_manifest(spark, out_dir)
-    row = (spark.read.parquet(os.path.join(out_dir, "manifest"))
-           .agg(F.sum("orig_bytes").alias("o"), F.sum("comp_bytes").alias("c"),
-                F.sum("n_tokens").alias("t"), F.sum("n_docs").alias("d"))
-           .collect()[0])
-    orig, comp = int(row["o"] or 0), int(row["c"] or 0)
-    return {"orig_bytes": orig, "comp_bytes": comp,
-            "ratio": (comp / orig) if orig else 1.0,
-            "n_tokens": int(row["t"] or 0), "n_docs": int(row["d"] or 0)}
+    return manifest_summary(spark, out_dir)

@@ -59,13 +59,13 @@ def test_roundtrip_fuzz(name, seed):
     _roundtrip(name, arr)
 
 
+@pytest.mark.parametrize("name", ALL_CODECS)
 @pytest.mark.parametrize("seed", range(4))
-def test_roundtrip_small_vocab_fuzz(seed):
+def test_roundtrip_small_vocab_fuzz(name, seed):
     arr = fuzz_tokens(seed + 100, vocab=256)
-    for name in ALL_CODECS:
-        if name.startswith("mtf") and len(arr) > 300_000:
-            continue
-        _roundtrip(name, arr)
+    if name.startswith("mtf") and len(arr) > 300_000:
+        pytest.skip("MTF is O(256n); the suite skips inputs over 300k")
+    _roundtrip(name, arr)
 
 
 def test_dict_encode_rejects_non_integer_dtype():
@@ -435,29 +435,16 @@ def _runny_images(seeds=range(5)):
         yield img
 
 
-@pytest.mark.parametrize("sc", [1, 3, 7])
-def test_short_stream_size_matches_ref_model(sc):
-    """The real stream builder and refmodel's independent size-only
-    replay of the reference short grammar must agree byte for byte."""
-    from rle_spark.codecs.refmodel import ref_short_size_exact
-    from rle_spark.codecs.short import short_encode_bytes
-    for img in _runny_images():
-        assert len(short_encode_bytes(img, sc)) == ref_short_size_exact(
-            img, sc)
-    rng = np.random.default_rng(7)
-    # deterministic random case (same array both sides)
-    r = rng.integers(0, 256, 9000, dtype=np.uint8)
-    assert len(short_encode_bytes(r, sc)) == ref_short_size_exact(r, sc)
-
-
-@pytest.mark.parametrize("sym_bytes", [2, 3, 4, 6, 8])
+@pytest.mark.parametrize("sym_bytes", [1, 2, 3, 4, 6, 8])
 @pytest.mark.parametrize("sc", [1, 3, 7])
 def test_short_sym_stream_matches_ref_model(sc, sym_bytes):
-    """Widths 16/24/32/48/64 SYM-mode short (counts stored in symbols,
-    rleX_Xsl_short.h:171-174): roundtrip + byte-for-byte size parity
-    with refmodel's independent replay, across aligned and unaligned
-    tail lengths, token-shaped images, and full-range symbols (incl.
-    the 2^64-1 broadcast seed)."""
+    """SYM-mode short at widths 8/16/24/32/48/64 (counts stored in
+    symbols, rleX_Xsl_short.h:171-174; width 8 is symbol width 1):
+    roundtrip + byte-for-byte size parity with refmodel's independent
+    replay, across aligned and unaligned tail lengths, token-shaped
+    images, and full-range symbols (incl. the 2^64-1 broadcast seed);
+    width 8 also over the runny byte images and a 9000-byte random
+    one."""
     from rle_spark.codecs.refmodel import ref_short_size_exact
     from rle_spark.codecs.short import (short_sym_decode_bytes,
                                         short_sym_encode_bytes)
@@ -474,6 +461,10 @@ def test_short_sym_stream_matches_ref_model(sc, sym_bytes):
                    for i in idx.tolist())
     cases.append(np.frombuffer(raw, np.uint8))
     cases.append(np.frombuffer(raw, np.uint8)[:len(raw) - 1])
+    if sym_bytes == 1:
+        cases += list(_runny_images())
+        cases.append(np.random.default_rng(7).integers(0, 256, 9000,
+                                                       dtype=np.uint8))
     for img in cases:
         buf = short_sym_encode_bytes(img, sc, sym_bytes)
         np.testing.assert_array_equal(
@@ -665,10 +656,10 @@ def test_short_beats_reference_base_rle_on_runny_corpora():
     formats remain denser still — they are the selector's speed/ratio
     default; the short family is format-fidelity + the reference's
     best-ratio grammar, chosen by trial when it wins.)"""
-    from rle_spark.codecs.short import short_encode_bytes
+    from rle_spark.codecs.short import short_sym_encode_bytes
     tot_short = tot_base = 0
     for img in _runny_images():
-        best_short = min(len(short_encode_bytes(img, sc))
+        best_short = min(len(short_sym_encode_bytes(img, sc, 1))
                          for sc in (1, 3, 7))
         base = ref_rle_size_exact(img, 1)
         tot_short += best_short
@@ -761,8 +752,7 @@ def test_short_stream_bytes_match_ref_replay(sc, sym_bytes):
     This retires the round-1..4 'in-word bit placement is
     canonicalized' deviation: sizes AND streams now match."""
     from rle_spark.codecs.refmodel import ref_short_bytes_exact
-    from rle_spark.codecs.short import (short_encode_bytes,
-                                        short_sym_encode_bytes)
+    from rle_spark.codecs.short import short_sym_encode_bytes
     from tests.fuzzgen import fuzz_tokens
     rng = np.random.default_rng(97 + sc * 10 + sym_bytes)
     cases = [fuzz_tokens(s, vocab=30).view(np.uint8)[:40_000]
@@ -775,10 +765,25 @@ def test_short_stream_bytes_match_ref_replay(sc, sym_bytes):
                    for i in idx.tolist())
     cases.append(np.frombuffer(raw, np.uint8))
     cases.append(np.frombuffer(raw, np.uint8)[: max(0, len(raw) - 3)])
-    enc = (short_encode_bytes if sym_bytes == 1
-           else lambda im, c: short_sym_encode_bytes(im, c, sym_bytes))
     for img in cases:
-        assert enc(img, sc) == ref_short_bytes_exact(img, sc, sym_bytes)
+        assert (short_sym_encode_bytes(img, sc, sym_bytes)
+                == ref_short_bytes_exact(img, sc, sym_bytes))
+
+
+@pytest.mark.parametrize("name", ["rle32_3sl_short",
+                                  "rle32_3sl_byte_short_greedy",
+                                  "rle32_sym_interleaved", "rle8_sh"])
+def test_decode_rejects_overlong_length_header(name):
+    """A u32 length header one byte above what the stream decodes to
+    raises ValueError. An assert would vanish under `python -O`, and the
+    byte-image adapter's frombuffer(count=n) would then truncate
+    silently."""
+    arr = fuzz_tokens(1)[:5000]
+    payload = bytearray(REGISTRY[name].encode(arr))
+    n = struct.unpack_from("<I", payload, 0)[0]
+    struct.pack_into("<I", payload, 0, n + 1)
+    with pytest.raises(ValueError, match="decode length"):
+        REGISTRY[name].decode(bytes(payload), len(arr))
 
 
 # --- the codec table: wire bytes, tiers, block frame ------------------------

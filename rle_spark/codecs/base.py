@@ -269,8 +269,11 @@ def unpack_ints(buf: bytes | memoryview, out_dtype=None) -> np.ndarray:
     callers assert by construction (every call site decodes a stream
     that was encoded FROM int32 data: tokens, dict codes, literal
     values). A wider-than-int32 true value would be wrong in an int32
-    output under any arithmetic; callers must still accept an int64
-    fallback for the lo/width guard."""
+    output under any arithmetic, so it raises ValueError: a wrapped
+    value is always below lo, and only a frame whose top lo + 2^w - 1
+    passes int32 max can wrap, so only such a frame pays the min()
+    check. Callers must still accept an int64 fallback for the
+    lo/width guard."""
     mv = memoryview(buf)
     lo, w, n = struct.unpack_from("<qBQ", mv, 0)
     if (out_dtype is not None and np.dtype(out_dtype) == np.int32
@@ -278,6 +281,9 @@ def unpack_ints(buf: bytes | memoryview, out_dtype=None) -> np.ndarray:
         vals32 = _unpack_bits_u32(mv[17:], w, n).view(np.int32)
         if lo:
             np.add(vals32, np.int32(lo), out=vals32)
+        if n and lo + (1 << w) - 1 > (1 << 31) - 1 and vals32.min() < lo:
+            raise ValueError("packed int stream holds a value above int32 "
+                             "max; it cannot be emitted as int32")
         return vals32
     vals = unpack_bits(mv[17:], w, n).view(np.int64)
     if lo:

@@ -358,25 +358,24 @@ def _prefix_len(a: int, b_: int, sym_bytes: int) -> int:
 
 
 class _MatchIndex:
-    """Per-symbol sorted positions where a >=2-byte prefix match can
-    begin (vectorized once per distinct symbol, then O(log n) bisect
-    queries — C-level, no per-event numpy overhead)."""
+    """Sorted positions of every 2-byte prefix (where a >=2-byte prefix
+    match can begin), from one stable sort of the image's byte pairs;
+    a query bisects one prefix's slice of that sort through a
+    memoryview, so no position becomes a Python object until read."""
 
     def __init__(self, img: np.ndarray):
-        self.img = img
-        self.cache: dict[int, list[int]] = {}
+        pairs = img[:-1] | (img[1:].astype(np.uint16) << 8)
+        self.order = np.argsort(pairs, kind="stable")
+        self.pairs = pairs[self.order]
+        self.cache: dict[int, memoryview] = {}
 
     def next_match(self, sym: int, i: int, limit: int) -> int:
         pos = self.cache.get(sym)
         if pos is None:
-            im = self.img
-            b0, b1 = sym & 0xFF, (sym >> 8) & 0xFF
-            if len(im) >= 2:
-                m = (im[:-1] == b0) & (im[1:] == b1)
-                pos = np.flatnonzero(m).tolist()
-            else:
-                pos = []
-            self.cache[sym] = pos
+            key = np.uint16(sym & 0xFFFF)
+            pos = self.cache[sym] = memoryview(self.order[
+                self.pairs.searchsorted(key):
+                self.pairs.searchsorted(key, "right")])
         j = bisect.bisect_left(pos, i)
         p = pos[j] if j < len(pos) else limit
         return p if p < limit else limit

@@ -157,6 +157,23 @@ def test_unpack_ints_int32_fallback():
     np.testing.assert_array_equal(out.astype(np.int64), w)
 
 
+@pytest.mark.parametrize("n", [2, 5000])
+def test_unpack_ints_int32_emission_rejects_wide_values(n):
+    """An out_dtype=int32 decode of a stream whose values pass int32 max
+    raises instead of returning wrapped values; an int32-sourced stream
+    whose frame top (lo + 2^w - 1) passes int32 max but whose values do
+    not still decodes exactly."""
+    top = 2**31 - 1
+    wide = np.linspace(top - 9, top + 5, n).astype(np.int64)  # w = 4
+    with pytest.raises(ValueError, match="int32"):
+        unpack_ints(pack_ints(wide), out_dtype=np.int32)
+    np.testing.assert_array_equal(unpack_ints(pack_ints(wide)), wide)
+    near = np.linspace(top - 9, top, n).astype(np.int64)
+    out = unpack_ints(pack_ints(near.astype(np.int32)), out_dtype=np.int32)
+    assert out.dtype == np.int32
+    np.testing.assert_array_equal(out.astype(np.int64), near)
+
+
 def test_sections_tail_safety():
     buf = pack_sections([b"abc", b"", b"xyz123"])
     parts = unpack_sections(buf + b"garbagegarbage")

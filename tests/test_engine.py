@@ -180,3 +180,73 @@ def test_forced_codec_spark_roundtrip(spark, tokens_df, codec):
         assert roundtrip_mismatch_count(small, decode_dataframe(blocks)) == 0
     finally:
         blocks.unpersist()
+
+
+def _kernel_blocks(batches, block_tokens=1 << 12):
+    """Run the mapside encode kernel outside Spark; the output batches."""
+    from rle_spark.engine import _encode_iter_factory
+    cfg = EngineConfig(block_tokens=block_tokens, layout="mapside")
+    return list(_encode_iter_factory(cfg, mapside=True)(iter(batches)))
+
+
+@pytest.mark.parametrize("flush_bytes", [None, 1])
+def test_encode_kernel_payload_column(monkeypatch, flush_bytes):
+    """The payload column holds frame_payload(codec, n, codec payload)
+    of each block's tokens and comp_bytes their lengths, also when an
+    emit is forced after every block inside one input batch."""
+    import pyarrow as pa
+    from rle_spark import engine
+    from rle_spark.blocks import decode_block, frame_payload
+    from rle_spark.codecs import REGISTRY
+    from rle_spark.datagen import generate_docs_pandas
+    if flush_bytes is not None:
+        monkeypatch.setattr(engine, "_OUT_FLUSH_BYTES", flush_bytes)
+    pdf = generate_docs_pandas(range(40), seed=3)
+    docs = dict(zip(pdf["doc_id"], pdf["tokens"]))
+    batch = pa.RecordBatch.from_pydict(
+        {"doc_id": pdf["doc_id"].tolist(),
+         "tokens": [t.tolist() for t in pdf["tokens"]],
+         "source": pdf["source"].tolist()},
+        schema=pa.schema([("doc_id", pa.string()),
+                          ("tokens", pa.list_(pa.int32())),
+                          ("source", pa.string())]))
+    out = _kernel_blocks([batch])
+    # one input batch: more than one output batch means mid-batch emits
+    assert (len(out) > 1) == (flush_bytes is not None)
+    n_blocks = 0
+    for b in out:
+        b.validate(full=True)
+        rows = b.to_pydict()
+        assert rows["comp_bytes"] == [len(p) for p in rows["payload"]]
+        for codec, ids, payload in zip(rows["codec"], rows["doc_ids"],
+                                       rows["payload"]):
+            tokens = np.concatenate([docs[i] for i in ids]).astype(np.int32)
+            assert payload == frame_payload(codec, len(tokens),
+                                            REGISTRY[codec].encode(tokens))
+            np.testing.assert_array_equal(decode_block(payload), tokens)
+            n_blocks += 1
+    assert sum(len(b.column("doc_ids").flatten()) for b in out) == 40
+    assert n_blocks > 1
+
+
+def test_encode_kernel_empty_input():
+    import pyarrow as pa
+    from rle_spark.engine import _binary_array
+    empty = pa.RecordBatch.from_pydict(
+        {"doc_id": [], "tokens": [], "source": []},
+        schema=pa.schema([("doc_id", pa.string()),
+                          ("tokens", pa.list_(pa.int32())),
+                          ("source", pa.string())]))
+    assert _kernel_blocks([]) == [] and _kernel_blocks([empty]) == []
+    assert _binary_array([], []).equals(pa.array([], pa.binary()))
+
+
+def test_binary_array_offsets_never_wrap():
+    """Values past the int32 offsets of a binary array raise before any
+    buffer is built, instead of wrapping."""
+    import pyarrow as pa
+    from rle_spark.engine import _binary_array
+    vals = [b"ab", b"", b"cde"]
+    assert _binary_array(vals, [2, 0, 3]).equals(pa.array(vals, pa.binary()))
+    with pytest.raises(ValueError, match="int32"):
+        _binary_array(vals, [2**30, 2**30, 3])

@@ -390,3 +390,45 @@ def test_bounded_thread_nested_close_stops_both():
     assert [next(it), next(it), next(it)] == [0, 1, 2]
     it.close()
     assert not _lingering(before)
+
+
+def test_direct_writer_part_files_are_plain(spark, tmp_path_factory):
+    """No column chunk of a direct-writer part file has a dictionary
+    page; part files written with dictionary pages (pyarrow's default,
+    the earlier layout) hold the same rows and decode bit-identically
+    through both decode entry points."""
+    import glob
+    import pyarrow.parquet as pq
+    from rle_spark.sources import (decode_parquet_dir,
+                                   decode_parquet_dir_summary,
+                                   encode_parquet_dir_direct)
+    src = str(tmp_path_factory.mktemp("plsrc"))
+    out = str(tmp_path_factory.mktemp("plout"))
+    df = token_table(spark, 60, seed=27).cache()
+    df.count()
+    df.repartition(2).write.mode("overwrite").parquet(src)
+    encode_parquet_dir_direct(spark, src, out, CFG)
+    parts = sorted(glob.glob(os.path.join(out, "blocks", "part-*.parquet")))
+    assert parts
+
+    def chunks(path):
+        md = pq.ParquetFile(path).metadata
+        return [md.row_group(g).column(c) for g in range(md.num_row_groups)
+                for c in range(md.num_columns)]
+
+    assert not any(c.has_dictionary_page for p in parts for c in chunks(p))
+
+    def totals():
+        return tuple(decode_parquet_dir_summary(spark, out)
+                     .agg(F.sum("n_docs"), F.sum("n_tokens")).collect()[0])
+
+    want = totals()
+    for p in parts:
+        table = pq.read_table(p)
+        with pq.ParquetWriter(p, table.schema, compression="zstd") as w:
+            for rb in table.to_batches():
+                w.write_batch(rb)
+        assert any(c.has_dictionary_page for c in chunks(p))
+    assert totals() == want
+    assert roundtrip_mismatch_count(df, decode_parquet_dir(spark, out)) == 0
+    df.unpersist()

@@ -178,7 +178,8 @@ def test_folded_kernels_leave_no_persists(spark, seq_df):
 
 def test_folded_kernels_many_tiny_partitions(spark):
     """Boundary stitch stress: 48 range partitions over short runs so
-    nearly every run touches a task edge; single giant run too."""
+    nearly every run touches a task edge; single giant run too. Every
+    kernel that stitches runs across task edges is checked here."""
     rng = np.random.default_rng(7)
     chars = np.repeat(np.array(list("AB"))[rng.integers(0, 2, 600)],
                       rng.integers(1, 4, 600))
@@ -193,6 +194,23 @@ def test_folded_kernels_many_tiny_partitions(spark):
     got = {r.bit_class: r.n_runs for r in
            analyze.unaligned_run_histogram(df, "ch", ["pos"], 2).collect()}
     assert got == _naive_unaligned_hist(chars, 2)
+    got = {r.k: (r.n_hits, r.n_runs) for r in
+           analyze.lru_recurrence(df, "ch", ["pos"], ks=(1, 3),
+                                  min_run=2).collect()}
+    assert got == _naive_lru(chars, (1, 3), 2)
+    starts, lens = find_runs(chars)
+    exact = dict(zip(*np.unique(lens[lens <= 64], return_counts=True)))
+    got = {r.run_len: r.n_runs for r in
+           analyze.exact_run_length_histogram(df, "ch", ["pos"]).collect()}
+    assert got == {int(v): int(c) for v, c in exact.items()}
+    got = sorted((r.start_rn, r.value, r.run_len) for r in
+                 analyze.partition_runs(df, "ch", ["pos"]).collect())
+    assert got == [(int(s) + 1, chars[s], int(ln))
+                   for s, ln in zip(starts, lens)]
+    got = sorted((r.rn, r.value) for r in
+                 analyze.with_global_rn(df, "ch", ["pos"]).collect())
+    assert got == [(i + 1, c) for i, c in enumerate(chars)]
+    analyze.clear_run_cache()
 
     one = pd.DataFrame({"pos": range(3000), "ch": ["Z"] * 3000})
     dfo = spark.createDataFrame(one).repartition(48)
@@ -202,6 +220,12 @@ def test_folded_kernels_many_tiny_partitions(spark):
     hist = {r.bit_class: r.n_runs for r in
             analyze.run_length_histogram(dfo, "ch", ["pos"]).collect()}
     assert hist == {3000 .bit_length() - 1: 1}
+    assert [tuple(r) for r in analyze.lru_recurrence(
+        dfo, "ch", ["pos"], ks=(1,)).collect()] == [(1, 0, 1)]
+    assert analyze.exact_run_length_histogram(dfo, "ch", ["pos"]).count() == 0
+    assert [tuple(r) for r in analyze.partition_runs(
+        dfo, "ch", ["pos"]).collect()] == [(1, "Z", 3000)]
+    analyze.clear_run_cache()
 
 
 def test_partition_runs_single_value_column(spark):

@@ -6,10 +6,11 @@ Round-1 versions used `Window.orderBy(*order)` with no partitionBy
 passes. This version follows the reference's own parallel layout —
 rle8m subsections + offset table (/root/reference/src/
 rle8_low_entropy_cpu.c:126-191): range-partition the rows on the order
-key so every task holds one contiguous sorted slice, run the NumPy run
-kernel per slice, then stitch the O(num_partitions) slice boundaries
-(offsets + runs that span a task edge) on the driver — the offset-table
-merge, never more than ~2 rows per task.
+key so every task holds one contiguous sorted slice (_ranged), fold
+each slice's runs in the task (_TaskRunFold), then stitch the
+O(num_partitions) slice boundaries (offsets + runs that span a task
+edge) on the driver in one pid-ordered walk (_stitch over
+_BoundaryRunMerger) — the offset-table merge, one row per task.
 
 Plan shape at any scale:
   * one range shuffle of the analyzed columns (Exchange rangepartitioning)
@@ -131,25 +132,55 @@ def _bit_class_vec(x: np.ndarray) -> np.ndarray:
     return e
 
 
+def _bucket_count(hist: np.ndarray, idx: np.ndarray) -> None:
+    """hist[i] += 1 per bucket index i; indices past the end are runs
+    the histogram does not keep (the exact table's cap)."""
+    np.add.at(hist, idx[idx < len(hist)], 1)
+
+
+def _task_batches(batches: Iterable[pd.DataFrame]):
+    """One task's non-empty arranged batches, each with the task's pid."""
+    for pdf in batches:
+        if len(pdf):
+            yield int(pdf["pid"].iloc[0]), pdf
+
+
+def _task_array(batches: Iterable[pd.DataFrame],
+                col: str) -> tuple[int, np.ndarray | None]:
+    """One task's pid and its whole column as one comparable array
+    (-1, None for an empty task)."""
+    pid, chunks = -1, []
+    for pid, pdf in _task_batches(batches):
+        chunks.append(_as_comparable(pdf[col].to_numpy()))
+    return pid, np.concatenate(chunks) if chunks else None
+
+
+# the per-task boundary export of _TaskRunFold, one row per (task, column)
+_BOUND_COLS = ["n", "first_v", "first_l", "last_v", "last_l", "last_s"]
+
+
+def _bound_ddl(vtype: str) -> str:
+    return (f"n long, first_v {vtype}, first_l long, last_v {vtype}, "
+            "last_l long, last_s long")
+
+
 class _TaskRunFold:
     """Streaming run detection over one task's batches: every COMPLETE
-    interior run goes to `sink(vals, lens)` (vectorized); the task's
-    first closed run and final open run are held back for boundary
-    export (they may merge with neighbor tasks' edge runs — the rle8m
-    offset-table stitch, /root/reference/src/rle8_low_entropy_cpu.c:126-191).
+    interior run goes to `sink(vals, lens, local_starts)` (vectorized);
+    the task's first closed run and final open run are held back for
+    boundary export (they may merge with neighbor tasks' edge runs — the
+    rle8m offset-table stitch, /root/reference/src/rle8_low_entropy_cpu.c:126-191).
     """
 
     def __init__(self, sink):
-        self.sink = sink  # sink(vals, lens, local_starts)
-        self.cur: tuple | None = None   # open run (value, len, local_start)
-        self.first: tuple | None = None  # first CLOSED run of the task
-        self._closed_any = False
-        self._row0 = 0  # local row index of the next feed()'s first row
+        self.sink = sink
+        self.cur: tuple | None = None    # open run (value, len, local_start)
+        self.first: tuple | None = None  # first CLOSED run (value, len)
+        self.n = 0  # rows fed so far: the local index of the next row
 
     def _close(self, v, ln: int, s0: int) -> None:
-        if not self._closed_any:
+        if self.first is None:
             self.first = (v, ln)  # a task's first run starts at local 0
-            self._closed_any = True
         else:
             self.sink(np.asarray([v]), np.asarray([ln], dtype=np.int64),
                       np.asarray([s0], dtype=np.int64))
@@ -161,8 +192,8 @@ class _TaskRunFold:
         starts, lens = find_runs(a)
         vals = a[starts]
         k = len(starts)
-        row0 = self._row0
-        self._row0 += n
+        row0 = self.n
+        self.n += n
         i0 = 0
         if self.cur is not None:
             if vals[0] == self.cur[0]:
@@ -175,55 +206,61 @@ class _TaskRunFold:
             else:
                 self._close(*self.cur)
         if k - 1 > i0:
-            if not self._closed_any:
-                self._close(vals[i0].item() if hasattr(vals[i0], "item")
-                            else vals[i0], int(lens[i0]),
+            if self.first is None:
+                self._close(vals[i0].item(), int(lens[i0]),
                             row0 + int(starts[i0]))
                 i0 += 1
             if k - 1 > i0:
                 self.sink(vals[i0:k - 1], lens[i0:k - 1],
                           starts[i0:k - 1] + row0)
-        v = vals[k - 1]
-        self.cur = (v.item() if hasattr(v, "item") else v,
-                    int(lens[k - 1]), row0 + int(starts[k - 1]))
+        self.cur = (vals[k - 1].item(), int(lens[k - 1]),
+                    row0 + int(starts[k - 1]))
 
-    def boundary(self) -> list[tuple]:
-        """(kind, value, len) exports: kind 1=first closed run,
-        2=final open run, 3=the task's only run, none if empty."""
-        if self.cur is None:
-            return []
-        if self.first is None:
-            return [(3, self.cur[0], self.cur[1])]
-        return [(1, self.first[0], self.first[1]),
-                (2, self.cur[0], self.cur[1])]
+    def boundary(self) -> dict:
+        """The _BOUND_COLS export: rows fed, the first closed run (None,
+        0 when the task is one open run) and the final open run with its
+        local start (None, 0, 0 when nothing was fed)."""
+        fv, fl = self.first or (None, 0)
+        lv, ll, ls = self.cur or (None, 0, 0)
+        return dict(zip(_BOUND_COLS, (self.n, fv, fl, lv, ll, ls)))
+
+
+def _offsets(counts: dict) -> dict[int, int]:
+    """Global row offset of each task from its row count, in pid order
+    (the rle8m offset table)."""
+    out, acc = {}, 0
+    for pid in sorted(counts):
+        out[pid] = acc
+        acc += counts[pid]
+    return out
 
 
 class _BoundaryRunMerger:
-    """Driver-side O(P) stitch of the per-task boundary exports emitted
-    by _TaskRunFold (walk tasks in pid order; a task's first run may
-    extend the previous task's final open run)."""
+    """Driver-side O(P) stitch of the per-task boundary exports of
+    _TaskRunFold, tasks walked in pid order: a task's first run may
+    extend the run still open at the end of the tasks before it."""
 
     def __init__(self, close):
-        self.close = close   # close(value, total_len)
-        self.pend: tuple | None = None
+        self.close = close   # close(value, total_len, global_start)
+        self.pend: tuple | None = None  # open run (value, len, start)
 
-    def _extend_or_close(self, v, ln: int) -> None:
+    def extend(self, v, ln: int, s0: int = 0) -> None:
         if self.pend is not None and self.pend[0] == v:
-            self.pend = (v, self.pend[1] + ln)
+            self.pend = (v, self.pend[1] + ln, self.pend[2])
         else:
-            if self.pend is not None:
-                self.close(*self.pend)
-            self.pend = (v, ln)
+            self.finish()
+            self.pend = (v, ln, s0)
 
-    def task(self, first, last, only) -> None:
-        if only is not None:
-            self._extend_or_close(only[0], only[1])  # stays open
-            return
-        if first is None:
-            return  # empty task
-        self._extend_or_close(first[0], first[1])
-        self.close(*self.pend)  # an interior run followed: first is final
-        self.pend = (last[0], last[1])
+    def task(self, off: int, r, interior=None) -> None:
+        """Fold in one task's boundary row `r` whose first row is global
+        row `off`. interior(r, off) runs between the task's first and
+        last runs, when it has both."""
+        if r.first_l:
+            self.extend(r.first_v, r.first_l, off)
+            self.finish()  # the task's next run differs: first is final
+            if interior is not None:
+                interior(r, off)
+        self.extend(r.last_v, r.last_l, off + r.last_s)
 
     def finish(self) -> None:
         if self.pend is not None:
@@ -231,17 +268,29 @@ class _BoundaryRunMerger:
             self.pend = None
 
 
+def _stitch(rows, close, interior=None) -> dict[int, int]:
+    """Walk one column's per-task boundary rows in pid order through
+    _BoundaryRunMerger; returns each task's global row offset."""
+    offs = _offsets({r.pid: r.n for r in rows})
+    merger = _BoundaryRunMerger(close)
+    for r in sorted(rows, key=lambda r: r.pid):
+        merger.task(offs[r.pid], r, interior)
+    merger.finish()
+    return offs
+
+
+def _with_offsets(spark, df: DataFrame, offsets: dict) -> DataFrame:
+    """df joined with its task's global row offset (row_offset)."""
+    off_df = spark.createDataFrame(
+        [(int(p), int(o)) for p, o in offsets.items()] or [(0, 0)],
+        "pid int, row_offset long")
+    return df.join(F.broadcast(off_df), "pid")
+
+
 class ParquetSource:
     """A parquet table path + spark handle. Analyze entry points accept
-    this in place of a DataFrame to enable the shuffle-free arranged
-    fast path (_ranged dispatches on it): when row-group statistics
-    prove the files are RANGE-CLUSTERED on the leading order key
-    (strictly non-overlapping min/max — the Iceberg file-level
-    sort-order layout), tasks read their own row groups with pyarrow
-    and sort locally — no repartitionByRange sampling job, no shuffle,
-    no JVM row->Arrow hop (the same split-shipping transport as
-    sources.py). Falls back to the shuffle path whenever clustering is
-    not provable or the layout is too coarse to parallelize."""
+    this in place of a DataFrame; column_codec_stats memoizes its O(C)
+    result rows per file fingerprint."""
 
     def __init__(self, spark, path: str):
         self.spark = spark
@@ -257,183 +306,25 @@ class ParquetSource:
         return self.spark
 
     def fingerprint(self) -> tuple:
-        import os as _os
-        paths = self._files()
+        import os
+        from .sources import parquet_files
+        paths = (parquet_files(self.path) if os.path.isdir(self.path)
+                 else [self.path])
         # st_mtime_ns, not whole seconds: a same-size rewrite within
         # one second must not serve stale memoized stats
-        sig = tuple((p, (st := _os.stat(p)).st_size, st.st_mtime_ns)
+        sig = tuple((p, (st := os.stat(p)).st_size, st.st_mtime_ns)
                     for p in paths)
         return (self.path, sig)
-
-    def _files(self) -> list[str]:
-        import glob as _g
-        import os as _os
-        if _os.path.isdir(self.path):
-            return sorted(
-                p for p in _g.glob(_os.path.join(self.path, "**",
-                                                 "*.parquet"),
-                                   recursive=True)
-                if not any(part.startswith((".", "_")) for part in
-                           _os.path.relpath(p, self.path).split(_os.sep)))
-        return [self.path]
 
 
 def _as_df(src) -> DataFrame:
     return src._df if isinstance(src, ParquetSource) else src
 
 
-def _plan_sorted_units(src: ParquetSource, order0: str):
-    """Row-group units in leading-order-key order, or None when the
-    metadata cannot PROVE range-clustering: every unit needs min/max
-    stats on order[0], and consecutive units must be STRICTLY
-    non-overlapping (an equal boundary value could let one key0 group
-    span two units, which a per-unit local sort could not repair — the
-    Iceberg manifest-level sort-order check, done here from parquet
-    footers)."""
-    import pyarrow.parquet as pq
-    units = []
-    for f in src._files():
-        pf = pq.ParquetFile(f)
-        md = pf.metadata
-        if md.num_row_groups == 0:
-            continue
-        # footer row-group columns are in LEAF (DFS) order, which
-        # diverges from arrow field order whenever a nested field
-        # precedes order0 — locate the leaf by its schema path, never
-        # by arrow index (a wrong index would read min/max from a
-        # different column and "prove" clustering falsely)
-        rg0 = md.row_group(0)
-        idx = next((i for i in range(rg0.num_columns)
-                    if rg0.column(i).path_in_schema == order0), None)
-        if idx is None:
-            return None
-        for g in range(md.num_row_groups):
-            st = md.row_group(g).column(idx).statistics
-            if st is None or not st.has_min_max:
-                return None
-            units.append((st.min, st.max, f, g))
-    if not units:
-        return None
-    units.sort(key=lambda u: (u[0], u[2], u[3]))
-    for a, b in zip(units, units[1:]):
-        if not (a[1] < b[0]):
-            return None
-    # (file, row_group, planned max of the PREVIOUS unit) — shipped to
-    # tasks so the runtime footer-lie check also covers the first unit
-    # of every task, not just intra-task boundaries
-    return [(f, g, units[i - 1][1] if i else None)
-            for i, (_, _, f, g) in enumerate(units)]
-
-
-def _lex_violation(keys: list[np.ndarray]) -> bool:
-    """True when consecutive rows violate lexicographic non-decreasing
-    order under the given key columns (vectorized per column)."""
-    n1 = len(keys[0]) - 1
-    if n1 <= 0:
-        return False
-    decided_gt = np.zeros(n1, dtype=bool)
-    eq_so_far = np.ones(n1, dtype=bool)
-    for k in keys:
-        a, b = k[:-1], k[1:]
-        decided_gt |= eq_so_far & (b > a)
-        eq_so_far &= b == a
-    return bool((~(decided_gt | eq_so_far)).any())
-
-
-def _ranged_parquet(src: ParquetSource, cols: list[str],
-                    order: list[str]) -> DataFrame | None:
-    """Shuffle-free arranged (pid, *cols): ship range-clustered
-    row-group splits to tasks (pid = ordinal of the task's first unit —
-    globally ordered because range partitioning of the unit ordinal
-    keeps contiguous ascending unit ranges per task). Each task reads
-    one full row group at a time and sorts it locally on the FULL
-    order-key tuple when needed (a no-op check for already-sorted
-    data); the strict cross-unit non-overlap proof from the footers
-    plus a runtime boundary assert (footer stats could lie) make the
-    concatenation exactly what the shuffle path would produce. Memory
-    per task is bounded by the writer's row-group size, same as a
-    shuffle partition. Declines (None) when the layout is too coarse to
-    parallelize — fewer units than a quarter of the cluster's cores —
-    because riding a 1-row-group file would serialize the kernel."""
-    units = _plan_sorted_units(src, order[0])
-    if units is None:
-        return None
-    spark = src.spark
-    n_units = len(units)
-    dp = spark.sparkContext.defaultParallelism
-    if n_units < max(2, dp // 4):
-        return None
-    need = list(dict.fromkeys([*order, *cols]))
-    fields = {f.name: f.dataType.simpleString() for f in src.schema.fields}
-    if any(c not in fields for c in need):
-        return None
-    n_tasks = min(n_units, dp)
-    import pickle as _pkl
-    rows = [(i, f, int(g), None if pmax is None else _pkl.dumps(pmax))
-            for i, (f, g, pmax) in enumerate(units)]
-    sdf = (spark.createDataFrame(rows,
-                                 "u int, path string, rg int, pmax binary")
-           .repartitionByRange(n_tasks, "u")
-           .sortWithinPartitions("u"))
-    out_ddl = "pid int, " + ", ".join(f"{c} {fields[c]}" for c in cols)
-    order_cols = list(order)
-    data_cols = list(cols)
-
-    def it(batches: Iterable[pd.DataFrame]):
-        import pickle
-        import pyarrow.parquet as pq
-        pid = None
-        prev_max = None  # actual key0 max of the previous unit
-        for spdf in batches:
-            for path, rg, u, pmax in zip(spdf["path"], spdf["rg"],
-                                         spdf["u"], spdf["pmax"]):
-                if pid is None:
-                    pid = int(u)
-                    if pmax is not None:
-                        # predecessor unit ran in another task: seed the
-                        # overlap check with its PLANNED (footer) max so
-                        # a lying footer at a task boundary is caught too
-                        prev_max = pickle.loads(pmax)
-                pf = pq.ParquetFile(path)
-                b = pf.read_row_group(int(rg), columns=need).to_pandas()
-                if len(b) == 0:
-                    continue
-                keys = [_as_comparable(b[c].to_numpy())
-                        for c in order_cols]
-                if _lex_violation(keys):
-                    # range-clustered but not row-sorted: local sort
-                    # (np.lexsort keys are least-significant first)
-                    perm = np.lexsort(list(reversed(keys)))
-                    b = b.iloc[perm].reset_index(drop=True)
-                    keys = [k[perm] for k in keys]
-                if prev_max is not None and keys[0][0] <= prev_max:
-                    raise ValueError(
-                        f"presorted fast path: row group {rg} of {path} "
-                        f"overlaps its predecessor on {order_cols[0]} — "
-                        "the footer statistics are wrong")
-                prev_max = keys[0][-1]
-                step = 1 << 16
-                for lo in range(0, len(b), step):
-                    c = b.iloc[lo:lo + step]
-                    yield pd.DataFrame(
-                        {"pid": pid, **{col: c[col] for col in data_cols}})
-
-    return sdf.mapInPandas(it, out_ddl)
-
-
 def _ranged(df, cols: list[str], order: list[str]) -> DataFrame:
     """Range-shuffle rows on the order keys: each task gets a contiguous
-    sorted slice (the rle8m subsection analogue). For a ParquetSource
-    whose footers prove the table is range-clustered on the leading
-    order key, ride the file's own layout instead (zero shuffle, zero
-    sampling job, per-unit local sort) — the boundary-merge logic
-    downstream is identical."""
-    if isinstance(df, ParquetSource):
-        fast = _ranged_parquet(df, cols, order)
-        if fast is not None:
-            return fast
-        df = df._df
-    return (df.select(*dict.fromkeys([*order, *cols]))
+    sorted slice (the rle8m subsection analogue)."""
+    return (_as_df(df).select(*dict.fromkeys([*order, *cols]))
             .repartitionByRange(*[F.col(c) for c in order])
             .sortWithinPartitions(*order)
             .withColumn("pid", F.spark_partition_id())
@@ -449,7 +340,7 @@ def partition_runs_multi(df: DataFrame, cols: list[str],
     long) covering every (column, row) exactly once. Heavy work (one
     scan, run detection per column) is fully distributed; the driver
     only resolves per-task row offsets and merges runs that span task
-    boundaries — at most 2 rows per task per column.
+    boundaries — one boundary row per task per column.
 
     The intermediate run table is persisted (MEMORY_AND_DISK) because
     the boundary collect and the downstream consumer must observe the
@@ -457,106 +348,55 @@ def partition_runs_multi(df: DataFrame, cols: list[str],
     """
     vtype = df.schema[cols[0]].dataType.simpleString()
     arranged = _ranged(df, cols, order)
+    # interior run rows carry null boundary columns; each task's
+    # boundary row per column carries null run columns
     out_schema = (f"col_name string, pid int, local_start long, "
-                  f"value {vtype}, run_len long, is_first boolean, "
-                  "is_last boolean, part_rows long")
+                  f"value {vtype}, run_len long, {_bound_ddl(vtype)}")
+    no_bound = dict.fromkeys(_BOUND_COLS)
 
     def it(batches: Iterable[pd.DataFrame]):
+        found = {c: [] for c in cols}  # interior runs of the current batch
+        folds = {c: _TaskRunFold(lambda *run, c=c: found[c].append(run))
+                 for c in cols}
         pid = -1
-        # per-column carry: (start, value, length)
-        carry = {c: [0, None, 0] for c in cols}
-        row0 = 0  # local row index of the next batch's first row
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            if pid < 0:
-                pid = int(pdf["pid"].iloc[0])
+        for pid, pdf in _task_batches(batches):
             for c in cols:
-                a = _as_comparable(pdf[c].to_numpy())
-                starts, lens = find_runs(a)
-                vals = a[starts]
-                cy = carry[c]
-                emit_from = 0
-                out_start, out_val, out_len = [], [], []
-                if cy[2]:
-                    if vals[0] == cy[1]:
-                        # batch boundary joins two runs
-                        if len(starts) == 1:
-                            cy[2] += n
-                            continue
-                        out_start.append(cy[0])
-                        out_val.append(cy[1])
-                        out_len.append(cy[2] + int(lens[0]))
-                        emit_from = 1
-                    else:
-                        out_start.append(cy[0])
-                        out_val.append(cy[1])
-                        out_len.append(cy[2])
-                # emit complete runs; the last run becomes the new carry
-                k = len(starts)
-                if k - 1 > emit_from:
-                    out_start.extend((starts[emit_from:k - 1] + row0).tolist())
-                    out_val.extend(vals[emit_from:k - 1].tolist())
-                    out_len.extend(lens[emit_from:k - 1].tolist())
-                v = vals[k - 1]
-                carry[c] = [row0 + int(starts[k - 1]),
-                            v.item() if hasattr(v, "item") else v,
-                            int(lens[k - 1])]
-                if out_start:
+                folds[c].feed(_as_comparable(pdf[c].to_numpy()))
+                if found[c]:
+                    vals, lens, starts = map(np.concatenate, zip(*found[c]))
+                    found[c].clear()
                     yield pd.DataFrame({
-                        "col_name": c, "pid": pid,
-                        "local_start": out_start, "value": out_val,
-                        "run_len": out_len,
-                        "is_first": [s == 0 for s in out_start],
-                        "is_last": False, "part_rows": 0})
-            row0 += n
-        for c in cols:
-            cy = carry[c]
-            if cy[2]:
-                yield pd.DataFrame({
-                    "col_name": [c], "pid": [pid], "local_start": [cy[0]],
-                    "value": [cy[1]], "run_len": [cy[2]],
-                    "is_first": [cy[0] == 0], "is_last": [True],
-                    "part_rows": [row0]})
+                        "col_name": c, "pid": pid, "local_start": starts,
+                        "value": vals, "run_len": lens, **no_bound})
+        if pid >= 0:
+            for c in cols:
+                yield pd.DataFrame([{
+                    "col_name": c, "pid": pid, "local_start": None,
+                    "value": None, "run_len": None,
+                    **folds[c].boundary()}])
 
     runs_local = (arranged.mapInPandas(it, out_schema)
                   .persist(StorageLevel.MEMORY_AND_DISK))
     _pool_append(runs_local)
 
     # --- driver-side O(P*C) control flow (the offset-table merge) ---
-    boundary = runs_local.filter(F.col("is_first") | F.col("is_last")).collect()
-    part_rows = {r.pid: r.part_rows for r in boundary if r.is_last}
-    offsets, acc = {}, 0
-    for pid in sorted(part_rows):
-        offsets[pid] = acc
-        acc += part_rows[pid]
+    bound = runs_local.filter(F.col("n").isNotNull()).collect()
     merged: list[tuple[str, int, object, int]] = []
-    for r in sorted(boundary,
-                    key=lambda r: (r.col_name, offsets[r.pid] + r.local_start)):
-        s = offsets[r.pid] + r.local_start
-        if (merged and merged[-1][0] == r.col_name
-                and merged[-1][1] + merged[-1][3] == s
-                and merged[-1][2] == r.value):
-            merged[-1] = (r.col_name, merged[-1][1], merged[-1][2],
-                          merged[-1][3] + r.run_len)
-        else:
-            merged.append((r.col_name, s, r.value, r.run_len))
+    offsets: dict[int, int] = {}
+    for c in cols:
+        offsets = _stitch([r for r in bound if r.col_name == c],
+                          lambda v, ln, s0, c=c:
+                          merged.append((c, s0 + 1, v, ln)))
 
     spark = df.sparkSession
     run_schema = f"col_name string, start_rn long, value {vtype}, run_len long"
-    off_df = spark.createDataFrame(
-        [(int(p), int(o)) for p, o in offsets.items()] or [(0, 0)],
-        "pid int, row_offset long")
-    interior = (runs_local.filter(~F.col("is_first") & ~F.col("is_last"))
-                .join(F.broadcast(off_df), "pid")
+    interior = (_with_offsets(spark, runs_local.filter(F.col("n").isNull()),
+                              offsets)
                 .select("col_name",
                         (F.col("row_offset") + F.col("local_start") + 1)
                         .alias("start_rn"),
                         "value", "run_len"))
-    merged_df = spark.createDataFrame(
-        [(c, int(s) + 1, v, int(ln)) for c, s, v, ln in merged], run_schema)
-    return interior.unionByName(merged_df)
+    return interior.unionByName(spark.createDataFrame(merged, run_schema))
 
 
 def partition_runs(df: DataFrame, col: str, order: list[str]) -> DataFrame:
@@ -566,12 +406,22 @@ def partition_runs(df: DataFrame, col: str, order: list[str]) -> DataFrame:
             .select("start_rn", "value", "run_len"))
 
 
+def _merge_stats(acc: dict, v, n_runs: int, total: int, longest: int) -> None:
+    st = acc.get(v)
+    if st is None:
+        acc[v] = [n_runs, total, longest]
+    else:
+        st[0] += n_runs
+        st[1] += total
+        st[2] = max(st[2], longest)
+
+
 def run_stats(df: DataFrame, col: str, order: list[str]) -> DataFrame:
     """Per-value run statistics of `col` under the given total order.
 
     Partial aggregates are computed INSIDE the range-partitioned kernel
     (per-task per-value n_runs/total_len/max over interior runs); the
-    driver merges O(P·K) partial rows plus the O(P) boundary runs —
+    driver merges O(P·K) partial values plus the O(P) boundary runs —
     the full run table is never materialized or persisted. K = distinct
     values; like the reference's --analyze this targets byte-symbol
     columns (K <= 256, /root/reference/src/main.c:1246+) — for
@@ -579,76 +429,35 @@ def run_stats(df: DataFrame, col: str, order: list[str]) -> DataFrame:
     """
     vtype = df.schema[col].dataType.simpleString()
     arranged = _ranged(df, [col], order)
-    schema = (f"pid int, kind int, value {vtype}, n_runs long, "
-              "total_len long, max_run_len long")
+    schema = (f"pid int, {_bound_ddl(vtype)}, vals array<{vtype}>, "
+              "stats array<array<long>>")
 
     def it(batches: Iterable[pd.DataFrame]):
-        pid = -1
         acc: dict = {}  # value -> [n_runs, total_len, max_run_len]
 
         def sink(vals: np.ndarray, lens: np.ndarray, _s0) -> None:
             g = (pd.Series(lens).groupby(pd.Series(vals))
                  .agg(["count", "sum", "max"]))
             for v, (c, s, m) in g.iterrows():
-                st = acc.get(v)
-                if st is None:
-                    acc[v] = [int(c), int(s), int(m)]
-                else:
-                    st[0] += int(c)
-                    st[1] += int(s)
-                    st[2] = max(st[2], int(m))
+                _merge_stats(acc, v, int(c), int(s), int(m))
 
         fold = _TaskRunFold(sink)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if pid < 0:
-                pid = int(pdf["pid"].iloc[0])
+        pid = -1
+        for pid, pdf in _task_batches(batches):
             fold.feed(_as_comparable(pdf[col].to_numpy()))
-        rows = [(pid, 0, v, st[0], st[1], st[2]) for v, st in acc.items()]
-        rows += [(pid, kind, v, 1, ln, ln) for kind, v, ln in fold.boundary()]
-        if rows:
-            yield pd.DataFrame(rows, columns=["pid", "kind", "value",
-                                              "n_runs", "total_len",
-                                              "max_run_len"])
+        if pid >= 0:
+            yield pd.DataFrame([{"pid": pid, **fold.boundary(),
+                                 "vals": list(acc),
+                                 "stats": list(acc.values())}])
 
-    parts = sorted(arranged.mapInPandas(it, schema).collect(),
-                   key=lambda r: r.pid)
     total: dict = {}
 
-    def close(v, ln: int) -> None:
-        st = total.get(v)
-        if st is None:
-            total[v] = [1, ln, ln]
-        else:
-            st[0] += 1
-            st[1] += ln
-            st[2] = max(st[2], ln)
+    def interior(r, _off) -> None:
+        for v, st in zip(r.vals, r.stats):
+            _merge_stats(total, v, *st)
 
-    merger = _BoundaryRunMerger(close)
-    i = 0
-    while i < len(parts):
-        pid = parts[i].pid
-        first = last = only = None
-        while i < len(parts) and parts[i].pid == pid:
-            r = parts[i]
-            if r.kind == 0:
-                st = total.get(r.value)
-                if st is None:
-                    total[r.value] = [r.n_runs, r.total_len, r.max_run_len]
-                else:
-                    st[0] += r.n_runs
-                    st[1] += r.total_len
-                    st[2] = max(st[2], r.max_run_len)
-            elif r.kind == 1:
-                first = (r.value, r.total_len)
-            elif r.kind == 2:
-                last = (r.value, r.total_len)
-            else:
-                only = (r.value, r.total_len)
-            i += 1
-        merger.task(first, last, only)
-    merger.finish()
+    _stitch(arranged.mapInPandas(it, schema).collect(),
+            lambda v, ln, _s0: _merge_stats(total, v, 1, ln, ln), interior)
     rows = [(v, int(st[0]), int(st[1]), int(st[2]))
             for v, st in sorted(total.items())]
     return df.sparkSession.createDataFrame(
@@ -664,64 +473,40 @@ def run_extract(df: DataFrame, col: str, order: list[str]) -> DataFrame:
             .orderBy("start_rn"))
 
 
+def _run_histogram(df: DataFrame, col: str, order: list[str],
+                   n_buckets: int, bucket) -> np.ndarray:
+    """Run counts of `col` under the order, by bucket(lens) -> index
+    (indices >= n_buckets are not kept). The histogram accumulates
+    INSIDE the range-partitioned kernel over interior runs; the driver
+    folds in the O(P) boundary runs — no run table, no persist, no
+    second shuffle."""
+    vtype = df.schema[col].dataType.simpleString()
+    arranged = _ranged(df, [col], order)
+
+    def it(batches: Iterable[pd.DataFrame]):
+        hist = np.zeros(n_buckets, dtype=np.int64)
+        fold = _TaskRunFold(
+            lambda _v, lens, _s0: _bucket_count(hist, bucket(lens)))
+        pid = -1
+        for pid, pdf in _task_batches(batches):
+            fold.feed(_as_comparable(pdf[col].to_numpy()))
+        if pid >= 0:
+            yield pd.DataFrame([{"pid": pid, **fold.boundary(),
+                                 "hist": hist.tolist()}])
+
+    hist = np.zeros(n_buckets, dtype=np.int64)
+    _stitch(arranged.mapInPandas(
+        it, f"pid int, {_bound_ddl(vtype)}, hist array<long>").collect(),
+        lambda _v, ln, _s0: _bucket_count(hist, bucket(np.asarray([ln]))),
+        lambda r, _off: np.add(hist, r.hist, out=hist))
+    return hist
+
+
 def run_length_histogram(df: DataFrame, col: str, order: list[str]) -> DataFrame:
     """Run lengths bucketed by bit class (floor(log2(len))) — the
     AnalyzeData run-length histogram (/root/reference/src/main.c:1246+,
-    'run lengths by bit-class').
-
-    The 64-bucket histogram is accumulated INSIDE the range-partitioned
-    kernel over interior runs; the driver folds in the O(P) boundary
-    runs — no run table, no persist, no second shuffle."""
-    vtype = df.schema[col].dataType.simpleString()
-    arranged = _ranged(df, [col], order)
-    schema = f"pid int, kind int, value {vtype}, run_len long, hist array<long>"
-
-    def it(batches: Iterable[pd.DataFrame]):
-        pid = -1
-        hist = np.zeros(64, dtype=np.int64)
-
-        def sink(_vals: np.ndarray, lens: np.ndarray, _s0) -> None:
-            np.add.at(hist, _bit_class_vec(np.asarray(lens)), 1)
-
-        fold = _TaskRunFold(sink)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if pid < 0:
-                pid = int(pdf["pid"].iloc[0])
-            fold.feed(_as_comparable(pdf[col].to_numpy()))
-        bound = fold.boundary()
-        if bound or hist.any():
-            rows = [(pid, 0, None, 0, hist.tolist())]
-            rows += [(pid, kind, v, ln, None) for kind, v, ln in bound]
-            yield pd.DataFrame(rows, columns=["pid", "kind", "value",
-                                              "run_len", "hist"])
-
-    parts = sorted(arranged.mapInPandas(it, schema).collect(),
-                   key=lambda r: r.pid)
-    hist = np.zeros(64, dtype=np.int64)
-
-    def close(_v, ln: int) -> None:
-        hist[int(ln).bit_length() - 1] += 1
-
-    merger = _BoundaryRunMerger(close)
-    i = 0
-    while i < len(parts):
-        pid = parts[i].pid
-        first = last = only = None
-        while i < len(parts) and parts[i].pid == pid:
-            r = parts[i]
-            if r.kind == 0:
-                hist += np.asarray(r.hist, dtype=np.int64)
-            elif r.kind == 1:
-                first = (r.value, r.run_len)
-            elif r.kind == 2:
-                last = (r.value, r.run_len)
-            else:
-                only = (r.value, r.run_len)
-            i += 1
-        merger.task(first, last, only)
-    merger.finish()
+    'run lengths by bit-class')."""
+    hist = _run_histogram(df, col, order, 64, _bit_class_vec)
     rows = [(int(b), int(n)) for b, n in enumerate(hist) if n]
     return df.sparkSession.createDataFrame(
         rows, "bit_class int, n_runs long")
@@ -733,62 +518,8 @@ def exact_run_length_histogram(df: DataFrame, col: str, order: list[str],
     cap), the `rleLengthExact` companion of the bit-class table —
     AnalyzeData keeps both, capped at 64 buckets
     (/root/reference/src/main.c:1254,1365 `rleLengthExact[len-1]++ if
-    len <= 64`). Same shuffle-free/one-shuffle kernel as the bit-class
-    variant: a cap-sized exact array accumulates inside each task over
-    interior runs; the driver folds in the O(P) boundary runs."""
-    vtype = df.schema[col].dataType.simpleString()
-    arranged = _ranged(df, [col], order)
-    schema = f"pid int, kind int, value {vtype}, run_len long, hist array<long>"
-
-    def it(batches: Iterable[pd.DataFrame]):
-        pid = -1
-        hist = np.zeros(cap, dtype=np.int64)
-
-        def sink(_vals: np.ndarray, lens: np.ndarray, _s0) -> None:
-            ln = np.asarray(lens)
-            ok = ln <= cap
-            np.add.at(hist, ln[ok] - 1, 1)
-
-        fold = _TaskRunFold(sink)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if pid < 0:
-                pid = int(pdf["pid"].iloc[0])
-            fold.feed(_as_comparable(pdf[col].to_numpy()))
-        bound = fold.boundary()
-        if bound or hist.any():
-            rows = [(pid, 0, None, 0, hist.tolist())]
-            rows += [(pid, kind, v, ln, None) for kind, v, ln in bound]
-            yield pd.DataFrame(rows, columns=["pid", "kind", "value",
-                                              "run_len", "hist"])
-
-    parts = sorted(arranged.mapInPandas(it, schema).collect(),
-                   key=lambda r: r.pid)
-    hist = np.zeros(cap, dtype=np.int64)
-
-    def close(_v, ln: int) -> None:
-        if ln <= cap:
-            hist[int(ln) - 1] += 1
-
-    merger = _BoundaryRunMerger(close)
-    i = 0
-    while i < len(parts):
-        pid = parts[i].pid
-        first = last = only = None
-        while i < len(parts) and parts[i].pid == pid:
-            r = parts[i]
-            if r.kind == 0:
-                hist += np.asarray(r.hist, dtype=np.int64)
-            elif r.kind == 1:
-                first = (r.value, r.run_len)
-            elif r.kind == 2:
-                last = (r.value, r.run_len)
-            else:
-                only = (r.value, r.run_len)
-            i += 1
-        merger.task(first, last, only)
-    merger.finish()
+    len <= 64`). Same kernel as the bit-class table, bucket len - 1."""
+    hist = _run_histogram(df, col, order, cap, lambda lens: lens - 1)
     rows = [(int(b) + 1, int(n)) for b, n in enumerate(hist) if n]
     return df.sparkSession.createDataFrame(
         rows, "run_len int, n_runs long")
@@ -808,11 +539,7 @@ def _run_summary(df: DataFrame, cols: list[str],
         pid = -1
         acc = {c: {"n": 0, "n_runs": 0, "vmin": None, "vmax": None,
                    "first": None, "last": None} for c in cols}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if pid < 0:
-                pid = int(pdf["pid"].iloc[0])
+        for pid, pdf in _task_batches(batches):
             for c in cols:
                 a = pdf[c].to_numpy()
                 if a.dtype.kind == "f":
@@ -934,7 +661,6 @@ class _RefModelAcc:
         self.last_end = 0   # local end of the last candidate seen
         self.cmd = 0
         self.len = 0
-        self.has = False
 
     def sink(self, _vals: np.ndarray, lens: np.ndarray,
              starts: np.ndarray) -> None:
@@ -944,11 +670,10 @@ class _RefModelAcc:
         s0 = np.asarray(starts)[elig].astype(np.int64)
         L = np.asarray(lens)[elig].astype(np.int64)
         ends = s0 + L
-        if not self.has:
+        if self.first_cand is None:
             self.first_cand = (int(s0[0]), int(L[0]))
             prev = np.concatenate(([ends[0]], ends[:-1]))
             c, l = _model_contribution(L[1:], s0[1:] - prev[1:] + 1)
-            self.has = True
         else:
             prev = np.concatenate(([np.int64(self.last_end)], ends[:-1]))
             c, l = _model_contribution(L, s0 - prev + 1)
@@ -973,124 +698,63 @@ def ref_rle8_size_v1(df: DataFrame, cols: list[str],
     ONE range shuffle + one kernel pass: run detection AND the model
     partials are fused per task (_RefModelAcc); the driver resolves the
     O(P·C) boundary — merged edge runs and each task's first candidate
-    gap — without ever materializing or re-shuffling the run table."""
+    gap — without ever materializing or re-shuffling the run table.
+    Raises ValueError when the columns do not share one type."""
     vtypes = {c: df.schema[c].dataType.simpleString() for c in cols}
-    assert len(set(vtypes.values())) == 1, "cols must share a type"
+    if len(set(vtypes.values())) > 1:
+        raise ValueError(f"ref_rle8_size_v1: cols must share a type, "
+                         f"got {vtypes}")
+    vtype = vtypes[cols[0]]
     arranged = _ranged(df, cols, order)
-    schema = (f"pid int, col_name string, n long, "
-              f"first_v {vtypes[cols[0]]}, first_l long, "
-              f"last_v {vtypes[cols[0]]}, last_l long, only boolean, "
+    schema = (f"pid int, col_name string, {_bound_ddl(vtype)}, "
               "cand_s long, cand_l long, cmd long, lensum long, "
-              "last_end long, has_cand boolean")
+              "last_end long")
 
     def it(batches: Iterable[pd.DataFrame]):
-        pid = -1
-        folds = {}
         accs = {c: _RefModelAcc() for c in cols}
-        for c in cols:
-            folds[c] = _TaskRunFold(accs[c].sink)
-        n = 0
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if pid < 0:
-                pid = int(pdf["pid"].iloc[0])
-            n += len(pdf)
+        folds = {c: _TaskRunFold(accs[c].sink) for c in cols}
+        pid = -1
+        for pid, pdf in _task_batches(batches):
             for c in cols:
                 folds[c].feed(_as_comparable(pdf[c].to_numpy()))
         if pid < 0:
             return
-        rows = []
         for c in cols:
-            acc, bound = accs[c], folds[c].boundary()
-            first_v = first_l = last_v = last_l = None
-            only = False
-            for kind, v, ln in bound:
-                if kind == 3:
-                    first_v, first_l, only = v, ln, True
-                elif kind == 1:
-                    first_v, first_l = v, ln
-                else:
-                    last_v, last_l = v, ln
-            rows.append((pid, c, n, first_v, first_l or 0, last_v,
-                         last_l or 0, only,
-                         acc.first_cand[0] if acc.first_cand else -1,
-                         acc.first_cand[1] if acc.first_cand else 0,
-                         acc.cmd, acc.len, acc.last_end, acc.has))
-        yield pd.DataFrame(rows, columns=[
-            "pid", "col_name", "n", "first_v", "first_l", "last_v",
-            "last_l", "only", "cand_s", "cand_l", "cmd", "lensum",
-            "last_end", "has_cand"])
+            acc = accs[c]
+            cand_s, cand_l = acc.first_cand or (-1, 0)
+            yield pd.DataFrame([{
+                "pid": pid, "col_name": c, **folds[c].boundary(),
+                "cand_s": cand_s, "cand_l": cand_l, "cmd": acc.cmd,
+                "lensum": acc.len, "last_end": acc.last_end}])
 
-    parts = sorted(arranged.mapInPandas(it, schema).collect(),
-                   key=lambda r: r.pid)
-    # driver: per-column O(P) walk — global offsets, boundary-run merge,
-    # candidate chain (gap to previous eligible end) across tasks
-    offsets: dict[int, int] = {}
-    acc_rows = 0
-    for r in parts:
-        if r.col_name == cols[0]:
-            offsets[r.pid] = acc_rows
-            acc_rows += r.n
+    parts = arranged.mapInPandas(it, schema).collect()
+    # driver: per-column O(P) walk — boundary-run merge and the
+    # candidate chain (gap to the previous eligible end) across tasks
     out = []
     for c in cols:
-        cmd_total = len_total = n_total = 0
-        chain_end = 0
-        pend: list | None = None  # [value, len, global_start]
+        chain = [0, 0, 0]  # command bytes, modeled run bytes, chain end
 
-        def close_run(v, ln: int, s0: int) -> None:
-            nonlocal chain_end, cmd_total, len_total
-            if ln < _ELIG_MIN:
-                return
-            rng = s0 - chain_end + 1
-            stored = ln - (_ELIG_MIN - 1)
-            count_b = 1 if stored <= 255 else 5
-            short_ok = rng <= 255
-            if short_ok or ln >= _LONG_MIN:
-                cmd_total += 1 + count_b + (1 if short_ok else 5)
-                len_total += ln
-            chain_end = s0 + ln
+        def eligible(ln: int, s0: int) -> None:
+            cmd, lens = _model_contribution(np.asarray([ln]),
+                                            np.asarray([s0 - chain[2] + 1]))
+            chain[:] = [chain[0] + cmd, chain[1] + lens, s0 + ln]
 
-        def close_pend() -> None:
-            nonlocal pend
-            if pend is not None:
-                close_run(pend[0], pend[1], pend[2])
-                pend = None
+        def close(_v, ln: int, s0: int) -> None:
+            if ln >= _ELIG_MIN:
+                eligible(ln, s0)
 
-        for r in (p for p in parts if p.col_name == c):
-            if r.first_v is None and not r.only:
-                continue  # empty task
-            off = offsets[r.pid]
-            n_total += r.n
-            if r.only:
-                if pend is not None and pend[0] == r.first_v:
-                    pend[1] += r.first_l
-                else:
-                    close_pend()
-                    pend = [r.first_v, r.first_l, off]
-                continue
-            if pend is not None and pend[0] == r.first_v:
-                pend[1] += r.first_l
-                close_pend()
-            else:
-                close_pend()
-                close_run(r.first_v, r.first_l, off)
-            if r.has_cand:
-                # first interior candidate: gap resolved against the
-                # chain, then the task's local sums ride along
-                rng = off + r.cand_s - chain_end + 1
-                stored = r.cand_l - (_ELIG_MIN - 1)
-                count_b = 1 if stored <= 255 else 5
-                short_ok = rng <= 255
-                if short_ok or r.cand_l >= _LONG_MIN:
-                    cmd_total += 1 + count_b + (1 if short_ok else 5)
-                    len_total += r.cand_l
-                cmd_total += r.cmd
-                len_total += r.lensum
-                chain_end = off + r.last_end
-            pend = [r.last_v, r.last_l, off + r.n - r.last_l]
-        close_pend()
-        out.append((c, int(8 + cmd_total + (n_total - len_total) + 1 + 10)
+        def interior(r, off: int) -> None:
+            if r.cand_l:
+                # the first interior candidate's gap resolves against
+                # the chain; the task's local sums ride along
+                eligible(r.cand_l, off + r.cand_s)
+                chain[:] = [chain[0] + r.cmd, chain[1] + r.lensum,
+                            off + r.last_end]
+
+        rows = [r for r in parts if r.col_name == c]
+        _stitch(rows, close, interior)
+        n_total = sum(r.n for r in rows)
+        out.append((c, int(8 + chain[0] + (n_total - chain[1]) + 1 + 10)
                     if n_total else 8))
     return df.sparkSession.createDataFrame(
         out, "col_name string, model_bytes long")
@@ -1113,14 +777,9 @@ def with_global_rn(df: DataFrame, col: str, order: list[str]) -> DataFrame:
     arranged = _ranged(df, [col], order)
 
     def it(batches: Iterable[pd.DataFrame]):
-        pid = -1
         li = 0
-        for pdf in batches:
+        for pid, pdf in _task_batches(batches):
             n = len(pdf)
-            if n == 0:
-                continue
-            if pid < 0:
-                pid = int(pdf["pid"].iloc[0])
             yield pd.DataFrame({"pid": pid,
                                 "li": np.arange(li, li + n, dtype=np.int64),
                                 "value": pdf[col].to_numpy()})
@@ -1129,16 +788,9 @@ def with_global_rn(df: DataFrame, col: str, order: list[str]) -> DataFrame:
     base = (arranged.mapInPandas(it, f"pid int, li long, value {vtype}")
             .persist(StorageLevel.MEMORY_AND_DISK))
     _pool_append(base)
-    cnts = {r.pid: r.cnt for r in
-            base.groupBy("pid").agg(F.count("*").alias("cnt")).collect()}
-    offsets, acc = {}, 0
-    for pid in sorted(cnts):
-        offsets[pid] = acc
-        acc += cnts[pid]
-    off_df = df.sparkSession.createDataFrame(
-        [(int(p), int(o)) for p, o in offsets.items()] or [(0, 0)],
-        "pid int, row_offset long")
-    return (base.join(F.broadcast(off_df), "pid")
+    offsets = _offsets({r.pid: r.cnt for r in base.groupBy("pid")
+                        .agg(F.count("*").alias("cnt")).collect()})
+    return (_with_offsets(df.sparkSession, base, offsets)
             .select((F.col("row_offset") + F.col("li") + 1).alias("rn"),
                     "value"))
 
@@ -1150,135 +802,66 @@ def sym_width_run_histogram(df: DataFrame, col: str, order: list[str],
     sym_bytes-wide symbols (incomplete tail symbol dropped), runs are
     detected over the symbol sequence, and lengths (in symbols) are
     bucketed by bit class — AnalyzeData's per-width aligned histogram
-    (/root/reference/src/main.c:1246+). One extra shuffle (by symbol
-    ordinal) over the width-grouping; everything else rides
-    partition_runs."""
+    (/root/reference/src/main.c:1246+). One O(P) count pass over the
+    persisted arrangement gives each task its symbol alignment phase;
+    each task folds the runs of its complete symbols and exports the
+    bytes before and after them."""
     w = sym_bytes
-    spark = df.sparkSession
     with _release_persists_after():
         arranged = (_ranged(df, [col], order)
                     .persist(StorageLevel.MEMORY_AND_DISK))
         _pool_append(arranged)
-        # O(P) pass over the persisted slices: per-task row offsets give
-        # each task its global symbol alignment phase
-        cnts = {r.pid: r.cnt for r in
-                arranged.groupBy("pid").agg(F.count("*").alias("cnt"))
-                .collect()}
-        offsets, acc = {}, 0
-        for pid in sorted(cnts):
-            offsets[pid] = acc
-            acc += cnts[pid]
+        offsets = _offsets({r.pid: r.cnt for r in arranged.groupBy("pid")
+                            .agg(F.count("*").alias("cnt")).collect()})
 
         def it(batches: Iterable[pd.DataFrame]):
-            pid = -1
-            chunks: list[np.ndarray] = []
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                if pid < 0:
-                    pid = int(pdf["pid"].iloc[0])
-                chunks.append(np.asarray(pdf[col].to_numpy(), dtype="U1"))
+            pid, a = _task_array(batches, col)
             if pid < 0:
                 return
-            a = np.concatenate(chunks) if len(chunks) > 1 else chunks[0]
+            a = a.astype("U1")
             n = len(a)
-            off = offsets[pid]
-            lo = (-off) % w              # bytes before the first aligned sym
+            lo = (-offsets[pid]) % w     # bytes before the first aligned sym
             m = max(0, (n - lo) // w)    # complete symbols in this task
-            if m:
-                head = "".join(a[:lo])
-                tail = "".join(a[lo + m * w:])
-            else:
-                head = "".join(a)  # whole task is sub-symbol: all boundary
-                tail = ""
             hist = np.zeros(64, dtype=np.int64)
-            bound: list[tuple] = []
+            fold = _TaskRunFold(lambda _v, lens, _s0: _bucket_count(
+                hist, _bit_class_vec(lens)))
             if m:
-                syms = np.ascontiguousarray(
-                    a[lo:lo + m * w].reshape(m, w)).view(f"U{w}").ravel()
-                starts, lens = find_runs(syms)
-                vals = syms[starts]
-                k = len(starts)
-                if k == 1:
-                    bound = [(3, str(vals[0]), int(lens[0]))]
-                else:
-                    bound = [(1, str(vals[0]), int(lens[0])),
-                             (2, str(vals[-1]), int(lens[-1]))]
-                    if k > 2:
-                        np.add.at(hist, _bit_class_vec(lens[1:-1]), 1)
-            rows = [(pid, 0, None, 0, hist.tolist(), head, tail)]
-            rows += [(pid, kind, v, ln, None, None, None)
-                     for kind, v, ln in bound]
-            yield pd.DataFrame(rows, columns=["pid", "kind", "sym",
-                                              "run_len", "hist",
-                                              "head", "tail"])
+                fold.feed(np.ascontiguousarray(a[lo:lo + m * w].reshape(m, w))
+                          .view(f"U{w}").ravel())
+                head, tail = "".join(a[:lo]), "".join(a[lo + m * w:])
+            else:
+                head, tail = "".join(a), ""  # all sub-symbol: all boundary
+            yield pd.DataFrame([{"pid": pid, **fold.boundary(),
+                                 "hist": hist.tolist(),
+                                 "head": head, "tail": tail}])
 
-        parts = sorted(arranged.mapInPandas(
-            it, "pid int, kind int, sym string, run_len long, "
-                "hist array<long>, head string, tail string").collect(),
-            key=lambda r: r.pid)
+        parts = arranged.mapInPandas(
+            it, f"pid int, {_bound_ddl('string')}, hist array<long>, "
+                "head string, tail string").collect()
 
     # --- driver-side O(P·w) stitch: boundary bytes assemble the symbols
     # that span task edges; boundary runs extend across them ---
     hist = np.zeros(64, dtype=np.int64)
-    cur: list = [None, 0]  # open symbol run (sym, len)
-    buf = ""               # partial symbol bytes
-
-    def feed_sym(s: str) -> None:
-        if cur[0] == s:
-            cur[1] += 1
-        else:
-            if cur[1]:
-                hist[cur[1].bit_length() - 1] += 1
-            cur[0], cur[1] = s, 1
-
-    def feed_run(s: str, ln: int) -> None:
-        if cur[0] == s:
-            cur[1] += ln
-        else:
-            if cur[1]:
-                hist[cur[1].bit_length() - 1] += 1
-            cur[0], cur[1] = s, ln
+    merger = _BoundaryRunMerger(lambda _v, ln, _s0: _bucket_count(
+        hist, _bit_class_vec(np.asarray([ln]))))
+    buf = ""  # partial symbol bytes
 
     def feed_bytes(bs: str) -> None:
         nonlocal buf
         buf += bs
         while len(buf) >= w:
-            feed_sym(buf[:w])
+            merger.extend(buf[:w], 1)
             buf = buf[w:]
 
-    i = 0
-    while i < len(parts):
-        pid = parts[i].pid
-        first = last = only = None
-        task_hist = head = tail = None
-        while i < len(parts) and parts[i].pid == pid:
-            r = parts[i]
-            if r.kind == 0:
-                task_hist, head, tail = r.hist, r.head, r.tail
-            elif r.kind == 1:
-                first = (r.sym, r.run_len)
-            elif r.kind == 2:
-                last = (r.sym, r.run_len)
-            else:
-                only = (r.sym, r.run_len)
-            i += 1
-        feed_bytes(head or "")
-        if only is not None:
-            feed_run(*only)
-        elif first is not None:
-            feed_run(*first)
-            # an interior run follows: the merged-first run is final
-            hist[cur[1].bit_length() - 1] += 1
-            cur[0], cur[1] = None, 0
-            hist += np.asarray(task_hist, dtype=np.int64)
-            cur[0], cur[1] = last[0], last[1]
-        feed_bytes(tail or "")
-    if cur[1]:
-        hist[cur[1].bit_length() - 1] += 1
+    for r in sorted(parts, key=lambda r: r.pid):
+        feed_bytes(r.head)
+        if r.last_l:
+            merger.task(0, r, lambda r, _off: np.add(hist, r.hist, out=hist))
+        feed_bytes(r.tail)
+    merger.finish()
     # incomplete final symbol in `buf` is dropped (aligned semantics)
     rows = [(int(b), int(x)) for b, x in enumerate(hist) if x]
-    return spark.createDataFrame(rows, "bit_class int, n_runs long")
+    return df.sparkSession.createDataFrame(rows, "bit_class int, n_runs long")
 
 
 def unaligned_run_histogram(df: DataFrame, col: str, order: list[str],
@@ -1288,92 +871,46 @@ def unaligned_run_histogram(df: DataFrame, col: str, order: list[str],
     — the UNBOUND semantics, /root/reference/src/rleX_extreme_cpu.h:23-35);
     histogram is over covered bytes = matched length + stride.
 
-    ONE range shuffle, one kernel pass: each task evaluates
-    byte[i]==byte[i-stride] for every position with both bytes local
-    and accumulates the histogram over complete match-runs; the first
-    `stride` positions of each task (predecessor bytes live in the
-    previous task) plus the edge-touching runs are exported — O(stride)
-    values per task edge — and resolved on the driver. This replaces
-    the round-2 rn self-join that cost two extra row-scale shuffles."""
+    ONE range shuffle, one kernel pass: each task folds the runs of
+    byte[i]==byte[i-stride] over every position with both bytes local
+    and counts the complete match-runs; the first `stride` bytes of
+    each task (predecessor bytes live in the previous task) plus its
+    edge runs are exported — O(stride) values per task edge — and
+    resolved on the driver. This replaces the round-2 rn self-join that
+    cost two extra row-scale shuffles."""
     s = stride
     arranged = _ranged(df, [col], order)
     vtype = df.schema[col].dataType.simpleString()
-    schema = (f"pid int, n long, n_eval long, head array<{vtype}>, "
-              f"tail array<{vtype}>, f long, l long, spans boolean, "
-              "hist array<long>")
+
+    def count(hist, match, lens) -> None:  # match-runs cover len + s bytes
+        _bucket_count(hist, _bit_class_vec(lens[match] + s))
 
     def it(batches: Iterable[pd.DataFrame]):
-        pid = -1
-        chunks: list[np.ndarray] = []
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if pid < 0:
-                pid = int(pdf["pid"].iloc[0])
-            chunks.append(_as_comparable(pdf[col].to_numpy()))
+        pid, a = _task_array(batches, col)
         if pid < 0:
             return
-        a = np.concatenate(chunks) if len(chunks) > 1 else chunks[0]
-        n = len(a)
         hist = np.zeros(64, dtype=np.int64)
-        f = l = 0
-        spans = False
-        n_eval = max(0, n - s)
-        if n_eval:
-            eq = a[s:] == a[:-s]
-            starts, lens = find_runs(eq)
-            vals = eq[starts]
-            t_starts = starts[vals]
-            t_lens = lens[vals]
-            if len(t_lens):
-                at_head = t_starts[0] == 0
-                at_tail = t_starts[-1] + t_lens[-1] == n_eval
-                if at_head:
-                    f = int(t_lens[0])
-                if at_tail:
-                    l = int(t_lens[-1])
-                spans = bool(len(t_lens) == 1 and at_head and at_tail)
-                lo = 1 if at_head else 0
-                hi = len(t_lens) - (1 if at_tail else 0)
-                if hi > lo:
-                    np.add.at(hist,
-                              _bit_class_vec(t_lens[lo:hi] + s), 1)
-        head = a[:min(s, n)].tolist()
-        tail = a[-min(s, n):].tolist()
-        yield pd.DataFrame([(pid, n, n_eval, head, tail, f, l, spans,
-                             hist.tolist())],
-                           columns=["pid", "n", "n_eval", "head", "tail",
-                                    "f", "l", "spans", "hist"])
+        fold = _TaskRunFold(lambda match, lens, _s0: count(hist, match, lens))
+        fold.feed(a[s:] == a[:-s])
+        yield pd.DataFrame([{"pid": pid, **fold.boundary(),
+                             "hist": hist.tolist(),
+                             "head": a[:s].tolist(), "tail": a[-s:].tolist()}])
 
-    parts = sorted(arranged.mapInPandas(it, schema).collect(),
-                   key=lambda r: r.pid)
+    parts = arranged.mapInPandas(
+        it, f"pid int, {_bound_ddl('boolean')}, hist array<long>, "
+            f"head array<{vtype}>, tail array<{vtype}>").collect()
     hist = np.zeros(64, dtype=np.int64)
+    merger = _BoundaryRunMerger(lambda match, ln, _s0: count(
+        hist, np.asarray([match]), np.asarray([ln])))
     ring: list = []   # last <= s values of the stream so far
-    pend = 0          # open match-run length at the stream cursor
-
-    def close() -> None:
-        nonlocal pend
-        if pend:
-            hist[int(pend + s).bit_length() - 1] += 1
-            pend = 0
-
-    for r in parts:
-        nb = min(s, r.n)
-        for j in range(nb):
+    for r in sorted(parts, key=lambda r: r.pid):
+        for j, v in enumerate(r.head):
             idx = len(ring) - s + j
-            if idx >= 0 and r.head[j] == ring[idx]:
-                pend += 1
-            else:
-                close()
-        if r.n_eval > 0:
-            if r.f > 0:
-                pend += r.f
-            if not r.spans:
-                close()
-                pend = r.l
-            hist += np.asarray(r.hist, dtype=np.int64)
+            merger.extend(idx >= 0 and v == ring[idx], 1)
+        if r.last_l:
+            merger.task(0, r, lambda r, _off: np.add(hist, r.hist, out=hist))
         ring = (ring + list(r.tail))[-s:]
-    close()
+    merger.finish()
     rows = [(int(b), int(x)) for b, x in enumerate(hist) if x]
     return df.sparkSession.createDataFrame(rows, "bit_class int, n_runs long")
 
@@ -1400,27 +937,16 @@ def lru_recurrence(df: DataFrame, col: str, order: list[str],
     max_k = max(ks)
     vtype = df.schema[col].dataType.simpleString()
     arranged = _ranged(df, [col], order)
-    schema = ("pid int, m long, "
+    schema = (f"pid int, {_bound_ddl(vtype)}, m long, "
               + ", ".join(f"hits_{k} long" for k in ks)
-              + f", head array<{vtype}>, tail array<{vtype}>, "
-              + f"kind int, first_v {vtype}, first_l long, "
-              + f"last_v {vtype}, last_l long")
+              + f", head array<{vtype}>, tail array<{vtype}>")
 
     def it(batches: Iterable[pd.DataFrame]):
-        pid = -1
         seq: list = []  # emitted-run symbols (interior runs, in order)
-
-        def sink(vals: np.ndarray, lens: np.ndarray, _s0) -> None:
-            keep = lens >= min_run
-            if keep.any():
-                seq.extend(np.asarray(vals)[keep].tolist())
-
-        fold = _TaskRunFold(sink)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if pid < 0:
-                pid = int(pdf["pid"].iloc[0])
+        fold = _TaskRunFold(lambda vals, lens, _s0:
+                            seq.extend(vals[lens >= min_run].tolist()))
+        pid = -1
+        for pid, pdf in _task_batches(batches):
             fold.feed(_as_comparable(pdf[col].to_numpy()))
         if pid < 0:
             return
@@ -1433,30 +959,13 @@ def lru_recurrence(df: DataFrame, col: str, order: list[str],
                 h[j:] |= v[j:] == v[:-j]
             # positions whose lookback could cross the task edge (or the
             # task's own first boundary run) resolve on the driver
-            hits[k] = int(h[max_k:].sum()) if m > max_k else 0
-        b = fold.boundary()
-        if not b:
-            return
-        if b[0][0] == 3:
-            kind, fv, fl, lv, ll = 3, b[0][1], b[0][2], b[0][1], b[0][2]
-        else:
-            kind = 1
-            fv, fl = b[0][1], b[0][2]
-            lv, ll = b[1][1], b[1][2]
-        yield pd.DataFrame({
-            "pid": [pid], "m": [m],
-            **{f"hits_{k}": [hits[k]] for k in ks},
-            "head": [seq[:max_k]], "tail": [seq[-max_k:]],
-            "kind": [kind], "first_v": [fv], "first_l": [fl],
-            "last_v": [lv], "last_l": [ll]})
-
-    parts = sorted(arranged.mapInPandas(it, schema).collect(),
-                   key=lambda r: r.pid)
+            hits[f"hits_{k}"] = int(h[max_k:].sum()) if m > max_k else 0
+        yield pd.DataFrame([{"pid": pid, **fold.boundary(), "m": m, **hits,
+                             "head": seq[:max_k], "tail": seq[-max_k:]}])
 
     totals = {k: 0 for k in ks}
     n_runs = 0
     carry: list = []  # rolling tail of the last max_k emitted symbols
-    pend: tuple | None = None  # open boundary run (value, length)
 
     def emit(v) -> None:
         nonlocal n_runs
@@ -1467,28 +976,12 @@ def lru_recurrence(df: DataFrame, col: str, order: list[str],
         carry.append(v)
         del carry[:-max_k]
 
-    def close(v, ln: int) -> None:
+    def close(v, ln: int, _s0) -> None:
         if ln >= min_run:
             emit(v)
 
-    def extend_or_close(v, ln: int) -> None:
-        nonlocal pend
-        if pend is not None and pend[0] == v:
-            pend = (v, pend[1] + ln)
-        else:
-            if pend is not None:
-                close(*pend)
-            pend = (v, ln)
-
-    for r in parts:
-        if r.kind == 3:
-            extend_or_close(r.last_v, r.last_l)  # stays open
-            continue
-        # first closed run: may extend the previous task's open run,
-        # then definitely closes (an in-task run follows it)
-        extend_or_close(r.first_v, r.first_l)
-        close(*pend)
-        pend = None
+    def interior(r, _off) -> None:
+        nonlocal n_runs
         # edge interior rows (full-context rows were counted locally)
         n_runs += int(r.m) - min(int(r.m), max_k)
         for v in r.head:
@@ -1497,10 +990,8 @@ def lru_recurrence(df: DataFrame, col: str, order: list[str],
             totals[k] += r[f"hits_{k}"]
         if r.m >= max_k:
             carry[:] = list(r.tail)
-        pend = (r.last_v, r.last_l)
-    if pend is not None:
-        close(*pend)
-        pend = None
+
+    _stitch(arranged.mapInPandas(it, schema).collect(), close, interior)
     rows = [(int(k), int(totals[k]), int(n_runs)) for k in ks]
     return df.sparkSession.createDataFrame(
         rows, "k int, n_hits long, n_runs long")

@@ -6,7 +6,7 @@ blocks per partition; rle8m's independently-decodable subsections +
 offset table (/root/reference/src/rle8_low_entropy_cpu.c:126-250)
 become (source, bucket) parquet partitions + per-block doc offset
 columns; SIMD dispatch becomes Arrow-vectorized NumPy inside
-mapInPandas. Zero per-row Python anywhere.
+mapInArrow. Zero per-row Python anywhere.
 
 Scale design (100 TB / 10^12 sequences):
   * two-pass plan: a cheap stats aggregation over (source, n_tok) —

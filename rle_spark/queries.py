@@ -23,9 +23,9 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def _ts(spark: SparkSession, sf_dir: str, name: str) -> "analyze.ParquetSource":
-    """ParquetSource handle for the analyze family: enables the
-    shuffle-free arranged fast path (provably-sorted row groups read
-    task-side) plus session memoization of the O(C) stats rows."""
+    """ParquetSource handle for the analyze family: the same range
+    arrangement as a DataFrame, plus session memoization of the O(C)
+    column_codec_stats rows per file fingerprint."""
     return analyze.ParquetSource(
         spark, os.path.join(sf_dir, f"{name}.parquet"))
 

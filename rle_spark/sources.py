@@ -206,6 +206,18 @@ def _map_splits(spark: SparkSession, src_dir: str, task, schema: str,
             .mapInArrow(run, schema), units, n_tasks)
 
 
+def parquet_files(root: str) -> list[str]:
+    """The parquet files of a table directory, sorted: every *.parquet
+    below `root`, recursively, except under a '.'- or '_'-prefixed
+    component below it (a crashed compaction's _blocks_old staging copy,
+    an in-flight .tmp dir) — recursive '**' would otherwise traverse
+    those and read duplicate data."""
+    return sorted(p for p in glob.glob(
+        os.path.join(root, "**", "*.parquet"), recursive=True)
+        if not any(part.startswith((".", "_"))
+                   for part in os.path.relpath(p, root).split(os.sep)))
+
+
 def plan_parquet_splits(src_dir: str,
                         target_bytes: int = 128 << 20,
                         with_bytes: bool = False) -> list[tuple]:
@@ -224,21 +236,7 @@ def plan_parquet_splits(src_dir: str,
     4th field — _map_splits uses it to byte-balance the task groups."""
     import pyarrow.parquet as pq
     units: list[tuple[str, int, int]] = []
-    base = os.path.normpath(src_dir)
-
-    def _visible(path: str) -> bool:
-        # same visibility rule as the error check and the block readers:
-        # any '.'- or '_'-prefixed component BELOW src_dir (a crashed
-        # compaction's _blocks_old staging copy, an in-flight .tmp dir)
-        # is invisible — recursive '**' would otherwise traverse it and
-        # silently plan duplicate data (round-3 advice)
-        rel = os.path.relpath(path, base)
-        return not any(part.startswith((".", "_"))
-                       for part in rel.split(os.sep))
-
-    files = sorted(p for p in glob.glob(
-        os.path.join(src_dir, "**", "*.parquet"), recursive=True)
-        if _visible(p))
+    files = parquet_files(src_dir)
     if not files and os.path.isdir(src_dir) and any(
             not e.startswith((".", "_")) for e in os.listdir(src_dir)):
         raise ValueError(

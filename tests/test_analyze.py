@@ -269,6 +269,12 @@ def test_ref_rle8_size_fused_matches_exact_model(spark):
     assert got == want
 
 
+def test_ref_rle8_size_rejects_mixed_types(spark):
+    df = spark.createDataFrame([(0, "A", 1)], "pos long, s string, v long")
+    with pytest.raises(ValueError, match=r"'s': 'string'.*'v': 'bigint'"):
+        analyze.ref_rle8_size_v1(df, ["s", "v"], ["pos"])
+
+
 def test_query_surface_persist_pool_bounded(spark):
     """Repeated analyze-family query calls (the bench loop) keep at
     most ONE pinned intermediate: run_extract releases previous pins at
@@ -284,7 +290,7 @@ def test_query_surface_persist_pool_bounded(spark):
     analyze.clear_run_cache()
 
 
-# --- ParquetSource shuffle-free arranged fast path -------------------------
+# --- ParquetSource input ----------------------------------------------------
 
 
 def _write_pq(tmp_path, pdf, name, row_group_size):
@@ -308,85 +314,50 @@ def _mk_pdf(n=6000, seed=7):
                          "ch": chars})
 
 
-def test_fast_path_engages_on_sorted_multi_rg(spark, tmp_path):
-    pdf = _mk_pdf()
-    p = _write_pq(tmp_path, pdf, "sorted.parquet", 500)
-    src = analyze.ParquetSource(spark, p)
-    fast = analyze._ranged_parquet(src, ["ch"], ["pos"])
-    assert fast is not None
-    # bit-identical to the shuffle path on every analyze surface
-    got = analyze.run_stats(src, "ch", ["pos"]).collect()[0]
-    want = analyze.run_stats(spark.read.parquet(p), "ch",
-                             ["pos"]).collect()[0]
-    assert got.asDict() == want.asDict()
-    runs_fast = sorted((r.start_rn, r.value, r.run_len) for r in
-                       analyze.partition_runs(src, "ch", ["pos"]).collect())
-    runs_slow = sorted((r.start_rn, r.value, r.run_len) for r in
-                       analyze.partition_runs(spark.read.parquet(p), "ch",
-                                              ["pos"]).collect())
-    assert runs_fast == runs_slow
-    analyze.clear_run_cache()
+def _sorted_multi_rg(tmp_path, pdf):
+    return _write_pq(tmp_path, pdf, "sorted.parquet", 500)
 
 
-def test_fast_path_range_clustered_locally_unsorted(spark, tmp_path):
-    """Row groups cover disjoint key ranges but rows inside each group
-    are shuffled: the per-unit local sort must repair the order and
-    produce results identical to the shuffle path."""
-    pdf = _mk_pdf()
+def _locally_unsorted(tmp_path, pdf):
+    """Row groups cover disjoint key ranges, rows inside each shuffled."""
     rng = np.random.default_rng(11)
-    chunks = []
-    for lo in range(0, len(pdf), 500):
-        c = pdf.iloc[lo:lo + 500]
-        chunks.append(c.iloc[rng.permutation(len(c))])
-    scrambled = pd.concat(chunks, ignore_index=True)
-    p = _write_pq(tmp_path, scrambled, "clustered.parquet", 500)
+    chunks = [pdf.iloc[lo:lo + 500].iloc[rng.permutation(500)]
+              for lo in range(0, len(pdf), 500)]
+    return _write_pq(tmp_path, pd.concat(chunks, ignore_index=True),
+                     "clustered.parquet", 500)
+
+
+def _nested_struct(tmp_path, pdf):
+    """A struct column before the order key: footer leaf indices differ
+    from arrow field order."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    n = len(pdf)
+    meta = pa.StructArray.from_arrays(
+        [pa.array(np.zeros(n, dtype=np.int64)),
+         pa.array(np.random.default_rng(5).integers(0, 10, n))],
+        names=["a", "b"])
+    p = str(tmp_path / "nested.parquet")
+    pq.write_table(pa.table({"meta": meta, "pos": pa.array(pdf["pos"]),
+                             "ch": pa.array(pdf["ch"])}), p,
+                   row_group_size=500)
+    return p
+
+
+@pytest.mark.parametrize("layout", [_sorted_multi_rg, _locally_unsorted,
+                                    _nested_struct],
+                         ids=["multi_rg", "locally_unsorted", "nested_struct"])
+def test_parquet_source_matches_read_parquet(spark, tmp_path, layout):
+    """A ParquetSource answers exactly as spark.read.parquet of the same
+    path, whatever the file's row-group layout."""
+    p = layout(tmp_path, _mk_pdf())
     src = analyze.ParquetSource(spark, p)
-    assert analyze._ranged_parquet(src, ["ch"], ["pos"]) is not None
-    got = analyze.run_stats(src, "ch", ["pos"]).collect()[0]
-    want = analyze.run_stats(spark.read.parquet(p), "ch",
-                             ["pos"]).collect()[0]
-    assert got.asDict() == want.asDict()
+    for fn in (analyze.run_stats, analyze.partition_runs):
+        got = sorted(map(tuple, fn(src, "ch", ["pos"]).collect()))
+        want = sorted(map(tuple, fn(spark.read.parquet(p), "ch",
+                                    ["pos"]).collect()))
+        assert got == want
     analyze.clear_run_cache()
-
-
-def test_fast_path_declines_on_overlap_and_coarse(spark, tmp_path):
-    pdf = _mk_pdf()
-    rng = np.random.default_rng(13)
-    shuffled = pdf.iloc[rng.permutation(len(pdf))].reset_index(drop=True)
-    p_overlap = _write_pq(tmp_path, shuffled, "overlap.parquet", 500)
-    src = analyze.ParquetSource(spark, p_overlap)
-    assert analyze._plan_sorted_units(src, "pos") is None
-    assert analyze._ranged_parquet(src, ["ch"], ["pos"]) is None
-    # single row group: provable but too coarse to parallelize
-    p_one = _write_pq(tmp_path, pdf, "one_rg.parquet", len(pdf))
-    src1 = analyze.ParquetSource(spark, p_one)
-    assert analyze._plan_sorted_units(src1, "pos") is not None
-    assert analyze._ranged_parquet(src1, ["ch"], ["pos"]) is None
-    # and the public surface still answers correctly via the fallback
-    got = analyze.run_stats(src1, "ch", ["pos"]).collect()[0]
-    want = analyze.run_stats(spark.read.parquet(p_one), "ch",
-                             ["pos"]).collect()[0]
-    assert got.asDict() == want.asDict()
-    analyze.clear_run_cache()
-
-
-def test_fast_path_runtime_guard_on_lying_footers(spark, tmp_path,
-                                                  monkeypatch):
-    """If footer stats claimed disjoint ranges but the data overlaps,
-    the task-side boundary assert must fail the job, not emit a wrong
-    arrangement."""
-    pdf = _mk_pdf()
-    p = _write_pq(tmp_path, pdf, "lie.parquet", 500)
-    src = analyze.ParquetSource(spark, p)
-    real = analyze._plan_sorted_units(src, "pos")
-    assert real is not None and len(real) >= 4
-    lied = [real[1], real[0], *real[2:]]  # wrong unit order
-    monkeypatch.setattr(analyze, "_plan_sorted_units",
-                        lambda *_a, **_k: lied)
-    fast = analyze._ranged_parquet(src, ["ch"], ["pos"])
-    assert fast is not None
-    with pytest.raises(Exception, match="overlaps its predecessor"):
-        fast.count()
 
 
 def test_column_codec_stats_memo(spark, tmp_path):
@@ -410,63 +381,6 @@ def test_column_codec_stats_memo(spark, tmp_path):
                                         ["pos"]).collect()}
     assert fresh["pos"] == len(pdf) // 2
     analyze.clear_run_cache()
-
-
-def test_fast_path_nested_field_before_order_key(spark, tmp_path):
-    """A struct column preceding the order key shifts leaf (DFS) footer
-    indices away from arrow field order; the planner must still read
-    min/max from the order key's own leaf (located by path_in_schema),
-    so the fast path stays engaged AND correct."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    pdf = _mk_pdf()
-    n = len(pdf)
-    rng = np.random.default_rng(5)
-    # meta.b is deliberately random: if the planner mistakenly read
-    # leaf index 1 (= meta.b) it would see overlapping ranges and
-    # silently fall back — or worse, 'prove' clustering on wrong data
-    meta = pa.StructArray.from_arrays(
-        [pa.array(np.zeros(n, dtype=np.int64)),
-         pa.array(rng.integers(0, 10, n))], names=["a", "b"])
-    t = pa.table({"meta": meta, "pos": pa.array(pdf["pos"]),
-                  "ch": pa.array(pdf["ch"])})
-    p = str(tmp_path / "nested.parquet")
-    pq.write_table(t, p, row_group_size=500)
-    src = analyze.ParquetSource(spark, p)
-    units = analyze._plan_sorted_units(src, "pos")
-    assert units is not None and len(units) == (n + 499) // 500
-    fast = analyze._ranged_parquet(src, ["ch"], ["pos"])
-    assert fast is not None
-    got = analyze.run_stats(src, "ch", ["pos"]).collect()[0]
-    want = analyze.run_stats(spark.read.parquet(p), "ch",
-                             ["pos"]).collect()[0]
-    assert got.asDict() == want.asDict()
-    analyze.clear_run_cache()
-
-
-def test_fast_path_cross_task_boundary_guard(spark, tmp_path,
-                                             monkeypatch):
-    """With one unit per task (n_units <= defaultParallelism) every
-    unit boundary is a task boundary: the shipped predecessor planned
-    max must still catch a lying footer."""
-    pdf = _mk_pdf()
-    p = _write_pq(tmp_path, pdf, "lie2.parquet", 1000)
-    src = analyze.ParquetSource(spark, p)
-    real = analyze._plan_sorted_units(src, "pos")
-    assert real is not None
-    assert 4 <= len(real) <= spark.sparkContext.defaultParallelism
-    # claim unit 1 covers a range ABOVE unit 2 (swap plan positions but
-    # keep each unit's shipped pmax consistent with the lying plan)
-    lied = list(real)
-    (f1, g1, _), (f2, g2, _) = lied[1], lied[2]
-    lied[1] = (f2, g2, lied[1][2])
-    lied[2] = (f1, g1, lied[2][2])
-    monkeypatch.setattr(analyze, "_plan_sorted_units",
-                        lambda *_a, **_k: lied)
-    fast = analyze._ranged_parquet(src, ["ch"], ["pos"])
-    assert fast is not None
-    with pytest.raises(Exception, match="overlaps its predecessor"):
-        fast.count()
 
 
 def test_column_codec_stats_nullable_int(spark):

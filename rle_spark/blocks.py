@@ -70,8 +70,3 @@ def decode_block(buf: bytes) -> np.ndarray:
     name, n_tokens, body = unframe_payload(buf)
     return REGISTRY[name].decode(body, n_tokens)
 
-
-def split_docs(tokens: np.ndarray, doc_lens: np.ndarray) -> list[np.ndarray]:
-    """Slice a concatenated block back into per-doc arrays."""
-    bounds = np.cumsum(doc_lens)[:-1]
-    return np.split(tokens, bounds)

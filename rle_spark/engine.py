@@ -15,13 +15,20 @@ Scale design (100 TB / 10^12 sequences):
     regardless of source skew (books-like sources with 1000x longer
     docs get proportionally more buckets; the doc-hash spreads them).
   * exactly ONE shuffle (the repartition by source+bucket); encode,
-    framing and manifest stats all ride map-side on top of it.
+    framing, the block write and the lineage rollup all ride map-side
+    on top of it.
   * blocks are bounded (`block_tokens`), so executor memory needs are
     O(block) not O(partition); Arrow streams batches through the UDF.
-  * resume: blocks land under parquet partitions source=/bucket=;
-    dynamic partition overwrite makes re-running a failed job
-    idempotent, and committed (source,bucket) pairs recorded in the
-    manifest are skipped entirely (SURVEY.md §7.1 step 7).
+  * no Spark block write: encode_table runs the kernel straight into
+    the block sink (sources._sink_task), which writes each task's
+    files from Python with an atomic rename per file, so the payloads
+    never return to the JVM. Clustered blocks land under Spark's
+    source=/bucket= partition dirs, one file per pair.
+  * resume: the manifest is folded on the driver from the per-file
+    lineage; committed (source,bucket) pairs recorded in it are
+    skipped entirely and their files kept (SURVEY.md §7.1 step 7),
+    every other file is rewritten, so re-running a failed job is
+    idempotent without dynamic partition overwrite.
 """
 
 from __future__ import annotations
@@ -392,88 +399,88 @@ def encode_dataframe(df: DataFrame, cfg: EngineConfig | None = None) -> DataFram
 
     Lazy: returns the block DataFrame; one shuffle (source, bucket).
     """
-    return _encode_plan(df, cfg or EngineConfig())
+    cfg = cfg or EngineConfig()
+    mapside = cfg.layout == "mapside"
+    return _encode_input(df, cfg).mapInArrow(
+        _encode_iter_factory(cfg, mapside), BLOCK_SCHEMA_DDL)
 
 
-def _encode_plan(df: DataFrame, cfg: EngineConfig,
-                 done: DataFrame | None = None) -> DataFrame:
-    """The one encode plan: mapside runs the kernel over the scan
-    partitions; clustered buckets, drops the (source, bucket) pairs in
-    `done` (resume), and shuffles before the kernel."""
+def _encode_input(df: DataFrame, cfg: EngineConfig,
+                  done: DataFrame | None = None) -> DataFrame:
+    """What the encode kernel runs over: mapside, the scan partitions
+    as they are; clustered, the rows bucketed, without the (source,
+    bucket) pairs in `done` (resume), shuffled to one partition per
+    pair."""
     if cfg.layout == "mapside":
-        return df.mapInArrow(_encode_iter_factory(cfg, mapside=True),
-                             BLOCK_SCHEMA_DDL)
+        return df
     buckets = bucket_counts(df, cfg)
     bucketed = apply_buckets(df, buckets)
     if done is not None:
         bucketed = bucketed.join(F.broadcast(done), ["source", "bucket"],
                                  "left_anti")
-    return _arrange(bucketed, buckets).mapInArrow(_encode_iter_factory(cfg),
-                                                  BLOCK_SCHEMA_DDL)
+    return _arrange(bucketed, buckets)
 
 
 def encode_table(spark: SparkSession, df: DataFrame, out_dir: str,
                  cfg: EngineConfig | None = None, resume: bool = True) -> dict:
-    """Full encode job: blocks + manifest on disk, idempotent resume.
+    """Full encode job: blocks, lineage and manifest on disk, idempotent
+    resume. The kernel's blocks go straight into the block sink
+    (sources._sink_task) in the same task: mapside writes one file per
+    scan split (blocks/part-<pid>.parquet); clustered writes one file
+    per (source, bucket) under source=/bucket= dirs, so reads prune
+    partitions. resume=True skips the (source, bucket) pairs the
+    manifest records and keeps their files; everything else under
+    blocks/ and lineage/ is rewritten.
 
     Returns a summary dict (ratio, bytes, skipped partitions).
     """
+    from .sources import (_TOTALS_DDL, _clear_outputs, _commit_manifest,
+                          _partition_dir, _sink_task)
     cfg = cfg or EngineConfig()
-    blocks_path = os.path.join(out_dir, "blocks")
+    mapside = cfg.layout == "mapside"
     manifest_path = os.path.join(out_dir, "manifest")
 
-    done = None
-    skipped = 0
+    done, keep = None, set()
     if resume and os.path.exists(manifest_path):
-        if cfg.layout == "mapside":
+        if mapside:
             raise ValueError(
                 "resume over an existing manifest requires layout='clustered'"
                 " (mapside bucket ids are scan-split ordinals, not stable"
                 " keys to anti-join on)")
         done = spark.read.parquet(manifest_path).select("source", "bucket")
-        skipped = done.count()
-
-    blocks = _encode_plan(df, cfg, done if skipped else None)
-    writer = (blocks.write.mode("overwrite")
-              .option("compression", cfg.parquet_codec))
-    if cfg.layout != "mapside":
-        # clustered layout: physical source=/bucket= dirs give partition
-        # pruning + per-bucket idempotent overwrite (resume). mapside
-        # writes one file per scan split instead — the per-directory
-        # commit cost is serial at the driver and would dominate with
-        # thousands of (source, split) pairs; row-group stats on the
-        # source/bucket columns still prune reads.
-        writer = writer.partitionBy("source", "bucket")
-    writer.parquet(blocks_path)
-
-    refresh_manifest(spark, out_dir)
-    return {**manifest_summary(spark, out_dir),
-            "skipped_partitions": int(skipped)}
+        keep = {_partition_dir(r["source"], r["bucket"])
+                for r in done.collect()}
+    kernel, codec = _encode_iter_factory(cfg, mapside), cfg.parquet_codec
+    job = _encode_input(df, cfg, done if keep else None).mapInArrow(
+        lambda batches: _sink_task(out_dir, codec, kernel(batches),
+                                   by_key=not mapside), _TOTALS_DDL)
+    _clear_outputs(out_dir, keep)
+    job.collect()
+    return {**_commit_manifest(spark, out_dir),
+            "skipped_partitions": len(keep)}
 
 
-def manifest_summary(spark: SparkSession, out_dir: str) -> dict:
+def manifest_summary(out_dir: str) -> dict:
     """Corpus totals over <out_dir>/manifest: bytes, ratio, tokens, docs
-    (zeros and ratio 1.0 for an empty manifest)."""
-    row = (spark.read.parquet(os.path.join(out_dir, "manifest"))
-           .agg(F.sum("orig_bytes").alias("orig"),
-                F.sum("comp_bytes").alias("comp"),
-                F.sum("n_tokens").alias("n_tokens"),
-                F.sum("n_docs").alias("n_docs"))
-           .collect()[0])
-    orig, comp = int(row["orig"] or 0), int(row["comp"] or 0)
-    return {
-        "orig_bytes": orig,
-        "comp_bytes": comp,
-        "ratio": (comp / orig) if orig else 1.0,
-        "n_tokens": int(row["n_tokens"] or 0),
-        "n_docs": int(row["n_docs"] or 0),
-    }
+    (zeros and ratio 1.0 for an empty manifest). Read with pyarrow on
+    the driver: no Spark job."""
+    import pyarrow.parquet as pq
+    t = pq.read_table(os.path.join(out_dir, "manifest"),
+                      columns=["orig_bytes", "comp_bytes", "n_tokens",
+                               "n_docs"])
+    orig, comp, n_tokens, n_docs = (sum(t.column(i).to_pylist())
+                                    for i in range(4))
+    return {"orig_bytes": orig, "comp_bytes": comp,
+            "ratio": (comp / orig) if orig else 1.0,
+            "n_tokens": n_tokens, "n_docs": n_docs}
 
 
 def refresh_manifest(spark: SparkSession, out_dir: str) -> None:
-    """(Re)build <out_dir>/manifest from the committed block files —
-    ground truth, not the lazy plan; also the recovery path after a
-    partially-failed or streaming-appended write."""
+    """(Re)build <out_dir>/manifest by a Spark rescan of the committed
+    block files — ground truth. The recovery path when the lineage
+    doesn't cover the blocks (a crash window, dirs written before the
+    block sink) and after compaction; the writers fold the manifest
+    from lineage instead (sources.manifest_from_lineage)."""
     blocks_path = os.path.join(out_dir, "blocks")
     manifest_path = os.path.join(out_dir, "manifest")
     on_disk = spark.read.schema(BLOCK_SCHEMA_DDL).parquet(blocks_path)

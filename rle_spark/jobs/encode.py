@@ -12,9 +12,15 @@ Cluster:
         --block-tokens 262144 --target-bucket-tokens 8388608
 
 Input schema: (doc_id string, tokens array<int>, n_tok int, source
-string) — BASELINE.json input_hint. The job is resumable: committed
-(source,bucket) partitions recorded in <output>/manifest are skipped
-on re-run (idempotent after executor/driver loss).
+string) — BASELINE.json input_hint. Both layouts write blocks, lineage
+and a manifest through the engine's one block sink, and both resume:
+--layout clustered (encode_table) skips the (source,bucket) partitions
+recorded in <output>/manifest; --layout mapside
+(sources.encode_parquet_dir_direct: tasks read their own parquet row
+groups with pyarrow) skips the task files already committed under the
+same split plan.
+The sink writes local or shared-filesystem paths (the mapside scan too),
+not object-store URIs.
 """
 
 from __future__ import annotations
@@ -34,19 +40,13 @@ def parse_args(argv):
                    default="balanced")
     p.add_argument("--layout", choices=["clustered", "mapside"],
                    default="clustered",
-                   help="clustered: shuffle to (source,bucket) partitions,"
-                        " resumable; mapside: zero-shuffle encode over the"
-                        " scan splits (source-clustered input)")
+                   help="clustered: shuffle to (source,bucket) partitions"
+                        " (encode_table); mapside: zero-shuffle encode of"
+                        " the input's parquet splits, tasks reading their"
+                        " own row groups (encode_parquet_dir_direct;"
+                        " source-clustered input)")
     p.add_argument("--codecs", default="",
                    help="comma-separated allow-list (default: all)")
-    p.add_argument("--transport", choices=["dataframe", "files"],
-                   default="dataframe",
-                   help="files: tasks read their own parquet row groups"
-                        " with pyarrow and write blocks python-side"
-                        " (rle_spark.sources — fastest for full-scan"
-                        " encode of a source-clustered corpus);"
-                        " dataframe: the Catalyst scan path"
-                        " (re-clustering, resume by bucket)")
     p.add_argument("--no-resume", action="store_true")
     p.add_argument("--local-cpus", type=int, default=0,
                    help="run on local[N] instead of an existing session")
@@ -76,14 +76,13 @@ def main(argv=None):
             effort=args.effort,
             allow=[c for c in args.codecs.split(",") if c]),
     )
-    if args.transport == "files":
+    if args.layout == "mapside":
         from rle_spark.sources import encode_parquet_dir_direct
         summary = encode_parquet_dir_direct(spark, args.input, args.output,
                                             cfg, resume=not args.no_resume)
     else:
-        df = spark.read.parquet(args.input)
-        summary = encode_table(spark, df, args.output, cfg,
-                               resume=not args.no_resume)
+        summary = encode_table(spark, spark.read.parquet(args.input),
+                               args.output, cfg, resume=not args.no_resume)
     print(json.dumps(summary))
     return 0
 

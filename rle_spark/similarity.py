@@ -3,8 +3,8 @@
 Two paths:
   * brute-force cosine top-k — exact baseline; JVM-side arithmetic
     via F.zip_with + F.aggregate (no Python in the hot path).
-  * LSH-bucketed ANN — random-hyperplane signatures restrict the
-    candidate set to matching buckets; the scale path (candidate
+  * LSH-bucketed near-duplicate pairs — random-hyperplane signatures
+    restrict the candidate set to matching buckets; the scale path (candidate
     generation is a hash-partition join on the bucket key, so work is
     proportional to bucket sizes, not N^2).
 """
@@ -69,43 +69,6 @@ def cosine_topk(emb: DataFrame, query_vec: list[float], k: int = 10,
     return (emb.select(F.col(id_col), sim.alias("cosine_sim"))
             .orderBy(F.col("cosine_sim").desc(), F.col(id_col))
             .limit(k))
-
-
-def hyperplane_signatures(emb: DataFrame, n_planes: int = 16, seed: int = 7,
-                          vec_col: str = "embedding",
-                          id_col: str = "vec_id") -> DataFrame:
-    """Random-hyperplane LSH signature (one int bucket per row).
-
-    sign(v . h_p) per plane packed into an int — cosine-similar vectors
-    collide with high probability. Planes are deterministic from the
-    seed so signatures are reproducible."""
-    dim = len(emb.select(vec_col).first()[0])
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((n_planes, dim))
-    sig = F.lit(0).cast("long")
-    for p in range(n_planes):
-        h = F.array(*[F.lit(float(x)) for x in planes[p]])
-        bit = F.when(_dot(F.col(vec_col), h) > 0, F.lit(1 << p)).otherwise(F.lit(0))
-        sig = sig.bitwiseOR(bit)
-    return emb.select(F.col(id_col), F.col(vec_col), sig.alias("bucket"))
-
-
-def ann_topk_lsh(emb: DataFrame, query_vec: list[float], k: int = 10,
-                 n_planes: int = 8, seed: int = 7,
-                 vec_col: str = "embedding", id_col: str = "vec_id") -> DataFrame:
-    """Approximate top-k: brute-force cosine restricted to the query's
-    LSH bucket. Recall grows with fewer planes / multiple tables; this
-    single-table variant is the benchmark shape."""
-    sigs = hyperplane_signatures(emb, n_planes, seed, vec_col, id_col)
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((n_planes, len(query_vec)))
-    qsig = 0
-    qv = np.asarray(query_vec, dtype=np.float64)
-    for p in range(n_planes):
-        if float(planes[p] @ qv) > 0:
-            qsig |= 1 << p
-    cand = sigs.filter(F.col("bucket") == qsig)
-    return cosine_topk(cand, query_vec, k, vec_col, id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -283,7 +246,7 @@ def quantize_embeddings(emb: DataFrame, vec_col: str = "embedding",
     """(vec_id, scale double, qvec array<int>) with q in [-127, 127].
 
     scale = max|x| / 127 per vector; zero vectors quantize to zeros
-    with scale 0 (dequantize handles it)."""
+    with scale 0."""
     x = F.transform(F.col(vec_col), lambda v: F.abs(v.cast("double")))
     maxabs = F.array_max(x)
     scale = (maxabs / F.lit(127.0)).alias("scale")
@@ -293,11 +256,6 @@ def quantize_embeddings(emb: DataFrame, vec_col: str = "embedding",
                     lambda v: F.floor(v.cast("double") * F.lit(127.0)
                                       / maxabs + F.lit(0.5)).cast("int")))
     return emb.select(F.col(id_col).alias("vec_id"), scale, q.alias("qvec"))
-
-
-def dequantize_expr(qvec, scale):
-    """array<double> back from (qvec, scale) — error <= scale/2/elem."""
-    return F.transform(qvec, lambda v: v.cast("double") * scale)
 
 
 def quantize_summary(emb: DataFrame, vec_col: str = "embedding",

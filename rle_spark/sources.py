@@ -26,13 +26,20 @@ task-file write). Entry points and their sinks:
 
   encode_parquet_dir_summary  token splits -> encode kernel -> block
                               metadata rows (payload dropped in-task)
-  encode_parquet_dir_direct   token splits -> encode kernel -> one
-                              parquet file + lineage JSON per task,
-                              manifest folded from the lineage
+  encode_parquet_dir_direct   token splits -> encode kernel -> the
+                              block sink: one parquet file + lineage
+                              JSON per task, manifest folded from the
+                              lineage
   decode_parquet_dir          block splits -> decode kernel ->
                               (doc_id, tokens) rows
   decode_parquet_dir_summary  block splits -> per-block decode ->
                               per-task (n_docs, n_tokens)
+
+The block sink (`_sink_task`, then `_commit_manifest` on the driver)
+is every encode writer's sink, not only the direct writer's:
+engine.encode_table runs it over a DataFrame source (mapside: one file
+per task; clustered: one file per (source, bucket) in Spark's
+source=/bucket= layout) and streaming runs it per micro-batch epoch.
 
 The codec kernels are byte-for-byte the ones the DataFrame path uses
 (engine._encode_iter_factory, engine._decode_iter) — this module only
@@ -43,6 +50,7 @@ from __future__ import annotations
 
 import glob
 import os
+import shutil
 from collections import deque
 from concurrent.futures import ThreadPoolExecutor
 from contextlib import closing
@@ -51,7 +59,8 @@ from itertools import count
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .engine import EngineConfig, _encode_iter_factory, refresh_manifest
+from . import engine
+from .engine import EngineConfig, _encode_iter_factory
 from .memtune import lazy_zip_invalidation
 
 _READ_COLUMNS = ["doc_id", "tokens", "source"]
@@ -212,8 +221,12 @@ def parquet_files(root: str) -> list[str]:
     component below it (a crashed compaction's _blocks_old staging copy,
     an in-flight .tmp dir) — recursive '**' would otherwise traverse
     those and read duplicate data."""
+    return _visible_files(root, ".parquet")
+
+
+def _visible_files(root: str, suffix: str) -> list[str]:
     return sorted(p for p in glob.glob(
-        os.path.join(root, "**", "*.parquet"), recursive=True)
+        os.path.join(root, "**", "*" + suffix), recursive=True)
         if not any(part.startswith((".", "_"))
                    for part in os.path.relpath(p, root).split(os.sep)))
 
@@ -302,80 +315,229 @@ def encode_parquet_dir_summary(spark: SparkSession, src_dir: str,
                        target_split_bytes, n_tasks)[0]
 
 
+_TOTAL_COLS = ["n_blocks", "n_docs", "n_tokens", "orig_bytes", "comp_bytes"]
+_TOTALS_DDL = ", ".join(f"{c} long" for c in _TOTAL_COLS)
+_ROLL_COLS = ["source", "bucket", "codec", *_TOTAL_COLS[1:]]
+# the characters Spark's partition writer percent-escapes in a
+# directory name (ExternalCatalogUtils.escapePathName, non-Windows)
+_ESCAPED = frozenset(map(chr, range(1, 32))) | frozenset('"#%\'*/:=?[\\]^{\x7f')
+
+
+def _partition_dir(source: str, bucket: int) -> str:
+    """The directory Spark's partitionBy("source", "bucket") writes a
+    key to, so Spark's reader finds the same partition values."""
+    s = ("".join(f"%{ord(c):02X}" if c in _ESCAPED else c for c in source)
+         if source else "__HIVE_DEFAULT_PARTITION__")
+    return os.path.join(f"source={s}", f"bucket={bucket}")
+
+
+def _key_runs(rb):
+    """(source, bucket) and zero-copy slice of each run of equal keys."""
+    keys = list(zip(rb.column("source").to_pylist(),
+                    rb.column("bucket").to_pylist()))
+    starts = [i for i in range(len(keys)) if i == 0 or keys[i] != keys[i - 1]]
+    for a, b in zip(starts, starts[1:] + [len(keys)]):
+        yield keys[a], rb.slice(a, b - a)
+
+
+def _roll(groups: dict, tbl) -> None:
+    """Add a batch's blocks to a per-(source, bucket, codec) rollup of
+    [n_blocks, n_docs, n_tokens, orig_bytes, comp_bytes]."""
+    for s, b, c, *vals in zip(*(tbl.column(c).to_pylist()
+                                for c in _ROLL_COLS)):
+        g = groups.setdefault((s, int(b), c), [0] * 5)
+        for i, v in enumerate((1, *vals)):
+            g[i] += int(v)
+
+
+def _sink_task(out_dir: str, codec: str, blocks, subdir: str = "",
+               by_key: bool = False, id_prefix: str = "", **lineage):
+    """The one block sink, run inside a task over the encode kernel's
+    (unstarted) block batches `blocks`; yields the task's one totals
+    row. Every encode writer commits through it:
+
+      encode_parquet_dir_direct, encode_table mapside
+                          blocks/part-<pid>.parquet
+      streaming epochs    blocks/epoch=<N>/part-<pid>.parquet (subdir;
+                          id_prefix e<N>: goes before every block_id)
+      encode_table clustered (by_key)
+                          blocks/source=<S>/bucket=<B>/part-00000.parquet,
+                          one file per key without the source and
+                          bucket columns, as partitionBy writes them
+
+    Files are PLAIN parquet, written behind the kernel on the
+    `_bounded_thread` helper, into a tmp named after the task attempt
+    (a speculative duplicate never writes into the live attempt's
+    tmp) and committed by an atomic os.replace, so a re-run or a
+    duplicate overwrites rather than duplicates. Then each file's
+    lineage JSON commits the same way at the mirrored path under
+    lineage/: its totals, its per-(source, bucket, codec) rollup (what
+    manifest_from_lineage folds), task_wall_sec and the `lineage`
+    keyword fields. A task whose one file is already committed skips
+    the kernel; a crash between the data and lineage commits heals
+    there, from the committed file's metadata columns."""
+    import json
+    import time
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    from pyspark import TaskContext
+    t0 = time.time()
+    tc = TaskContext.get()
+    pid = tc.partitionId() if tc is not None else 0
+    attempt = tc.taskAttemptId() if tc is not None else 0
+    blocks_dir = os.path.join(out_dir, "blocks")
+    lineage_dir = os.path.join(out_dir, "lineage")
+
+    def tmp_of(path):
+        d, f = os.path.split(path)
+        return os.path.join(d, f".{f}.{attempt}.tmp")
+
+    # rel path under blocks/ -> [writer, rollup, tmp (None: committed)]
+    files: dict[str, list] = {}
+
+    def write(f, rb):
+        if f[0] is None:
+            # PLAIN, no dictionary pages: a payload is already a
+            # compressed stream, so a dictionary over its first
+            # 0.5-1 MB of values saves nothing (file bytes over raw
+            # 0.9696 -> 0.9693 on incompressible blocks) and costs on
+            # both sides; on a 31 MB task file the block scan took
+            # 53 -> 41 ms and the write 80 -> 60-67 ms (4-cpu host)
+            os.makedirs(os.path.dirname(f[2]), exist_ok=True)
+            f[0] = pq.ParquetWriter(f[2], rb.schema, compression=codec,
+                                    use_dictionary=False)
+        f[0].write_batch(rb)
+
+    def writes():
+        for rb in blocks:
+            if id_prefix:
+                rb = rb.set_column(0, "block_id", pc.binary_join_element_wise(
+                    id_prefix, rb.column("block_id"), ""))
+            for key, part in (_key_runs(rb) if by_key else [(None, rb)]):
+                rel = (os.path.join(_partition_dir(*key), "part-00000.parquet")
+                       if by_key else task_file)
+                f = files.setdefault(
+                    rel, [None, {}, tmp_of(os.path.join(blocks_dir, rel))])
+                _roll(f[1], part)
+                yield partial(write, f, part.drop_columns(["source", "bucket"])
+                              if by_key else part)
+
+    task_file = os.path.join(subdir, f"part-{pid:05d}.parquet")
+    if not by_key and os.path.exists(os.path.join(blocks_dir, task_file)):
+        blocks.close()
+        files[task_file] = [None, {}, None]
+        _roll(files[task_file][1], pq.read_table(
+            os.path.join(blocks_dir, task_file), columns=_ROLL_COLS))
+    else:
+        # write-behind: the parquet write (zstd releases the GIL)
+        # overlaps the kernel; a writer error re-raises here, before
+        # the atomic rename can commit a broken file
+        try:
+            for _ in _bounded_thread(writes(), _WRITE_BEHIND_DEPTH):
+                pass
+        finally:
+            for f in files.values():
+                if f[0] is not None:
+                    f[0].close()
+    for rel, (_, groups, tmp) in files.items():
+        sums = [sum(g[i] for g in groups.values()) for i in range(5)]
+        lin = os.path.join(lineage_dir, rel[:-len(".parquet")] + ".json")
+        if tmp is not None:
+            os.replace(tmp, os.path.join(blocks_dir, rel))
+        elif os.path.exists(lin):
+            continue
+        rec = {"file": rel, **lineage, **dict(zip(_TOTAL_COLS, sums)),
+               "task_wall_sec": round(time.time() - t0, 3),
+               "groups": [[s, b, c, *v]
+                          for (s, b, c), v in sorted(groups.items())]}
+        os.makedirs(os.path.dirname(lin), exist_ok=True)
+        with open(tmp_of(lin), "w") as fh:
+            json.dump(rec, fh)
+        os.replace(tmp_of(lin), lin)
+    yield pa.record_batch(
+        [pa.array([sum(g[i] for f in files.values() for g in f[1].values())],
+                  pa.int64()) for i in range(5)], names=_TOTAL_COLS)
+
+
+def _clear_outputs(out_dir: str, keep=frozenset()) -> None:
+    """Ready <out_dir>/blocks and <out_dir>/lineage for a run: delete
+    every attempt tmp, and every file outside the directories `keep`
+    names relative to both ("." keeps a flat layout's committed files,
+    a clustered resume keeps its skipped keys' dirs)."""
+    for sub in ("blocks", "lineage"):
+        root = os.path.join(out_dir, sub)
+        for dp, _, fs in os.walk(root, topdown=False):
+            kept = os.path.relpath(dp, root) in keep
+            for f in fs:
+                if not kept or f.endswith(".tmp"):
+                    os.remove(os.path.join(dp, f))
+            if dp != root and not os.listdir(dp):
+                os.rmdir(dp)
+        os.makedirs(root, exist_ok=True)
+
+
 def manifest_from_lineage(out_dir: str) -> bool:
-    """Assemble <out_dir>/manifest driver-side from the per-task lineage
-    records the direct writer commits alongside each block file — O(tasks)
-    tiny JSONs instead of a post-job Spark rescan of every written block
-    (at 100 TB the rescan is a full metadata pass over the sink; the
-    lineage fold is what an Iceberg/Delta commit does). Returns False —
-    caller falls back to refresh_manifest's authoritative rescan — when
-    the lineage doesn't exactly cover the committed files (pre-rollup
-    lineage, a non-flat/mixed blocks layout, or a crash window)."""
+    """Assemble <out_dir>/manifest driver-side from the lineage records
+    the sink commits beside each block file — O(files) tiny JSONs
+    instead of a post-job Spark rescan of every written block (at
+    100 TB the rescan is a full metadata pass over the sink; the
+    lineage fold is what an Iceberg/Delta commit does). A record's
+    `file` is its block file's path under blocks/, so flat, epoch and
+    source=/bucket= layouts fold alike. Returns False — the caller
+    falls back to refresh_manifest's authoritative rescan — when the
+    lineage doesn't exactly cover the committed files (pre-rollup
+    lineage, blocks written without lineage, compacted blocks, or a
+    crash window)."""
     import json
     import pyarrow as pa
     import pyarrow.parquet as pq
     from . import __version__
     blocks_dir = os.path.join(out_dir, "blocks")
     lineage_dir = os.path.join(out_dir, "lineage")
-    try:
-        entries = sorted(os.listdir(blocks_dir))
-    except OSError:
-        return False
-    parts = []
-    for e in entries:
-        if e.startswith((".", "_")):
-            continue  # hidden tmp / marker — invisible to readers too
-        if os.path.isdir(os.path.join(blocks_dir, e)):
-            return False  # partitioned/mixed layout: lineage can't cover
-        if e.endswith(".parquet"):
-            parts.append(e)
     agg: dict[tuple, list] = {}
     covered = set()
-    for e in sorted(os.listdir(lineage_dir)) if os.path.isdir(lineage_dir) \
-            else []:
-        if not e.endswith(".json"):
-            continue
+    for path in _visible_files(lineage_dir, ".json"):
         try:
-            rec = json.load(open(os.path.join(lineage_dir, e)))
+            with open(path) as fh:
+                rec = json.load(fh)
         except (ValueError, OSError):
             return False
         if "groups" not in rec:
             return False  # pre-rollup lineage
         covered.add(rec.get("file"))
-        for s, b, c, nb, nd, nt, ob, cb in rec["groups"]:
+        for s, b, c, *vals in rec["groups"]:
             g = agg.setdefault((s, int(b)), [0, 0, 0, 0, 0, {}])
-            g[0] += nb
-            g[1] += nd
-            g[2] += nt
-            g[3] += ob
-            g[4] += cb
-            g[5][c] = g[5].get(c, 0) + nb
-    if covered != set(parts):
+            for i, v in enumerate(vals):
+                g[i] += v
+            g[5][c] = g[5].get(c, 0) + vals[0]
+    if covered != {os.path.relpath(p, blocks_dir)
+                   for p in parquet_files(blocks_dir)}:
         return False  # stale or missing lineage: rescan instead
-    keys = sorted(agg)
-    table = pa.table({
-        "source": pa.array([k[0] for k in keys], pa.string()),
-        "bucket": pa.array([k[1] for k in keys], pa.int32()),
-        "n_blocks": pa.array([agg[k][0] for k in keys], pa.int64()),
-        "n_docs": pa.array([agg[k][1] for k in keys], pa.int64()),
-        "n_tokens": pa.array([agg[k][2] for k in keys], pa.int64()),
-        "orig_bytes": pa.array([agg[k][3] for k in keys], pa.int64()),
-        "comp_bytes": pa.array([agg[k][4] for k in keys], pa.int64()),
-        "codecs": pa.array([sorted(agg[k][5].items()) for k in keys],
-                           pa.map_(pa.string(), pa.int64())),
-        "engine_version": pa.array([__version__] * len(keys), pa.string()),
-    })
+    schema = pa.schema([("source", pa.string()), ("bucket", pa.int32()),
+                        *[(c, pa.int64()) for c in _TOTAL_COLS],
+                        ("codecs", pa.map_(pa.string(), pa.int64())),
+                        ("engine_version", pa.string())])
+    table = pa.Table.from_pylist([
+        {"source": s, "bucket": b, **dict(zip(_TOTAL_COLS, g)),
+         "codecs": sorted(g[5].items()), "engine_version": __version__}
+        for (s, b), g in sorted(agg.items())], schema=schema)
     manifest_dir = os.path.join(out_dir, "manifest")
-    os.makedirs(manifest_dir, exist_ok=True)
-    for f in glob.glob(os.path.join(manifest_dir, "*")):
-        os.remove(f)
+    shutil.rmtree(manifest_dir, ignore_errors=True)  # with Spark's .crc files
+    os.makedirs(manifest_dir)
     tmp = os.path.join(manifest_dir, ".manifest.tmp")
     pq.write_table(table, tmp)
     os.replace(tmp, os.path.join(manifest_dir, "part-00000.parquet"))
     return True
 
 
-_TOTAL_COLS = ["n_blocks", "n_docs", "n_tokens", "orig_bytes", "comp_bytes"]
+def _commit_manifest(spark: SparkSession, out_dir: str) -> dict:
+    """Every encode writer's last step: fold the manifest from lineage
+    (the authoritative rescan when lineage doesn't cover the blocks)
+    and return the corpus totals."""
+    if not manifest_from_lineage(out_dir):
+        engine.refresh_manifest(spark, out_dir)
+    return engine.manifest_summary(out_dir)
 
 
 def encode_parquet_dir_direct(spark: SparkSession, src_dir: str,
@@ -385,17 +547,14 @@ def encode_parquet_dir_direct(spark: SparkSession, src_dir: str,
                               n_tasks: int | None = None,
                               resume: bool = False) -> dict:
     """Full encode job with PYTHON-SIDE block writes: each task streams
-    its encoded block batches into its own parquet file
-    (blocks/part-<task>.parquet, written atomically via temp+rename)
-    and returns only per-task totals — the compressed payload never
-    crosses the Arrow IPC boundary back to the JVM, which measured
-    ~2x the whole kernel cost on this host. This is also the at-scale
-    sink shape: executors write straight to object storage, the driver
-    only aggregates manifests. Deterministic task file names make a
-    re-run (or a speculative duplicate attempt) overwrite, not
-    duplicate. The manifest is folded from the per-task lineage
-    records (or rebuilt from the committed files when they don't
-    cover them).
+    its encoded block batches through the sink (`_sink_task`) into
+    its own file blocks/part-<task>.parquet and returns only its
+    totals — the compressed payload never crosses the Arrow IPC
+    boundary back to the JVM, which measured ~2x the whole kernel
+    cost on this host. This is also the at-scale sink shape:
+    executors write straight to storage, the driver only folds
+    manifests. Each task's lineage also names the input splits it
+    consumed.
 
     resume=True: an interrupted job (executor/driver loss mid-write)
     re-runs skipping every task whose committed file already exists —
@@ -408,108 +567,13 @@ def encode_parquet_dir_direct(spark: SparkSession, src_dir: str,
     import hashlib
     import json
     cfg = cfg or EngineConfig(layout="mapside")
-    blocks_dir = os.path.join(out_dir, "blocks")
-    lineage_dir = os.path.join(out_dir, "lineage")
     encode = _file_encode_iter(cfg)
-    codec = cfg.parquet_codec
-
-    def it(splits):
-        import time
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark import TaskContext
-        task_t0 = time.time()
-        tc = TaskContext.get()
-        pid = tc.partitionId() if tc is not None else 0
-        # attempt-scoped tmp name: a speculative/zombie duplicate attempt
-        # must never write into the same tmp file the live attempt is
-        # streaming to; whichever attempt finishes last commits its OWN
-        # complete file via the atomic rename
-        attempt = tc.taskAttemptId() if tc is not None else 0
-        tmp = os.path.join(blocks_dir, f".part-{pid:05d}.{attempt}.tmp")
-        final = os.path.join(blocks_dir, f"part-{pid:05d}.parquet")
-        lineage = os.path.join(lineage_dir, f"part-{pid:05d}.json")
-        # per-(source, bucket, codec) rollup — O(blocks) per task; lets
-        # the driver assemble the manifest from the lineage records with
-        # NO post-job Spark rescan of the blocks
-        groups: dict[tuple, list] = {}
-
-        def roll(tbl):
-            cols = [tbl.column(c).to_pylist()
-                    for c in ("source", "bucket", "codec", *_TOTAL_COLS[1:])]
-            for s, b, c, *vals in zip(*cols):
-                g = groups.setdefault((s, int(b), c), [0, 0, 0, 0, 0])
-                g[0] += 1
-                for i, v in enumerate(vals, 1):
-                    g[i] += int(v)
-
-        if os.path.exists(final):
-            # committed by a previous attempt: skip the encode. A crash
-            # between the data commit and the lineage commit heals here:
-            # the rollup is rebuilt from the committed file's metadata
-            # columns and the lineage re-written.
-            roll(pq.read_table(final, columns=["source", "bucket", "codec",
-                                               *_TOTAL_COLS[1:]]))
-            commit = not os.path.exists(lineage)
-        else:
-            writer = None
-
-            def write(rb):
-                nonlocal writer
-                if writer is None:
-                    # PLAIN, no dictionary pages: a payload is already a
-                    # compressed stream, so a dictionary over its first
-                    # 0.5-1 MB of values saves nothing (file bytes over
-                    # raw 0.9696 -> 0.9693 on incompressible blocks) and
-                    # costs on both sides; on a 31 MB task file the
-                    # block scan took 53 -> 41 ms and the write 80 ->
-                    # 60-67 ms (4-cpu host). The Spark writers' payload
-                    # column is PLAIN too, by parquet-mr's dictionary
-                    # fallback.
-                    writer = pq.ParquetWriter(tmp, rb.schema,
-                                              compression=codec,
-                                              use_dictionary=False)
-                writer.write_batch(rb)
-
-            def writes():
-                for rb in encode(splits):
-                    roll(rb)
-                    yield partial(write, rb)
-
-            # write-behind: the parquet write (zstd releases the GIL)
-            # overlaps the kernel; a writer error re-raises here, before
-            # the atomic rename can commit a broken file
-            try:
-                for _ in _bounded_thread(writes(), _WRITE_BEHIND_DEPTH):
-                    pass
-            finally:
-                if writer is not None:
-                    writer.close()
-            commit = writer is not None
-            if commit:
-                os.replace(tmp, final)  # atomic commit of this task's file
-        totals = [sum(g[i] for g in groups.values()) for i in range(5)]
-        if commit:
-            # per-task LINEAGE (atomic like the data): which input splits
-            # produced the file, its metrics and per-codec rollup, and
-            # task_wall_sec — the skew audit (which task straggled)
-            # without any cluster-UI scrape
-            rec = {"file": os.path.basename(final),
-                   "splits": [list(s) for s in splits],
-                   **dict(zip(_TOTAL_COLS, totals)),
-                   "task_wall_sec": round(time.time() - task_t0, 3),
-                   "groups": [[s, b, c, *v]
-                              for (s, b, c), v in sorted(groups.items())]}
-            ltmp = os.path.join(lineage_dir, f".part-{pid:05d}.tmp")
-            with open(ltmp, "w") as fh:
-                json.dump(rec, fh)
-            os.replace(ltmp, lineage)
-        yield pa.record_batch([pa.array([x], pa.int64()) for x in totals],
-                              names=_TOTAL_COLS)
 
     job, units, n_tasks = _map_splits(
-        spark, src_dir, it, ", ".join(f"{c} long" for c in _TOTAL_COLS),
-        target_split_bytes, n_tasks)
+        spark, src_dir, lambda splits: _sink_task(
+            out_dir, cfg.parquet_codec, encode(splits),
+            splits=[list(s) for s in splits]),
+        _TOTALS_DDL, target_split_bytes, n_tasks)
     # The FULL EngineConfig (selector effort/allow-list, parquet codec,
     # layout, ...) is in the fingerprint: resuming after any
     # codec-affecting settings change must take the clean-rewrite path,
@@ -521,36 +585,18 @@ def encode_parquet_dir_direct(spark: SparkSession, src_dir: str,
                    sort_keys=True).encode()
     ).hexdigest()
     plan_path = os.path.join(out_dir, "encode_plan.json")
-    prev_sig = None
-    if os.path.exists(plan_path):
-        try:
-            prev_sig = json.load(open(plan_path)).get("sig")
-        except (ValueError, OSError):
-            prev_sig = None
-    os.makedirs(blocks_dir, exist_ok=True)
-    os.makedirs(lineage_dir, exist_ok=True)
-    # uncommitted attempt tmps are garbage under any plan
-    for f in glob.glob(os.path.join(blocks_dir, ".part-*")):
-        os.remove(f)
-    if not (resume and prev_sig == plan_sig):
-        # clean rewrite: drop every stale part/lineage file
-        for f in (glob.glob(os.path.join(blocks_dir, "*.parquet"))
-                  + glob.glob(os.path.join(lineage_dir, "*"))):
-            os.remove(f)
+    try:
+        with open(plan_path) as fh:
+            prev_sig = json.load(fh).get("sig")
+    except (ValueError, OSError):
+        prev_sig = None
+    _clear_outputs(out_dir, {"."} if resume and prev_sig == plan_sig
+                   else frozenset())
     with open(plan_path, "w") as fh:
         json.dump({"sig": plan_sig, "n_tasks": n_tasks,
                    "n_units": len(units)}, fh)
-
-    # one row per task, summed here rather than in a second stage
-    rows = job.collect()
-    if not manifest_from_lineage(out_dir):
-        refresh_manifest(spark, out_dir)  # lineage gap: authoritative rescan
-    orig, comp, n_tokens, n_docs = (
-        sum(r[c] for r in rows)
-        for c in ("orig_bytes", "comp_bytes", "n_tokens", "n_docs"))
-    return {"orig_bytes": orig, "comp_bytes": comp,
-            "ratio": (comp / orig) if orig else 1.0,
-            "n_tokens": n_tokens, "n_docs": n_docs}
+    job.collect()
+    return _commit_manifest(spark, out_dir)
 
 
 def decode_parquet_dir(spark: SparkSession, out_dir: str,

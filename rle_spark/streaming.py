@@ -5,31 +5,48 @@ The reference is a batch library with no streaming surface
 (/root/reference/src/main.c — single whole-file read), so this module
 is the Spark-native extension for continuous training-data ingest:
 new parquet files landing under the input path are encoded per
-micro-batch with the SAME mapside encode plan the batch engine uses
-(engine.encode_dataframe), appended to <out>/blocks, and the
-manifest is rebuilt from the committed files.
+micro-batch by the batch engine's mapside kernel, written through
+the same block sink as every other encode writer
+(sources._sink_task), and the manifest is folded from the sink's
+lineage on the driver (engine.refresh_manifest's rescan of the
+committed files is the fallback when lineage doesn't cover them, as
+after compact_blocks).
 
 Delivery semantics: the checkpoint gives each micro-batch a stable
 epoch id; each epoch writes to its OWN subdirectory
-(blocks/epoch=<id>) with overwrite, so a replayed epoch (write
-succeeded, checkpoint commit lost) rewrites the same directory
-instead of appending duplicate block files — exactly-once block
-identity without any read-side dedup. The manifest is always
-recomputed from what is actually on disk (engine.refresh_manifest),
-never incrementally guessed.
+(blocks/epoch=<id>, lineage/epoch=<id>), cleared before the epoch
+runs, so a replayed epoch (write succeeded, checkpoint commit lost)
+rewrites the same files instead of appending duplicates —
+exactly-once block identity without any read-side dedup.
 """
 
 from __future__ import annotations
 
-import dataclasses
 import os
+import shutil
+from functools import partial
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from .blocks import BLOCK_SCHEMA_DDL
 from .datagen import TOKEN_SCHEMA_DDL
-from .engine import (EngineConfig, encode_dataframe, manifest_summary,
-                     refresh_manifest)
+from .engine import EngineConfig, _encode_iter_factory, refresh_manifest
+
+
+def _epoch(out_dir: str, cfg: EngineConfig, df: DataFrame,
+           epoch_id: int) -> None:
+    """One micro-batch: the mapside kernel over `df` into the block
+    sink under blocks/epoch=<epoch_id>, block ids prefixed e<id>:.
+    The epoch's block and lineage dirs are cleared first, so at-least-
+    once foreachBatch delivery never leaves duplicate block files."""
+    from .sources import _TOTALS_DDL, _sink_task
+    subdir = f"epoch={epoch_id}"
+    for sub in ("blocks", "lineage"):
+        shutil.rmtree(os.path.join(out_dir, sub, subdir), ignore_errors=True)
+    kernel = _encode_iter_factory(cfg, mapside=True)
+    df.mapInArrow(lambda batches: _sink_task(
+        out_dir, cfg.parquet_codec, kernel(batches), subdir=subdir,
+        id_prefix=f"e{epoch_id}:"), _TOTALS_DDL).collect()
 
 
 def encode_stream(spark: SparkSession, input_path: str, out_dir: str,
@@ -41,32 +58,16 @@ def encode_stream(spark: SparkSession, input_path: str, out_dir: str,
 
     With available_now=True the query drains everything currently in
     `input_path` and stops (the batch-backfill mode); otherwise it
-    keeps running and encodes new files as they land.
+    keeps running and encodes new files as they land. Every epoch runs
+    the mapside kernel (bucket ids are scan-split ordinals within the
+    epoch), whatever `cfg.layout` says.
     """
     cfg = cfg or EngineConfig(layout="mapside")
-    if cfg.layout != "mapside":
-        # the per-epoch kernel is mapside by construction (bucket ids
-        # are scan-split ordinals within the epoch); honor the caller's
-        # other knobs but never silently run a different layout
-        cfg = dataclasses.replace(cfg, layout="mapside")
-    blocks_path = os.path.join(out_dir, "blocks")
     checkpoint = checkpoint or os.path.join(out_dir, "_checkpoint")
-
     src = (spark.readStream.schema(TOKEN_SCHEMA_DDL)
            .option("maxFilesPerTrigger", str(max_files_per_trigger))
            .parquet(input_path))
-
-    def _epoch(df: DataFrame, epoch_id: int) -> None:
-        blocks = encode_dataframe(df, cfg).withColumn(
-            "block_id", F.concat(F.lit(f"e{epoch_id}:"), F.col("block_id")))
-        # epoch-scoped overwrite: a replayed epoch rewrites its own
-        # directory, so at-least-once foreachBatch delivery can never
-        # leave duplicate block files behind
-        (blocks.write.mode("overwrite")
-         .option("compression", cfg.parquet_codec)
-         .parquet(os.path.join(blocks_path, f"epoch={epoch_id}")))
-
-    writer = (src.writeStream.foreachBatch(_epoch)
+    writer = (src.writeStream.foreachBatch(partial(_epoch, out_dir, cfg))
               .option("checkpointLocation", checkpoint))
     if available_now:
         writer = writer.trigger(availableNow=True)
@@ -97,7 +98,6 @@ def compact_blocks(spark: SparkSession, out_dir: str,
     re-reading a half-empty table. Returns the number of files after
     compaction.
     """
-    import shutil
     blocks_path = os.path.join(out_dir, "blocks")
     staged = os.path.join(out_dir, "_blocks_compacting")
     hidden_new = os.path.join(blocks_path, ".compact_new")
@@ -128,7 +128,6 @@ def _finish_swap(blocks_path: str, old: str, hidden_new: str,
     (the staged write read everything then live). Move the live entries
     aside, promote, and only then drop the marker + old copies — this
     sequence is re-runnable from any crash point."""
-    import shutil
     os.makedirs(old, exist_ok=True)
     for entry in os.listdir(blocks_path):
         if not entry.startswith((".", "_")):
@@ -149,7 +148,6 @@ def recover_compaction(out_dir: str) -> bool:
     deleted unless the surviving full copy is verified on disk.
     Returns True when a recovery was performed.
     """
-    import shutil
     blocks_path = os.path.join(out_dir, "blocks")
     hidden_new = os.path.join(blocks_path, ".compact_new")
     old = os.path.join(out_dir, "_blocks_old")
@@ -175,9 +173,9 @@ def recover_compaction(out_dir: str) -> bool:
 def encode_stream_backfill(spark: SparkSession, input_path: str,
                            out_dir: str,
                            cfg: EngineConfig | None = None) -> dict:
-    """Drain the input path now, wait for completion, rebuild the
+    """Drain the input path now, wait for completion, fold the
     manifest, and return the batch-style summary."""
+    from .sources import _commit_manifest
     q = encode_stream(spark, input_path, out_dir, cfg, available_now=True)
     q.awaitTermination()
-    refresh_manifest(spark, out_dir)
-    return manifest_summary(spark, out_dir)
+    return _commit_manifest(spark, out_dir)

@@ -246,27 +246,52 @@ def test_partition_runs_empty(spark):
 def test_ref_rle8_size_fused_matches_exact_model(spark):
     """The fused kernel+driver chain of ref_rle8_size_v1 must equal
     codecs.refmodel.ref_rle_size_model_v1 on the same byte stream,
-    including under heavy task fragmentation (48 partitions) where
-    every candidate chain crosses task edges."""
+    including under heavy task fragmentation (48 range partitions)
+    where every candidate chain crosses task edges. AQE would coalesce
+    these small range shuffles into ONE task, so coalescing is off
+    here: with it on, no input below had a task edge at all."""
     from rle_spark.codecs.refmodel import ref_rle_size_model_v1
+
+    def model(chars):
+        return ref_rle_size_model_v1(chars.astype("U1").view(np.uint32)
+                                     .astype(np.uint8))
+
     rng = np.random.default_rng(17)
     # long runs (model-eligible), short runs, and literals mixed
     chars = np.repeat(np.array(list("ABC"))[rng.integers(0, 3, 900)],
                       rng.choice([1, 1, 2, 5, 9, 40, 300],
                                  900, p=[.3, .2, .2, .1, .1, .05, .05]))
     other = np.array(list("XY"))[rng.integers(0, 2, len(chars))]
-    pdf = pd.DataFrame({"pos": np.arange(len(chars)),
-                        "c1": chars, "c2": other})
-    df = spark.createDataFrame(pdf).repartition(48)
-    got = {r.col_name: r.model_bytes for r in
-           analyze.ref_rle8_size_v1(df, ["c1", "c2"], ["pos"]).collect()}
-    want = {
-        "c1": ref_rle_size_model_v1(chars.astype("U1").view(np.uint32)
-                                    .astype(np.uint8)),
-        "c2": ref_rle_size_model_v1(other.astype("U1").view(np.uint32)
-                                    .astype(np.uint8)),
-    }
-    assert got == want
+    # eligible runs (20 or 200 rows) between literal stretches of 50,
+    # 240 or 400 rows: copy gaps on both sides of 255, and task edges
+    # (~400 rows apart) inside eligible runs, so the gap to the next
+    # eligible run is measured from a run that crossed a task edge
+    rng = np.random.default_rng(23)
+    gaps = np.concatenate([
+        part for i in range(60)
+        for part in (np.repeat(["A", "B"][i % 2], rng.choice([20, 200])),
+                     np.tile(["X", "Y"], rng.choice([25, 120, 200])))])
+    conf = {"spark.sql.adaptive.coalescePartitions.enabled": "false",
+            "spark.sql.shuffle.partitions": "48"}
+    before = {k: spark.conf.get(k) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        df = spark.createDataFrame(pd.DataFrame({
+            "pos": np.arange(len(chars)), "c1": chars, "c2": other
+        })).repartition(48)
+        got = {r.col_name: r.model_bytes for r in
+               analyze.ref_rle8_size_v1(df, ["c1", "c2"], ["pos"]).collect()}
+        assert got == {"c1": model(chars), "c2": model(other)}
+        dfg = spark.createDataFrame(pd.DataFrame({
+            "pos": np.arange(len(gaps)), "c": gaps})).repartition(48)
+        assert analyze._ranged(dfg, ["c"], ["pos"]).select(
+            "pid").distinct().count() > 8
+        got = analyze.ref_rle8_size_v1(dfg, ["c"], ["pos"]).collect()
+        assert [r.model_bytes for r in got] == [model(gaps)]
+    finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)
 
 
 def test_ref_rle8_size_rejects_mixed_types(spark):

@@ -1,6 +1,7 @@
 """Spark end-to-end: encode -> decode bit-identical, manifests, resume
 (SURVEY.md §5 ported strategy items b & e)."""
 
+import glob
 import os
 import shutil
 
@@ -93,6 +94,11 @@ def test_resume_after_partial_manifest(spark, tokens_df, tmp_path_factory):
     manifest_path = os.path.join(out, "manifest")
     m = spark.read.parquet(manifest_path).collect()
     keep = m[: len(m) // 2]
+    # the skipped keys' committed part files: kept as they are
+    kept = {p: os.path.getmtime(p) for r in keep for p in glob.glob(
+        os.path.join(out, "blocks", f"source={r['source']}",
+                     f"bucket={r['bucket']}", "*.parquet"))}
+    assert len(kept) == len(keep)
     shutil.rmtree(manifest_path)
     if keep:
         spark.createDataFrame(keep).write.parquet(manifest_path)
@@ -101,6 +107,8 @@ def test_resume_after_partial_manifest(spark, tokens_df, tmp_path_factory):
     else:
         s2 = encode_table(spark, tokens_df, out, CFG)
     assert s2["comp_bytes"] == s1["comp_bytes"]
+    assert {p: os.path.getmtime(p) for p in kept} == kept
+    assert not glob.glob(os.path.join(out, "**", ".part-*"), recursive=True)
     decoded = decode_dataframe(read_encoded(spark, out))
     assert roundtrip_mismatch_count(tokens_df, decoded) == 0
 
@@ -116,6 +124,32 @@ def test_bucket_skew_bounded(spark, tokens_df):
     limit = CFG.target_bucket_tokens + max_doc
     for r in sizes:
         assert r["t"] <= limit * 2, (r["source"], r["bucket"], r["t"])
+
+
+def test_clustered_partition_dirs_escape_sources(spark, tokens_df,
+                                                 tmp_path_factory):
+    """The block sink names clustered partition dirs as Spark's own
+    partitionBy writer does (percent-escaped source values), so
+    read_encoded returns every source value unchanged."""
+    names = ["a/b", "x=y", "p%q", "sp ace"]
+    df = tokens_df.limit(60).withColumn(
+        "source", F.element_at(F.array(*map(F.lit, names)),
+                               (F.pmod(F.xxhash64("doc_id"), 4) + 1)
+                               .cast("int"))).cache()
+    out = str(tmp_path_factory.mktemp("escaped"))
+    encode_table(spark, df, out, CFG, resume=False)
+    blocks = read_encoded(spark, out)
+    assert {r[0] for r in blocks.select("source").distinct().collect()} \
+        == set(names)
+    assert roundtrip_mismatch_count(df, decode_dataframe(blocks)) == 0
+    spark_dirs = str(tmp_path_factory.mktemp("spark_dirs"))
+    (df.select("source", F.lit(0).alias("bucket"), F.lit(1).alias("x"))
+     .write.mode("overwrite").partitionBy("source", "bucket")
+     .parquet(spark_dirs))
+    assert (sorted(os.listdir(os.path.join(out, "blocks")))
+            == sorted(d for d in os.listdir(spark_dirs)
+                      if d.startswith("source=")))
+    df.unpersist()
 
 
 # ---------------------------------------------------------------------------

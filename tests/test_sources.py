@@ -259,20 +259,42 @@ def test_direct_writer_lineage(spark, tmp_path_factory):
     assert "Range" in plan and "ExistingRDD" not in plan
 
 
-def test_manifest_from_lineage_matches_spark_rescan(spark, tmp_path_factory):
-    """The driver-side lineage fold and refresh_manifest's authoritative
+@pytest.mark.parametrize("writer", ["direct", "clustered", "mapside",
+                                    "stream"])
+def test_manifest_from_lineage_matches_spark_rescan(spark, tmp_path_factory,
+                                                    writer):
+    """Every encode writer commits lineage through the one block sink:
+    the driver-side lineage fold and refresh_manifest's authoritative
     Spark rescan of the written blocks produce the SAME manifest rows
-    (per-source/bucket totals and per-codec block counts), and the fold
-    refuses (-> rescan fallback) when lineage doesn't cover the files."""
+    (per-source/bucket totals and per-codec block counts) for flat,
+    source=/bucket= and epoch= layouts, and the fold refuses (-> rescan
+    fallback) when lineage doesn't cover the files."""
     import glob
     import json
-    from rle_spark.engine import refresh_manifest
+    from rle_spark.engine import encode_table, refresh_manifest
     from rle_spark.sources import encode_parquet_dir_direct, manifest_from_lineage
+    from rle_spark.streaming import encode_stream_backfill
     src = str(tmp_path_factory.mktemp("msrc"))
     out = str(tmp_path_factory.mktemp("mout"))
     df = token_table(spark, 70, seed=28)
     df.repartition(4).write.mode("overwrite").parquet(src)
-    encode_parquet_dir_direct(spark, src, out, CFG, n_tasks=4)
+    if writer == "direct":
+        encode_parquet_dir_direct(spark, src, out, CFG, n_tasks=4)
+    elif writer == "stream":
+        encode_stream_backfill(spark, src, out, CFG)
+        (token_table(spark, 30, seed=29)
+         .withColumn("doc_id", F.concat(F.lit("w2-"), F.col("doc_id")))
+         .write.mode("append").parquet(src))
+        encode_stream_backfill(spark, src, out, CFG)
+    else:
+        encode_table(spark, spark.read.parquet(src), out,
+                     EngineConfig(block_tokens=1 << 15,
+                                  target_bucket_tokens=1 << 17,
+                                  layout=writer), resume=False)
+    lineage = glob.glob(os.path.join(out, "lineage", "**", "*.json"),
+                        recursive=True)
+    assert len(lineage) == len(glob.glob(
+        os.path.join(out, "blocks", "**", "*.parquet"), recursive=True))
 
     def manifest_rows():
         rows = (spark.read.parquet(os.path.join(out, "manifest"))
@@ -285,21 +307,25 @@ def test_manifest_from_lineage_matches_spark_rescan(spark, tmp_path_factory):
 
     from_lineage = manifest_rows()
     assert from_lineage  # non-empty
+    assert manifest_from_lineage(out) is True
+    assert manifest_rows() == from_lineage
     refresh_manifest(spark, out)  # overwrite with the rescan version
     assert manifest_rows() == from_lineage
 
-    # skip path (committed files) rebuilds identical lineage + manifest
-    for p in glob.glob(os.path.join(out, "lineage", "*.json")):
-        os.remove(p)
-    encode_parquet_dir_direct(spark, src, out, CFG, n_tasks=4, resume=True)
-    assert manifest_rows() == from_lineage
+    if writer == "direct":
+        # skip path (committed files) rebuilds identical lineage + manifest
+        for p in lineage:
+            os.remove(p)
+        encode_parquet_dir_direct(spark, src, out, CFG, n_tasks=4,
+                                  resume=True)
+        assert manifest_rows() == from_lineage
 
     # coverage guard: drop one lineage record -> fold refuses
-    victim = sorted(glob.glob(os.path.join(out, "lineage", "*.json")))[0]
+    victim = sorted(lineage)[0]
     os.remove(victim)
     assert manifest_from_lineage(out) is False
     # pre-rollup (old-format) lineage -> fold refuses
-    rest = sorted(glob.glob(os.path.join(out, "lineage", "*.json")))
+    rest = sorted(lineage)[1:]
     rec = json.load(open(rest[0]))
     rec.pop("groups")
     base = os.path.basename(victim)

@@ -47,29 +47,35 @@ def test_stream_backfill_then_incremental(spark, tmp_path_factory):
 
 def test_epoch_replay_overwrites_not_appends(spark, tmp_path_factory):
     """foreachBatch is at-least-once: replaying an epoch whose write
-    committed but whose checkpoint didn't must overwrite the epoch
-    directory, leaving zero duplicate blocks/docs."""
-    from rle_spark.blocks import BLOCK_SCHEMA_DDL
-    from rle_spark.engine import _encode_iter_factory, refresh_manifest
+    committed but whose checkpoint didn't must replace the epoch's
+    files, leaving zero duplicate blocks/docs. The replay here splits
+    the micro-batch differently (3 tasks, then 2), so a stale part file
+    of the first run would survive unless the epoch dirs are cleared."""
+    import glob
+    from rle_spark.sources import manifest_from_lineage
+    from rle_spark.streaming import _epoch
 
     out = str(tmp_path_factory.mktemp("replay_out"))
-    blocks_path = os.path.join(out, "blocks")
     df = token_table(spark, 50, seed=13).cache()
     df.count()
 
-    def epoch_write(epoch_id):  # mirrors streaming._epoch
-        blocks = df.mapInArrow(_encode_iter_factory(CFG, mapside=True),
-                               BLOCK_SCHEMA_DDL)
-        blocks = blocks.withColumn(
-            "block_id", F.concat(F.lit(f"e{epoch_id}:"), F.col("block_id")))
-        (blocks.write.mode("overwrite")
-         .parquet(os.path.join(blocks_path, f"epoch={epoch_id}")))
+    def files():
+        return sorted(os.path.relpath(p, out) for p in glob.glob(
+            os.path.join(out, "**", "*"), recursive=True)
+            if os.path.isfile(p))
 
-    epoch_write(0)
-    epoch_write(0)  # the replay
-    refresh_manifest(spark, out)
+    _epoch(out, CFG, df.repartition(3), 0)
+    assert len(files()) == 6
+    _epoch(out, CFG, df.repartition(2), 0)  # the replay
+    assert files() == [f"{d}/epoch=0/part-{i:05d}.{ext}"
+                       for d, ext in (("blocks", "parquet"),
+                                      ("lineage", "json"))
+                       for i in range(2)]
+    assert not glob.glob(os.path.join(out, "**", ".part-*"), recursive=True)
+    assert manifest_from_lineage(out) is True
     got = read_encoded(spark, out)
     assert got.count() == got.select("block_id").distinct().count()
+    assert got.filter(~F.col("block_id").startswith("e0:")).count() == 0
     decoded = decode_dataframe(got)
     assert decoded.count() == 50  # no duplicate docs
     assert roundtrip_mismatch_count(df, decoded) == 0

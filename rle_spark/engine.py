@@ -435,9 +435,10 @@ def encode_table(spark: SparkSession, df: DataFrame, out_dir: str,
     Returns a summary dict (ratio, bytes, skipped partitions).
     """
     from .sources import (_TOTALS_DDL, _clear_outputs, _commit_manifest,
-                          _partition_dir, _sink_task)
+                          _local_dir, _partition_dir, _sink_task)
     cfg = cfg or EngineConfig()
     mapside = cfg.layout == "mapside"
+    out_dir = _local_dir(out_dir)
     manifest_path = os.path.join(out_dir, "manifest")
 
     done, keep = None, set()
@@ -479,8 +480,8 @@ def refresh_manifest(spark: SparkSession, out_dir: str) -> None:
     """(Re)build <out_dir>/manifest by a Spark rescan of the committed
     block files — ground truth. The recovery path when the lineage
     doesn't cover the blocks (a crash window, dirs written before the
-    block sink) and after compaction; the writers fold the manifest
-    from lineage instead (sources.manifest_from_lineage)."""
+    block sink); the writers and compaction fold the manifest from
+    lineage instead (sources.manifest_from_lineage)."""
     blocks_path = os.path.join(out_dir, "blocks")
     manifest_path = os.path.join(out_dir, "manifest")
     on_disk = spark.read.schema(BLOCK_SCHEMA_DDL).parquet(blocks_path)
@@ -519,39 +520,28 @@ def _decode_iter(batches):
 
     memtune.lazy_zip_invalidation()
     for rb in batches:
-        if rb.num_rows == 0:
-            continue
-        payloads = rb.column("payload")
-        ids_col = rb.column("doc_ids")
-        lens_col = rb.column("doc_lens")
+        payloads, n = rb.column("payload"), rb.num_rows
         # chunk the output so one yielded batch stays < ~2^31 values
         row0 = 0
-        n = rb.num_rows
         while row0 < n:
-            row1, tok_budget = row0, 256 << 20  # 256M tokens/out batch
-            flats = []
-            while row1 < n:
+            # 256M tokens per output batch
+            row1, tok_budget, flats = row0, 256 << 20, []
+            while row1 < n and tok_budget > 0:
                 # as_buffer: zero-copy view of the Arrow payload slab
-                t = decode_block(payloads[row1].as_buffer())
-                flats.append(t)
-                tok_budget -= len(t)
+                flats.append(decode_block(payloads[row1].as_buffer()))
+                tok_budget -= len(flats[-1])
                 row1 += 1
-                if tok_budget <= 0:
-                    break
-            flat = (flats[0] if len(flats) == 1
-                    else np.concatenate(flats)
-                    if flats else np.zeros(0, np.int32))
-            lens_slice = lens_col.slice(row0, row1 - row0)
-            doc_lens = lens_slice.flatten().to_numpy(zero_copy_only=False)
+            flat = flats[0] if len(flats) == 1 else np.concatenate(flats)
+            part = rb.slice(row0, row1 - row0)
+            doc_lens = (part.column("doc_lens").flatten()
+                        .to_numpy(zero_copy_only=False))
             offsets = np.concatenate(
                 ([0], np.cumsum(doc_lens, dtype=np.int64)))
-            ids_slice = ids_col.slice(row0, row1 - row0)
-            id_values = ids_slice.flatten()
             tokens_list = pa.ListArray.from_arrays(
                 pa.array(offsets, pa.int32()),
                 pa.array(flat.astype(np.int32, copy=False)))
-            yield pa.record_batch(
-                [id_values, tokens_list], names=["doc_id", "tokens"])
+            yield pa.record_batch([part.column("doc_ids").flatten(),
+                                   tokens_list], names=["doc_id", "tokens"])
             row0 = row1
 
 

@@ -8,7 +8,7 @@ Local smoke:
 Cluster:
     zip -r rle_spark.zip rle_spark
     spark-submit --py-files rle_spark.zip rle_spark/jobs/encode.py \
-        --input s3://.../tokens --output s3://.../encoded \
+        --input /shared/tokens --output /shared/encoded \
         --block-tokens 262144 --target-bucket-tokens 8388608
 
 Input schema: (doc_id string, tokens array<int>, n_tok int, source
@@ -19,8 +19,8 @@ recorded in <output>/manifest; --layout mapside
 (sources.encode_parquet_dir_direct: tasks read their own parquet row
 groups with pyarrow) skips the task files already committed under the
 same split plan.
-The sink writes local or shared-filesystem paths (the mapside scan too),
-not object-store URIs.
+The sink writes local or shared-filesystem paths (the mapside scan reads
+them too) and refuses object-store URIs such as s3a://.
 """
 
 from __future__ import annotations

@@ -19,7 +19,7 @@ task just to hand the rows over, and pay the worker handshake twice.
 Every entry point is the same task skeleton — split source, then the
 one kernel, then a sink — built from three helpers: `_map_splits`
 (plan splits, byte-balance them over tasks, mapInArrow over the range),
-`_iter_row_groups` (a task's splits -> parquet batches) and
+`_scan` (a task's splits -> parquet batches, read ahead) and
 `_bounded_thread` (one helper thread, a bounded number of calls ahead,
 that overlaps the scan with the kernel and the kernel with the
 task-file write). Entry points and their sinks:
@@ -39,7 +39,8 @@ The block sink (`_sink_task`, then `_commit_manifest` on the driver)
 is every encode writer's sink, not only the direct writer's:
 engine.encode_table runs it over a DataFrame source (mapside: one file
 per task; clustered: one file per (source, bucket) in Spark's
-source=/bucket= layout) and streaming runs it per micro-batch epoch.
+source=/bucket= layout) and streaming runs it per micro-batch epoch
+and for compaction.
 
 The codec kernels are byte-for-byte the ones the DataFrame path uses
 (engine._encode_iter_factory, engine._decode_iter) — this module only
@@ -126,6 +127,13 @@ def _iter_row_groups(splits, columns: list[str], batch_rows: int):
         yield from pq.ParquetFile(path).iter_batches(
             batch_size=batch_rows, row_groups=list(range(g0, g1)),
             columns=columns)
+
+
+def _scan(splits, columns: list[str], batch_rows: int):
+    """A task's split source: its row groups (`_iter_row_groups`), read
+    one readahead stage ahead; use it in a with block."""
+    return closing(_read_ahead(_iter_row_groups(splits, columns, batch_rows),
+                               _READAHEAD_DEPTH))
 
 
 def _balanced_contiguous_groups(units, n_tasks: int) -> list[list]:
@@ -278,10 +286,7 @@ def _file_encode_iter(cfg: EngineConfig):
     inner = _encode_iter_factory(cfg, mapside=True)
 
     def it(splits):
-        with closing(_read_ahead(
-                _iter_row_groups(splits, _READ_COLUMNS,
-                                 _SCAN_BATCH_ROWS),
-                _READAHEAD_DEPTH)) as batches:
+        with _scan(splits, _READ_COLUMNS, _SCAN_BATCH_ROWS) as batches:
             yield from inner(batches)
 
     return it
@@ -351,15 +356,15 @@ def _roll(groups: dict, tbl) -> None:
 
 
 def _sink_task(out_dir: str, codec: str, blocks, subdir: str = "",
-               by_key: bool = False, id_prefix: str = "", **lineage):
+               by_key: bool = False, **lineage):
     """The one block sink, run inside a task over the encode kernel's
     (unstarted) block batches `blocks`; yields the task's one totals
     row. Every encode writer commits through it:
 
       encode_parquet_dir_direct, encode_table mapside
                           blocks/part-<pid>.parquet
-      streaming epochs    blocks/epoch=<N>/part-<pid>.parquet (subdir;
-                          id_prefix e<N>: goes before every block_id)
+      streaming epochs, compaction
+                          blocks/epoch=<N>/part-<pid>.parquet (subdir)
       encode_table clustered (by_key)
                           blocks/source=<S>/bucket=<B>/part-00000.parquet,
                           one file per key without the source and
@@ -379,7 +384,6 @@ def _sink_task(out_dir: str, codec: str, blocks, subdir: str = "",
     import json
     import time
     import pyarrow as pa
-    import pyarrow.compute as pc
     import pyarrow.parquet as pq
     from pyspark import TaskContext
     t0 = time.time()
@@ -411,9 +415,6 @@ def _sink_task(out_dir: str, codec: str, blocks, subdir: str = "",
 
     def writes():
         for rb in blocks:
-            if id_prefix:
-                rb = rb.set_column(0, "block_id", pc.binary_join_element_wise(
-                    id_prefix, rb.column("block_id"), ""))
             for key, part in (_key_runs(rb) if by_key else [(None, rb)]):
                 rel = (os.path.join(_partition_dir(*key), "part-00000.parquet")
                        if by_key else task_file)
@@ -425,7 +426,6 @@ def _sink_task(out_dir: str, codec: str, blocks, subdir: str = "",
 
     task_file = os.path.join(subdir, f"part-{pid:05d}.parquet")
     if not by_key and os.path.exists(os.path.join(blocks_dir, task_file)):
-        blocks.close()
         files[task_file] = [None, {}, None]
         _roll(files[task_file][1], pq.read_table(
             os.path.join(blocks_dir, task_file), columns=_ROLL_COLS))
@@ -460,6 +460,20 @@ def _sink_task(out_dir: str, codec: str, blocks, subdir: str = "",
                   pa.int64()) for i in range(5)], names=_TOTAL_COLS)
 
 
+def _local_dir(out_dir: str) -> str:
+    """`out_dir` as the local or shared-filesystem path the sink writes
+    with os calls (a file: URI gives its path). Any other scheme is
+    refused: each executor would write to its own local disk, and the
+    driver's lineage fold would find no blocks and report an empty
+    corpus."""
+    from urllib.parse import urlparse
+    url = urlparse(out_dir)
+    if url.scheme not in ("", "file"):
+        raise ValueError(f"the block sink writes local or shared-filesystem"
+                         f" paths, not {url.scheme}: URIs ({out_dir})")
+    return url.path if url.scheme else out_dir
+
+
 def _clear_outputs(out_dir: str, keep=frozenset()) -> None:
     """Ready <out_dir>/blocks and <out_dir>/lineage for a run: delete
     every attempt tmp, and every file outside the directories `keep`
@@ -487,8 +501,7 @@ def manifest_from_lineage(out_dir: str) -> bool:
     source=/bucket= layouts fold alike. Returns False — the caller
     falls back to refresh_manifest's authoritative rescan — when the
     lineage doesn't exactly cover the committed files (pre-rollup
-    lineage, blocks written without lineage, compacted blocks, or a
-    crash window)."""
+    lineage, blocks written without lineage, or a crash window)."""
     import json
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -568,6 +581,7 @@ def encode_parquet_dir_direct(spark: SparkSession, src_dir: str,
     import json
     cfg = cfg or EngineConfig(layout="mapside")
     encode = _file_encode_iter(cfg)
+    out_dir = _local_dir(out_dir)
 
     job, units, n_tasks = _map_splits(
         spark, src_dir, lambda splits: _sink_task(
@@ -609,11 +623,8 @@ def decode_parquet_dir(spark: SparkSession, out_dir: str,
     from .engine import _decode_iter
 
     def it(splits):
-        with closing(_read_ahead(
-                _iter_row_groups(splits,
-                                 ["payload", "doc_ids", "doc_lens"],
-                                 _BLOCK_BATCH_ROWS),
-                _READAHEAD_DEPTH)) as batches:
+        with _scan(splits, ["payload", "doc_ids", "doc_lens"],
+                   _BLOCK_BATCH_ROWS) as batches:
             yield from _decode_iter(batches)
 
     return _map_splits(spark, os.path.join(out_dir, "blocks"), it,
@@ -635,15 +646,14 @@ def decode_parquet_dir_summary(spark: SparkSession, out_dir: str,
         import pyarrow as pa
         import pyarrow.compute as pc
         n_docs = n_tokens = 0
-        for blk in _read_ahead(
-                _iter_row_groups(splits, ["payload", "doc_lens"],
-                                 _BLOCK_BATCH_ROWS),
-                _READAHEAD_DEPTH):
-            # as_buffer: zero-copy view of the Arrow payload
-            for p in blk.column("payload"):
-                n_tokens += len(decode_block(p.as_buffer()))
-            n_docs += int(pc.sum(
-                pc.list_value_length(blk.column("doc_lens"))).as_py() or 0)
+        with _scan(splits, ["payload", "doc_lens"],
+                   _BLOCK_BATCH_ROWS) as blks:
+            for blk in blks:
+                # as_buffer: zero-copy view of the Arrow payload
+                for p in blk.column("payload"):
+                    n_tokens += len(decode_block(p.as_buffer()))
+                n_docs += int(pc.sum(pc.list_value_length(
+                    blk.column("doc_lens"))).as_py() or 0)
         yield pa.record_batch(
             [pa.array([n_docs], pa.int64()), pa.array([n_tokens], pa.int64())],
             names=["n_docs", "n_tokens"])

@@ -10,7 +10,8 @@ the same block sink as every other encode writer
 (sources._sink_task), and the manifest is folded from the sink's
 lineage on the driver (engine.refresh_manifest's rescan of the
 committed files is the fallback when lineage doesn't cover them, as
-after compact_blocks).
+after a crash). compact_blocks rewrites the epochs through the sink
+as well. Outputs are local or shared-filesystem paths.
 
 Delivery semantics: the checkpoint gives each micro-batch a stable
 epoch id; each epoch writes to its OWN subdirectory
@@ -26,11 +27,13 @@ import os
 import shutil
 from functools import partial
 
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 
 from .blocks import BLOCK_SCHEMA_DDL
 from .datagen import TOKEN_SCHEMA_DDL
-from .engine import EngineConfig, _encode_iter_factory, refresh_manifest
+from .engine import EngineConfig, _encode_iter_factory
+from .sources import _TOTALS_DDL, _commit_manifest, _local_dir, _sink_task
 
 
 def _epoch(out_dir: str, cfg: EngineConfig, df: DataFrame,
@@ -39,14 +42,14 @@ def _epoch(out_dir: str, cfg: EngineConfig, df: DataFrame,
     sink under blocks/epoch=<epoch_id>, block ids prefixed e<id>:.
     The epoch's block and lineage dirs are cleared first, so at-least-
     once foreachBatch delivery never leaves duplicate block files."""
-    from .sources import _TOTALS_DDL, _sink_task
     subdir = f"epoch={epoch_id}"
     for sub in ("blocks", "lineage"):
         shutil.rmtree(os.path.join(out_dir, sub, subdir), ignore_errors=True)
-    kernel = _encode_iter_factory(cfg, mapside=True)
-    df.mapInArrow(lambda batches: _sink_task(
-        out_dir, cfg.parquet_codec, kernel(batches), subdir=subdir,
-        id_prefix=f"e{epoch_id}:"), _TOTALS_DDL).collect()
+    kernel, prefix = _encode_iter_factory(cfg, mapside=True), f"e{epoch_id}:"
+    df.mapInArrow(lambda batches: _sink_task(out_dir, cfg.parquet_codec, (
+        rb.set_column(0, "block_id", pc.binary_join_element_wise(
+            prefix, rb.column("block_id"), "")) for rb in kernel(batches)),
+        subdir=subdir), _TOTALS_DDL).collect()
 
 
 def encode_stream(spark: SparkSession, input_path: str, out_dir: str,
@@ -63,6 +66,7 @@ def encode_stream(spark: SparkSession, input_path: str, out_dir: str,
     epoch), whatever `cfg.layout` says.
     """
     cfg = cfg or EngineConfig(layout="mapside")
+    out_dir = _local_dir(out_dir)
     checkpoint = checkpoint or os.path.join(out_dir, "_checkpoint")
     src = (spark.readStream.schema(TOKEN_SCHEMA_DDL)
            .option("maxFilesPerTrigger", str(max_files_per_trigger))
@@ -95,10 +99,16 @@ def compact_blocks(spark: SparkSession, out_dir: str,
     _COMPACTING marker across the non-atomic window; on entry a
     leftover marker triggers recover_compaction() first, so a rerun
     after a mid-swap crash finishes the interrupted swap instead of
-    re-reading a half-empty table. Returns the number of files after
-    compaction.
+    re-reading a half-empty table. The compacted files are written
+    through the block sink, so their lineage (moved in after the swap,
+    replacing the compacted epochs') lets later waves fold the manifest
+    from lineage; a crash in between only leaves the lineage short,
+    and the fold then falls back to the rescan. Returns the number of
+    files after compaction.
     """
+    out_dir = _local_dir(out_dir)
     blocks_path = os.path.join(out_dir, "blocks")
+    lineage_path = os.path.join(out_dir, "lineage")
     staged = os.path.join(out_dir, "_blocks_compacting")
     hidden_new = os.path.join(blocks_path, ".compact_new")
     old = os.path.join(out_dir, "_blocks_old")
@@ -107,17 +117,26 @@ def compact_blocks(spark: SparkSession, out_dir: str,
     total = sum(os.path.getsize(os.path.join(dp, f))
                 for dp, _, fs in os.walk(blocks_path) for f in fs)
     n_files = max(1, (total + target_bytes - 1) // target_bytes)
+    shutil.rmtree(staged, ignore_errors=True)
+    for sub in ("blocks", "lineage"):
+        os.makedirs(os.path.join(staged, sub, "epoch=-1"))
     (spark.read.schema(BLOCK_SCHEMA_DDL).parquet(blocks_path)
-     .repartition(int(n_files))
-     .write.mode("overwrite").parquet(staged))
+     .drop("epoch").repartition(int(n_files))
+     .mapInArrow(lambda batches: _sink_task(
+         staged, EngineConfig.parquet_codec, batches, subdir="epoch=-1"),
+         _TOTALS_DDL).collect())
     # pre-marker leftovers only: with no marker on disk, live data is
     # still fully under blocks/, so these copies are redundant garbage
     shutil.rmtree(old, ignore_errors=True)
     shutil.rmtree(hidden_new, ignore_errors=True)
-    os.replace(staged, hidden_new)  # hidden: readers ignore dot-dirs
+    shutil.rmtree(lineage_path, ignore_errors=True)
+    # hidden: readers ignore dot-dirs
+    os.replace(os.path.join(staged, "blocks", "epoch=-1"), hidden_new)
     open(marker, "w").close()
     _finish_swap(blocks_path, old, hidden_new, marker)
-    refresh_manifest(spark, out_dir)
+    os.replace(os.path.join(staged, "lineage"), lineage_path)
+    shutil.rmtree(staged)
+    _commit_manifest(spark, out_dir)
     return sum(1 for _dp, _dn, fs in os.walk(blocks_path)
                for f in fs if f.endswith(".parquet"))
 
@@ -175,7 +194,7 @@ def encode_stream_backfill(spark: SparkSession, input_path: str,
                            cfg: EngineConfig | None = None) -> dict:
     """Drain the input path now, wait for completion, fold the
     manifest, and return the batch-style summary."""
-    from .sources import _commit_manifest
+    out_dir = _local_dir(out_dir)
     q = encode_stream(spark, input_path, out_dir, cfg, available_now=True)
     q.awaitTermination()
     return _commit_manifest(spark, out_dir)

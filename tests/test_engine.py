@@ -152,6 +152,38 @@ def test_clustered_partition_dirs_escape_sources(spark, tokens_df,
     df.unpersist()
 
 
+@pytest.mark.parametrize("writer", ["clustered", "mapside", "direct",
+                                    "stream", "compact"])
+def test_sink_refuses_object_store_uris(spark, tokens_df, tmp_path,
+                                        monkeypatch, writer):
+    """The block sink writes with os calls, so an s3a:// out_dir would
+    land on each executor's own disk and fold to an empty manifest:
+    every writer refuses it before any job, creating nothing."""
+    from rle_spark.sources import encode_parquet_dir_direct
+    from rle_spark.streaming import compact_blocks, encode_stream_backfill
+    monkeypatch.chdir(tmp_path)
+    out = "s3a://bucket/encoded"
+    run = {"clustered": lambda: encode_table(spark, tokens_df, out, CFG),
+           "mapside": lambda: encode_table(spark, tokens_df, out,
+                                           MAPSIDE_CFG),
+           "direct": lambda: encode_parquet_dir_direct(spark, "src", out),
+           "stream": lambda: encode_stream_backfill(spark, "src", out),
+           "compact": lambda: compact_blocks(spark, out)}[writer]
+    with pytest.raises(ValueError, match="s3a"):
+        run()
+    assert os.listdir(tmp_path) == []
+
+
+def test_encode_table_file_uri(spark, tokens_df, tmp_path_factory):
+    """A file: URI out_dir writes to its path."""
+    out = str(tmp_path_factory.mktemp("file_uri"))
+    df = tokens_df.limit(40)
+    s = encode_table(spark, df, "file://" + out, CFG, resume=False)
+    assert s["n_docs"] == 40
+    assert roundtrip_mismatch_count(
+        df, decode_dataframe(read_encoded(spark, out))) == 0
+
+
 # ---------------------------------------------------------------------------
 # mapside (zero-shuffle) layout
 # ---------------------------------------------------------------------------

@@ -458,3 +458,38 @@ def test_direct_writer_part_files_are_plain(spark, tmp_path_factory):
     assert totals() == want
     assert roundtrip_mismatch_count(df, decode_parquet_dir(spark, out)) == 0
     df.unpersist()
+
+
+def test_sink_retry_skips_committed_file_and_heals_lineage(tmp_path):
+    """A task retried after its attempt committed the block file but
+    not the lineage leaves its input untouched (compaction hands the
+    sink Spark's own batch iterator, a plain map with no close()),
+    writes the lineage from the committed file and returns the same
+    totals row."""
+    import pyarrow as pa
+    from rle_spark.datagen import generate_docs_pandas
+    from rle_spark.engine import _encode_iter_factory
+    from rle_spark.sources import _sink_task, manifest_from_lineage
+
+    pdf = generate_docs_pandas(range(30), seed=4)
+    batch = pa.RecordBatch.from_pydict(
+        {"doc_id": pdf["doc_id"].tolist(),
+         "tokens": [t.tolist() for t in pdf["tokens"]],
+         "source": pdf["source"].tolist()},
+        schema=pa.schema([("doc_id", pa.string()),
+                          ("tokens", pa.list_(pa.int32())),
+                          ("source", pa.string())]))
+    out = str(tmp_path)
+    blocks = _encode_iter_factory(CFG, mapside=True)(iter([batch]))
+    first = list(_sink_task(out, "zstd", blocks, subdir="epoch=-1"))
+    lin = os.path.join(out, "lineage", "epoch=-1", "part-00000.json")
+    os.remove(lin)
+
+    def boom(_):
+        raise AssertionError("a committed task read its input")
+
+    again = list(_sink_task(out, "zstd", map(boom, [1]), subdir="epoch=-1"))
+    assert again[0].to_pydict() == first[0].to_pydict()
+    assert first[0].to_pydict()["n_docs"] == [30]
+    assert os.path.exists(lin)
+    assert manifest_from_lineage(out) is True

@@ -103,8 +103,12 @@ def test_encode_stream_forces_mapside_layout(spark, tmp_path_factory):
 
 def test_compact_blocks_preserves_data(spark, tmp_path_factory):
     """Compaction rewrites epoch files into few big ones; decode stays
-    bit-identical and the manifest totals unchanged."""
+    bit-identical and the manifest totals unchanged. The compacted
+    files carry lineage in place of the compacted epochs', so the
+    manifest still folds from lineage after compaction and after a
+    later wave."""
     import glob
+    from rle_spark.sources import manifest_from_lineage
     from rle_spark.streaming import compact_blocks
 
     src = str(tmp_path_factory.mktemp("cmp_src"))
@@ -132,6 +136,11 @@ def test_compact_blocks_preserves_data(spark, tmp_path_factory):
     man1 = spark.read.parquet(os.path.join(out, "manifest")).agg(
         F.sum("n_docs"), F.sum("n_tokens"), F.sum("comp_bytes")).collect()[0]
     assert tuple(man0) == tuple(man1)
+    assert os.listdir(os.path.join(out, "lineage")) == ["epoch=-1"]
+    assert sorted(os.listdir(out)) == ["_checkpoint", "blocks", "lineage",
+                                       "manifest"]
+    assert not glob.glob(os.path.join(out, "**", "*.tmp"), recursive=True)
+    assert manifest_from_lineage(out) is True
     both = w1.unionByName(w2)
     decoded = decode_dataframe(read_encoded(spark, out))
     assert roundtrip_mismatch_count(both, decoded) == 0
@@ -142,7 +151,8 @@ def test_compact_blocks_preserves_data(spark, tmp_path_factory):
           .withColumn("doc_id", F.concat(F.lit("w3-"), F.col("doc_id")))).cache()
     w3.count()
     w3.write.mode("append").parquet(src)
-    encode_stream_backfill(spark, src, out, CFG)
+    assert encode_stream_backfill(spark, src, out, CFG)["n_docs"] == 110
+    assert manifest_from_lineage(out) is True
     all3 = both.unionByName(w3)
     decoded3 = decode_dataframe(read_encoded(spark, out))
     assert roundtrip_mismatch_count(all3, decoded3) == 0

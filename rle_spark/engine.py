@@ -17,8 +17,13 @@ Scale design (100 TB / 10^12 sequences):
   * exactly ONE shuffle (the repartition by source+bucket); encode,
     framing, the block write and the lineage rollup all ride map-side
     on top of it.
-  * blocks are bounded (`block_tokens`), so executor memory needs are
-    O(block) not O(partition); Arrow streams batches through the UDF.
+  * blocks are bounded (`block_tokens`) and the encode kernel emits a
+    block batch whenever `_OUT_FLUSH_BYTES` (4 MiB) of framed payload
+    has built up, so a task holds its open blocks (one per key, each
+    under block_tokens * 4 bytes raw), the batch being filled (under
+    4 MiB + one block) and the sink's write-behind queue (at most
+    sources._WRITE_BEHIND_DEPTH + 1 such batches), on top of the
+    scan's readahead batches: O(keys * block), not O(partition).
   * no Spark block write: encode_table runs the kernel straight into
     the block sink (sources._sink_task), which writes each task's
     files from Python with an atomic rename per file, so the payloads
@@ -187,9 +192,11 @@ def _block_arrow_schema():
     ])
 
 
-# keep a yielded output batch's payload bytes below this (binary
-# columns carry int32 offsets -> 2 GiB ceiling per Arrow array)
-_OUT_FLUSH_BYTES = 512 << 20
+# a block batch is emitted once its framed payloads reach this: a few
+# blocks, so the sink's write-behind runs while encoding continues and
+# a task holds O(block) payload bytes, not its whole output (one block
+# past 2 GiB still meets _binary_array's int32-offset guard)
+_OUT_FLUSH_BYTES = 4 << 20
 
 
 def _binary_array(values: list, lens: list):
@@ -290,20 +297,16 @@ def _encode_iter_factory(cfg: EngineConfig, mapside: bool = False):
 
         def emit_batch():
             nonlocal out_bytes
-            if not out["block_id"]:
-                return None
             id_counts = np.fromiter(
                 (sum(len(f) for f in frags) for frags in out_ids),
                 dtype=np.int64, count=len(out_ids))
             id_offsets = np.concatenate(([0], np.cumsum(id_counts)))
             id_values = pa.concat_arrays(
-                [f for frags in out_ids for f in frags] or
-                [pa.array([], pa.string())])
+                [f for frags in out_ids for f in frags])
             len_counts = np.fromiter((len(a) for a in out_lens),
                                      dtype=np.int64, count=len(out_lens))
             len_offsets = np.concatenate(([0], np.cumsum(len_counts)))
-            len_values = (np.concatenate(out_lens) if out_lens
-                          else np.zeros(0, np.int32))
+            len_values = np.concatenate(out_lens)
             batch = pa.record_batch([
                 pa.array(out["block_id"], pa.string()),
                 pa.array(out["source"], pa.string()),
@@ -373,23 +376,12 @@ def _encode_iter_factory(cfg: EngineConfig, mapside: bool = False):
                                       - (cum[c0 - g0 - 1] if c0 > g0 else 0))
                     if c1 != g1 or cur["ntok"] >= block_tokens:
                         flush_block(key)
-                        # check INSIDE the cut loop too: a single huge
-                        # input batch (very long docs) must not pile up
-                        # payloads past the int32 Arrow-offset ceiling
-                        # before the between-batches check runs
                         if out_bytes >= _OUT_FLUSH_BYTES:
-                            b = emit_batch()
-                            if b is not None:
-                                yield b
-            if out_bytes >= _OUT_FLUSH_BYTES:
-                b = emit_batch()
-                if b is not None:
-                    yield b
+                            yield emit_batch()
         for key in list(open_blocks):
             flush_block(key)
-        b = emit_batch()
-        if b is not None:
-            yield b
+        if out["block_id"]:
+            yield emit_batch()
 
     return encode_iter
 

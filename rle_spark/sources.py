@@ -73,8 +73,10 @@ _WRITE_BEHIND_DEPTH = 4
 # rows per token-scan batch: in-flight memory is ~depth x batch bytes
 # per task, so keep it a few block sizes, not 100+ MB
 _SCAN_BATCH_ROWS = 2048
-# rows per block-scan batch (each row is one ~0.5 MB encoded block)
-_BLOCK_BATCH_ROWS = 64
+# rows per block-scan batch: a few blocks (~1 MB framed each at the
+# default block_tokens), so readahead decompresses batch k+1 while
+# batch k decodes and in-flight memory is ~depth x 4 blocks
+_BLOCK_BATCH_ROWS = 4
 
 
 def _bounded_thread(calls, depth: int):
@@ -430,9 +432,11 @@ def _sink_task(out_dir: str, codec: str, blocks, subdir: str = "",
         _roll(files[task_file][1], pq.read_table(
             os.path.join(blocks_dir, task_file), columns=_ROLL_COLS))
     else:
-        # write-behind: the parquet write (zstd releases the GIL)
-        # overlaps the kernel; a writer error re-raises here, before
-        # the atomic rename can commit a broken file
+        # write-behind: the kernel emits a block batch every few MiB
+        # (engine._OUT_FLUSH_BYTES), and each one's row group write
+        # (zstd releases the GIL) runs while the next is encoded; a
+        # writer error re-raises here, before the atomic rename can
+        # commit a broken file
         try:
             for _ in _bounded_thread(writes(), _WRITE_BEHIND_DEPTH):
                 pass

@@ -14,6 +14,29 @@ from rle_spark import analyze
 from rle_spark.codecs.base import find_runs
 
 
+def n_range_tasks(df) -> int:
+    """How many range tasks the analyze kernels split `df` into."""
+    return analyze._ranged(df, [], ["pos"]).select("pid").distinct().count()
+
+
+@pytest.fixture
+def many_tasks(spark):
+    """The session with AQE coalescing off and 48 shuffle partitions,
+    restored after: with coalescing on, AQE merges the small range
+    shuffles of these tests' inputs into ONE task, so no run would
+    cross a task edge."""
+    conf = {"spark.sql.adaptive.coalescePartitions.enabled": "false",
+            "spark.sql.shuffle.partitions": "48"}
+    before = {k: spark.conf.get(k) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        yield spark
+    finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)
+
+
 @pytest.fixture(scope="module")
 def seq_df(spark):
     """A char-per-row table with runs, spread over many partitions."""
@@ -176,15 +199,17 @@ def test_folded_kernels_leave_no_persists(spark, seq_df):
     assert analyze._PERSIST_POOL == []
 
 
-def test_folded_kernels_many_tiny_partitions(spark):
+def test_folded_kernels_many_tiny_partitions(many_tasks):
     """Boundary stitch stress: 48 range partitions over short runs so
     nearly every run touches a task edge; single giant run too. Every
     kernel that stitches runs across task edges is checked here."""
+    spark = many_tasks
     rng = np.random.default_rng(7)
     chars = np.repeat(np.array(list("AB"))[rng.integers(0, 2, 600)],
                       rng.integers(1, 4, 600))
     pdf = pd.DataFrame({"pos": np.arange(len(chars)), "ch": chars})
     df = spark.createDataFrame(pdf).repartition(48)
+    assert n_range_tasks(df) > 8
     assert ({r.value: (r.n_runs, r.total_len, r.max_run_len) for r in
              analyze.run_stats(df, "ch", ["pos"]).collect()}
             == _naive_run_stats(chars))
@@ -214,6 +239,7 @@ def test_folded_kernels_many_tiny_partitions(spark):
 
     one = pd.DataFrame({"pos": range(3000), "ch": ["Z"] * 3000})
     dfo = spark.createDataFrame(one).repartition(48)
+    assert n_range_tasks(dfo) > 8
     rows = analyze.run_stats(dfo, "ch", ["pos"]).collect()
     assert [(r.value, r.n_runs, r.total_len, r.max_run_len)
             for r in rows] == [("Z", 1, 3000, 3000)]
@@ -228,10 +254,11 @@ def test_folded_kernels_many_tiny_partitions(spark):
     analyze.clear_run_cache()
 
 
-def test_partition_runs_single_value_column(spark):
+def test_partition_runs_single_value_column(many_tasks):
     # one giant run spanning every partition boundary
     pdf = pd.DataFrame({"pos": range(5000), "ch": ["X"] * 5000})
-    df = spark.createDataFrame(pdf).repartition(8)
+    df = many_tasks.createDataFrame(pdf).repartition(8)
+    assert n_range_tasks(df) > 8
     runs = analyze.partition_runs(df, "ch", ["pos"]).collect()
     assert len(runs) == 1
     assert (runs[0].start_rn, runs[0].value, runs[0].run_len) == (1, "X", 5000)
@@ -243,13 +270,12 @@ def test_partition_runs_empty(spark):
     assert analyze.partition_runs(df, "ch", ["pos"]).count() == 0
 
 
-def test_ref_rle8_size_fused_matches_exact_model(spark):
+def test_ref_rle8_size_fused_matches_exact_model(many_tasks):
     """The fused kernel+driver chain of ref_rle8_size_v1 must equal
     codecs.refmodel.ref_rle_size_model_v1 on the same byte stream,
     including under heavy task fragmentation (48 range partitions)
-    where every candidate chain crosses task edges. AQE would coalesce
-    these small range shuffles into ONE task, so coalescing is off
-    here: with it on, no input below had a task edge at all."""
+    where every candidate chain crosses task edges."""
+    spark = many_tasks
     from rle_spark.codecs.refmodel import ref_rle_size_model_v1
 
     def model(chars):
@@ -271,27 +297,18 @@ def test_ref_rle8_size_fused_matches_exact_model(spark):
         part for i in range(60)
         for part in (np.repeat(["A", "B"][i % 2], rng.choice([20, 200])),
                      np.tile(["X", "Y"], rng.choice([25, 120, 200])))])
-    conf = {"spark.sql.adaptive.coalescePartitions.enabled": "false",
-            "spark.sql.shuffle.partitions": "48"}
-    before = {k: spark.conf.get(k) for k in conf}
-    try:
-        for k, v in conf.items():
-            spark.conf.set(k, v)
-        df = spark.createDataFrame(pd.DataFrame({
-            "pos": np.arange(len(chars)), "c1": chars, "c2": other
-        })).repartition(48)
-        got = {r.col_name: r.model_bytes for r in
-               analyze.ref_rle8_size_v1(df, ["c1", "c2"], ["pos"]).collect()}
-        assert got == {"c1": model(chars), "c2": model(other)}
-        dfg = spark.createDataFrame(pd.DataFrame({
-            "pos": np.arange(len(gaps)), "c": gaps})).repartition(48)
-        assert analyze._ranged(dfg, ["c"], ["pos"]).select(
-            "pid").distinct().count() > 8
-        got = analyze.ref_rle8_size_v1(dfg, ["c"], ["pos"]).collect()
-        assert [r.model_bytes for r in got] == [model(gaps)]
-    finally:
-        for k, v in before.items():
-            spark.conf.set(k, v)
+    df = spark.createDataFrame(pd.DataFrame({
+        "pos": np.arange(len(chars)), "c1": chars, "c2": other
+    })).repartition(48)
+    assert n_range_tasks(df) > 8
+    got = {r.col_name: r.model_bytes for r in
+           analyze.ref_rle8_size_v1(df, ["c1", "c2"], ["pos"]).collect()}
+    assert got == {"c1": model(chars), "c2": model(other)}
+    dfg = spark.createDataFrame(pd.DataFrame({
+        "pos": np.arange(len(gaps)), "c": gaps})).repartition(48)
+    assert n_range_tasks(dfg) > 8
+    got = analyze.ref_rle8_size_v1(dfg, ["c"], ["pos"]).collect()
+    assert [r.model_bytes for r in got] == [model(gaps)]
 
 
 def test_ref_rle8_size_rejects_mixed_types(spark):

@@ -462,7 +462,7 @@ def test_short_sym_stream_matches_ref_model(sc, sym_bytes):
     images, and full-range symbols (incl. the 2^64-1 broadcast seed);
     width 8 also over the runny byte images and a 9000-byte random
     one."""
-    from rle_spark.codecs.refmodel import ref_short_size_exact
+    from refshort import ref_short_size_exact
     from rle_spark.codecs.short import (short_sym_decode_bytes,
                                         short_sym_encode_bytes)
     from tests.fuzzgen import fuzz_tokens

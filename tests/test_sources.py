@@ -493,3 +493,62 @@ def test_sink_retry_skips_committed_file_and_heals_lineage(tmp_path):
     assert first[0].to_pydict()["n_docs"] == [30]
     assert os.path.exists(lin)
     assert manifest_from_lineage(out) is True
+
+
+def test_file_transport_streams_block_batches(tmp_path, monkeypatch):
+    """Both ends of the file transport stream a few blocks at a time:
+    over ~16 MiB of incompressible tokens (four emission bounds) the
+    encode kernel yields its first block batch into the sink before
+    the scan has pulled the last input batch, the committed part file
+    holds one row group per block batch, and the block scan reads that
+    file back in more than one batch. Restoring either bound to a
+    whole task's output fails it."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from rle_spark import engine, sources
+
+    n_docs, doc_len = 32_000, 128
+    flat = np.random.default_rng(14).integers(
+        0, 2**31 - 1, n_docs * doc_len, dtype=np.int32)
+    assert flat.nbytes >= 3 * engine._OUT_FLUSH_BYTES
+    src = str(tmp_path / "tokens.parquet")
+    pq.write_table(pa.table({
+        "doc_id": pa.array([f"d{i:06d}" for i in range(n_docs)]),
+        "tokens": pa.ListArray.from_arrays(
+            pa.array(np.arange(n_docs + 1, dtype=np.int32) * doc_len),
+            pa.array(flat)),
+        "source": pa.array(["synth_rand"] * n_docs)}), src,
+        row_group_size=4096)
+
+    pulls = []
+    row_groups = sources._iter_row_groups
+
+    def recorded(*args):
+        for rb in row_groups(*args):
+            pulls.append(rb.num_rows)
+            yield rb
+
+    monkeypatch.setattr(sources, "_iter_row_groups", recorded)
+    pulled_at_emit = []
+
+    def watched(blocks):
+        for rb in blocks:
+            pulled_at_emit.append(len(pulls))
+            yield rb
+
+    out = str(tmp_path / "out")
+    splits = [(src, 0, pq.ParquetFile(src).metadata.num_row_groups)]
+    encode = sources._file_encode_iter(EngineConfig(layout="mapside"))
+    (totals,) = sources._sink_task(out, "zstd", watched(encode(splits)))
+    assert totals.to_pydict()["n_tokens"] == [flat.size]
+    assert sum(pulls) == n_docs
+    assert len(pulled_at_emit) >= 3
+    assert pulled_at_emit[0] < len(pulls)
+
+    part = os.path.join(out, "blocks", "part-00000.parquet")
+    n_rg = pq.ParquetFile(part).metadata.num_row_groups
+    assert n_rg == len(pulled_at_emit) > 1
+    with sources._scan([(part, 0, n_rg)], ["payload"],
+                       sources._BLOCK_BATCH_ROWS) as batches:
+        assert len(list(batches)) > 1

@@ -6,16 +6,19 @@ Round-1 versions used `Window.orderBy(*order)` with no partitionBy
 passes. This version follows the reference's own parallel layout —
 rle8m subsections + offset table (/root/reference/src/
 rle8_low_entropy_cpu.c:126-191): range-partition the rows on the order
-key so every task holds one contiguous sorted slice (_ranged), fold
+key so every task holds one contiguous sorted slice (_arranged), fold
 each slice's runs in the task (_TaskRunFold), then stitch the
 O(num_partitions) slice boundaries (offsets + runs that span a task
 edge) on the driver in one pid-ordered walk (_stitch over
 _BoundaryRunMerger) — the offset-table merge, one row per task.
 
 Plan shape at any scale:
-  * one range shuffle of the analyzed columns (Exchange rangepartitioning)
-  * one mapInPandas pass per task (streamed Arrow batches, zero per-row
-    Python)
+  * one range shuffle (Exchange rangepartitioning) per (input, columns,
+    order) per session, locally checkpointed: every kernel over that
+    arrangement reads the checkpoint's task slices. Spark never
+    recomputes or re-samples them; on executor loss the job fails.
+  * one mapInPandas pass per task over the checkpoint (streamed Arrow
+    batches, zero per-row Python)
   * driver control flow over O(P) rows only (P = shuffle partitions) —
     the same budget as collecting a manifest summary.
 No single-partition Exchange appears anywhere over row-scale data.
@@ -29,88 +32,11 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.storagelevel import StorageLevel
 
 from .codecs.base import bit_width, find_runs
 
 _ELIG_MIN = 5   # min_short for sym_bytes=1: 1+1+1+2 (refmodel._min_short)
 _LONG_MIN = 12  # min_long  for sym_bytes=1: 1+1+4+4+2 (refmodel._min_long)
-
-# Persisted intermediates (the run kernels must pin their output so the
-# boundary collect and the downstream consumer see the SAME range
-# partitioning). Each pool entry is (owner_tag, df): queries that
-# return lazy DataFrames tag their pins (via _pool_owner) so a later
-# call of the SAME query can release exactly its predecessors' pins —
-# never an unrelated query's still-unconsumed intermediate (round-3
-# advice). Fully-consuming queries release theirs via
-# _release_persists_after; clear_run_cache() frees everything between
-# analyses in long sessions.
-_PERSIST_POOL: list[tuple[str | None, object]] = []
-_CURRENT_OWNER: str | None = None
-
-
-def _pool_append(df) -> None:
-    _PERSIST_POOL.append((_CURRENT_OWNER, df))
-
-
-class _pool_owner:
-    """Context manager: pins created inside the block are tagged with
-    `tag`, making them individually releasable via release_pins(tag)."""
-
-    def __init__(self, tag: str):
-        self.tag = tag
-
-    def __enter__(self):
-        global _CURRENT_OWNER
-        self.prev = _CURRENT_OWNER
-        _CURRENT_OWNER = self.tag
-        return self
-
-    def __exit__(self, *exc):
-        global _CURRENT_OWNER
-        _CURRENT_OWNER = self.prev
-        return False
-
-
-def release_pins(tag: str) -> None:
-    """Unpersist only the intermediates pinned under `tag` — the scoped
-    release for a query that is about to re-create its own pinned
-    lineage and knows its PREVIOUS result is no longer consumed."""
-    global _PERSIST_POOL
-    keep = []
-    for owner, cached in _PERSIST_POOL:
-        if owner == tag:
-            cached.unpersist()
-        else:
-            keep.append((owner, cached))
-    _PERSIST_POOL = keep
-
-
-def clear_run_cache() -> None:
-    """Unpersist every intermediate the analyze kernels have pinned.
-    Only call when no DataFrame returned by this module is still in
-    use — a recompute after eviction would re-sample range boundaries
-    and desynchronize the already-merged offsets."""
-    for _owner, cached in _PERSIST_POOL:
-        cached.unpersist()
-    _PERSIST_POOL.clear()
-    _STATS_MEMO.clear()
-
-
-class _release_persists_after:
-    """Context manager: unpersist only the intermediates pinned inside
-    the block (for queries that fully consume them before returning)."""
-
-    def __enter__(self):
-        self.i0 = len(_PERSIST_POOL)
-        return self
-
-    def __exit__(self, *exc):
-        for _owner, cached in _PERSIST_POOL[self.i0:]:
-            cached.unpersist()
-        del _PERSIST_POOL[self.i0:]
-        return False
-
 
 def _as_comparable(a: np.ndarray) -> np.ndarray:
     """Object (string) batches -> fixed-width unicode so run detection
@@ -289,8 +215,9 @@ def _with_offsets(spark, df: DataFrame, offsets: dict) -> DataFrame:
 
 class ParquetSource:
     """A parquet table path + spark handle. Analyze entry points accept
-    this in place of a DataFrame; column_codec_stats memoizes its O(C)
-    result rows per file fingerprint."""
+    this in place of a DataFrame; its arrangements (and the stats rows
+    derived from them) are memoized per file fingerprint, so a new
+    handle on an unchanged table reuses them."""
 
     def __init__(self, spark, path: str):
         self.spark = spark
@@ -311,7 +238,7 @@ class ParquetSource:
         paths = (parquet_files(self.path) if os.path.isdir(self.path)
                  else [self.path])
         # st_mtime_ns, not whole seconds: a same-size rewrite within
-        # one second must not serve stale memoized stats
+        # one second must not serve a stale memoized arrangement
         sig = tuple((p, (st := os.stat(p)).st_size, st.st_mtime_ns)
                     for p in paths)
         return (self.path, sig)
@@ -321,14 +248,60 @@ def _as_df(src) -> DataFrame:
     return src._df if isinstance(src, ParquetSource) else src
 
 
-def _ranged(df, cols: list[str], order: list[str]) -> DataFrame:
-    """Range-shuffle rows on the order keys: each task gets a contiguous
-    sorted slice (the rle8m subsection analogue)."""
-    return (_as_df(df).select(*dict.fromkeys([*order, *cols]))
-            .repartitionByRange(*[F.col(c) for c in order])
-            .sortWithinPartitions(*order)
-            .withColumn("pid", F.spark_partition_id())
-            .select("pid", *cols))
+# One range arrangement per (session, input, columns, order), locally
+# checkpointed: a recompute of repartitionByRange may cut different task
+# slices (Spark seeds the range sample from the RDD id), which would
+# desynchronize per-task offsets the driver has already merged into a
+# result. Evicting an entry only drops the memo's reference; Spark frees
+# a checkpoint once no DataFrame built on it is reachable, so a result
+# that is still held stays exact.
+_ARRANGED_CAP = 8  # the 20 analyze-family queries use 4 keys
+_ARRANGED: dict = {}
+
+
+class _Arrangement:
+    """A memo entry: `df` is ("pid", *cols) range-partitioned on the
+    order keys, one contiguous sorted slice per task (the rle8m
+    subsection analogue), checkpointed. What kernels derive from the
+    slices alone is kept here too."""
+
+    def __init__(self, src, cols: list[str], order: list[str]):
+        self.src = src  # holds a DataFrame key, so its id is not reused
+        self.df = (_as_df(src).select(*dict.fromkeys([*order, *cols]))
+                   .repartitionByRange(*order)
+                   .sortWithinPartitions(*order)
+                   .withColumn("pid", F.spark_partition_id())
+                   .select("pid", *cols)
+                   .localCheckpoint())
+        self._row_offsets: dict[int, int] | None = None
+        self.stats: list[tuple] | None = None  # column_codec_stats rows
+
+    def offsets(self) -> dict[int, int]:
+        """Each task's global row offset (one count job, on first use)."""
+        if self._row_offsets is None:
+            self._row_offsets = _offsets({
+                r.pid: r.cnt for r in self.df.groupBy("pid")
+                .agg(F.count("*").alias("cnt")).collect()})
+        return self._row_offsets
+
+
+def _arranged(src, cols: list[str], order: list[str]) -> _Arrangement:
+    """The memoized arrangement of `src`: a ParquetSource is keyed by
+    its file fingerprint, a DataFrame by identity."""
+    ident = src.fingerprint() if isinstance(src, ParquetSource) else id(src)
+    key = (src.sparkSession, ident, tuple(cols), tuple(order))
+    entry = _ARRANGED.pop(key, None) or _Arrangement(src, cols, order)
+    _ARRANGED[key] = entry  # most recently used last
+    while len(_ARRANGED) > _ARRANGED_CAP:
+        del _ARRANGED[next(iter(_ARRANGED))]
+    return entry
+
+
+def clear_run_cache() -> None:
+    """Drop every memoized arrangement. Results already returned stay
+    exact: each holds the checkpoint it was built on, and Spark frees a
+    checkpoint once nothing built on it is reachable."""
+    _ARRANGED.clear()
 
 
 def partition_runs_multi(df: DataFrame, cols: list[str],
@@ -342,12 +315,12 @@ def partition_runs_multi(df: DataFrame, cols: list[str],
     only resolves per-task row offsets and merges runs that span task
     boundaries — one boundary row per task per column.
 
-    The intermediate run table is persisted (MEMORY_AND_DISK) because
-    the boundary collect and the downstream consumer must observe the
-    same range-partition boundaries.
+    The run table is not stored: the boundary collect and the
+    downstream consumer each recompute it from the same checkpointed
+    slices, so both see the same task boundaries.
     """
     vtype = df.schema[cols[0]].dataType.simpleString()
-    arranged = _ranged(df, cols, order)
+    arranged = _arranged(df, cols, order).df
     # interior run rows carry null boundary columns; each task's
     # boundary row per column carries null run columns
     out_schema = (f"col_name string, pid int, local_start long, "
@@ -375,9 +348,7 @@ def partition_runs_multi(df: DataFrame, cols: list[str],
                     "value": None, "run_len": None,
                     **folds[c].boundary()}])
 
-    runs_local = (arranged.mapInPandas(it, out_schema)
-                  .persist(StorageLevel.MEMORY_AND_DISK))
-    _pool_append(runs_local)
+    runs_local = arranged.mapInPandas(it, out_schema)
 
     # --- driver-side O(P*C) control flow (the offset-table merge) ---
     bound = runs_local.filter(F.col("n").isNotNull()).collect()
@@ -428,7 +399,7 @@ def run_stats(df: DataFrame, col: str, order: list[str]) -> DataFrame:
     unbounded-cardinality columns use run_extract + groupBy.
     """
     vtype = df.schema[col].dataType.simpleString()
-    arranged = _ranged(df, [col], order)
+    arranged = _arranged(df, [col], order).df
     schema = (f"pid int, {_bound_ddl(vtype)}, vals array<{vtype}>, "
               "stats array<array<long>>")
 
@@ -481,7 +452,7 @@ def _run_histogram(df: DataFrame, col: str, order: list[str],
     folds in the O(P) boundary runs — no run table, no persist, no
     second shuffle."""
     vtype = df.schema[col].dataType.simpleString()
-    arranged = _ranged(df, [col], order)
+    arranged = _arranged(df, [col], order).df
 
     def it(batches: Iterable[pd.DataFrame]):
         hist = np.zeros(n_buckets, dtype=np.int64)
@@ -525,13 +496,11 @@ def exact_run_length_histogram(df: DataFrame, col: str, order: list[str],
         rows, "run_len int, n_runs long")
 
 
-def _run_summary(df: DataFrame, cols: list[str],
-                 order: list[str]) -> DataFrame:
+def _run_summary(arranged: DataFrame, cols: list[str]) -> DataFrame:
     """Per-(partition, column) run summary: local run count, row count,
     min/max, plus the first/last value — enough to stitch global run
     counts (and whole-column n/min/max, riding the same scan for free)
     on the driver."""
-    arranged = _ranged(df, cols, order)
     schema = ("pid int, col_name string, n long, n_runs long, "
               "vmin long, vmax long, first_val long, last_val long")
 
@@ -574,14 +543,6 @@ def _run_summary(df: DataFrame, cols: list[str],
     return arranged.mapInPandas(it, schema)
 
 
-# memoized stats rows per (source fingerprint, cols, order): the stats
-# job produces O(C) driver rows, so re-deriving queries (codec_selection
-# after column_codec_stats in the same session) rebuild the tiny
-# DataFrame from the memo instead of re-running two scans + the run
-# kernel (round-3 'what's wrong' #1). Keyed by file size+mtime — a
-# regenerated table never serves stale stats.
-_STATS_MEMO: dict = {}
-_STATS_MEMO_CAP = 256  # FIFO-evicted; also cleared by clear_run_cache()
 _STATS_DDL = ("col_name string, n_values long, vmin long, vmax long, "
               "n_distinct long, n_runs long")
 
@@ -598,28 +559,29 @@ def column_codec_stats(df, cols: list[str],
     highest-cardinality expand entirely. n/min/max and run counts ride
     the range-partitioned kernel summary (the driver stitches the
     O(P·C) summary rows, subtracting one run wherever a value continues
-    across a task edge). The two jobs are submitted concurrently — they
-    share the scan, and neither waits on the other's wall time.
-    ParquetSource inputs memoize the O(C) result rows per file
-    fingerprint for the session.
+    across a task edge). Both jobs read the checkpointed arrangement
+    and run concurrently. The O(C) result rows are kept on the
+    arrangement's memo entry, so a later call (codec_selection after
+    column_codec_stats) runs no job.
     """
-    memo_key = None
-    if isinstance(df, ParquetSource):
-        memo_key = (df.fingerprint(), tuple(cols), tuple(order))
-        hit = _STATS_MEMO.get(memo_key)
-        if hit is not None:
-            return df.sparkSession.createDataFrame(hit, _STATS_DDL)
+    arr = _arranged(df, cols, order)
+    if arr.stats is None:
+        arr.stats = _codec_stats_rows(arr.df, cols, order)
+    return df.sparkSession.createDataFrame(arr.stats, _STATS_DDL)
+
+
+def _codec_stats_rows(arranged: DataFrame, cols: list[str],
+                      order: list[str]) -> list[tuple]:
     agg_exprs = [F.countDistinct(F.col(c)).alias(f"{c}__k")
                  for c in cols if c != order[0]]
 
     from concurrent.futures import ThreadPoolExecutor
-    with ThreadPoolExecutor(max_workers=2) as pool:
+    with ThreadPoolExecutor(max_workers=1) as pool:
         fut_distinct = (pool.submit(
-            lambda: _as_df(df).agg(*agg_exprs).collect()[0])
+            lambda: arranged.agg(*agg_exprs).collect()[0])
             if agg_exprs else None)
-        summary = sorted(pool.submit(
-            lambda: _run_summary(df, cols, order).collect()).result(),
-            key=lambda r: r.pid)
+        summary = sorted(_run_summary(arranged, cols).collect(),
+                         key=lambda r: r.pid)
         stats_row = fut_distinct.result() if fut_distinct else {}
 
     n_runs = {c: 0 for c in cols}
@@ -637,14 +599,9 @@ def column_codec_stats(df, cols: list[str],
             n_runs[c] -= 1  # run spans a partition boundary
         last_val[c] = r.last_val
 
-    rows = [(c, int(n_tot[c]), int(vmin[c]), int(vmax[c]),
+    return [(c, int(n_tot[c]), int(vmin[c]), int(vmax[c]),
              int(n_runs[c]) if c == order[0] else int(stats_row[f"{c}__k"]),
              int(n_runs[c])) for c in cols]
-    if memo_key is not None:
-        while len(_STATS_MEMO) >= _STATS_MEMO_CAP:  # FIFO eviction
-            _STATS_MEMO.pop(next(iter(_STATS_MEMO)))
-        _STATS_MEMO[memo_key] = rows
-    return df.sparkSession.createDataFrame(rows, _STATS_DDL)
 
 
 class _RefModelAcc:
@@ -705,7 +662,7 @@ def ref_rle8_size_v1(df: DataFrame, cols: list[str],
         raise ValueError(f"ref_rle8_size_v1: cols must share a type, "
                          f"got {vtypes}")
     vtype = vtypes[cols[0]]
-    arranged = _ranged(df, cols, order)
+    arranged = _arranged(df, cols, order).df
     schema = (f"pid int, col_name string, {_bound_ddl(vtype)}, "
               "cand_s long, cand_l long, cmd long, lensum long, "
               "last_end long")
@@ -769,32 +726,6 @@ def ref_rle8_size_v1(df: DataFrame, cols: list[str],
 # ---------------------------------------------------------------------------
 
 
-def with_global_rn(df: DataFrame, col: str, order: list[str]) -> DataFrame:
-    """(rn long [1-based], value) under the total order, distributed:
-    the ranged kernel emits per-task local indices; the driver resolves
-    the O(P) per-task row offsets (same budget as partition_runs)."""
-    vtype = df.schema[col].dataType.simpleString()
-    arranged = _ranged(df, [col], order)
-
-    def it(batches: Iterable[pd.DataFrame]):
-        li = 0
-        for pid, pdf in _task_batches(batches):
-            n = len(pdf)
-            yield pd.DataFrame({"pid": pid,
-                                "li": np.arange(li, li + n, dtype=np.int64),
-                                "value": pdf[col].to_numpy()})
-            li += n
-
-    base = (arranged.mapInPandas(it, f"pid int, li long, value {vtype}")
-            .persist(StorageLevel.MEMORY_AND_DISK))
-    _pool_append(base)
-    offsets = _offsets({r.pid: r.cnt for r in base.groupBy("pid")
-                        .agg(F.count("*").alias("cnt")).collect()})
-    return (_with_offsets(df.sparkSession, base, offsets)
-            .select((F.col("row_offset") + F.col("li") + 1).alias("rn"),
-                    "value"))
-
-
 def sym_width_run_histogram(df: DataFrame, col: str, order: list[str],
                             sym_bytes: int) -> DataFrame:
     """ALIGNED run-length histogram at a wider symbol width: the byte
@@ -802,42 +733,38 @@ def sym_width_run_histogram(df: DataFrame, col: str, order: list[str],
     sym_bytes-wide symbols (incomplete tail symbol dropped), runs are
     detected over the symbol sequence, and lengths (in symbols) are
     bucketed by bit class — AnalyzeData's per-width aligned histogram
-    (/root/reference/src/main.c:1246+). One O(P) count pass over the
-    persisted arrangement gives each task its symbol alignment phase;
-    each task folds the runs of its complete symbols and exports the
-    bytes before and after them."""
+    (/root/reference/src/main.c:1246+). The arrangement's per-task row
+    offsets (counted once per arrangement) give each task its symbol
+    alignment phase; each task folds the runs of its complete symbols
+    and exports the bytes before and after them."""
     w = sym_bytes
-    with _release_persists_after():
-        arranged = (_ranged(df, [col], order)
-                    .persist(StorageLevel.MEMORY_AND_DISK))
-        _pool_append(arranged)
-        offsets = _offsets({r.pid: r.cnt for r in arranged.groupBy("pid")
-                            .agg(F.count("*").alias("cnt")).collect()})
+    arr = _arranged(df, [col], order)
+    offsets = arr.offsets()
 
-        def it(batches: Iterable[pd.DataFrame]):
-            pid, a = _task_array(batches, col)
-            if pid < 0:
-                return
-            a = a.astype("U1")
-            n = len(a)
-            lo = (-offsets[pid]) % w     # bytes before the first aligned sym
-            m = max(0, (n - lo) // w)    # complete symbols in this task
-            hist = np.zeros(64, dtype=np.int64)
-            fold = _TaskRunFold(lambda _v, lens, _s0: _bucket_count(
-                hist, _bit_class_vec(lens)))
-            if m:
-                fold.feed(np.ascontiguousarray(a[lo:lo + m * w].reshape(m, w))
-                          .view(f"U{w}").ravel())
-                head, tail = "".join(a[:lo]), "".join(a[lo + m * w:])
-            else:
-                head, tail = "".join(a), ""  # all sub-symbol: all boundary
-            yield pd.DataFrame([{"pid": pid, **fold.boundary(),
-                                 "hist": hist.tolist(),
-                                 "head": head, "tail": tail}])
+    def it(batches: Iterable[pd.DataFrame]):
+        pid, a = _task_array(batches, col)
+        if pid < 0:
+            return
+        a = a.astype("U1")
+        n = len(a)
+        lo = (-offsets[pid]) % w     # bytes before the first aligned sym
+        m = max(0, (n - lo) // w)    # complete symbols in this task
+        hist = np.zeros(64, dtype=np.int64)
+        fold = _TaskRunFold(lambda _v, lens, _s0: _bucket_count(
+            hist, _bit_class_vec(lens)))
+        if m:
+            fold.feed(np.ascontiguousarray(a[lo:lo + m * w].reshape(m, w))
+                      .view(f"U{w}").ravel())
+            head, tail = "".join(a[:lo]), "".join(a[lo + m * w:])
+        else:
+            head, tail = "".join(a), ""  # all sub-symbol: all boundary
+        yield pd.DataFrame([{"pid": pid, **fold.boundary(),
+                             "hist": hist.tolist(),
+                             "head": head, "tail": tail}])
 
-        parts = arranged.mapInPandas(
-            it, f"pid int, {_bound_ddl('string')}, hist array<long>, "
-                "head string, tail string").collect()
+    parts = arr.df.mapInPandas(
+        it, f"pid int, {_bound_ddl('string')}, hist array<long>, "
+            "head string, tail string").collect()
 
     # --- driver-side O(P·w) stitch: boundary bytes assemble the symbols
     # that span task edges; boundary runs extend across them ---
@@ -879,7 +806,7 @@ def unaligned_run_histogram(df: DataFrame, col: str, order: list[str],
     resolved on the driver. This replaces the round-2 rn self-join that
     cost two extra row-scale shuffles."""
     s = stride
-    arranged = _ranged(df, [col], order)
+    arranged = _arranged(df, [col], order).df
     vtype = df.schema[col].dataType.simpleString()
 
     def count(hist, match, lens) -> None:  # match-runs cover len + s bytes
@@ -936,7 +863,7 @@ def lru_recurrence(df: DataFrame, col: str, order: list[str],
     rows and the boundary-run merges in one pid-ordered walk."""
     max_k = max(ks)
     vtype = df.schema[col].dataType.simpleString()
-    arranged = _ranged(df, [col], order)
+    arranged = _arranged(df, [col], order).df
     schema = (f"pid int, {_bound_ddl(vtype)}, m long, "
               + ", ".join(f"hits_{k} long" for k in ks)
               + f", head array<{vtype}>, tail array<{vtype}>")

@@ -35,12 +35,6 @@ BLOCK_SCHEMA_DDL = (
     "codec string, orig_bytes long, comp_bytes long, payload binary"
 )
 
-MANIFEST_SCHEMA_DDL = (
-    "source string, bucket int, n_blocks long, n_docs long, n_tokens long, "
-    "orig_bytes long, comp_bytes long, codecs map<string,long>, "
-    "engine_version string"
-)
-
 DECODED_SCHEMA_DDL = "doc_id string, tokens array<int>"
 
 

@@ -12,7 +12,7 @@ This module implements that grammar as a REAL stream format (not a
 size model): 8-byte header, per-command 1 or 3(+2/4)(+2/4) bytes,
 +symbol on LUT miss, interleaved literals, 7-byte / 9+tail terminal,
 byte for byte the reference's emit expressions
-(refmodel.ref_short_bytes_exact replays them independently).
+(tests/refshort.py's ref_short_bytes_exact replays them independently).
 
 The reference writes the format once, as a template instantiated at
 every width (rleX_Xsl_short.c:7-270), and so does this module: one

@@ -23,9 +23,10 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def _ts(spark: SparkSession, sf_dir: str, name: str) -> "analyze.ParquetSource":
-    """ParquetSource handle for the analyze family: the same range
-    arrangement as a DataFrame, plus session memoization of the O(C)
-    column_codec_stats rows per file fingerprint."""
+    """ParquetSource handle for the analyze family: the analyze kernels
+    memoize one checkpointed range arrangement per (file fingerprint,
+    columns, order), so the queries over one table share its range
+    shuffle (and column_codec_stats' rows) within the session."""
     return analyze.ParquetSource(
         spark, os.path.join(sf_dir, f"{name}.parquet"))
 
@@ -39,15 +40,8 @@ def q_run_stats_returnflag(spark, sf_dir):
 
 
 def q_run_extract_orderstatus(spark, sf_dir):
-    # run_extract returns the lazy run table, which must stay pinned
-    # until consumed (analyze._PERSIST_POOL). Releasing only PREVIOUS
-    # run_extract pins (scoped by owner tag, round-3 advice) caps the
-    # pool at one table across bench re-runs without ever touching an
-    # unrelated query's still-unconsumed intermediate.
-    analyze.release_pins("run_extract")
-    with analyze._pool_owner("run_extract"):
-        return analyze.run_extract(_ts(spark, sf_dir, "orders"),
-                                   "o_orderstatus", ["o_orderkey"])
+    return analyze.run_extract(_ts(spark, sf_dir, "orders"),
+                               "o_orderstatus", ["o_orderkey"])
 
 
 def q_ref_rle8_size(spark, sf_dir):

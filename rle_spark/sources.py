@@ -251,14 +251,17 @@ def plan_parquet_splits(src_dir: str,
     Globs recursively so partitioned layouts (the streaming sink's
     blocks/epoch=K dirs, compacted epoch=-1) plan the same as flat
     dirs; hidden dot-dirs (staging areas) are skipped by glob itself.
-    A directory with visible entries but zero parquet files raises —
-    silently planning nothing turned a valid table into an empty
-    DataFrame (round-2 advice).
+    A missing path, or a directory with visible entries but zero
+    parquet files, raises — silently planning nothing turned a valid
+    table into an empty DataFrame (round-2 advice). An empty directory
+    plans [].
 
     with_bytes=True appends each unit's total row-group byte size as a
     4th field — _map_splits uses it to byte-balance the task groups."""
     import pyarrow.parquet as pq
     units: list[tuple[str, int, int]] = []
+    if not os.path.exists(src_dir):
+        raise FileNotFoundError(f"no such table directory: {src_dir!r}")
     files = parquet_files(src_dir)
     if not files and os.path.isdir(src_dir) and any(
             not e.startswith((".", "_")) for e in os.listdir(src_dir)):

@@ -4,6 +4,9 @@ The distributed kernels (range partition + per-task NumPy + O(P)
 driver boundary merge) must be bit-identical to a straightforward
 single-array computation on the same data."""
 
+import gc
+import time
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -16,7 +19,36 @@ from rle_spark.codecs.base import find_runs
 
 def n_range_tasks(df) -> int:
     """How many range tasks the analyze kernels split `df` into."""
-    return analyze._ranged(df, [], ["pos"]).select("pid").distinct().count()
+    return (analyze._arranged(df, [], ["pos"]).df
+            .select("pid").distinct().count())
+
+
+def persistent_rdds(spark) -> int:
+    """How many RDDs Spark holds persisted (checkpoints included)."""
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def release_all(spark, target: int) -> int:
+    """clear_run_cache(), then free what is unreachable in Python and
+    the JVM, polling until Spark holds at most `target` persisted RDDs
+    or 10 s pass; returns the count seen last. py4j tells the JVM about
+    dropped objects from a background thread, so each JVM GC waits for
+    that queue to drain: measured on Spark 4.1 with py4j 0.10.9.9, a GC
+    that ran before it drained left the memo's checkpoints held through
+    every later GC until other jobs ran."""
+    analyze.clear_run_cache()
+    releases = getattr(spark.sparkContext._gateway._gateway_client,
+                       "finalizer_deque", ())
+    deadline = time.monotonic() + 10
+    while True:
+        gc.collect()
+        while releases and time.monotonic() < deadline:
+            time.sleep(0.05)
+        spark.sparkContext._jvm.java.lang.System.gc()
+        time.sleep(0.25)
+        held = persistent_rdds(spark)
+        if held <= target or time.monotonic() > deadline:
+            return held
 
 
 @pytest.fixture
@@ -56,15 +88,6 @@ def test_partition_runs_matches_naive(spark, seq_df):
             for s, ln in zip(starts, lens)}
     got = {(r.start_rn, r.value, r.run_len) for r in runs}
     assert got == want
-
-
-def test_with_global_rn_matches_order(spark, seq_df):
-    df, chars = seq_df
-    rows = analyze.with_global_rn(df, "ch", ["pos"]).collect()
-    assert len(rows) == len(chars)
-    for r in rows[:50] + rows[-50:]:
-        assert chars[r.rn - 1] == r.value
-    assert sorted(r.rn for r in rows) == list(range(1, len(chars) + 1))
 
 
 def _naive_width_hist(chars, w):
@@ -187,16 +210,20 @@ def test_exact_histogram_sums_to_bit_class_total(spark, seq_df):
 
 
 def test_folded_kernels_leave_no_persists(spark, seq_df):
-    """run_stats / run_length_histogram / both histograms fully release
-    their pinned intermediates before returning (round-2 advice: the
-    pool must not grow across repeated analyses)."""
+    """The folded kernels share one checkpointed arrangement and pin
+    nothing else: once the memo is cleared and nothing built on it is
+    reachable, Spark holds no more persisted RDDs than before."""
     df, _ = seq_df
+    df.count()  # materialize the fixture's own cache before counting
     analyze.clear_run_cache()
+    before = persistent_rdds(spark)
     analyze.run_stats(df, "ch", ["pos"]).collect()
     analyze.run_length_histogram(df, "ch", ["pos"]).collect()
     analyze.sym_width_run_histogram(df, "ch", ["pos"], 2).collect()
     analyze.unaligned_run_histogram(df, "ch", ["pos"], 2).collect()
-    assert analyze._PERSIST_POOL == []
+    assert len(analyze._ARRANGED) == 1
+    assert persistent_rdds(spark) <= before + 1
+    assert release_all(spark, before) <= before
 
 
 def test_folded_kernels_many_tiny_partitions(many_tasks):
@@ -232,9 +259,6 @@ def test_folded_kernels_many_tiny_partitions(many_tasks):
                  analyze.partition_runs(df, "ch", ["pos"]).collect())
     assert got == [(int(s) + 1, chars[s], int(ln))
                    for s, ln in zip(starts, lens)]
-    got = sorted((r.rn, r.value) for r in
-                 analyze.with_global_rn(df, "ch", ["pos"]).collect())
-    assert got == [(i + 1, c) for i, c in enumerate(chars)]
     analyze.clear_run_cache()
 
     one = pd.DataFrame({"pos": range(3000), "ch": ["Z"] * 3000})
@@ -318,18 +342,53 @@ def test_ref_rle8_size_rejects_mixed_types(spark):
 
 
 def test_query_surface_persist_pool_bounded(spark):
-    """Repeated analyze-family query calls (the bench loop) keep at
-    most ONE pinned intermediate: run_extract releases previous pins at
-    entry; every other rewritten query releases its own before return."""
+    """Repeated analyze-family query calls (the bench loop) build one
+    checkpoint per arrangement key, not one per call, and Spark frees
+    them all once the memo is cleared."""
     from rle_spark import queries as Q
     sf = "/root/testdata/sf0.001"
     analyze.clear_run_cache()
+    before = persistent_rdds(spark)
     for _ in range(3):
         Q.q_run_extract_orderstatus(spark, sf).count()
         Q.q_run_stats_returnflag(spark, sf).count()
         Q.q_ref_rle8_size(spark, sf).count()
-    assert len(analyze._PERSIST_POOL) <= 1
+        Q.q_width3_run_histogram(spark, sf).count()
+        assert persistent_rdds(spark) <= before + 3
+    assert release_all(spark, before) <= before
+
+
+def test_held_results_stay_exact(many_tasks):
+    """A lazy result stays exact whatever the memo does after it was
+    made: a second call of the same query, more new arrangements than
+    the memo holds, clear_run_cache() and a JVM GC. The rows are
+    scrambled, and each input partition has more rows than the range
+    sample takes from it (3 * 100 * 8 / 8 = 300), so a re-run of the
+    range shuffle would sample other bounds and cut other slices."""
+    spark = many_tasks
+    spark.conf.set("spark.sql.shuffle.partitions", "8")  # fixture restores
+    rng = np.random.default_rng(29)
+    chars = np.repeat(np.array(list("ABC"))[rng.integers(0, 3, 6000)],
+                      rng.integers(1, 9, 6000))
+    pdf = pd.DataFrame({"pos": np.arange(len(chars)), "ch": chars})
+    df = spark.createDataFrame(pdf.iloc[rng.permutation(len(pdf))]
+                               ).repartition(8)
+    assert n_range_tasks(df) == 8
     analyze.clear_run_cache()
+    before = persistent_rdds(spark)
+    starts, lens = find_runs(chars)
+    want = [(int(s) + 1, chars[s], int(ln)) for s, ln in zip(starts, lens)]
+    held = analyze.run_extract(df, "ch", ["pos"])
+    held_runs = analyze.partition_runs(df, "ch", ["pos"])
+    assert [tuple(r) for r in analyze.run_extract(
+        df, "ch", ["pos"]).collect()] == want
+    for i in range(analyze._ARRANGED_CAP + 1):  # evicts df's entries
+        analyze._arranged(spark.range(i + 1).withColumnRenamed("id", "pos"),
+                          [], ["pos"])
+    # every checkpoint but the held results' one is freed
+    assert release_all(spark, before + 1) <= before + 1
+    assert [tuple(r) for r in held.collect()] == want
+    assert sorted(map(tuple, held_runs.collect())) == want
 
 
 # --- ParquetSource input ----------------------------------------------------
@@ -408,20 +467,28 @@ def test_column_codec_stats_memo(spark, tmp_path):
     src = analyze.ParquetSource(spark, p)
     first = analyze.column_codec_stats(src, ["pos", "ln"],
                                        ["pos"]).collect()
-    key = (src.fingerprint(), ("pos", "ln"), ("pos",))
-    assert key in analyze._STATS_MEMO
-    again = analyze.column_codec_stats(src, ["pos", "ln"],
+    entry = analyze._arranged(src, ["pos", "ln"], ["pos"])
+    assert entry.stats is not None
+    # a new handle on the unchanged file hits the same memo entry
+    src_again = analyze.ParquetSource(spark, p)
+    assert analyze._arranged(src_again, ["pos", "ln"], ["pos"]) is entry
+    again = analyze.column_codec_stats(src_again, ["pos", "ln"],
                                        ["pos"]).collect()
     assert sorted(map(tuple, first)) == sorted(map(tuple, again))
-    # a rewritten file must not serve stale stats
-    import time
+    assert len(analyze.run_stats(src, "ch", ["pos"]).collect()) == 4
+    # a rewritten file must not serve a stale arrangement: fresh stats
+    # rows and fresh kernel rows through a new ParquetSource
     time.sleep(1.1)
-    _write_pq(tmp_path, pdf.iloc[: len(pdf) // 2], "memo.parquet", 1000)
+    half = pdf.iloc[: len(pdf) // 2].copy()
+    half["ch"] = "Z"
+    _write_pq(tmp_path, half, "memo.parquet", 1000)
     src2 = analyze.ParquetSource(spark, p)
     fresh = {r.col_name: r.n_values for r in
              analyze.column_codec_stats(src2, ["pos", "ln"],
                                         ["pos"]).collect()}
     assert fresh["pos"] == len(pdf) // 2
+    assert [tuple(r) for r in analyze.run_stats(src2, "ch", ["pos"])
+            .collect()] == [("Z", 1, len(half), len(half))]
     analyze.clear_run_cache()
 
 

@@ -768,7 +768,7 @@ def test_short_stream_bytes_match_ref_replay(sc, sym_bytes):
     LUT-miss symbol, terminal forms, header) from rleX_Xsl_short.h.
     This retires the round-1..4 'in-word bit placement is
     canonicalized' deviation: sizes AND streams now match."""
-    from rle_spark.codecs.refmodel import ref_short_bytes_exact
+    from refshort import ref_short_bytes_exact
     from rle_spark.codecs.short import short_sym_encode_bytes
     from tests.fuzzgen import fuzz_tokens
     rng = np.random.default_rng(97 + sc * 10 + sym_bytes)

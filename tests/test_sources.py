@@ -156,9 +156,8 @@ def test_direct_writer_resume_skips_committed_tasks(spark, tmp_path_factory):
 
 def test_split_planning_recursive_and_strict(spark, tmp_path_factory):
     """Partitioned layouts (streaming epoch dirs) plan recursively; a
-    non-empty dir with zero parquet files raises instead of silently
-    planning an empty table (round-2 advice)."""
-    import pytest
+    missing path or a non-empty dir with zero parquet files raises
+    instead of silently planning an empty table (round-2 advice)."""
     base = str(tmp_path_factory.mktemp("nested"))
     df = token_table(spark, 40, seed=28)
     df.write.mode("overwrite").parquet(os.path.join(base, "epoch=0"))
@@ -174,6 +173,13 @@ def test_split_planning_recursive_and_strict(spark, tmp_path_factory):
     # truly empty dir still plans an empty list (no error)
     empty = str(tmp_path_factory.mktemp("empty"))
     assert plan_parquet_splits(empty) == []
+    # a missing path (a mistyped or deleted dir) is an error, not []
+    with pytest.raises(FileNotFoundError):
+        plan_parquet_splits(os.path.join(empty, "missing"))
+    # an out dir without blocks/ has nothing to decode
+    from rle_spark.sources import decode_parquet_dir_summary
+    with pytest.raises(FileNotFoundError, match="blocks"):
+        decode_parquet_dir_summary(spark, empty)
 
 
 def test_resume_config_change_forces_rewrite(spark, tmp_path_factory):

@@ -29,17 +29,21 @@ Scale design (100 TB / 10^12 sequences):
     files from Python with an atomic rename per file, so the payloads
     never return to the JVM. Clustered blocks land under Spark's
     source=/bucket= partition dirs, one file per pair.
-  * resume: the manifest is folded on the driver from the per-file
-    lineage; committed (source,bucket) pairs recorded in it are
-    skipped entirely and their files kept (SURVEY.md §7.1 step 7),
-    every other file is rewritten, so re-running a failed job is
-    idempotent without dynamic partition overwrite.
+  * resume: one commit rule for every batch writer
+    (sources._start_run). A block file is committed when it and its
+    lineage record both exist under the run's plan signature (config,
+    input files with sizes and mtimes, plan text); a resume under the
+    same signature skips the committed (source,bucket) pairs and keeps
+    their files (SURVEY.md §7.1 step 7), and rewrites every other
+    file. Any other run rewrites everything, so stale blocks are never
+    returned and re-running a failed job is idempotent. The manifest
+    is the driver-side fold of the lineage, never a Spark rescan.
 """
 
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field
+from dataclasses import asdict, dataclass, field
 
 import numpy as np
 
@@ -49,7 +53,6 @@ memtune.apply()  # must precede JVM launch (workers inherit driver env)
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from . import __version__
 from .blocks import BLOCK_SCHEMA_DDL, DECODED_SCHEMA_DDL, decode_block, frame_payload
 from .selector import SelectorConfig, StickySelector
 
@@ -92,7 +95,6 @@ def get_spark(app: str = "rle_spark", cpus: int | None = None,
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "8192")
-        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.driver.memory", os.environ.get("RLE_SPARK_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
         .getOrCreate()
@@ -413,6 +415,32 @@ def _encode_input(df: DataFrame, cfg: EngineConfig,
     return _arrange(bucketed, buckets)
 
 
+def _table_plan(df: DataFrame, cfg: EngineConfig) -> list | None:
+    """What encode_table's plan signature covers: the config, the
+    (path, size, mtime_ns) of every input file and the text of the
+    canonicalized analyzed plan, which pins filters, limits and rand()
+    seeds and reads the same in another JVM (DataFrame.semanticHash
+    does not).
+    None when the plan does not pin its rows: no input files (a file
+    read cached in the session lists none), a file off the local file:
+    scheme, a leaf that is not a file relation (in-memory, RDD or range
+    data, whose rows the text does not show), or a Python UDF (its code
+    is not in the text)."""
+    import json
+    from urllib.parse import unquote, urlparse
+    plan = df._jdf.queryExecution().analyzed()
+    nodes = plan.toJSON()
+    leaves = [n["class"] for n in json.loads(nodes) if not n["num-children"]]
+    urls = [urlparse(f) for f in sorted(df.inputFiles())]
+    if (not urls or "PythonUDF" in nodes
+            or any(u.scheme != "file" for u in urls)
+            or any(not c.endswith(".LogicalRelation") for c in leaves)):
+        return None
+    stats = [[u.geturl(), st.st_size, st.st_mtime_ns]
+             for u in urls for st in [os.stat(unquote(u.path))]]
+    return [asdict(cfg), stats, plan.canonicalized().toString()]
+
+
 def encode_table(spark: SparkSession, df: DataFrame, out_dir: str,
                  cfg: EngineConfig | None = None, resume: bool = True) -> dict:
     """Full encode job: blocks, lineage and manifest on disk, idempotent
@@ -420,79 +448,49 @@ def encode_table(spark: SparkSession, df: DataFrame, out_dir: str,
     (sources._sink_task) in the same task: mapside writes one file per
     scan split (blocks/part-<pid>.parquet); clustered writes one file
     per (source, bucket) under source=/bucket= dirs, so reads prune
-    partitions. resume=True skips the (source, bucket) pairs the
-    manifest records and keeps their files; everything else under
-    blocks/ and lineage/ is rewritten.
+    partitions.
+
+    resume=True keeps what the last run committed under the same plan
+    signature (of _table_plan; the commit rule is
+    sources._start_run): clustered skips the (source, bucket) pairs
+    whose file and lineage record both exist, including those a run
+    that crashed mid-job finished, and rewrites the rest. An input
+    with no signature (an in-memory or Python-UDF DataFrame), a changed
+    input or config, and every mapside run (its files are keyed by
+    scan-split ordinal, which no signature pins) rewrite everything.
 
     Returns a summary dict (ratio, bytes, skipped partitions).
     """
-    from .sources import (_TOTALS_DDL, _clear_outputs, _commit_manifest,
-                          _local_dir, _partition_dir, _sink_task)
+    from .sources import _TOTALS_DDL, _local_dir, _sink_task, _start_run
     cfg = cfg or EngineConfig()
     mapside = cfg.layout == "mapside"
     out_dir = _local_dir(out_dir)
-    manifest_path = os.path.join(out_dir, "manifest")
-
-    done, keep = None, set()
-    if resume and os.path.exists(manifest_path):
-        if mapside:
-            raise ValueError(
-                "resume over an existing manifest requires layout='clustered'"
-                " (mapside bucket ids are scan-split ordinals, not stable"
-                " keys to anti-join on)")
-        done = spark.read.parquet(manifest_path).select("source", "bucket")
-        keep = {_partition_dir(r["source"], r["bucket"])
-                for r in done.collect()}
+    kept = _start_run(out_dir, None if mapside else _table_plan(df, cfg),
+                      resume)
+    done = sorted({(s, b) for rec in kept for s, b, *_ in rec["groups"]})
     kernel, codec = _encode_iter_factory(cfg, mapside), cfg.parquet_codec
-    job = _encode_input(df, cfg, done if keep else None).mapInArrow(
+    _encode_input(df, cfg, spark.createDataFrame(
+        done, "source string, bucket int") if done else None).mapInArrow(
         lambda batches: _sink_task(out_dir, codec, kernel(batches),
-                                   by_key=not mapside), _TOTALS_DDL)
-    _clear_outputs(out_dir, keep)
-    job.collect()
-    return {**_commit_manifest(spark, out_dir),
-            "skipped_partitions": len(keep)}
+                                   by_key=not mapside), _TOTALS_DDL).collect()
+    return {**refresh_manifest(out_dir), "skipped_partitions": len(done)}
 
 
-def manifest_summary(out_dir: str) -> dict:
-    """Corpus totals over <out_dir>/manifest: bytes, ratio, tokens, docs
-    (zeros and ratio 1.0 for an empty manifest). Read with pyarrow on
-    the driver: no Spark job."""
-    import pyarrow.parquet as pq
-    t = pq.read_table(os.path.join(out_dir, "manifest"),
-                      columns=["orig_bytes", "comp_bytes", "n_tokens",
-                               "n_docs"])
-    orig, comp, n_tokens, n_docs = (sum(t.column(i).to_pylist())
-                                    for i in range(4))
+def refresh_manifest(out_dir: str) -> dict:
+    """Every encode writer's last step: (re)build <out_dir>/manifest as
+    the fold of the committed files' lineage, healed first
+    (sources.manifest_from_lineage), and return the corpus totals:
+    bytes, ratio, tokens, docs (zeros and ratio 1.0 when empty). Runs
+    on the driver: no Spark job."""
+    import pyarrow.compute as pc
+    from . import sources
+    t = sources.manifest_from_lineage(out_dir)
+    orig, comp, n_tokens, n_docs = (
+        pc.sum(t.column(c)).as_py() or 0
+        for c in ("orig_bytes", "comp_bytes", "n_tokens", "n_docs"))
     return {"orig_bytes": orig, "comp_bytes": comp,
             "ratio": (comp / orig) if orig else 1.0,
             "n_tokens": n_tokens, "n_docs": n_docs}
-
-
-def refresh_manifest(spark: SparkSession, out_dir: str) -> None:
-    """(Re)build <out_dir>/manifest by a Spark rescan of the committed
-    block files — ground truth. The recovery path when the lineage
-    doesn't cover the blocks (a crash window, dirs written before the
-    block sink); the writers and compaction fold the manifest from
-    lineage instead (sources.manifest_from_lineage)."""
-    blocks_path = os.path.join(out_dir, "blocks")
-    manifest_path = os.path.join(out_dir, "manifest")
-    on_disk = spark.read.schema(BLOCK_SCHEMA_DDL).parquet(blocks_path)
-    per_codec = (on_disk.groupBy("source", "bucket", "codec")
-                 .agg(F.count("*").alias("n_blocks"),
-                      F.sum("n_docs").alias("n_docs"),
-                      F.sum("n_tokens").alias("n_tokens"),
-                      F.sum("orig_bytes").alias("orig_bytes"),
-                      F.sum("comp_bytes").alias("comp_bytes")))
-    manifest = (per_codec.groupBy("source", "bucket")
-                .agg(F.sum("n_blocks").alias("n_blocks"),
-                     F.sum("n_docs").alias("n_docs"),
-                     F.sum("n_tokens").alias("n_tokens"),
-                     F.sum("orig_bytes").alias("orig_bytes"),
-                     F.sum("comp_bytes").alias("comp_bytes"),
-                     F.map_from_entries(F.collect_list(F.struct(
-                         F.col("codec"), F.col("n_blocks")))).alias("codecs"),
-                     F.lit(__version__).alias("engine_version")))
-    manifest.write.mode("overwrite").parquet(manifest_path)
 
 
 # ---------------------------------------------------------------------------

@@ -35,12 +35,17 @@ task-file write). Entry points and their sinks:
   decode_parquet_dir_summary  block splits -> per-block decode ->
                               per-task (n_docs, n_tokens)
 
-The block sink (`_sink_task`, then `_commit_manifest` on the driver)
-is every encode writer's sink, not only the direct writer's:
+The block sink (`_sink_task`, then engine.refresh_manifest on the
+driver) is every encode writer's sink, not only the direct writer's:
 engine.encode_table runs it over a DataFrame source (mapside: one file
 per task; clustered: one file per (source, bucket) in Spark's
 source=/bucket= layout) and streaming runs it per micro-batch epoch
-and for compaction.
+and for compaction. The batch writers share one commit rule
+(`_start_run`): a block file is committed when it and its lineage
+record both exist under the run's plan signature, and resume keeps
+exactly those. The manifest is always the fold of the lineage
+(`manifest_from_lineage`), which heals the lineage first; no writer
+runs a Spark job to build a manifest or to plan a resume.
 
 The codec kernels are byte-for-byte the ones the DataFrame path uses
 (engine._encode_iter_factory, engine._decode_iter) — this module only
@@ -50,6 +55,7 @@ swaps the transport.
 from __future__ import annotations
 
 import glob
+import json
 import os
 import shutil
 from collections import deque
@@ -360,6 +366,112 @@ def _roll(groups: dict, tbl) -> None:
             g[i] += int(v)
 
 
+def _file_groups(blocks_dir: str, rel: str) -> dict:
+    """The rollup of one committed block file, from its metadata
+    columns; a clustered file has no source and bucket columns, so
+    they come from its percent-escaped source=/bucket= dirs."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+    keys = ds.partitioning(pa.schema([("source", pa.string()),
+                                      ("bucket", pa.int32())]), flavor="hive")
+    groups: dict = {}
+    _roll(groups, ds.dataset(os.path.join(blocks_dir, rel), format="parquet",
+                             partitioning=keys, partition_base_dir=blocks_dir)
+          .to_table(columns=_ROLL_COLS))
+    return groups
+
+
+def _lineage_path(lineage_dir: str, rel: str) -> str:
+    """Where the lineage record of block file blocks/<rel> lives."""
+    return os.path.join(lineage_dir, rel[:-len(".parquet")] + ".json")
+
+
+def _tmp(path: str, tag) -> str:
+    """The hidden tmp a writer tagged `tag` (a task attempt) fills
+    before an atomic os.replace onto `path`."""
+    d, f = os.path.split(path)
+    return os.path.join(d, f".{f}.{tag}.tmp")
+
+
+def _load_json(path: str) -> dict:
+    """The JSON object in `path`; {} when it is missing or unreadable."""
+    try:
+        with open(path) as fh:
+            return json.load(fh)
+    except (ValueError, OSError):
+        return {}
+
+
+def _commit_lineage(lineage_dir: str, rel: str, groups: dict, tag,
+                    **fields) -> dict:
+    """Write the lineage record of block file blocks/<rel> (its totals
+    and per-(source, bucket, codec) rollup `groups`, plus `fields`)
+    through a tmp and an atomic os.replace; returns it."""
+    sums = [sum(g[i] for g in groups.values()) for i in range(5)]
+    rec = {"file": rel, **fields, **dict(zip(_TOTAL_COLS, sums)),
+           "groups": [[s, b, c, *v] for (s, b, c), v in sorted(groups.items())]}
+    lin = _lineage_path(lineage_dir, rel)
+    os.makedirs(os.path.dirname(lin), exist_ok=True)
+    with open(_tmp(lin, tag), "w") as fh:
+        json.dump(rec, fh)
+    os.replace(_tmp(lin, tag), lin)
+    return rec
+
+
+def _committed(out_dir: str) -> dict:
+    """Every visible block file under <out_dir>/blocks (its path
+    relative to blocks/) -> its lineage record, or None when it has
+    none. Deletes each lineage record whose block file is gone, and
+    each that is unreadable or has no `groups` rollup."""
+    blocks_dir = os.path.join(out_dir, "blocks")
+    lineage_dir = os.path.join(out_dir, "lineage")
+    recs = {os.path.relpath(p, blocks_dir): None
+            for p in parquet_files(blocks_dir)}
+    for path in _visible_files(lineage_dir, ".json"):
+        rel = os.path.relpath(path, lineage_dir)[:-len(".json")] + ".parquet"
+        rec = _load_json(path)
+        if rel in recs and "groups" in rec:
+            recs[rel] = rec
+        else:
+            os.remove(path)
+    return recs
+
+
+def _start_run(out_dir: str, plan: list | None, resume: bool) -> list[dict]:
+    """The one resume rule of the batch writers. A block file counts as
+    committed when it and its lineage record both exist under the
+    run's plan signature, the sha256 of the JSON list `plan` (None: an
+    input with no signature), which <out_dir>/encode_plan.json
+    records. With `resume` on and the recorded signature equal to this
+    run's, the committed files and their records stay and everything
+    else under blocks/ and lineage/ goes; in every other case (resume
+    off, no signature, another signature) both dirs are cleared.
+    Records the signature and returns the kept files' lineage records."""
+    import hashlib
+    sig = plan and hashlib.sha256(
+        json.dumps(plan, sort_keys=True).encode()).hexdigest()
+    plan_path = os.path.join(out_dir, "encode_plan.json")
+    kept = ({rel: rec for rel, rec in _committed(out_dir).items() if rec}
+            if resume and sig and _load_json(plan_path).get("sig") == sig
+            else {})
+    keep = {p for rel in kept for p in (os.path.join("blocks", rel),
+                                        _lineage_path("lineage", rel))}
+    for sub in ("blocks", "lineage"):
+        root = os.path.join(out_dir, sub)
+        for dp, _, fs in os.walk(root, topdown=False):
+            for f in fs:
+                path = os.path.join(dp, f)
+                if os.path.relpath(path, out_dir) not in keep:
+                    os.remove(path)
+            if dp != root and not os.listdir(dp):
+                os.rmdir(dp)
+        os.makedirs(root, exist_ok=True)
+    with open(_tmp(plan_path, "run"), "w") as fh:
+        json.dump({"sig": sig}, fh)
+    os.replace(_tmp(plan_path, "run"), plan_path)
+    return list(kept.values())
+
+
 def _sink_task(out_dir: str, codec: str, blocks, subdir: str = "",
                by_key: bool = False, **lineage):
     """The one block sink, run inside a task over the encode kernel's
@@ -386,7 +498,6 @@ def _sink_task(out_dir: str, codec: str, blocks, subdir: str = "",
     keyword fields. A task whose one file is already committed skips
     the kernel; a crash between the data and lineage commits heals
     there, from the committed file's metadata columns."""
-    import json
     import time
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -397,10 +508,6 @@ def _sink_task(out_dir: str, codec: str, blocks, subdir: str = "",
     attempt = tc.taskAttemptId() if tc is not None else 0
     blocks_dir = os.path.join(out_dir, "blocks")
     lineage_dir = os.path.join(out_dir, "lineage")
-
-    def tmp_of(path):
-        d, f = os.path.split(path)
-        return os.path.join(d, f".{f}.{attempt}.tmp")
 
     # rel path under blocks/ -> [writer, rollup, tmp (None: committed)]
     files: dict[str, list] = {}
@@ -423,17 +530,15 @@ def _sink_task(out_dir: str, codec: str, blocks, subdir: str = "",
             for key, part in (_key_runs(rb) if by_key else [(None, rb)]):
                 rel = (os.path.join(_partition_dir(*key), "part-00000.parquet")
                        if by_key else task_file)
-                f = files.setdefault(
-                    rel, [None, {}, tmp_of(os.path.join(blocks_dir, rel))])
+                f = files.setdefault(rel, [
+                    None, {}, _tmp(os.path.join(blocks_dir, rel), attempt)])
                 _roll(f[1], part)
                 yield partial(write, f, part.drop_columns(["source", "bucket"])
                               if by_key else part)
 
     task_file = os.path.join(subdir, f"part-{pid:05d}.parquet")
     if not by_key and os.path.exists(os.path.join(blocks_dir, task_file)):
-        files[task_file] = [None, {}, None]
-        _roll(files[task_file][1], pq.read_table(
-            os.path.join(blocks_dir, task_file), columns=_ROLL_COLS))
+        files[task_file] = [None, _file_groups(blocks_dir, task_file), None]
     else:
         # write-behind: the kernel emits a block batch every few MiB
         # (engine._OUT_FLUSH_BYTES), and each one's row group write
@@ -448,20 +553,12 @@ def _sink_task(out_dir: str, codec: str, blocks, subdir: str = "",
                 if f[0] is not None:
                     f[0].close()
     for rel, (_, groups, tmp) in files.items():
-        sums = [sum(g[i] for g in groups.values()) for i in range(5)]
-        lin = os.path.join(lineage_dir, rel[:-len(".parquet")] + ".json")
         if tmp is not None:
             os.replace(tmp, os.path.join(blocks_dir, rel))
-        elif os.path.exists(lin):
+        elif os.path.exists(_lineage_path(lineage_dir, rel)):
             continue
-        rec = {"file": rel, **lineage, **dict(zip(_TOTAL_COLS, sums)),
-               "task_wall_sec": round(time.time() - t0, 3),
-               "groups": [[s, b, c, *v]
-                          for (s, b, c), v in sorted(groups.items())]}
-        os.makedirs(os.path.dirname(lin), exist_ok=True)
-        with open(tmp_of(lin), "w") as fh:
-            json.dump(rec, fh)
-        os.replace(tmp_of(lin), lin)
+        _commit_lineage(lineage_dir, rel, groups, attempt, **lineage,
+                        task_wall_sec=round(time.time() - t0, 3))
     yield pa.record_batch(
         [pa.array([sum(g[i] for f in files.values() for g in f[1].values())],
                   pa.int64()) for i in range(5)], names=_TOTAL_COLS)
@@ -481,59 +578,34 @@ def _local_dir(out_dir: str) -> str:
     return url.path if url.scheme else out_dir
 
 
-def _clear_outputs(out_dir: str, keep=frozenset()) -> None:
-    """Ready <out_dir>/blocks and <out_dir>/lineage for a run: delete
-    every attempt tmp, and every file outside the directories `keep`
-    names relative to both ("." keeps a flat layout's committed files,
-    a clustered resume keeps its skipped keys' dirs)."""
-    for sub in ("blocks", "lineage"):
-        root = os.path.join(out_dir, sub)
-        for dp, _, fs in os.walk(root, topdown=False):
-            kept = os.path.relpath(dp, root) in keep
-            for f in fs:
-                if not kept or f.endswith(".tmp"):
-                    os.remove(os.path.join(dp, f))
-            if dp != root and not os.listdir(dp):
-                os.rmdir(dp)
-        os.makedirs(root, exist_ok=True)
-
-
-def manifest_from_lineage(out_dir: str) -> bool:
+def manifest_from_lineage(out_dir: str):
     """Assemble <out_dir>/manifest driver-side from the lineage records
-    the sink commits beside each block file — O(files) tiny JSONs
-    instead of a post-job Spark rescan of every written block (at
-    100 TB the rescan is a full metadata pass over the sink; the
-    lineage fold is what an Iceberg/Delta commit does). A record's
-    `file` is its block file's path under blocks/, so flat, epoch and
-    source=/bucket= layouts fold alike. Returns False — the caller
-    falls back to refresh_manifest's authoritative rescan — when the
-    lineage doesn't exactly cover the committed files (pre-rollup
-    lineage, blocks written without lineage, or a crash window)."""
-    import json
+    the sink commits beside each block file — O(files) tiny JSONs, no
+    Spark rescan of the written blocks (at 100 TB a rescan is a full
+    metadata pass over the sink; the lineage fold is what an
+    Iceberg/Delta commit does). A record's path mirrors its block
+    file's path under blocks/, so flat, epoch and source=/bucket=
+    layouts fold alike. The fold heals the lineage first: it deletes
+    every record whose block file is gone or that has no `groups`
+    rollup (see _committed), and rebuilds the record of every block
+    file that has none (a crash between the two commits, a compaction
+    crash window, blocks written before the sink) from the file's
+    metadata columns. Returns the manifest as a pyarrow Table."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     from . import __version__
     blocks_dir = os.path.join(out_dir, "blocks")
     lineage_dir = os.path.join(out_dir, "lineage")
     agg: dict[tuple, list] = {}
-    covered = set()
-    for path in _visible_files(lineage_dir, ".json"):
-        try:
-            with open(path) as fh:
-                rec = json.load(fh)
-        except (ValueError, OSError):
-            return False
-        if "groups" not in rec:
-            return False  # pre-rollup lineage
-        covered.add(rec.get("file"))
+    for rel, rec in _committed(out_dir).items():
+        if rec is None:
+            rec = _commit_lineage(lineage_dir, rel,
+                                  _file_groups(blocks_dir, rel), "fold")
         for s, b, c, *vals in rec["groups"]:
             g = agg.setdefault((s, int(b)), [0, 0, 0, 0, 0, {}])
             for i, v in enumerate(vals):
                 g[i] += v
             g[5][c] = g[5].get(c, 0) + vals[0]
-    if covered != {os.path.relpath(p, blocks_dir)
-                   for p in parquet_files(blocks_dir)}:
-        return False  # stale or missing lineage: rescan instead
     schema = pa.schema([("source", pa.string()), ("bucket", pa.int32()),
                         *[(c, pa.int64()) for c in _TOTAL_COLS],
                         ("codecs", pa.map_(pa.string(), pa.int64())),
@@ -548,16 +620,7 @@ def manifest_from_lineage(out_dir: str) -> bool:
     tmp = os.path.join(manifest_dir, ".manifest.tmp")
     pq.write_table(table, tmp)
     os.replace(tmp, os.path.join(manifest_dir, "part-00000.parquet"))
-    return True
-
-
-def _commit_manifest(spark: SparkSession, out_dir: str) -> dict:
-    """Every encode writer's last step: fold the manifest from lineage
-    (the authoritative rescan when lineage doesn't cover the blocks)
-    and return the corpus totals."""
-    if not manifest_from_lineage(out_dir):
-        engine.refresh_manifest(spark, out_dir)
-    return engine.manifest_summary(out_dir)
+    return table
 
 
 def encode_parquet_dir_direct(spark: SparkSession, src_dir: str,
@@ -577,15 +640,13 @@ def encode_parquet_dir_direct(spark: SparkSession, src_dir: str,
     consumed.
 
     resume=True: an interrupted job (executor/driver loss mid-write)
-    re-runs skipping every task whose committed file already exists —
-    only uncommitted tasks redo work. Soundness guard: the split plan
-    (units + task count) is fingerprinted in <out>/encode_plan.json;
-    if the recorded plan differs (input grew, task count changed), the
-    task->file mapping is stale, so the job falls back to a clean
-    rewrite instead of silently mixing layouts."""
+    re-runs skipping every task whose file and lineage record are both
+    committed — only uncommitted tasks redo work. The plan signature
+    (split plan, task count, config) is the commit rule's (_start_run):
+    if the recorded one differs (input grew, task count changed), the
+    task->file mapping is stale, so the job rewrites everything instead
+    of silently mixing layouts."""
     import dataclasses
-    import hashlib
-    import json
     cfg = cfg or EngineConfig(layout="mapside")
     encode = _file_encode_iter(cfg)
     out_dir = _local_dir(out_dir)
@@ -600,24 +661,10 @@ def encode_parquet_dir_direct(spark: SparkSession, src_dir: str,
     # codec-affecting settings change must take the clean-rewrite path,
     # not mix blocks encoded under two configs. "split_v3" versions the
     # task-assignment function (byte-balanced contiguous groups).
-    plan_sig = hashlib.sha256(
-        json.dumps(["split_v3", units, n_tasks, dataclasses.asdict(cfg),
-                    spark.sparkContext.defaultParallelism],
-                   sort_keys=True).encode()
-    ).hexdigest()
-    plan_path = os.path.join(out_dir, "encode_plan.json")
-    try:
-        with open(plan_path) as fh:
-            prev_sig = json.load(fh).get("sig")
-    except (ValueError, OSError):
-        prev_sig = None
-    _clear_outputs(out_dir, {"."} if resume and prev_sig == plan_sig
-                   else frozenset())
-    with open(plan_path, "w") as fh:
-        json.dump({"sig": plan_sig, "n_tasks": n_tasks,
-                   "n_units": len(units)}, fh)
+    _start_run(out_dir, ["split_v3", units, n_tasks, dataclasses.asdict(cfg),
+                         spark.sparkContext.defaultParallelism], resume)
     job.collect()
-    return _commit_manifest(spark, out_dir)
+    return engine.refresh_manifest(out_dir)
 
 
 def decode_parquet_dir(spark: SparkSession, out_dir: str,

@@ -8,10 +8,10 @@ new parquet files landing under the input path are encoded per
 micro-batch by the batch engine's mapside kernel, written through
 the same block sink as every other encode writer
 (sources._sink_task), and the manifest is folded from the sink's
-lineage on the driver (engine.refresh_manifest's rescan of the
-committed files is the fallback when lineage doesn't cover them, as
-after a crash). compact_blocks rewrites the epochs through the sink
-as well. Outputs are local or shared-filesystem paths.
+lineage on the driver (engine.refresh_manifest; the fold heals
+lineage that a crash left short or stale). compact_blocks rewrites the
+epochs through the sink as well. Outputs are local or
+shared-filesystem paths.
 
 Delivery semantics: the checkpoint gives each micro-batch a stable
 epoch id; each epoch writes to its OWN subdirectory
@@ -30,10 +30,11 @@ from functools import partial
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 
+from . import engine
 from .blocks import BLOCK_SCHEMA_DDL
 from .datagen import TOKEN_SCHEMA_DDL
 from .engine import EngineConfig, _encode_iter_factory
-from .sources import _TOTALS_DDL, _commit_manifest, _local_dir, _sink_task
+from .sources import _TOTALS_DDL, _local_dir, _sink_task
 
 
 def _epoch(out_dir: str, cfg: EngineConfig, df: DataFrame,
@@ -103,8 +104,8 @@ def compact_blocks(spark: SparkSession, out_dir: str,
     through the block sink, so their lineage (moved in after the swap,
     replacing the compacted epochs') lets later waves fold the manifest
     from lineage; a crash in between only leaves the lineage short,
-    and the fold then falls back to the rescan. Returns the number of
-    files after compaction.
+    and the fold heals it from the compacted files. Returns the number
+    of files after compaction.
     """
     out_dir = _local_dir(out_dir)
     blocks_path = os.path.join(out_dir, "blocks")
@@ -136,7 +137,7 @@ def compact_blocks(spark: SparkSession, out_dir: str,
     _finish_swap(blocks_path, old, hidden_new, marker)
     os.replace(os.path.join(staged, "lineage"), lineage_path)
     shutil.rmtree(staged)
-    _commit_manifest(spark, out_dir)
+    engine.refresh_manifest(out_dir)
     return sum(1 for _dp, _dn, fs in os.walk(blocks_path)
                for f in fs if f.endswith(".parquet"))
 
@@ -197,4 +198,4 @@ def encode_stream_backfill(spark: SparkSession, input_path: str,
     out_dir = _local_dir(out_dir)
     q = encode_stream(spark, input_path, out_dir, cfg, available_now=True)
     q.awaitTermination()
-    return _commit_manifest(spark, out_dir)
+    return engine.refresh_manifest(out_dir)

@@ -30,6 +30,15 @@ def tokens_df(spark):
     df.unpersist()
 
 
+@pytest.fixture(scope="module")
+def parquet_df(spark, tokens_df, tmp_path_factory):
+    """tokens_df's docs read back from parquet: an input whose files
+    and plan pin its rows, so encode_table can resume over it."""
+    src = str(tmp_path_factory.mktemp("tokens_parquet"))
+    tokens_df.write.mode("overwrite").parquet(src)
+    return spark.read.parquet(src)
+
+
 def test_encode_decode_bit_identical(spark, tokens_df):
     blocks = encode_dataframe(tokens_df, CFG).cache()
     try:
@@ -66,10 +75,10 @@ def test_incompressible_source_selects_raw(spark, tokens_df):
     assert codecs <= {"raw", "for_bitpack"}
 
 
-def test_encode_table_and_resume(spark, tokens_df, tmp_path_factory):
+def test_encode_table_and_resume(spark, parquet_df, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("enc"))
     shutil.rmtree(out, ignore_errors=True)
-    s1 = encode_table(spark, tokens_df, out, CFG)
+    s1 = encode_table(spark, parquet_df, out, CFG)
     assert s1["skipped_partitions"] == 0
     assert s1["n_docs"] == 200
     assert 0 < s1["ratio"] <= 1.0
@@ -77,40 +86,68 @@ def test_encode_table_and_resume(spark, tokens_df, tmp_path_factory):
     n_parts = manifest.count()
     assert n_parts > 0
     # resume over the same input: everything skipped, manifest unchanged
-    s2 = encode_table(spark, tokens_df, out, CFG)
+    s2 = encode_table(spark, parquet_df, out, CFG)
     assert s2["skipped_partitions"] == n_parts
     assert s2["comp_bytes"] == s1["comp_bytes"]
     assert s2["n_docs"] == s1["n_docs"]
     # decoded output still bit-identical after resume
     decoded = decode_dataframe(read_encoded(spark, out))
-    assert roundtrip_mismatch_count(tokens_df, decoded) == 0
+    assert roundtrip_mismatch_count(parquet_df, decoded) == 0
 
 
-def test_resume_after_partial_manifest(spark, tokens_df, tmp_path_factory):
-    """Kill-after-partial-commit: drop half the manifest rows, rerun,
-    final state identical (SURVEY.md §5 item e)."""
+def test_resume_after_partial_manifest(spark, parquet_df, tmp_path_factory):
+    """Kill-after-partial-commit (SURVEY.md §5 item e): a clustered run
+    that committed half its keys (block file and lineage) and no
+    manifest resumes from the lineage alone. It skips exactly those
+    keys, keeps their files as they are, rewrites the rest and ends in
+    the same state."""
     out = str(tmp_path_factory.mktemp("enc2"))
-    s1 = encode_table(spark, tokens_df, out, CFG)
-    manifest_path = os.path.join(out, "manifest")
-    m = spark.read.parquet(manifest_path).collect()
-    keep = m[: len(m) // 2]
-    # the skipped keys' committed part files: kept as they are
-    kept = {p: os.path.getmtime(p) for r in keep for p in glob.glob(
-        os.path.join(out, "blocks", f"source={r['source']}",
-                     f"bucket={r['bucket']}", "*.parquet"))}
-    assert len(kept) == len(keep)
-    shutil.rmtree(manifest_path)
-    if keep:
-        spark.createDataFrame(keep).write.parquet(manifest_path)
-        s2 = encode_table(spark, tokens_df, out, CFG)
-        assert s2["skipped_partitions"] == len(keep)
-    else:
-        s2 = encode_table(spark, tokens_df, out, CFG)
-    assert s2["comp_bytes"] == s1["comp_bytes"]
-    assert {p: os.path.getmtime(p) for p in kept} == kept
+    s1 = encode_table(spark, parquet_df, out, CFG)
+    records = sorted(glob.glob(os.path.join(out, "lineage", "source=*",
+                                            "bucket=*", "*.json")))
+    keep = records[: len(records) // 2]
+    assert keep
+    kept = {p.replace(os.path.join(out, "lineage"),
+                      os.path.join(out, "blocks"))[:-len(".json")]
+            + ".parquet" for p in keep}
+    kept = {p: os.stat(p).st_mtime_ns for p in kept}
+    for p in records[len(keep):]:
+        os.remove(p)
+    shutil.rmtree(os.path.join(out, "manifest"))
+    s2 = encode_table(spark, parquet_df, out, CFG)
+    assert s2["skipped_partitions"] == len(keep)
+    assert (s2["comp_bytes"], s2["n_docs"]) == (s1["comp_bytes"], s1["n_docs"])
+    assert {p: os.stat(p).st_mtime_ns for p in kept} == kept
     assert not glob.glob(os.path.join(out, "**", ".part-*"), recursive=True)
     decoded = decode_dataframe(read_encoded(spark, out))
-    assert roundtrip_mismatch_count(tokens_df, decoded) == 0
+    assert roundtrip_mismatch_count(parquet_df, decoded) == 0
+
+
+@pytest.mark.parametrize("via", ["memory", "parquet"])
+def test_resume_never_returns_another_inputs_blocks(spark, tmp_path_factory,
+                                                    via):
+    """encode_table's default resume=True over an out dir that holds
+    another input's blocks rewrites them: an in-memory input has no
+    plan signature, and a parquet input rewritten in place has new
+    files. Skipping the keys the old manifest listed returned the first
+    input's blocks, without error."""
+    src = str(tmp_path_factory.mktemp("stale_src"))
+    out = str(tmp_path_factory.mktemp("stale_out"))
+
+    def table(seed):
+        df = token_table(spark, 120, seed=seed)
+        if via == "memory":
+            return df
+        df.write.mode("overwrite").parquet(src)
+        return spark.read.parquet(src)
+
+    encode_table(spark, table(5), out, CFG)
+    df = table(6)
+    s = encode_table(spark, df, out, CFG)
+    assert s["skipped_partitions"] == 0
+    assert s["n_tokens"] == df.agg(F.sum("n_tok")).collect()[0][0]
+    decoded = decode_dataframe(read_encoded(spark, out))
+    assert roundtrip_mismatch_count(df, decoded) == 0
 
 
 def test_bucket_skew_bounded(spark, tokens_df):
@@ -217,16 +254,21 @@ def test_mapside_block_ids_unique(spark, tokens_df):
     assert blocks.select("block_id").distinct().count() == total
 
 
-def test_mapside_encode_table_and_decode(spark, tokens_df, tmp_path_factory):
+def test_mapside_encode_table_and_decode(spark, tokens_df, parquet_df,
+                                        tmp_path_factory):
     out = str(tmp_path_factory.mktemp("mapside_out"))
     shutil.rmtree(out, ignore_errors=True)
     s = encode_table(spark, tokens_df, out, MAPSIDE_CFG, resume=False)
     assert s["ratio"] < 1.0
     decoded = decode_dataframe(read_encoded(spark, out))
     assert roundtrip_mismatch_count(tokens_df, decoded) == 0
-    # resume over a mapside manifest must refuse, not corrupt
-    with pytest.raises(ValueError):
-        encode_table(spark, tokens_df, out, MAPSIDE_CFG, resume=True)
+    # mapside files are keyed by scan-split ordinal, which no plan
+    # signature pins: resume rewrites them, even over a parquet input
+    for _ in range(2):
+        s = encode_table(spark, parquet_df, out, MAPSIDE_CFG, resume=True)
+        assert s["skipped_partitions"] == 0
+    decoded = decode_dataframe(read_encoded(spark, out))
+    assert roundtrip_mismatch_count(parquet_df, decoded) == 0
 
 
 @pytest.mark.parametrize("codec", ["rle128_byte", "mtf32_rle8", "fsst8",

@@ -31,6 +31,17 @@ def test_ivf_index_prunes_partitions(spark, emb, tmp_path_factory):
     assert got == want
 
 
+def test_ivf_index_rebuild_replaces_every_list(spark, emb, tmp_path_factory):
+    """Rebuilding the inverted file at the same path leaves only the
+    new input's vectors. A session-wide dynamic partitionOverwriteMode
+    replaced only the lists the new input touches, so a 1-vector
+    rebuild kept 450 of the 500 old vectors."""
+    idx = str(tmp_path_factory.mktemp("ivf_rebuild") / "index")
+    S.ivf_write_index(emb, idx)
+    S.ivf_write_index(emb.limit(1), idx)
+    assert spark.read.parquet(idx).count() == 1
+
+
 def test_ivf_via_index_matches_frozen(spark, emb, tmp_path_factory):
     cache = str(tmp_path_factory.mktemp("ivfcache"))
     got = {(r.vec_id, r.sim_r3)

@@ -1,5 +1,6 @@
 """File-granular parquet source: same kernel, pyarrow transport."""
 
+import dataclasses
 import os
 import threading
 import time
@@ -265,80 +266,117 @@ def test_direct_writer_lineage(spark, tmp_path_factory):
     assert "Range" in plan and "ExistingRDD" not in plan
 
 
+def _rescan_manifest(spark, out):
+    """The manifest rows by a Spark rescan of every block file under
+    <out>/blocks: the oracle the lineage fold must equal, row for row
+    (per-(source, bucket) totals and per-codec block counts)."""
+    from rle_spark import __version__
+    from rle_spark.blocks import BLOCK_SCHEMA_DDL
+    sums = [F.sum(c).alias(c)
+            for c in ("n_docs", "n_tokens", "orig_bytes", "comp_bytes")]
+    per_codec = (spark.read.schema(BLOCK_SCHEMA_DDL)
+                 .parquet(os.path.join(out, "blocks"))
+                 .groupBy("source", "bucket", "codec")
+                 .agg(F.count("*").alias("n_blocks"), *sums))
+    rows = (per_codec.groupBy("source", "bucket")
+            .agg(F.sum("n_blocks").alias("n_blocks"), *sums,
+                 F.map_from_entries(F.collect_list(F.struct(
+                     "codec", "n_blocks"))).alias("codecs"))
+            .collect())
+    return sorted(
+        (r["source"], r["bucket"], r["n_blocks"], r["n_docs"], r["n_tokens"],
+         r["orig_bytes"], r["comp_bytes"], tuple(sorted(r["codecs"].items())),
+         __version__) for r in rows)
+
+
+def _manifest_rows(out):
+    """<out>/manifest's rows, in _rescan_manifest's form."""
+    import pyarrow.parquet as pq
+    return sorted(
+        (r["source"], r["bucket"], r["n_blocks"], r["n_docs"], r["n_tokens"],
+         r["orig_bytes"], r["comp_bytes"], tuple(sorted(r["codecs"])),
+         r["engine_version"])
+        for r in pq.read_table(os.path.join(out, "manifest")).to_pylist())
+
+
 @pytest.mark.parametrize("writer", ["direct", "clustered", "mapside",
-                                    "stream"])
+                                    "stream", "spark", "compact_crash"])
 def test_manifest_from_lineage_matches_spark_rescan(spark, tmp_path_factory,
                                                     writer):
-    """Every encode writer commits lineage through the one block sink:
-    the driver-side lineage fold and refresh_manifest's authoritative
-    Spark rescan of the written blocks produce the SAME manifest rows
-    (per-source/bucket totals and per-codec block counts) for flat,
-    source=/bucket= and epoch= layouts, and the fold refuses (-> rescan
-    fallback) when lineage doesn't cover the files."""
+    """Every encode writer commits lineage through the one block sink,
+    and the driver-side lineage fold equals a Spark rescan of the
+    written blocks for flat, source=/bucket= and epoch= layouts. The
+    fold heals the lineage first, so it still equals the rescan over a
+    dir that Spark's partitionBy wrote (no lineage), in a compaction's
+    crash window (records of the moved-away epochs, none for the
+    promoted files), and after half the records are deleted, one loses
+    its rollup, or one block file is deleted."""
     import glob
     import json
-    from rle_spark.engine import encode_table, refresh_manifest
+    from rle_spark.engine import encode_table
     from rle_spark.sources import encode_parquet_dir_direct, manifest_from_lineage
     from rle_spark.streaming import encode_stream_backfill
+    from test_streaming import _stage_crash_state
     src = str(tmp_path_factory.mktemp("msrc"))
     out = str(tmp_path_factory.mktemp("mout"))
     df = token_table(spark, 70, seed=28)
     df.repartition(4).write.mode("overwrite").parquet(src)
+    clustered = EngineConfig(block_tokens=1 << 15,
+                             target_bucket_tokens=1 << 17)
     if writer == "direct":
         encode_parquet_dir_direct(spark, src, out, CFG, n_tasks=4)
-    elif writer == "stream":
+    elif writer in ("stream", "compact_crash"):
         encode_stream_backfill(spark, src, out, CFG)
         (token_table(spark, 30, seed=29)
          .withColumn("doc_id", F.concat(F.lit("w2-"), F.col("doc_id")))
          .write.mode("append").parquet(src))
         encode_stream_backfill(spark, src, out, CFG)
+        if writer == "compact_crash":
+            _stage_crash_state(spark, out, promote=True)
+    elif writer == "spark":
+        (encode_dataframe(spark.read.parquet(src), clustered).write
+         .partitionBy("source", "bucket")
+         .parquet(os.path.join(out, "blocks")))
     else:
         encode_table(spark, spark.read.parquet(src), out,
-                     EngineConfig(block_tokens=1 << 15,
-                                  target_bucket_tokens=1 << 17,
-                                  layout=writer), resume=False)
-    lineage = glob.glob(os.path.join(out, "lineage", "**", "*.json"),
-                        recursive=True)
-    assert len(lineage) == len(glob.glob(
-        os.path.join(out, "blocks", "**", "*.parquet"), recursive=True))
+                     dataclasses.replace(clustered, layout=writer),
+                     resume=False)
 
-    def manifest_rows():
-        rows = (spark.read.parquet(os.path.join(out, "manifest"))
-                .collect())
-        return sorted(
-            (r["source"], r["bucket"], r["n_blocks"], r["n_docs"],
-             r["n_tokens"], r["orig_bytes"], r["comp_bytes"],
-             tuple(sorted(r["codecs"].items())), r["engine_version"])
-            for r in rows)
+    def block_files():
+        return sorted(glob.glob(os.path.join(out, "blocks", "**", "*.parquet"),
+                                recursive=True))
 
-    from_lineage = manifest_rows()
-    assert from_lineage  # non-empty
-    assert manifest_from_lineage(out) is True
-    assert manifest_rows() == from_lineage
-    refresh_manifest(spark, out)  # overwrite with the rescan version
-    assert manifest_rows() == from_lineage
+    def lineage():
+        return sorted(glob.glob(os.path.join(out, "lineage", "**", "*.json"),
+                                recursive=True))
 
-    if writer == "direct":
-        # skip path (committed files) rebuilds identical lineage + manifest
-        for p in lineage:
-            os.remove(p)
-        encode_parquet_dir_direct(spark, src, out, CFG, n_tasks=4,
-                                  resume=True)
-        assert manifest_rows() == from_lineage
-
-    # coverage guard: drop one lineage record -> fold refuses
-    victim = sorted(lineage)[0]
-    os.remove(victim)
-    assert manifest_from_lineage(out) is False
-    # pre-rollup (old-format) lineage -> fold refuses
-    rest = sorted(lineage)[1:]
-    rec = json.load(open(rest[0]))
+    oracle = _rescan_manifest(spark, out)
+    assert oracle  # non-empty
+    if writer in ("direct", "clustered", "mapside", "stream"):
+        assert len(lineage()) == len(block_files())
+        assert _manifest_rows(out) == oracle
+    manifest_from_lineage(out)
+    assert _manifest_rows(out) == oracle
+    # every block file has a record now, and the manifest is the same
+    # after half of them are deleted
+    assert len(lineage()) == len(block_files())
+    for p in lineage()[::2]:
+        os.remove(p)
+    manifest_from_lineage(out)
+    assert _manifest_rows(out) == oracle
+    # a record without its rollup is rebuilt from its block file
+    rec = json.load(open(lineage()[0]))
     rec.pop("groups")
-    base = os.path.basename(victim)
-    json.dump({**rec, "file": base.replace(".json", ".parquet")},
-              open(victim, "w"))
-    json.dump(rec, open(rest[0], "w"))
-    assert manifest_from_lineage(out) is False
+    json.dump(rec, open(lineage()[0], "w"))
+    manifest_from_lineage(out)
+    assert _manifest_rows(out) == oracle
+    assert "groups" in json.load(open(lineage()[0]))
+    # a deleted block file takes its record out of the manifest
+    victim = block_files()[0]
+    os.remove(victim)
+    manifest_from_lineage(out)
+    assert len(lineage()) == len(block_files())
+    assert _manifest_rows(out) == _rescan_manifest(spark, out) != oracle
 
 
 def _lingering(before: set, timeout: float = 5.0) -> list:
@@ -498,7 +536,7 @@ def test_sink_retry_skips_committed_file_and_heals_lineage(tmp_path):
     assert again[0].to_pydict() == first[0].to_pydict()
     assert first[0].to_pydict()["n_docs"] == [30]
     assert os.path.exists(lin)
-    assert manifest_from_lineage(out) is True
+    assert sum(manifest_from_lineage(out).column("n_docs").to_pylist()) == 30
 
 
 def test_file_transport_streams_block_batches(tmp_path, monkeypatch):

@@ -417,28 +417,33 @@ def _encode_input(df: DataFrame, cfg: EngineConfig,
 
 def _table_plan(df: DataFrame, cfg: EngineConfig) -> list | None:
     """What encode_table's plan signature covers: the config, the
-    (path, size, mtime_ns) of every input file and the text of the
-    canonicalized analyzed plan, which pins filters, limits and rand()
-    seeds and reads the same in another JVM (DataFrame.semanticHash
-    does not).
+    (path, size, mtime_ns) of every input file, the text of the
+    canonicalized analyzed plan, which pins filters and limits and
+    reads the same in another JVM (DataFrame.semanticHash does not),
+    and what sets the scan's split layout (default parallelism and the
+    spark.sql.files.* confs set), which a limit's rows depend on.
     None when the plan does not pin its rows: no input files (a file
     read cached in the session lists none), a file off the local file:
-    scheme, a leaf that is not a file relation (in-memory, RDD or range
-    data, whose rows the text does not show), or a Python UDF (its code
-    is not in the text)."""
-    import json
+    scheme, a leaf that is not a file relation (in-memory, RDD, range
+    or JDBC data, whose rows the text does not show), a
+    nondeterministic plan (rand(seed) values follow the split layout)
+    or a Python UDF (its code is not in the text)."""
     from urllib.parse import unquote, urlparse
     plan = df._jdf.queryExecution().analyzed()
-    nodes = plan.toJSON()
-    leaves = [n["class"] for n in json.loads(nodes) if not n["num-children"]]
+    leaves = plan.collectLeaves()
     urls = [urlparse(f) for f in sorted(df.inputFiles())]
-    if (not urls or "PythonUDF" in nodes
+    if (not urls or not plan.deterministic() or "PythonUDF" in plan.toJSON()
             or any(u.scheme != "file" for u in urls)
-            or any(not c.endswith(".LogicalRelation") for c in leaves)):
+            or any(n.getClass().getSimpleName() != "LogicalRelation" or
+                   n.relation().getClass().getSimpleName() != "HadoopFsRelation"
+                   for n in map(leaves.apply, range(leaves.size())))):
         return None
     stats = [[u.geturl(), st.st_size, st.st_mtime_ns]
              for u in urls for st in [os.stat(unquote(u.path))]]
-    return [asdict(cfg), stats, plan.canonicalized().toString()]
+    split = [df.sparkSession.sparkContext.defaultParallelism, sorted(
+        kv for kv in df.sparkSession.conf.getAll.items()
+        if kv[0].startswith(("spark.sql.files.", "spark.sql.leafNode")))]
+    return [asdict(cfg), stats, plan.canonicalized().toString(), split]
 
 
 def encode_table(spark: SparkSession, df: DataFrame, out_dir: str,
@@ -455,9 +460,10 @@ def encode_table(spark: SparkSession, df: DataFrame, out_dir: str,
     sources._start_run): clustered skips the (source, bucket) pairs
     whose file and lineage record both exist, including those a run
     that crashed mid-job finished, and rewrites the rest. An input
-    with no signature (an in-memory or Python-UDF DataFrame), a changed
-    input or config, and every mapside run (its files are keyed by
-    scan-split ordinal, which no signature pins) rewrite everything.
+    with no signature (in-memory, non-file, nondeterministic or
+    Python-UDF), a changed input, config or split layout, and every
+    mapside run (its files are keyed by scan-split ordinal) rewrite
+    everything.
 
     Returns a summary dict (ratio, bytes, skipped partitions).
     """

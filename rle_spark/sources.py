@@ -358,10 +358,12 @@ def _key_runs(rb):
 
 def _roll(groups: dict, tbl) -> None:
     """Add a batch's blocks to a per-(source, bucket, codec) rollup of
-    [n_blocks, n_docs, n_tokens, orig_bytes, comp_bytes]."""
+    [n_blocks, n_docs, n_tokens, orig_bytes, comp_bytes]. A null source
+    rolls up as "": both go to the __HIVE_DEFAULT_PARTITION__ dir, which
+    a clustered file's source is read back from as null."""
     for s, b, c, *vals in zip(*(tbl.column(c).to_pylist()
                                 for c in _ROLL_COLS)):
-        g = groups.setdefault((s, int(b), c), [0] * 5)
+        g = groups.setdefault((s or "", int(b), c), [0] * 5)
         for i, v in enumerate((1, *vals)):
             g[i] += int(v)
 
@@ -429,8 +431,7 @@ def _committed(out_dir: str) -> dict:
             for p in parquet_files(blocks_dir)}
     for path in _visible_files(lineage_dir, ".json"):
         rel = os.path.relpath(path, lineage_dir)[:-len(".json")] + ".parquet"
-        rec = _load_json(path)
-        if rel in recs and "groups" in rec:
+        if rel in recs and "groups" in (rec := _load_json(path)):
             recs[rel] = rec
         else:
             os.remove(path)

@@ -123,14 +123,16 @@ def test_resume_after_partial_manifest(spark, parquet_df, tmp_path_factory):
     assert roundtrip_mismatch_count(parquet_df, decoded) == 0
 
 
-@pytest.mark.parametrize("via", ["memory", "parquet"])
+@pytest.mark.parametrize("via", ["memory", "parquet", "rand"])
 def test_resume_never_returns_another_inputs_blocks(spark, tmp_path_factory,
                                                     via):
     """encode_table's default resume=True over an out dir that holds
     another input's blocks rewrites them: an in-memory input has no
-    plan signature, and a parquet input rewritten in place has new
-    files. Skipping the keys the old manifest listed returned the first
-    input's blocks, without error."""
+    plan signature, a parquet input rewritten in place has new files,
+    and a rand() filter's rows change with the scan's split layout
+    (here a smaller spark.sql.files.maxPartitionBytes). Skipping the
+    keys the old manifest listed returned the first input's blocks,
+    without error."""
     src = str(tmp_path_factory.mktemp("stale_src"))
     out = str(tmp_path_factory.mktemp("stale_out"))
 
@@ -138,16 +140,25 @@ def test_resume_never_returns_another_inputs_blocks(spark, tmp_path_factory,
         df = token_table(spark, 120, seed=seed)
         if via == "memory":
             return df
+        if via == "rand":
+            if seed == 5:
+                df.repartition(4).write.mode("overwrite").parquet(src)
+            else:
+                spark.conf.set("spark.sql.files.maxPartitionBytes", 1 << 16)
+            return spark.read.parquet(src).filter(F.rand(3) < 0.5)
         df.write.mode("overwrite").parquet(src)
         return spark.read.parquet(src)
 
-    encode_table(spark, table(5), out, CFG)
-    df = table(6)
-    s = encode_table(spark, df, out, CFG)
-    assert s["skipped_partitions"] == 0
-    assert s["n_tokens"] == df.agg(F.sum("n_tok")).collect()[0][0]
-    decoded = decode_dataframe(read_encoded(spark, out))
-    assert roundtrip_mismatch_count(df, decoded) == 0
+    try:
+        encode_table(spark, table(5), out, CFG)
+        df = table(6)
+        s = encode_table(spark, df, out, CFG)
+        assert s["skipped_partitions"] == 0
+        assert s["n_tokens"] == df.agg(F.sum("n_tok")).collect()[0][0]
+        decoded = decode_dataframe(read_encoded(spark, out))
+        assert roundtrip_mismatch_count(df, decoded) == 0
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
 
 
 def test_bucket_skew_bounded(spark, tokens_df):

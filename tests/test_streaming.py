@@ -14,16 +14,21 @@ CFG = EngineConfig(block_tokens=1 << 15, layout="mapside")
 
 
 def _lineage_covers(out):
-    """Every block file under <out>/blocks has the lineage record its
-    writer committed (the manifest fold has nothing to heal)."""
+    """Every block file under <out>/blocks has a lineage record, and
+    each record is the one the block sink committed: only the sink
+    writes task_wall_sec, so a record the manifest fold rebuilt (a
+    writer that stopped committing lineage) fails this."""
     import glob
+    import json
 
     def rels(sub, ext):
         root = os.path.join(out, sub)
-        return {os.path.relpath(p, root)[:-len(ext)] for p in glob.glob(
+        return {os.path.relpath(p, root)[:-len(ext)]: p for p in glob.glob(
             os.path.join(root, "**", "*" + ext), recursive=True)}
 
-    return rels("blocks", ".parquet") == rels("lineage", ".json")
+    records = rels("lineage", ".json")
+    return (rels("blocks", ".parquet").keys() == records.keys() and all(
+        "task_wall_sec" in json.load(open(p)) for p in records.values()))
 
 
 def test_stream_backfill_then_incremental(spark, tmp_path_factory):

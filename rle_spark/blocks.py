@@ -45,7 +45,9 @@ def frame_payload(codec_name: str, n_tokens: int, payload: bytes) -> bytes:
 
 
 def unframe_payload(buf: bytes) -> tuple[str, int, memoryview]:
-    mv = memoryview(buf)
+    # unsigned bytes: a pyarrow Buffer (the decode kernel's as_buffer())
+    # exports signed chars, which byte-indexing decoders misread
+    mv = memoryview(buf).cast("B")
     if len(mv) < _HEADER_BYTES:
         raise ValueError(f"block frame of {len(mv)} bytes is shorter than "
                          f"its {_HEADER_BYTES}-byte header")
@@ -60,7 +62,13 @@ def unframe_payload(buf: bytes) -> tuple[str, int, memoryview]:
 
 
 def decode_block(buf: bytes) -> np.ndarray:
-    """Decode a framed block payload to the int32 token array."""
+    """Decode a framed block payload to the int32 token array; a
+    payload that decodes to other than the frame's n_tokens raises (a
+    raw payload is the tokens themselves: its length must match)."""
     name, n_tokens, body = unframe_payload(buf)
-    return REGISTRY[name].decode(body, n_tokens)
+    out = REGISTRY[name].decode(body, n_tokens)
+    if len(out) != n_tokens or (name == "raw" and len(body) != 4 * n_tokens):
+        raise ValueError(f"{name} block of {len(body)} payload bytes decoded "
+                         f"to {len(out)} tokens, its frame says {n_tokens}")
+    return out
 

@@ -13,11 +13,12 @@ table, one row per codec:
     estimate  block_stats -> exact payload bytes, inf if the codec
               declines (estimate tier only)
 
-Rows are built from two adapters. `_tokens` hands the int32 tokens to
-the kernel. `_image` hands it the tokens' little-endian byte image and
-turns the first n*4 decoded bytes back into tokens. The symbol width
-is a codec parameter, not a property of the data
-(src/rleX_extreme_cpu.c:4-64).
+Rows are built from two adapters (all but `raw`, whose payload is the
+image itself). `_tokens` hands the int32 tokens to the kernel. `_image`
+hands it the tokens' little-endian byte image, checks that the decoded
+image is n tokens padded to whole symbols, and turns its first n*4
+bytes back into tokens. The symbol width is a codec parameter, not a
+property of the data (src/rleX_extreme_cpu.c:4-64).
 
 Tiers:
 
@@ -107,12 +108,21 @@ def _tokens(encode, decode):
             lambda buf, n: decode(buf))
 
 
-def _image(encode, decode, **params):
+def _image(encode, decode, *, symbol_bytes=1, **params):
     """`encode(img, **params)` sees the byte image; `decode(buf,
-    **params)` returns a buffer whose first n*4 bytes are the image."""
+    **params)` returns the image, zero-padded to whole symbol_bytes-wide
+    symbols; a decoded image that is not n tokens so padded raises."""
     enc, dec = partial(encode, **params), partial(decode, **params)
-    return (lambda a: enc(tokens_to_bytes(a)),
-            lambda buf, n: np.frombuffer(dec(buf), TOKEN_DTYPE, count=n).copy())
+
+    def decode_tokens(buf, n):
+        img = dec(buf)
+        size = memoryview(img).nbytes
+        if size != -(-4 * n // symbol_bytes) * symbol_bytes:
+            raise ValueError(f"decoded image of {size} bytes is not "
+                             f"{n} tokens")
+        return np.frombuffer(img, TOKEN_DTYPE, count=n).copy()
+
+    return (lambda a: enc(tokens_to_bytes(a))), decode_tokens
 
 
 def _sym_rle(width_bits):
@@ -121,7 +131,7 @@ def _sym_rle(width_bits):
     return _image(
         lambda img: rle_encode_symbols(byte_image_symbols(img, width_bits)[0],
                                        packed=True),
-        partial(rle_decode_symbols, dtype=dt))
+        partial(rle_decode_symbols, dtype=dt), symbol_bytes=dt.itemsize)
 
 
 def _components(comp_bytes, n_comp):
@@ -138,7 +148,8 @@ def _components(comp_bytes, n_comp):
         return rle_encode_multi([np.ascontiguousarray(c) for c in m.T])
 
     return _image(encode,
-                  lambda buf: np.stack(rle_decode_multi(buf, n_comp, dt), axis=1))
+                  lambda buf: np.stack(rle_decode_multi(buf, n_comp, dt), axis=1),
+                  symbol_bytes=comp_bytes * n_comp)
 
 
 def _rle_after(transform, inverse, **params):
@@ -207,7 +218,11 @@ def _est_single32(st):
 # ---------------------------------------------------------------------------
 
 CODECS: list[Codec] = [
-    Codec(0, "raw", *_image(bytes, memoryview), "estimate", _est_raw),
+    # no adapter: the payload IS the image, so its extent is the
+    # caller's (blocks.decode_block checks it); decode reads n tokens
+    Codec(0, "raw", lambda a: bytes(tokens_to_bytes(a)),
+          lambda buf, n: np.frombuffer(buf, TOKEN_DTYPE, count=n).copy(),
+          "estimate", _est_raw),
     Codec(1, "for_bitpack",
           *_tokens(pack_ints, lambda buf: unpack_ints(buf, out_dtype=TOKEN_DTYPE)
                    .astype(TOKEN_DTYPE, copy=False)),

@@ -504,41 +504,43 @@ def refresh_manifest(out_dir: str) -> dict:
 # ---------------------------------------------------------------------------
 
 
-def _decode_iter(batches):
-    """mapInArrow inverse: block rows -> (doc_id, tokens) rows.
+def _decode_blocks(rb):
+    """The one decode step, under every decode path: per row of a block
+    batch (only `payload` and `doc_lens` are read), ONE codec-kernel
+    call, then a check of the decoded length against the sum of that
+    row's doc_lens. Yields (row, doc_lens, tokens); a block whose tokens
+    would spill into a neighbour's docs raises ValueError."""
+    lens = rb.column("doc_lens")
+    offs, vals = lens.offsets.to_numpy(), lens.values.to_numpy()
+    for row, payload in enumerate(rb.column("payload")):
+        # as_buffer: zero-copy view of the Arrow payload slab
+        tokens = decode_block(payload.as_buffer())
+        doc_lens = vals[offs[row]:offs[row + 1]]
+        if len(tokens) != (n := doc_lens.sum(dtype=np.int64)):
+            raise ValueError(f"block batch row {row} decoded to "
+                             f"{len(tokens)} tokens, its doc_lens sum to {n}")
+        yield row, doc_lens, tokens
 
-    One codec-kernel call per BLOCK; the per-doc re-slicing is pure
-    offset arithmetic on the flat decoded buffer (a single
-    ListArray.from_arrays call) — zero per-doc Python, mirroring the
-    encoder.
+
+def _decode_iter(batches):
+    """mapInArrow inverse: block rows -> (doc_id, tokens) rows, one
+    output batch per block (`_decode_blocks`). The tokens ListArray
+    wraps the block's own decoded array (no copy, offsets from 0); the
+    per-doc re-slicing is pure offset arithmetic — zero per-doc Python,
+    mirroring the encoder.
     """
     import pyarrow as pa
 
     memtune.lazy_zip_invalidation()
     for rb in batches:
-        payloads, n = rb.column("payload"), rb.num_rows
-        # chunk the output so one yielded batch stays < ~2^31 values
-        row0 = 0
-        while row0 < n:
-            # 256M tokens per output batch
-            row1, tok_budget, flats = row0, 256 << 20, []
-            while row1 < n and tok_budget > 0:
-                # as_buffer: zero-copy view of the Arrow payload slab
-                flats.append(decode_block(payloads[row1].as_buffer()))
-                tok_budget -= len(flats[-1])
-                row1 += 1
-            flat = flats[0] if len(flats) == 1 else np.concatenate(flats)
-            part = rb.slice(row0, row1 - row0)
-            doc_lens = (part.column("doc_lens").flatten()
-                        .to_numpy(zero_copy_only=False))
-            offsets = np.concatenate(
-                ([0], np.cumsum(doc_lens, dtype=np.int64)))
+        doc_ids = rb.column("doc_ids")
+        for row, doc_lens, tokens in _decode_blocks(rb):
+            offsets = np.insert(np.cumsum(doc_lens, dtype=np.int64), 0, 0)
             tokens_list = pa.ListArray.from_arrays(
                 pa.array(offsets, pa.int32()),
-                pa.array(flat.astype(np.int32, copy=False)))
-            yield pa.record_batch([part.column("doc_ids").flatten(),
-                                   tokens_list], names=["doc_id", "tokens"])
-            row0 = row1
+                pa.array(tokens.astype(np.int32, copy=False)))
+            yield pa.record_batch([doc_ids[row].values, tokens_list],
+                                  names=["doc_id", "tokens"])
 
 
 def decode_dataframe(blocks: DataFrame) -> DataFrame:

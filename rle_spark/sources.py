@@ -32,8 +32,9 @@ task-file write). Entry points and their sinks:
                               lineage
   decode_parquet_dir          block splits -> decode kernel ->
                               (doc_id, tokens) rows
-  decode_parquet_dir_summary  block splits -> per-block decode ->
-                              per-task (n_docs, n_tokens)
+  decode_parquet_dir_summary  block splits -> the decode kernel's
+                              per-block step -> per-task (n_docs,
+                              n_tokens)
 
 The block sink (`_sink_task`, then engine.refresh_manifest on the
 driver) is every encode writer's sink, not only the direct writer's:
@@ -47,9 +48,10 @@ exactly those. The manifest is always the fold of the lineage
 (`manifest_from_lineage`), which heals the lineage first; no writer
 runs a Spark job to build a manifest or to plan a resume.
 
-The codec kernels are byte-for-byte the ones the DataFrame path uses
-(engine._encode_iter_factory, engine._decode_iter) — this module only
-swaps the transport.
+The kernels are the ones the DataFrame path uses
+(engine._encode_iter_factory, engine._decode_iter, and under every
+decode path its one length-checked step engine._decode_blocks) — this
+module only swaps the transport.
 """
 
 from __future__ import annotations
@@ -688,27 +690,25 @@ def decode_parquet_dir(spark: SparkSession, out_dir: str,
 
 def decode_parquet_dir_summary(spark: SparkSession, out_dir: str,
                                n_tasks: int | None = None) -> DataFrame:
-    """Decode every committed block with the standard kernels, tasks
-    reading block files directly with pyarrow, returning per-task
-    (n_docs, n_tokens) — the decode-throughput measurement shape: the
-    decoded arrays materialize in the python worker (where a training
-    dataloader consumes them) without an artificial Arrow IPC hop back
-    to the JVM. Reads only payload/doc_lens: the doc ids and the
-    per-doc ListArray of the full decode kernel are not needed here."""
-    from .blocks import decode_block
+    """Decode every committed block with the one decode step
+    (engine._decode_blocks: decode, then the length check against
+    doc_lens), tasks reading block files directly with pyarrow,
+    returning per-task (n_docs, n_tokens) — the decode-throughput
+    measurement shape: the decoded arrays materialize in the python
+    worker (where a training dataloader consumes them) without an
+    artificial Arrow IPC hop back to the JVM. Reads only
+    payload/doc_lens: the doc ids and the per-doc ListArray that
+    engine._decode_iter builds are not needed here."""
 
     def it(splits):
         import pyarrow as pa
-        import pyarrow.compute as pc
         n_docs = n_tokens = 0
         with _scan(splits, ["payload", "doc_lens"],
                    _BLOCK_BATCH_ROWS) as blks:
             for blk in blks:
-                # as_buffer: zero-copy view of the Arrow payload
-                for p in blk.column("payload"):
-                    n_tokens += len(decode_block(p.as_buffer()))
-                n_docs += int(pc.sum(pc.list_value_length(
-                    blk.column("doc_lens"))).as_py() or 0)
+                for _, doc_lens, tokens in engine._decode_blocks(blk):
+                    n_docs += len(doc_lens)
+                    n_tokens += len(tokens)
         yield pa.record_batch(
             [pa.array([n_docs], pa.int64()), pa.array([n_tokens], pa.int64())],
             names=["n_docs", "n_tokens"])

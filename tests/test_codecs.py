@@ -862,3 +862,9 @@ def test_unframe_rejects_short_frame_and_unknown_codec():
     struct.pack_into("<H", bad, 5, 999)  # the codec id field
     with pytest.raises(ValueError, match="unknown codec id 999"):
         decode_block(bytes(bad))
+    # an n_tokens header off by one raises, never returns 99 of 100
+    # tokens or 100 of a claimed 101 (rle8: a byte-image codec)
+    toks = np.arange(100, dtype=np.int32)
+    for codec, n in (("raw", 99), ("for_bitpack", 101), ("rle8", 99)):
+        with pytest.raises(ValueError, match=f"{n} tokens|says {n}"):
+            decode_block(frame_payload(codec, n, REGISTRY[codec].encode(toks)))

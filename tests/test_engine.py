@@ -369,3 +369,119 @@ def test_binary_array_offsets_never_wrap():
     assert _binary_array(vals, [2, 0, 3]).equals(pa.array(vals, pa.binary()))
     with pytest.raises(ValueError, match="int32"):
         _binary_array(vals, [2**30, 2**30, 3])
+
+
+def _block_batch(blocks):
+    """A block batch (payload, doc_ids, doc_lens) of framed blocks from
+    (codec, tokens, doc_lens) triples; docs are numbered d0, d1, ...
+    across the batch."""
+    import pyarrow as pa
+    from rle_spark.blocks import frame_payload
+    from rle_spark.codecs import REGISTRY
+    rows = {"payload": [], "doc_ids": [], "doc_lens": []}
+    n_docs = 0
+    for codec, tokens, doc_lens in blocks:
+        rows["payload"].append(frame_payload(codec, len(tokens),
+                                             REGISTRY[codec].encode(tokens)))
+        rows["doc_ids"].append([f"d{n_docs + i}" for i in range(len(doc_lens))])
+        rows["doc_lens"].append(list(doc_lens))
+        n_docs += len(doc_lens)
+    return pa.RecordBatch.from_pydict(rows, schema=pa.schema(
+        [("payload", pa.binary()), ("doc_ids", pa.list_(pa.string())),
+         ("doc_lens", pa.list_(pa.int32()))]))
+
+
+def _run_tokens(rng, n_runs=10, run=5):
+    return np.repeat(rng.integers(0, 9, n_runs), run).astype(np.int32)
+
+
+def test_decode_kernel_rejects_doc_lens_across_block_edge():
+    """doc_lens off by one across a block edge ([20, 31] over a 50-token
+    block, [19, 30] over the next) raise instead of giving d1 a token
+    of the next block."""
+    from rle_spark.engine import _decode_iter
+    rng = np.random.default_rng(5)
+    batch = _block_batch([("rle32_sym", _run_tokens(rng), lens)
+                          for lens in ([20, 31], [19, 30])])
+    with pytest.raises(ValueError, match="row 0 decoded to 50 tokens"):
+        list(_decode_iter(iter([batch])))
+
+
+def test_decode_summary_rejects_doc_lens_that_disagree(spark, tmp_path):
+    """A block file whose doc_lens do not sum to its payload's tokens
+    fails decode_parquet_dir_summary's job with the step's ValueError
+    instead of being counted."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from rle_spark.sources import decode_parquet_dir_summary
+    rng = np.random.default_rng(6)
+    batch = _block_batch([("rle32_sym", _run_tokens(rng), [20, 31])])
+    os.makedirs(tmp_path / "blocks")
+    pq.write_table(pa.Table.from_batches([batch]),
+                   str(tmp_path / "blocks" / "part-00000.parquet"))
+    with pytest.raises(Exception, match="ValueError: block batch row 0 "
+                                        "decoded to 50 tokens"):
+        decode_parquet_dir_summary(spark, str(tmp_path)).collect()
+
+
+def test_decode_kernel_every_codec(tmp_path, monkeypatch):
+    """One block per codec id, all 61, through the one decode step
+    without Spark: _decode_iter returns every doc exactly, as one batch
+    per block whose tokens ListArray is built over that block's tokens
+    alone (offsets from 0, values exactly its tokens), and the per-task
+    counts of decode_parquet_dir_summary, its tasks run in-process,
+    add up to the same docs and tokens."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from rle_spark import sources
+    from rle_spark.codecs import REGISTRY
+    from rle_spark.engine import _decode_iter
+    rng = np.random.default_rng(7)
+    inputs = [np.repeat(rng.integers(0, 9, 300),
+                        rng.integers(1, 12, 300)).astype(np.int32),
+              rng.integers(0, 2**31 - 1, 1000).astype(np.int32)]
+    blocks = []
+    for codec in sorted(REGISTRY.values(), key=lambda c: c.codec_id):
+        tokens = next(a for a in inputs if codec.encode(a) is not None)
+        cut = len(tokens) // 3
+        blocks.append((codec.name, tokens, [cut, 0, len(tokens) - cut]))
+    assert len(blocks) == 61
+    batch = _block_batch(blocks)
+    want = {}
+    for _, tokens, lens in blocks:
+        for doc, part in zip(range(len(want), len(want) + 3),
+                             np.split(tokens, np.cumsum(lens)[:-1])):
+            want[f"d{doc}"] = part
+
+    out = list(_decode_iter(iter([batch])))
+    assert len(out) == len(blocks)
+    got = {}
+    for b, (_, tokens, _) in zip(out, blocks):
+        b.validate(full=True)
+        col = b.column("tokens")
+        assert col.offsets[0].as_py() == 0
+        np.testing.assert_array_equal(col.values.to_numpy(), tokens)
+        for doc_id, toks in zip(b.column("doc_id").to_pylist(), col):
+            got[doc_id] = toks.values.to_numpy()
+    assert got.keys() == want.keys()
+    for doc_id, toks in want.items():
+        np.testing.assert_array_equal(got[doc_id], toks, err_msg=doc_id)
+
+    # the summary's tasks, run here over two tasks' splits of the file
+    os.makedirs(tmp_path / "blocks")
+    pq.write_table(pa.Table.from_batches([batch]),
+                   str(tmp_path / "blocks" / "part-00000.parquet"),
+                   row_group_size=8)
+
+    def in_process(spark, src_dir, task, schema, n_tasks):
+        units = sources.plan_parquet_splits(src_dir, 1, with_bytes=True)
+        groups = sources._balanced_contiguous_groups(units, n_tasks)
+        return [rb for g in groups for rb in task([u[:3] for u in g])], None
+
+    monkeypatch.setattr(sources, "_map_splits", in_process)
+    counts = pa.Table.from_batches(
+        sources.decode_parquet_dir_summary(None, str(tmp_path), n_tasks=2))
+    assert counts.num_rows == 2 and min(counts.column("n_docs").to_pylist()) > 0
+    assert sum(counts.column("n_docs").to_pylist()) == len(want)
+    assert sum(counts.column("n_tokens").to_pylist()) == sum(
+        len(t) for _, t, _ in blocks)

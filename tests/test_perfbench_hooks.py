@@ -42,3 +42,41 @@ def test_perfbench_hooks_run_in_encode(spark, tmp_path, monkeypatch,
     assert job.encode(spark, src, out)["n_docs"] == 40
     assert set(calls) == {f"{mod.__name__}.{attr}"
                           for mod, attr, _ in job.hooks}
+
+
+def test_layer_replay_reports_no_failures(tmp_path, monkeypatch):
+    """perfbench's layer replay (perfbench/layers.py, what a traced
+    benchmark run times) over a ~4 MB corpus reports no failed check.
+    It drives the engine internals a traced run reaches:
+    _encode_iter_factory, StickySelector, frame_payload, _READ_COLUMNS,
+    _SCAN_BATCH_ROWS, and _decode_iter fed 64-row batches of exactly
+    payload/doc_ids/doc_lens, its decoded token count checked against
+    the `tokens` values of every yielded batch."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from rle_spark.datagen import generate_docs_pandas
+    from rle_spark.engine import EngineConfig
+
+    monkeypatch.setattr(sys, "path",
+                        [os.path.join(ROOT, "perfbench"), *sys.path])
+    spec = importlib.util.spec_from_file_location(
+        "perfbench_layers", os.path.join(ROOT, "perfbench", "layers.py"))
+    layers = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(layers)
+    spans = importlib.import_module("spans")
+
+    src = tmp_path / "src"
+    src.mkdir()
+    pdf = generate_docs_pandas(range(160), seed=9)
+    assert 3 << 20 < 4 * int(pdf["n_tok"].sum()) < 6 << 20
+    pq.write_table(pa.table({
+        "doc_id": pdf["doc_id"].tolist(),
+        "tokens": pa.array([t for t in pdf["tokens"]], pa.list_(pa.int32())),
+        "n_tok": pdf["n_tok"].to_numpy(),
+        "source": pdf["source"].tolist()}), str(src / "part-0.parquet"),
+        row_group_size=40)
+    metrics, attempted, failures = layers.replay(
+        str(src), str(tmp_path), EngineConfig(layout="mapside"),
+        spans.Tracer("t", True), 2, 4 << 20)
+    assert failures == [] and attempted > 0
+    assert metrics["engine.decode_kernel_GBps"] > 0

@@ -163,8 +163,8 @@ def encode_run(cpus: int, src_path: str, out_dir: str,
     spark = (make_spark(cpus, f"bench-encode-{cpus}"))
     spark.sparkContext.setLogLevel("ERROR")
     try:
-        # dry pass (reference protocol, src/main.c:808-811): spawn +
-        # heap-warm one python worker per core, JIT/codegen the plan
+        # dry pass (reference protocol, src/main.c:808-811): spawn
+        # one python worker per core, JIT/codegen the plan
         # shapes, warm the writer path — on a SMALL twin corpus when
         # one is provided (the corpus itself lives in shm, so there is
         # no disk cache to warm; a full-size dry spent ~50 s/leg
@@ -443,7 +443,7 @@ def main():
         spark = make_spark(CPUS, "bench-queries")
         spark.sparkContext.setLogLevel("ERROR")
         from rle_spark.engine import warm_python_workers
-        warm_python_workers(spark, CPUS)  # untimed worker spawn/heap warm
+        warm_python_workers(spark, CPUS)  # untimed worker spawn
         queries, query_walls = run_queries(spark)
         spark.stop()
 

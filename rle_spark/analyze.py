@@ -33,7 +33,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
-from .codecs.base import bit_width, find_runs
+from .codecs.base import find_runs
 
 _ELIG_MIN = 5   # min_short for sym_bytes=1: 1+1+1+2 (refmodel._min_short)
 _LONG_MIN = 12  # min_long  for sym_bytes=1: 1+1+4+4+2 (refmodel._min_long)
@@ -922,23 +922,6 @@ def lru_recurrence(df: DataFrame, col: str, order: list[str],
     rows = [(int(k), int(totals[k]), int(n_runs)) for k in ks]
     return df.sparkSession.createDataFrame(
         rows, "k int, n_hits long, n_runs long")
-
-
-# estimate formulas shared with the SQL oracle (q_codec_selection):
-# keep in sync with __spark_entry__.py oracle text
-
-
-def est_for_bitpack(n: int, vmin: int, vmax: int) -> int:
-    return 17 + (n * bit_width(vmax - vmin) + 7) // 8
-
-
-def est_dict_bitpack(n: int, vmin: int, vmax: int, k: int) -> int:
-    dict_bytes = 17 + (k * bit_width(vmax - vmin) + 7) // 8
-    return dict_bytes + 17 + (n * bit_width(max(k - 1, 0)) + 7) // 8
-
-
-def est_raw(n: int) -> int:
-    return 16 + 4 * n
 
 
 def codec_selection(stats: DataFrame) -> DataFrame:

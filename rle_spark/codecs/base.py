@@ -26,7 +26,6 @@ import struct
 import numpy as np
 
 MAGIC = b"RSPK"
-FORMAT_VERSION = 1
 
 # ---------------------------------------------------------------------------
 # section container
@@ -167,15 +166,19 @@ def pack_bits(values: np.ndarray, width: int, fits: bool = False) -> bytes:
             .tobytes()[:(n * width + 7) // 8])
 
 
-def unpack_bits(buf: bytes | memoryview, width: int, n: int) -> np.ndarray:
-    """Inverse of pack_bits -> uint64 array of length n."""
+def unpack_bits(buf: bytes | memoryview, width: int, n: int,
+                dtype=np.uint64) -> np.ndarray:
+    """Inverse of pack_bits -> fresh `dtype` array of length n. dtype
+    is uint64 or, for width <= 32, uint32: the per-lane store then
+    casts to 4 B, halving the transpose pass, and int32 consumers skip
+    a converting copy of the whole stream."""
     if width == 0 or n == 0:
-        return np.zeros(n, dtype=np.uint64)
+        return np.zeros(n, dtype=dtype)
     if width in (8, 16, 32, 64):
         return np.frombuffer(buf, dtype=f">u{width // 8}",
-                             count=n).astype(np.uint64)
+                             count=n).astype(dtype)
     if n < _LANE_MIN_N:
-        return _unpack_bits_matrix(buf, width, n)
+        return _unpack_bits_matrix(buf, width, n).astype(dtype, copy=False)
     gcd = math.gcd(width, 64)
     per, q = 64 // gcd, width // gcd
     g = (n + per - 1) // per
@@ -189,14 +192,14 @@ def unpack_bits(buf: bytes | memoryview, width: int, n: int) -> np.ndarray:
     # byteswap-cast falls off the vectorized path)
     words = np.ascontiguousarray(
         raw.view(">u8").astype(np.uint64).reshape(g, q).T)
-    out = np.empty((per, g), dtype=np.uint64)
+    out = np.empty((per, g), dtype=dtype)
     for k in range(per):
         p = k * width
         j, r = p >> 6, p & 63
         part = (words[j] << np.uint64(r)) >> np.uint64(64 - width)
         if r + width > 64:
             part = part | (words[j + 1] >> np.uint64(128 - r - width))
-        out[k] = part
+        out[k] = part  # casting store when dtype is uint32
     return np.ascontiguousarray(out.T).reshape(-1)[:n]
 
 
@@ -229,37 +232,6 @@ def pack_ints(arr: np.ndarray) -> bytes:
     return struct.pack("<qBQ", lo, w, n) + payload
 
 
-def _unpack_bits_u32(buf, width: int, n: int) -> np.ndarray:
-    """unpack_bits emitting uint32 (width <= 32): same wire stream, but
-    the per-lane store casts to 4 B, halving the transpose pass — and
-    int32 consumers then skip a converting copy of the whole stream."""
-    if width == 0 or n == 0:
-        return np.zeros(n, dtype=np.uint32)
-    if width in (8, 16, 32):
-        return np.frombuffer(buf, dtype=f">u{width // 8}",
-                             count=n).astype(np.uint32)
-    if n < _LANE_MIN_N:
-        return _unpack_bits_matrix(buf, width, n).astype(np.uint32)
-    gcd = math.gcd(width, 64)
-    per, q = 64 // gcd, width // gcd
-    g = (n + per - 1) // per
-    nbytes = (n * width + 7) // 8
-    raw = np.empty(g * q * 8, dtype=np.uint8)
-    raw[:nbytes] = np.frombuffer(buf, dtype=np.uint8, count=nbytes)
-    raw[nbytes:] = 0
-    words = np.ascontiguousarray(
-        raw.view(">u8").astype(np.uint64).reshape(g, q).T)
-    out = np.empty((per, g), dtype=np.uint32)
-    for k in range(per):
-        p = k * width
-        j, r = p >> 6, p & 63
-        part = (words[j] << np.uint64(r)) >> np.uint64(64 - width)
-        if r + width > 64:
-            part = part | (words[j + 1] >> np.uint64(128 - r - width))
-        out[k] = part  # casting store: one pass, contiguous row
-    return np.ascontiguousarray(out.T).reshape(-1)[:n]
-
-
 def unpack_ints(buf: bytes | memoryview, out_dtype=None) -> np.ndarray:
     """Decode pack_ints. With out_dtype=int32 the stream is emitted
     directly as int32 whenever w <= 32 and lo itself fits int32: the
@@ -278,7 +250,7 @@ def unpack_ints(buf: bytes | memoryview, out_dtype=None) -> np.ndarray:
     lo, w, n = struct.unpack_from("<qBQ", mv, 0)
     if (out_dtype is not None and np.dtype(out_dtype) == np.int32
             and w <= 32 and -(1 << 31) <= lo <= (1 << 31) - 1):
-        vals32 = _unpack_bits_u32(mv[17:], w, n).view(np.int32)
+        vals32 = unpack_bits(mv[17:], w, n, np.uint32).view(np.int32)
         if lo:
             np.add(vals32, np.int32(lo), out=vals32)
         if n and lo + (1 << w) - 1 > (1 << 31) - 1 and vals32.min() < lo:

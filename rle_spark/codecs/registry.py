@@ -111,16 +111,19 @@ def _tokens(encode, decode):
 def _image(encode, decode, *, symbol_bytes=1, **params):
     """`encode(img, **params)` sees the byte image; `decode(buf,
     **params)` returns the image, zero-padded to whole symbol_bytes-wide
-    symbols; a decoded image that is not n tokens so padded raises."""
+    symbols; a decoded image that is not n tokens so padded raises, as
+    does a nonzero padding byte (the frame's n is too short)."""
     enc, dec = partial(encode, **params), partial(decode, **params)
 
     def decode_tokens(buf, n):
-        img = dec(buf)
-        size = memoryview(img).nbytes
-        if size != -(-4 * n // symbol_bytes) * symbol_bytes:
-            raise ValueError(f"decoded image of {size} bytes is not "
+        img = np.frombuffer(dec(buf), np.uint8)
+        if len(img) != -(-4 * n // symbol_bytes) * symbol_bytes:
+            raise ValueError(f"decoded image of {len(img)} bytes is not "
                              f"{n} tokens")
-        return np.frombuffer(img, TOKEN_DTYPE, count=n).copy()
+        if img[4 * n:].any():
+            raise ValueError(f"decoded image holds nonzero bytes past "
+                             f"its {n} tokens")
+        return img[:4 * n].view(TOKEN_DTYPE).copy()
 
     return (lambda a: enc(tokens_to_bytes(a))), decode_tokens
 

@@ -44,6 +44,7 @@ from __future__ import annotations
 
 import os
 from dataclasses import asdict, dataclass, field
+from typing import ClassVar
 
 import numpy as np
 
@@ -61,9 +62,8 @@ from .selector import SelectorConfig, StickySelector
 class EngineConfig:
     block_tokens: int = 1 << 18          # tokens per encoded block
     target_bucket_tokens: int = 8 << 20  # tokens per (source,bucket)
-    min_buckets: int = 1
     selector: SelectorConfig = field(default_factory=SelectorConfig)
-    parquet_codec: str = "zstd"
+    parquet_codec: ClassVar[str] = "zstd"  # page codec of every block file
     # layout = how blocks are grouped on disk:
     #   "clustered": one explicit shuffle to (source, bucket) partitions —
     #     re-clusters arbitrary input, manifest-level resume skips
@@ -77,19 +77,17 @@ class EngineConfig:
     layout: str = "clustered"
 
 
-def get_spark(app: str = "rle_spark", cpus: int | None = None,
-              shuffle_partitions: int | None = None) -> SparkSession:
+def get_spark(app: str = "rle_spark", cpus: int | None = None) -> SparkSession:
     """Local-mode session with the engine's recommended conf.
 
     On a real cluster the same conf applies minus `master`; the job is
     shipped via spark-submit --py-files (see rle_spark/jobs/encode.py).
     """
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    sp = shuffle_partitions or max(cpus, 8)
     return (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app)
-        .config("spark.sql.shuffle.partitions", str(sp))
+        .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
@@ -101,17 +99,13 @@ def get_spark(app: str = "rle_spark", cpus: int | None = None,
     )
 
 
-def warm_python_workers(spark: SparkSession, cpus: int, mb: int = 128) -> None:
-    """One dry pass that spawns a python worker per core and touches
-    `mb` MiB of heap in each — the engine's analogue of the reference
-    benchmark's untimed dry run (/root/reference/src/main.c:808-811),
-    here also defeating this host's first-touch page-fault stalls and
-    making each worker's zip-import caches lazy (see memtune)."""
-    from .memtune import warm_heap
+def warm_python_workers(spark: SparkSession, cpus: int) -> None:
+    """One dry pass that spawns a python worker per core and makes its
+    zip-import caches lazy (see memtune) — the engine's analogue of the
+    reference benchmark's untimed dry run (src/main.c:808-811)."""
 
     def it(batches):
         memtune.lazy_zip_invalidation()
-        warm_heap(mb)
         yield from batches
 
     (spark.range(cpus * 2, numPartitions=cpus * 2)
@@ -132,8 +126,8 @@ def bucket_counts(df: DataFrame, cfg: EngineConfig) -> dict[str, int]:
     totals = (df.groupBy("source").agg(F.sum("n_tok").alias("total"))
               .collect())
     return {
-        r["source"]: max(cfg.min_buckets,
-                         int(np.ceil((r["total"] or 0) / cfg.target_bucket_tokens)))
+        r["source"]: max(1, int(np.ceil((r["total"] or 0)
+                                        / cfg.target_bucket_tokens)))
         for r in totals
     }
 

@@ -1,15 +1,21 @@
-"""Python worker process tuning: the allocator and the zip-import caches.
+"""Python worker process tuning: glibc's allocator and the zip-import
+caches.
 
-Allocator. The 4-cpu VM this was measured on faults fresh anonymous
-pages at a wildly bimodal rate (10 MB/s .. 3 GB/s for first-touch).
-glibc's default MMAP_THRESHOLD makes every large NumPy buffer a fresh
-mmap that is returned to the OS on free — so every codec call re-pays the fault
-cost. Raising the thresholds keeps big allocations inside the heap
-arena where pages are reused; together with a one-time per-worker
-heap warmup (engine.warm_python_workers) steady-state kernel
-throughput is ~3 GB/s/core instead of ~10 MB/s worst case. `apply`
-must run BEFORE the JVM gateway starts: python workers inherit the
-driver JVM's environment.
+Allocator. `apply` exports 1 GiB glibc mmap and trim thresholds and a
+32 MiB top pad, so a task's large NumPy buffers stay in the heap and
+reuse its pages instead of being unmapped on free and faulted in again.
+It must run BEFORE the JVM gateway starts: python workers inherit the
+driver JVM's environment. Measured on a 4-cpu, 16 GB host (perfbench
+seed 1, 10 s runs, interleaved): without the three overrides
+incompressible_files decode_GBps fell from a median 0.571 to 0.518
+(lower in 8 of 10 pairs) and encode_GBps from 0.321 to 0.300; they
+hold about 100 MB of worker_peak_rss_mb there (1088 against 991 MB).
+On that host a fresh 256 MiB np.ones faults its pages at 6-7 GB/s and
+reuses them at ~12 GB/s. Two overrides were dropped on the same runs,
+as neither bought throughput: ARROW_DEFAULT_MEMORY_POOL=system (Arrow
+keeps its bundled jemalloc; 110-125 MB less worker RSS) and a 128 MiB
+per-worker heap warm-up (about 430 MB less). warm_heap stays only
+because perfbench's layer replay calls it.
 
 Zip imports. PySpark's worker calls importlib.invalidate_caches() at
 the start of every task. Its sys.path holds the pyspark and py4j zips,
@@ -32,12 +38,6 @@ _VARS = {
     "MALLOC_MMAP_THRESHOLD_": str(1 << 30),
     "MALLOC_TRIM_THRESHOLD_": str(1 << 30),
     "MALLOC_TOP_PAD_": str(1 << 25),
-    # Route Arrow allocations through glibc malloc so they share the
-    # tuned heap arena above: Arrow's bundled jemalloc returns big
-    # scan-batch buffers to the OS on free, re-paying this host's
-    # pathological first-touch fault cost on every batch — measured
-    # ~7% off the 4-worker encode leg (8.06 -> 7.48 s at 6.7 GB).
-    "ARROW_DEFAULT_MEMORY_POOL": "system",
 }
 
 

@@ -346,42 +346,6 @@ def argmin_case_sql(names: list[str]) -> str:
     return "(CASE " + " ".join(cases) + f" ELSE {len(names) - 1} END)"
 
 
-def ivf_assign(emb: DataFrame, C: np.ndarray,
-               vec_col: str = "embedding",
-               id_col: str = "vec_id") -> DataFrame:
-    """Add the coarse list id. At scale this column is the write-time
-    partition key — probing touches only the matching parquet
-    partitions (the inverted file). Two-step projection: each distance
-    is computed once as a column, then a cheap argmin CASE — keeps the
-    codegen expression linear in n_lists."""
-    dist_cols = [F.expr(_l2_expr(vec_col, C[j], 0)).alias(f"_d{j}")
-                 for j in range(len(C))]
-    tmp = emb.select(F.col(id_col), F.col(vec_col), *dist_cols)
-    case = argmin_case_sql([f"_d{j}" for j in range(len(C))])
-    return tmp.select(F.col(id_col), F.col(vec_col),
-                      F.expr(case).alias("ivf_list"))
-
-
-def ivf_topk(emb: DataFrame, query_vec: list[float], k: int = 10,
-             n_lists: int = IVF_LISTS, probes: int = IVF_PROBES,
-             centroids: np.ndarray | None = None,
-             vec_col: str = "embedding", id_col: str = "vec_id") -> DataFrame:
-    """IVF ANN: exact cosine restricted to the `probes` nearest lists.
-
-    Work per query ~ probes/n_lists of the data, and with ivf_list as
-    a partition column the untouched lists are partition-pruned at the
-    scan. centroids must be precomputed (ivf_centroids) — at 100 TB
-    from a driver-side sample, here from the full (small) table."""
-    assert centroids is not None, "pass ivf_centroids(...)"
-    C = centroids
-    qv = np.asarray(query_vec, dtype=np.float64)
-    d2 = ((C - qv[None, :]) ** 2).sum(axis=1)
-    probe_lists = [int(j) for j in np.argsort(d2, kind="stable")[:probes]]
-    assigned = ivf_assign(emb, C, vec_col, id_col)
-    cand = assigned.filter(F.col("ivf_list").isin(probe_lists))
-    return cosine_topk(cand, query_vec, k, vec_col, id_col)
-
-
 # frozen quantizer training corpus: at 100 TB the IVF index is built
 # from a bounded driver-side sample once and applied everywhere — here
 # the sample is the sf0.01 embeddings table, shared by the Spark query

@@ -94,10 +94,8 @@ def _bounded_thread(calls, depth: int):
     in order. The consumer's thread pulls `calls`, so whatever creates
     them stays on it: the encode kernel that feeds the task-file writes
     (write-behind), or nothing but `next` on a generator whose work
-    then moves to the helper thread (readahead, `_read_ahead`). Keeping
-    the kernel on the task thread keeps its allocations in the main
-    malloc arena that warm_python_workers pre-faults. A call's
-    exception re-raises in the consumer. When the consumer stops early
+    then moves to the helper thread (readahead, `_read_ahead`). A
+    call's exception re-raises in the consumer. When the consumer stops early
     (close(), or an exception in its loop body), calls not yet started
     are cancelled, the running one finishes and the thread is joined
     before `calls` is closed, so no thread outlives its task."""

@@ -36,6 +36,8 @@ from .datagen import TOKEN_SCHEMA_DDL
 from .engine import EngineConfig, _encode_iter_factory
 from .sources import _TOTALS_DDL, _local_dir, _sink_task
 
+_MAX_FILES_PER_TRIGGER = 8  # input files per micro-batch
+
 
 def _epoch(out_dir: str, cfg: EngineConfig, df: DataFrame,
            epoch_id: int) -> None:
@@ -56,7 +58,6 @@ def _epoch(out_dir: str, cfg: EngineConfig, df: DataFrame,
 def encode_stream(spark: SparkSession, input_path: str, out_dir: str,
                   cfg: EngineConfig | None = None,
                   checkpoint: str | None = None,
-                  max_files_per_trigger: int = 8,
                   available_now: bool = True):
     """Start the incremental encode stream; returns the StreamingQuery.
 
@@ -70,7 +71,7 @@ def encode_stream(spark: SparkSession, input_path: str, out_dir: str,
     out_dir = _local_dir(out_dir)
     checkpoint = checkpoint or os.path.join(out_dir, "_checkpoint")
     src = (spark.readStream.schema(TOKEN_SCHEMA_DDL)
-           .option("maxFilesPerTrigger", str(max_files_per_trigger))
+           .option("maxFilesPerTrigger", str(_MAX_FILES_PER_TRIGGER))
            .parquet(input_path))
     writer = (src.writeStream.foreachBatch(partial(_epoch, out_dir, cfg))
               .option("checkpointLocation", checkpoint))

@@ -15,7 +15,7 @@ def spark():
     # default lets the one session-wide JVM grow past 14 GB RSS, enough
     # for a 16 GB host's OOM killer to take it mid-suite.
     os.environ.setdefault("RLE_SPARK_DRIVER_MEM", "6g")
-    s = get_spark("rle-spark-tests", cpus=8, shuffle_partitions=8)
+    s = get_spark("rle-spark-tests", cpus=8)
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()

@@ -868,3 +868,14 @@ def test_unframe_rejects_short_frame_and_unknown_codec():
     for codec, n in (("raw", 99), ("for_bitpack", 101), ("rle8", 99)):
         with pytest.raises(ValueError, match=f"{n} tokens|says {n}"):
             decode_block(frame_payload(codec, n, REGISTRY[codec].encode(toks)))
+
+
+@pytest.mark.parametrize("codec", ["rle64_sym", "rle128_sym", "rle48_sym"])
+def test_image_frame_ending_inside_symbol_padding_raises(codec):
+    """A 100-token block framed as 99 tokens: for 8- and 16-byte
+    symbols the 99-token image pads to the same 400 bytes, so only the
+    nonzero 100th token in the padding tells the frame is short."""
+    from rle_spark.blocks import decode_block, frame_payload
+    toks = np.arange(1, 101, dtype=np.int32)
+    with pytest.raises(ValueError, match="99 tokens"):
+        decode_block(frame_payload(codec, 99, REGISTRY[codec].encode(toks)))

@@ -80,3 +80,20 @@ def test_layer_replay_reports_no_failures(tmp_path, monkeypatch):
         spans.Tracer("t", True), 2, 4 << 20)
     assert failures == [] and attempted > 0
     assert metrics["engine.decode_kernel_GBps"] > 0
+
+
+def test_perfbench_process_setup(spark, monkeypatch):
+    """perfbench's process set-up: memtune.apply() before the session
+    starts, then warm_python_workers(spark, cpus) once per session. The
+    warm-up takes no heap size: it only spawns the workers."""
+    import inspect
+
+    from rle_spark import engine, memtune
+
+    for k in memtune._VARS:  # the test's environment is restored after
+        monkeypatch.delenv(k, raising=False)
+    memtune.apply()
+    assert memtune._VARS.items() <= os.environ.items()
+    assert list(inspect.signature(engine.warm_python_workers).parameters) \
+        == ["spark", "cpus"]
+    engine.warm_python_workers(spark, 2)

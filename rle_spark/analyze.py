@@ -1,13 +1,11 @@
 """Column analysis operators — the --analyze feature extractor
 (/root/reference/src/main.c:1246-2257) re-expressed scale-safe.
 
-Round-1 versions used `Window.orderBy(*order)` with no partitionBy
-(a single-partition global sort) and `repartition(1)` whole-column
-passes. This version follows the reference's own parallel layout —
-rle8m subsections + offset table (/root/reference/src/
-rle8_low_entropy_cpu.c:126-191): range-partition the rows on the order
-key so every task holds one contiguous sorted slice (_arranged), fold
-each slice's runs in the task (_TaskRunFold), then stitch the
+The layout is the reference's own parallel one — rle8m subsections +
+offset table (/root/reference/src/rle8_low_entropy_cpu.c:126-191):
+range-partition the rows on the order key so every task holds one
+contiguous sorted slice (_arranged), fold each slice's runs in the task
+(_fold, one _TaskRunFold per task and column), then stitch the
 O(num_partitions) slice boundaries (offsets + runs that span a task
 edge) on the driver in one pid-ordered walk (_stitch over
 _BoundaryRunMerger) — the offset-table merge, one row per task.
@@ -26,6 +24,8 @@ No single-partition Exchange appears anywhere over row-scale data.
 
 from __future__ import annotations
 
+import bisect
+from concurrent.futures import ThreadPoolExecutor
 from typing import Iterable
 
 import numpy as np
@@ -34,6 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from .codecs.base import find_runs
+from .memtune import lazy_zip_invalidation
 
 _ELIG_MIN = 5   # min_short for sym_bytes=1: 1+1+1+2 (refmodel._min_short)
 _LONG_MIN = 12  # min_long  for sym_bytes=1: 1+1+4+4+2 (refmodel._min_long)
@@ -71,16 +72,6 @@ def _task_batches(batches: Iterable[pd.DataFrame]):
             yield int(pdf["pid"].iloc[0]), pdf
 
 
-def _task_array(batches: Iterable[pd.DataFrame],
-                col: str) -> tuple[int, np.ndarray | None]:
-    """One task's pid and its whole column as one comparable array
-    (-1, None for an empty task)."""
-    pid, chunks = -1, []
-    for pid, pdf in _task_batches(batches):
-        chunks.append(_as_comparable(pdf[col].to_numpy()))
-    return pid, np.concatenate(chunks) if chunks else None
-
-
 # the per-task boundary export of _TaskRunFold, one row per (task, column)
 _BOUND_COLS = ["n", "first_v", "first_l", "last_v", "last_l", "last_s"]
 
@@ -91,56 +82,41 @@ def _bound_ddl(vtype: str) -> str:
 
 
 class _TaskRunFold:
-    """Streaming run detection over one task's batches: every COMPLETE
-    interior run goes to `sink(vals, lens, local_starts)` (vectorized);
-    the task's first closed run and final open run are held back for
-    boundary export (they may merge with neighbor tasks' edge runs — the
-    rle8m offset-table stitch, /root/reference/src/rle8_low_entropy_cpu.c:126-191).
+    """Streaming run detection over one task's batches: feed() returns
+    the COMPLETE interior runs each batch closes, vectorized; the task's
+    first closed run and final open run are held back for boundary
+    export (they may merge with neighbor tasks' edge runs — the rle8m
+    offset-table stitch, /root/reference/src/rle8_low_entropy_cpu.c:126-191).
     """
 
-    def __init__(self, sink):
-        self.sink = sink
+    def __init__(self):
         self.cur: tuple | None = None    # open run (value, len, local_start)
         self.first: tuple | None = None  # first CLOSED run (value, len)
         self.n = 0  # rows fed so far: the local index of the next row
 
-    def _close(self, v, ln: int, s0: int) -> None:
-        if self.first is None:
-            self.first = (v, ln)  # a task's first run starts at local 0
-        else:
-            self.sink(np.asarray([v]), np.asarray([ln], dtype=np.int64),
-                      np.asarray([s0], dtype=np.int64))
-
-    def feed(self, a: np.ndarray) -> None:
-        n = len(a)
-        if n == 0:
-            return
+    def feed(self, a: np.ndarray) -> tuple:
+        """Fold in the next batch; returns the interior runs it closed
+        as (vals, lens, local_starts)."""
         starts, lens = find_runs(a)
         vals = a[starts]
-        k = len(starts)
-        row0 = self.n
-        self.n += n
-        i0 = 0
-        if self.cur is not None:
-            if vals[0] == self.cur[0]:
-                if k == 1:
-                    self.cur = (self.cur[0], self.cur[1] + n, self.cur[2])
-                    return
-                self._close(self.cur[0], self.cur[1] + int(lens[0]),
-                            self.cur[2])
-                i0 = 1
+        starts += self.n
+        self.n += len(a)
+        if self.cur is not None and len(a):
+            v, ln, s0 = self.cur
+            if vals[0] == v:
+                lens[0] += ln
+                starts[0] = s0
             else:
-                self._close(*self.cur)
-        if k - 1 > i0:
-            if self.first is None:
-                self._close(vals[i0].item(), int(lens[i0]),
-                            row0 + int(starts[i0]))
-                i0 += 1
-            if k - 1 > i0:
-                self.sink(vals[i0:k - 1], lens[i0:k - 1],
-                          starts[i0:k - 1] + row0)
-        self.cur = (vals[k - 1].item(), int(lens[k - 1]),
-                    row0 + int(starts[k - 1]))
+                vals = np.concatenate(([v], vals))
+                lens = np.concatenate(([ln], lens))
+                starts = np.concatenate(([s0], starts))
+        if len(vals):
+            self.cur = (vals[-1].item(), int(lens[-1]), int(starts[-1]))
+            vals, lens, starts = vals[:-1], lens[:-1], starts[:-1]
+        if self.first is None and len(vals):
+            self.first = (vals[0].item(), int(lens[0]))  # starts at local 0
+            vals, lens, starts = vals[1:], lens[1:], starts[1:]
+        return vals, lens, starts
 
     def boundary(self) -> dict:
         """The _BOUND_COLS export: rows fed, the first closed run (None,
@@ -180,13 +156,15 @@ class _BoundaryRunMerger:
     def task(self, off: int, r, interior=None) -> None:
         """Fold in one task's boundary row `r` whose first row is global
         row `off`. interior(r, off) runs between the task's first and
-        last runs, when it has both."""
+        last runs, when it has both. A task whose fold saw no rows is
+        skipped."""
         if r.first_l:
             self.extend(r.first_v, r.first_l, off)
             self.finish()  # the task's next run differs: first is final
             if interior is not None:
                 interior(r, off)
-        self.extend(r.last_v, r.last_l, off + r.last_s)
+        if r.last_l:
+            self.extend(r.last_v, r.last_l, off + r.last_s)
 
     def finish(self) -> None:
         if self.pend is not None:
@@ -194,45 +172,33 @@ class _BoundaryRunMerger:
             self.pend = None
 
 
-def _stitch(rows, close, interior=None) -> dict[int, int]:
-    """Walk one column's per-task boundary rows in pid order through
-    _BoundaryRunMerger; returns each task's global row offset."""
+def _stitch(rows, close, interior=None) -> None:
+    """Walk one column's per-task boundary rows (pid order) through
+    _BoundaryRunMerger, each at its task's global row offset."""
     offs = _offsets({r.pid: r.n for r in rows})
     merger = _BoundaryRunMerger(close)
-    for r in sorted(rows, key=lambda r: r.pid):
+    for r in rows:
         merger.task(offs[r.pid], r, interior)
     merger.finish()
-    return offs
-
-
-def _with_offsets(spark, df: DataFrame, offsets: dict) -> DataFrame:
-    """df joined with its task's global row offset (row_offset)."""
-    off_df = spark.createDataFrame(
-        [(int(p), int(o)) for p, o in offsets.items()] or [(0, 0)],
-        "pid int, row_offset long")
-    return df.join(F.broadcast(off_df), "pid")
 
 
 class ParquetSource:
     """A parquet table path + spark handle. Analyze entry points accept
     this in place of a DataFrame; its arrangements (and the stats rows
     derived from them) are memoized per file fingerprint, so a new
-    handle on an unchanged table reuses them."""
+    handle on an unchanged table reuses them. The table is read only
+    when no arrangement of it is memoized yet."""
 
     def __init__(self, spark, path: str):
         self.spark = spark
         self.path = path
-        self._df = spark.read.parquet(path)
-
-    @property
-    def schema(self):
-        return self._df.schema
 
     @property
     def sparkSession(self):
         return self.spark
 
     def fingerprint(self) -> tuple:
+        """Raises FileNotFoundError for a missing path."""
         import os
         from .sources import parquet_files
         paths = (parquet_files(self.path) if os.path.isdir(self.path)
@@ -245,7 +211,9 @@ class ParquetSource:
 
 
 def _as_df(src) -> DataFrame:
-    return src._df if isinstance(src, ParquetSource) else src
+    if isinstance(src, ParquetSource):
+        return src.spark.read.parquet(src.path)
+    return src
 
 
 # One range arrangement per (session, input, columns, order), locally
@@ -274,7 +242,11 @@ class _Arrangement:
                    .select("pid", *cols)
                    .localCheckpoint())
         self._row_offsets: dict[int, int] | None = None
+        self.edges: dict | None = None  # partition_runs_multi's edge runs
         self.stats: list[tuple] | None = None  # column_codec_stats rows
+
+    def vtype(self, col: str) -> str:
+        return self.df.schema[col].dataType.simpleString()
 
     def offsets(self) -> dict[int, int]:
         """Each task's global row offset (one count job, on first use)."""
@@ -304,6 +276,49 @@ def clear_run_cache() -> None:
     _ARRANGED.clear()
 
 
+def _fold(arr: _Arrangement, cols: list[str], task, ddl: str = "",
+          vtype: str | None = None) -> DataFrame:
+    """The one task-fold runner: each task feeds its arranged slice of
+    each column, batch by batch, through one _TaskRunFold. `task(c,
+    pid)` gives the column's (sink, export) or (sink, export, prep) for
+    the task: prep(a) rewrites each comparable batch before the fold
+    sees it, sink(vals, lens, local_starts) takes the interior runs each
+    batch closes (a DataFrame it returns is streamed out), and export()
+    the fields (typed by `ddl`) that the task's boundary row adds to
+    pid, col_name and _BOUND_COLS (typed by `vtype`, default the type
+    of cols[0])."""
+    vtype = vtype or arr.vtype(cols[0])
+
+    def it(batches: Iterable[pd.DataFrame]):
+        lazy_zip_invalidation()
+        tasks: dict = {}
+        for pid, pdf in _task_batches(batches):
+            for c in cols:
+                if c not in tasks:
+                    tasks[c] = (_TaskRunFold(), *task(c, pid))
+                fold, sink, _, *prep = tasks[c]
+                a = _as_comparable(pdf[c].to_numpy())
+                out = sink(*fold.feed(prep[0](a) if prep else a))
+                if out is not None and len(out):
+                    yield out
+        for c, (fold, _, export, *_) in tasks.items():
+            # one frame per column: pandas would widen a None-holding
+            # long column to float64
+            yield pd.DataFrame([{"pid": pid, "col_name": c,
+                                 **fold.boundary(), **export()}])
+
+    return arr.df.mapInPandas(
+        it, f"pid int, col_name string, {_bound_ddl(vtype)}{ddl}")
+
+
+def _fold_rows(arr: _Arrangement, cols: list[str], task, ddl: str = "",
+               vtype: str | None = None) -> dict[str, list]:
+    """_fold's boundary rows, collected: each column's in pid order."""
+    rows = sorted(_fold(arr, cols, task, ddl, vtype).collect(),
+                  key=lambda r: r.pid)
+    return {c: [r for r in rows if r.col_name == c] for c in cols}
+
+
 def partition_runs_multi(df: DataFrame, cols: list[str],
                          order: list[str]) -> DataFrame:
     """Distributed maximal-run extraction of several same-typed columns
@@ -315,59 +330,46 @@ def partition_runs_multi(df: DataFrame, cols: list[str],
     only resolves per-task row offsets and merges runs that span task
     boundaries — one boundary row per task per column.
 
-    The run table is not stored: the boundary collect and the
-    downstream consumer each recompute it from the same checkpointed
-    slices, so both see the same task boundaries.
+    The boundary pass runs once per arrangement; its O(P·C) result (the
+    offsets and the merged edge runs, each keyed by the task its start
+    row falls in) is kept on the memo entry and rides in the kernel's
+    closure, so the kernel emits global start_rn directly and each
+    action runs it once per task.
     """
-    vtype = df.schema[cols[0]].dataType.simpleString()
-    arranged = _arranged(df, cols, order).df
-    # interior run rows carry null boundary columns; each task's
-    # boundary row per column carries null run columns
-    out_schema = (f"col_name string, pid int, local_start long, "
-                  f"value {vtype}, run_len long, {_bound_ddl(vtype)}")
+    arr = _arranged(df, cols, order)
+    if arr.edges is None:
+        bounds = _fold_rows(arr, cols, lambda _c, _pid: (lambda *_: None, dict))
+        offs = _offsets({r.pid: r.n for r in bounds[cols[0]]})
+        pids, firsts = list(offs), list(offs.values())
+        edges: dict = {}
+        for c in cols:
+            _stitch(bounds[c], lambda v, ln, s0, c=c: edges.setdefault(
+                (pids[bisect.bisect_right(firsts, s0) - 1], c), [])
+                .append((s0 + 1, v, ln)))
+        arr._row_offsets, arr.edges = offs, edges
+    offs, edges = arr.offsets(), arr.edges
     no_bound = dict.fromkeys(_BOUND_COLS)
+    run_cols = ["start_rn", "value", "run_len"]
 
-    def it(batches: Iterable[pd.DataFrame]):
-        found = {c: [] for c in cols}  # interior runs of the current batch
-        folds = {c: _TaskRunFold(lambda *run, c=c: found[c].append(run))
-                 for c in cols}
-        pid = -1
-        for pid, pdf in _task_batches(batches):
-            for c in cols:
-                folds[c].feed(_as_comparable(pdf[c].to_numpy()))
-                if found[c]:
-                    vals, lens, starts = map(np.concatenate, zip(*found[c]))
-                    found[c].clear()
-                    yield pd.DataFrame({
-                        "col_name": c, "pid": pid, "local_start": starts,
-                        "value": vals, "run_len": lens, **no_bound})
-        if pid >= 0:
-            for c in cols:
-                yield pd.DataFrame([{
-                    "col_name": c, "pid": pid, "local_start": None,
-                    "value": None, "run_len": None,
-                    **folds[c].boundary()}])
+    def task(c, pid):
+        off, owned = offs[pid], edges.get((pid, c), [])
 
-    runs_local = arranged.mapInPandas(it, out_schema)
+        def sink(vals, lens, starts):
+            nonlocal owned  # the task's edge runs go out with its first batch
+            runs = pd.DataFrame({"start_rn": starts + (off + 1),
+                                 "value": vals, "run_len": lens})
+            if owned:
+                runs = pd.concat([pd.DataFrame(owned, columns=run_cols),
+                                  runs])
+                owned = []
+            return runs.assign(pid=pid, col_name=c, **no_bound)
 
-    # --- driver-side O(P*C) control flow (the offset-table merge) ---
-    bound = runs_local.filter(F.col("n").isNotNull()).collect()
-    merged: list[tuple[str, int, object, int]] = []
-    offsets: dict[int, int] = {}
-    for c in cols:
-        offsets = _stitch([r for r in bound if r.col_name == c],
-                          lambda v, ln, s0, c=c:
-                          merged.append((c, s0 + 1, v, ln)))
+        return sink, lambda: dict.fromkeys(run_cols)
 
-    spark = df.sparkSession
-    run_schema = f"col_name string, start_rn long, value {vtype}, run_len long"
-    interior = (_with_offsets(spark, runs_local.filter(F.col("n").isNull()),
-                              offsets)
-                .select("col_name",
-                        (F.col("row_offset") + F.col("local_start") + 1)
-                        .alias("start_rn"),
-                        "value", "run_len"))
-    return interior.unionByName(spark.createDataFrame(merged, run_schema))
+    return (_fold(arr, cols, task, f", start_rn long, value "
+                  f"{arr.vtype(cols[0])}, run_len long")
+            .filter(F.col("start_rn").isNotNull())
+            .select("col_name", *run_cols))
 
 
 def partition_runs(df: DataFrame, col: str, order: list[str]) -> DataFrame:
@@ -398,28 +400,19 @@ def run_stats(df: DataFrame, col: str, order: list[str]) -> DataFrame:
     columns (K <= 256, /root/reference/src/main.c:1246+) — for
     unbounded-cardinality columns use run_extract + groupBy.
     """
-    vtype = df.schema[col].dataType.simpleString()
-    arranged = _arranged(df, [col], order).df
-    schema = (f"pid int, {_bound_ddl(vtype)}, vals array<{vtype}>, "
-              "stats array<array<long>>")
+    arr = _arranged(df, [col], order)
+    vtype = arr.vtype(col)
 
-    def it(batches: Iterable[pd.DataFrame]):
+    def task(_c, _pid):
         acc: dict = {}  # value -> [n_runs, total_len, max_run_len]
 
-        def sink(vals: np.ndarray, lens: np.ndarray, _s0) -> None:
+        def sink(vals, lens, _s0) -> None:
             g = (pd.Series(lens).groupby(pd.Series(vals))
                  .agg(["count", "sum", "max"]))
             for v, (c, s, m) in g.iterrows():
                 _merge_stats(acc, v, int(c), int(s), int(m))
 
-        fold = _TaskRunFold(sink)
-        pid = -1
-        for pid, pdf in _task_batches(batches):
-            fold.feed(_as_comparable(pdf[col].to_numpy()))
-        if pid >= 0:
-            yield pd.DataFrame([{"pid": pid, **fold.boundary(),
-                                 "vals": list(acc),
-                                 "stats": list(acc.values())}])
+        return sink, lambda: {"vals": list(acc), "stats": list(acc.values())}
 
     total: dict = {}
 
@@ -427,7 +420,8 @@ def run_stats(df: DataFrame, col: str, order: list[str]) -> DataFrame:
         for v, st in zip(r.vals, r.stats):
             _merge_stats(total, v, *st)
 
-    _stitch(arranged.mapInPandas(it, schema).collect(),
+    _stitch(_fold_rows(arr, [col], task, f", vals array<{vtype}>, "
+                       "stats array<array<long>>")[col],
             lambda v, ln, _s0: _merge_stats(total, v, 1, ln, ln), interior)
     rows = [(v, int(st[0]), int(st[1]), int(st[2]))
             for v, st in sorted(total.items())]
@@ -438,10 +432,10 @@ def run_stats(df: DataFrame, col: str, order: list[str]) -> DataFrame:
 
 def run_extract(df: DataFrame, col: str, order: list[str]) -> DataFrame:
     """Materialized run list (start_rn, value, run_len) — the decoded
-    form of an RLE stream, SQL-checkable."""
-    return (partition_runs(df, col, order)
-            .select("start_rn", "value", "run_len")
-            .orderBy("start_rn"))
+    form of an RLE stream, SQL-checkable. Each task emits the runs that
+    start in its slice, and the slices are range-ordered by pid, so a
+    sort within each task orders the whole list."""
+    return partition_runs(df, col, order).sortWithinPartitions("start_rn")
 
 
 def _run_histogram(df: DataFrame, col: str, order: list[str],
@@ -451,25 +445,17 @@ def _run_histogram(df: DataFrame, col: str, order: list[str],
     INSIDE the range-partitioned kernel over interior runs; the driver
     folds in the O(P) boundary runs — no run table, no persist, no
     second shuffle."""
-    vtype = df.schema[col].dataType.simpleString()
-    arranged = _arranged(df, [col], order).df
+    arr = _arranged(df, [col], order)
 
-    def it(batches: Iterable[pd.DataFrame]):
+    def task(_c, _pid):
         hist = np.zeros(n_buckets, dtype=np.int64)
-        fold = _TaskRunFold(
-            lambda _v, lens, _s0: _bucket_count(hist, bucket(lens)))
-        pid = -1
-        for pid, pdf in _task_batches(batches):
-            fold.feed(_as_comparable(pdf[col].to_numpy()))
-        if pid >= 0:
-            yield pd.DataFrame([{"pid": pid, **fold.boundary(),
-                                 "hist": hist.tolist()}])
+        return (lambda _v, lens, _s0: _bucket_count(hist, bucket(lens)),
+                lambda: {"hist": hist.tolist()})
 
     hist = np.zeros(n_buckets, dtype=np.int64)
-    _stitch(arranged.mapInPandas(
-        it, f"pid int, {_bound_ddl(vtype)}, hist array<long>").collect(),
-        lambda _v, ln, _s0: _bucket_count(hist, bucket(np.asarray([ln]))),
-        lambda r, _off: np.add(hist, r.hist, out=hist))
+    _stitch(_fold_rows(arr, [col], task, ", hist array<long>")[col],
+            lambda _v, ln, _s0: _bucket_count(hist, bucket(np.asarray([ln]))),
+            lambda r, _off: np.add(hist, r.hist, out=hist))
     return hist
 
 
@@ -477,7 +463,11 @@ def run_length_histogram(df: DataFrame, col: str, order: list[str]) -> DataFrame
     """Run lengths bucketed by bit class (floor(log2(len))) — the
     AnalyzeData run-length histogram (/root/reference/src/main.c:1246+,
     'run lengths by bit-class')."""
-    hist = _run_histogram(df, col, order, 64, _bit_class_vec)
+    return _bit_class_df(df, _run_histogram(df, col, order, 64,
+                                            _bit_class_vec))
+
+
+def _bit_class_df(df: DataFrame, hist: np.ndarray) -> DataFrame:
     rows = [(int(b), int(n)) for b, n in enumerate(hist) if n]
     return df.sparkSession.createDataFrame(
         rows, "bit_class int, n_runs long")
@@ -496,60 +486,14 @@ def exact_run_length_histogram(df: DataFrame, col: str, order: list[str],
         rows, "run_len int, n_runs long")
 
 
-def _run_summary(arranged: DataFrame, cols: list[str]) -> DataFrame:
-    """Per-(partition, column) run summary: local run count, row count,
-    min/max, plus the first/last value — enough to stitch global run
-    counts (and whole-column n/min/max, riding the same scan for free)
-    on the driver."""
-    schema = ("pid int, col_name string, n long, n_runs long, "
-              "vmin long, vmax long, first_val long, last_val long")
-
-    def it(batches: Iterable[pd.DataFrame]):
-        pid = -1
-        acc = {c: {"n": 0, "n_runs": 0, "vmin": None, "vmax": None,
-                   "first": None, "last": None} for c in cols}
-        for pid, pdf in _task_batches(batches):
-            for c in cols:
-                a = pdf[c].to_numpy()
-                if a.dtype.kind == "f":
-                    # nullable int columns arrive as float64 with NaN;
-                    # like Spark's min/max aggregates, nulls are ignored
-                    # (dropped) by the run/stat kernel
-                    a = a[~np.isnan(a)]
-                if len(a) == 0:
-                    continue
-                st = acc[c]
-                _, lens = find_runs(a)
-                st["n"] += len(a)
-                st["n_runs"] += len(lens)
-                lo, hi = int(a.min()), int(a.max())
-                st["vmin"] = lo if st["vmin"] is None else min(st["vmin"], lo)
-                st["vmax"] = hi if st["vmax"] is None else max(st["vmax"], hi)
-                if st["last"] is not None and a[0] == st["last"]:
-                    st["n_runs"] -= 1  # batch boundary joins two runs
-                if st["first"] is None:
-                    st["first"] = int(a[0])
-                st["last"] = int(a[-1])
-        if pid >= 0:
-            yield pd.DataFrame({
-                "pid": pid, "col_name": cols,
-                "n": [acc[c]["n"] for c in cols],
-                "n_runs": [acc[c]["n_runs"] for c in cols],
-                "vmin": [acc[c]["vmin"] for c in cols],
-                "vmax": [acc[c]["vmax"] for c in cols],
-                "first_val": [acc[c]["first"] for c in cols],
-                "last_val": [acc[c]["last"] for c in cols]})
-
-    return arranged.mapInPandas(it, schema)
-
-
 _STATS_DDL = ("col_name string, n_values long, vmin long, vmax long, "
               "n_distinct long, n_runs long")
 
 
 def column_codec_stats(df, cols: list[str],
                        order: list[str]) -> DataFrame:
-    """Whole-column codec stats (n, min, max, distinct, runs).
+    """Whole-column codec stats (n, min, max, distinct, runs) of integer
+    columns; nulls are dropped.
 
     Exact count-distinct runs as one distributed Spark aggregate
     (Spark's two-phase expand — no driver-side set, no unbounded task
@@ -557,51 +501,59 @@ def column_codec_stats(df, cols: list[str],
     order equal order[0] values are contiguous, so the leading column's
     exact distinct count IS its global run count, skipping the widest,
     highest-cardinality expand entirely. n/min/max and run counts ride
-    the range-partitioned kernel summary (the driver stitches the
-    O(P·C) summary rows, subtracting one run wherever a value continues
-    across a task edge). Both jobs read the checkpointed arrangement
+    the task-fold runner (each task's interior run count and min/max,
+    stitched on the driver). Both jobs read the checkpointed arrangement
     and run concurrently. The O(C) result rows are kept on the
     arrangement's memo entry, so a later call (codec_selection after
     column_codec_stats) runs no job.
     """
     arr = _arranged(df, cols, order)
     if arr.stats is None:
-        arr.stats = _codec_stats_rows(arr.df, cols, order)
+        arr.stats = _codec_stats_rows(arr, cols, order)
     return df.sparkSession.createDataFrame(arr.stats, _STATS_DDL)
 
 
-def _codec_stats_rows(arranged: DataFrame, cols: list[str],
+def _codec_stats_rows(arr: _Arrangement, cols: list[str],
                       order: list[str]) -> list[tuple]:
-    agg_exprs = [F.countDistinct(F.col(c)).alias(f"{c}__k")
+    agg_exprs = [F.countDistinct(F.col(c)).alias(c)
                  for c in cols if c != order[0]]
 
-    from concurrent.futures import ThreadPoolExecutor
+    def task(_c, _pid):
+        st = {"runs": 0, "vmin": None, "vmax": None}
+
+        def prep(a: np.ndarray) -> np.ndarray:
+            if a.dtype.kind == "f":
+                # nullable int columns arrive as float64 with NaN; like
+                # Spark's min/max aggregates, the stats drop nulls
+                a = a[~np.isnan(a)]
+            if len(a):
+                lo, hi = int(a.min()), int(a.max())
+                st["vmin"] = lo if st["vmin"] is None else min(st["vmin"], lo)
+                st["vmax"] = hi if st["vmax"] is None else max(st["vmax"], hi)
+            return a
+
+        def sink(vals, _lens, _s0) -> None:
+            st["runs"] += len(vals)
+
+        return sink, lambda: st, prep
+
     with ThreadPoolExecutor(max_workers=1) as pool:
-        fut_distinct = (pool.submit(
-            lambda: arranged.agg(*agg_exprs).collect()[0])
-            if agg_exprs else None)
-        summary = sorted(_run_summary(arranged, cols).collect(),
-                         key=lambda r: r.pid)
-        stats_row = fut_distinct.result() if fut_distinct else {}
+        distinct = pool.submit(lambda: arr.df.agg(*agg_exprs).collect()[0]
+                               if agg_exprs else {})
+        parts = _fold_rows(arr, cols, task,
+                           ", runs long, vmin long, vmax long", "long")
+        k = distinct.result()
 
-    n_runs = {c: 0 for c in cols}
-    n_tot = {c: 0 for c in cols}
-    vmin: dict[str, int] = {}
-    vmax: dict[str, int] = {}
-    last_val: dict[str, object] = {}
-    for r in summary:
-        c = r.col_name
-        n_runs[c] += r.n_runs
-        n_tot[c] += r.n
-        vmin[c] = r.vmin if c not in vmin else min(vmin[c], r.vmin)
-        vmax[c] = r.vmax if c not in vmax else max(vmax[c], r.vmax)
-        if c in last_val and last_val[c] == r.first_val:
-            n_runs[c] -= 1  # run spans a partition boundary
-        last_val[c] = r.last_val
-
-    return [(c, int(n_tot[c]), int(vmin[c]), int(vmax[c]),
-             int(n_runs[c]) if c == order[0] else int(stats_row[f"{c}__k"]),
-             int(n_runs[c])) for c in cols]
+    out = []
+    for c in cols:
+        rows, edge = parts[c], []
+        _stitch(rows, lambda *run: edge.append(run))
+        n_runs = len(edge) + sum(r.runs for r in rows)
+        out.append((c, sum(r.n for r in rows),
+                    min(r.vmin for r in rows if r.vmin is not None),
+                    max(r.vmax for r in rows if r.vmax is not None),
+                    n_runs if c == order[0] else int(k[c]), n_runs))
+    return out
 
 
 class _RefModelAcc:
@@ -638,6 +590,11 @@ class _RefModelAcc:
         self.len += l
         self.last_end = int(ends[-1])
 
+    def export(self) -> dict:
+        cand_s, cand_l = self.first_cand or (-1, 0)
+        return {"cand_s": cand_s, "cand_l": cand_l, "cmd": self.cmd,
+                "lensum": self.len, "last_end": self.last_end}
+
 
 def _model_contribution(lens: np.ndarray, rng: np.ndarray) -> tuple[int, int]:
     stored = lens - (_ELIG_MIN - 1)
@@ -657,34 +614,18 @@ def ref_rle8_size_v1(df: DataFrame, cols: list[str],
     O(P·C) boundary — merged edge runs and each task's first candidate
     gap — without ever materializing or re-shuffling the run table.
     Raises ValueError when the columns do not share one type."""
-    vtypes = {c: df.schema[c].dataType.simpleString() for c in cols}
+    arr = _arranged(df, cols, order)
+    vtypes = {c: arr.vtype(c) for c in cols}
     if len(set(vtypes.values())) > 1:
         raise ValueError(f"ref_rle8_size_v1: cols must share a type, "
                          f"got {vtypes}")
-    vtype = vtypes[cols[0]]
-    arranged = _arranged(df, cols, order).df
-    schema = (f"pid int, col_name string, {_bound_ddl(vtype)}, "
-              "cand_s long, cand_l long, cmd long, lensum long, "
-              "last_end long")
 
-    def it(batches: Iterable[pd.DataFrame]):
-        accs = {c: _RefModelAcc() for c in cols}
-        folds = {c: _TaskRunFold(accs[c].sink) for c in cols}
-        pid = -1
-        for pid, pdf in _task_batches(batches):
-            for c in cols:
-                folds[c].feed(_as_comparable(pdf[c].to_numpy()))
-        if pid < 0:
-            return
-        for c in cols:
-            acc = accs[c]
-            cand_s, cand_l = acc.first_cand or (-1, 0)
-            yield pd.DataFrame([{
-                "pid": pid, "col_name": c, **folds[c].boundary(),
-                "cand_s": cand_s, "cand_l": cand_l, "cmd": acc.cmd,
-                "lensum": acc.len, "last_end": acc.last_end}])
+    def task(_c, _pid):
+        acc = _RefModelAcc()
+        return acc.sink, acc.export
 
-    parts = arranged.mapInPandas(it, schema).collect()
+    parts = _fold_rows(arr, cols, task, ", cand_s long, cand_l long, "
+                       "cmd long, lensum long, last_end long")
     # driver: per-column O(P) walk — boundary-run merge and the
     # candidate chain (gap to the previous eligible end) across tasks
     out = []
@@ -708,9 +649,8 @@ def ref_rle8_size_v1(df: DataFrame, cols: list[str],
                 chain[:] = [chain[0] + r.cmd, chain[1] + r.lensum,
                             off + r.last_end]
 
-        rows = [r for r in parts if r.col_name == c]
-        _stitch(rows, close, interior)
-        n_total = sum(r.n for r in rows)
+        _stitch(parts[c], close, interior)
+        n_total = sum(r.n for r in parts[c])
         out.append((c, int(8 + chain[0] + (n_total - chain[1]) + 1 + 10)
                     if n_total else 8))
     return df.sparkSession.createDataFrame(
@@ -741,30 +681,28 @@ def sym_width_run_histogram(df: DataFrame, col: str, order: list[str],
     arr = _arranged(df, [col], order)
     offsets = arr.offsets()
 
-    def it(batches: Iterable[pd.DataFrame]):
-        pid, a = _task_array(batches, col)
-        if pid < 0:
-            return
-        a = a.astype("U1")
-        n = len(a)
-        lo = (-offsets[pid]) % w     # bytes before the first aligned sym
-        m = max(0, (n - lo) // w)    # complete symbols in this task
+    def task(_c, pid):
         hist = np.zeros(64, dtype=np.int64)
-        fold = _TaskRunFold(lambda _v, lens, _s0: _bucket_count(
-            hist, _bit_class_vec(lens)))
-        if m:
-            fold.feed(np.ascontiguousarray(a[lo:lo + m * w].reshape(m, w))
-                      .view(f"U{w}").ravel())
-            head, tail = "".join(a[:lo]), "".join(a[lo + m * w:])
-        else:
-            head, tail = "".join(a), ""  # all sub-symbol: all boundary
-        yield pd.DataFrame([{"pid": pid, **fold.boundary(),
-                             "hist": hist.tolist(),
-                             "head": head, "tail": tail}])
+        lo = (-offsets[pid]) % w  # bytes before the first aligned symbol
+        st = {"head": "", "carry": np.zeros(0, dtype="U1")}
 
-    parts = arr.df.mapInPandas(
-        it, f"pid int, {_bound_ddl('string')}, hist array<long>, "
-            "head string, tail string").collect()
+        def prep(a: np.ndarray) -> np.ndarray:
+            a = a.astype("U1")
+            k = max(0, lo - len(st["head"]))  # bytes the head still takes
+            st["head"] += "".join(a[:k])
+            b = np.concatenate((st["carry"], a[k:]))
+            m = len(b) // w  # complete symbols
+            st["carry"] = b[m * w:]
+            return (np.ascontiguousarray(b[:m * w].reshape(m, w))
+                    .view(f"U{w}").ravel())
+
+        return (lambda _v, lens, _s0: _bucket_count(hist, _bit_class_vec(lens)),
+                lambda: {"hist": hist.tolist(), "head": st["head"],
+                         "tail": "".join(st["carry"])},
+                prep)
+
+    rows = _fold_rows(arr, [col], task, ", hist array<long>, head string, "
+                      "tail string", "string")[col]
 
     # --- driver-side O(P·w) stitch: boundary bytes assemble the symbols
     # that span task edges; boundary runs extend across them ---
@@ -780,15 +718,13 @@ def sym_width_run_histogram(df: DataFrame, col: str, order: list[str],
             merger.extend(buf[:w], 1)
             buf = buf[w:]
 
-    for r in sorted(parts, key=lambda r: r.pid):
+    for r in rows:
         feed_bytes(r.head)
-        if r.last_l:
-            merger.task(0, r, lambda r, _off: np.add(hist, r.hist, out=hist))
+        merger.task(0, r, lambda r, _off: np.add(hist, r.hist, out=hist))
         feed_bytes(r.tail)
     merger.finish()
     # incomplete final symbol in `buf` is dropped (aligned semantics)
-    rows = [(int(b), int(x)) for b, x in enumerate(hist) if x]
-    return df.sparkSession.createDataFrame(rows, "bit_class int, n_runs long")
+    return _bit_class_df(df, hist)
 
 
 def unaligned_run_histogram(df: DataFrame, col: str, order: list[str],
@@ -803,43 +739,43 @@ def unaligned_run_histogram(df: DataFrame, col: str, order: list[str],
     and counts the complete match-runs; the first `stride` bytes of
     each task (predecessor bytes live in the previous task) plus its
     edge runs are exported — O(stride) values per task edge — and
-    resolved on the driver. This replaces the round-2 rn self-join that
-    cost two extra row-scale shuffles."""
+    resolved on the driver."""
     s = stride
-    arranged = _arranged(df, [col], order).df
-    vtype = df.schema[col].dataType.simpleString()
+    arr = _arranged(df, [col], order)
+    vtype = arr.vtype(col)
 
     def count(hist, match, lens) -> None:  # match-runs cover len + s bytes
         _bucket_count(hist, _bit_class_vec(lens[match] + s))
 
-    def it(batches: Iterable[pd.DataFrame]):
-        pid, a = _task_array(batches, col)
-        if pid < 0:
-            return
+    def task(_c, _pid):
         hist = np.zeros(64, dtype=np.int64)
-        fold = _TaskRunFold(lambda match, lens, _s0: count(hist, match, lens))
-        fold.feed(a[s:] == a[:-s])
-        yield pd.DataFrame([{"pid": pid, **fold.boundary(),
-                             "hist": hist.tolist(),
-                             "head": a[:s].tolist(), "tail": a[-s:].tolist()}])
+        st = {"head": [], "tail": None}  # first and last s values
 
-    parts = arranged.mapInPandas(
-        it, f"pid int, {_bound_ddl('boolean')}, hist array<long>, "
-            f"head array<{vtype}>, tail array<{vtype}>").collect()
+        def prep(a: np.ndarray) -> np.ndarray:
+            st["head"] += a[:s - len(st["head"])].tolist()
+            b = a if st["tail"] is None else np.concatenate((st["tail"], a))
+            st["tail"] = b[-s:]
+            return b[s:] == b[:-s]
+
+        return (lambda match, lens, _s0: count(hist, match, lens),
+                lambda: {"hist": hist.tolist(), "head": st["head"],
+                         "tail": st["tail"].tolist()},
+                prep)
+
+    rows = _fold_rows(arr, [col], task, f", hist array<long>, head "
+                      f"array<{vtype}>, tail array<{vtype}>", "boolean")[col]
     hist = np.zeros(64, dtype=np.int64)
     merger = _BoundaryRunMerger(lambda match, ln, _s0: count(
         hist, np.asarray([match]), np.asarray([ln])))
     ring: list = []   # last <= s values of the stream so far
-    for r in sorted(parts, key=lambda r: r.pid):
+    for r in rows:
         for j, v in enumerate(r.head):
             idx = len(ring) - s + j
             merger.extend(idx >= 0 and v == ring[idx], 1)
-        if r.last_l:
-            merger.task(0, r, lambda r, _off: np.add(hist, r.hist, out=hist))
+        merger.task(0, r, lambda r, _off: np.add(hist, r.hist, out=hist))
         ring = (ring + list(r.tail))[-s:]
     merger.finish()
-    rows = [(int(b), int(x)) for b, x in enumerate(hist) if x]
-    return df.sparkSession.createDataFrame(rows, "bit_class int, n_runs long")
+    return _bit_class_df(df, hist)
 
 
 def lru_recurrence(df: DataFrame, col: str, order: list[str],
@@ -862,33 +798,28 @@ def lru_recurrence(df: DataFrame, col: str, order: list[str],
     plus its two boundary runs; the driver resolves the O(P·K) edge
     rows and the boundary-run merges in one pid-ordered walk."""
     max_k = max(ks)
-    vtype = df.schema[col].dataType.simpleString()
-    arranged = _arranged(df, [col], order).df
-    schema = (f"pid int, {_bound_ddl(vtype)}, m long, "
-              + ", ".join(f"hits_{k} long" for k in ks)
-              + f", head array<{vtype}>, tail array<{vtype}>")
+    arr = _arranged(df, [col], order)
+    vtype = arr.vtype(col)
 
-    def it(batches: Iterable[pd.DataFrame]):
+    def task(_c, _pid):
         seq: list = []  # emitted-run symbols (interior runs, in order)
-        fold = _TaskRunFold(lambda vals, lens, _s0:
-                            seq.extend(vals[lens >= min_run].tolist()))
-        pid = -1
-        for pid, pdf in _task_batches(batches):
-            fold.feed(_as_comparable(pdf[col].to_numpy()))
-        if pid < 0:
-            return
-        v = np.asarray(seq)
-        m = len(v)
-        hits = {}
-        for k in ks:
-            h = np.zeros(m, dtype=bool)
-            for j in range(1, k + 1):
-                h[j:] |= v[j:] == v[:-j]
-            # positions whose lookback could cross the task edge (or the
-            # task's own first boundary run) resolve on the driver
-            hits[f"hits_{k}"] = int(h[max_k:].sum()) if m > max_k else 0
-        yield pd.DataFrame([{"pid": pid, **fold.boundary(), "m": m, **hits,
-                             "head": seq[:max_k], "tail": seq[-max_k:]}])
+
+        def export() -> dict:
+            v = np.asarray(seq)
+            m = len(v)
+            hits = {}
+            for k in ks:
+                h = np.zeros(m, dtype=bool)
+                for j in range(1, k + 1):
+                    h[j:] |= v[j:] == v[:-j]
+                # positions whose lookback could cross the task edge (or
+                # the task's own first boundary run) resolve on the driver
+                hits[f"hits_{k}"] = int(h[max_k:].sum()) if m > max_k else 0
+            return {"m": m, **hits, "head": seq[:max_k],
+                    "tail": seq[-max_k:]}
+
+        return (lambda vals, lens, _s0:
+                seq.extend(vals[lens >= min_run].tolist()), export)
 
     totals = {k: 0 for k in ks}
     n_runs = 0
@@ -918,7 +849,9 @@ def lru_recurrence(df: DataFrame, col: str, order: list[str],
         if r.m >= max_k:
             carry[:] = list(r.tail)
 
-    _stitch(arranged.mapInPandas(it, schema).collect(), close, interior)
+    ddl = (", m long, " + ", ".join(f"hits_{k} long" for k in ks)
+           + f", head array<{vtype}>, tail array<{vtype}>")
+    _stitch(_fold_rows(arr, [col], task, ddl)[col], close, interior)
     rows = [(int(k), int(totals[k]), int(n_runs)) for k in ks]
     return df.sparkSession.createDataFrame(
         rows, "k int, n_hits long, n_runs long")

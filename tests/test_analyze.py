@@ -5,6 +5,7 @@ driver boundary merge) must be bit-identical to a straightforward
 single-array computation on the same data."""
 
 import gc
+import os
 import time
 
 import numpy as np
@@ -358,6 +359,57 @@ def test_query_surface_persist_pool_bounded(spark):
     assert release_all(spark, before) <= before
 
 
+def test_memo_hit_queries_run_in_two_jobs(spark):
+    """With the arrangement and stats memos built, no analyze-family
+    query reads the parquet schema again, every fold query runs in at
+    most 2 Spark jobs with its toPandas(), and run_extract's run kernel
+    runs once per task of the action (counted by an accumulator in a
+    pass-through stage over the memoized arrangement)."""
+    from rle_spark import queries as Q
+    sf = "/root/testdata/sf0.001"
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    names = [n for n in vars(Q) if n.startswith("q_")]
+    names = names[names.index("q_run_stats_returnflag"):
+                  names.index("q_codec_selection") + 1]
+
+    def jobs(action) -> list[str]:
+        """The stage names of each Spark job that action() starts."""
+        bus.waitUntilEmpty()
+        before = set(sc.statusTracker().getJobIdsForGroup(None))
+        action()
+        bus.waitUntilEmpty()
+        st = sc.statusTracker()
+        return [" ".join(s.name for s in map(st.getStageInfo,
+                                             st.getJobInfo(j).stageIds) if s)
+                for j in set(st.getJobIdsForGroup(None)) - before]
+
+    analyze.clear_run_cache()
+    for name in names:
+        getattr(Q, name)(spark, sf).toPandas()
+    for name in names:
+        started = jobs(lambda: getattr(Q, name)(spark, sf).toPandas())
+        assert not [j for j in started if "parquet at" in j], (name, started)
+        if "codec" not in name and "lru" not in name:
+            assert len(started) <= 2, (name, started)
+
+    src = analyze.ParquetSource(spark, os.path.join(sf, "orders.parquet"))
+    entry = analyze._arranged(src, ["o_orderstatus"], ["o_orderkey"])
+    arranged, tasks = entry.df, sc.accumulator(0)
+
+    def count_task(batches):
+        tasks.add(1)
+        yield from batches
+
+    entry.df = arranged.mapInPandas(count_task, arranged.schema)
+    try:
+        analyze.run_extract(src, "o_orderstatus", ["o_orderkey"]).toPandas()
+    finally:
+        entry.df = arranged
+    assert tasks.value == arranged.rdd.getNumPartitions()
+    analyze.clear_run_cache()
+
+
 def test_held_results_stay_exact(many_tasks):
     """A lazy result stays exact whatever the memo does after it was
     made: a second call of the same query, more new arrangements than
@@ -489,6 +541,11 @@ def test_column_codec_stats_memo(spark, tmp_path):
     assert fresh["pos"] == len(pdf) // 2
     assert [tuple(r) for r in analyze.run_stats(src2, "ch", ["pos"])
             .collect()] == [("Z", 1, len(half), len(half))]
+    # the table is read lazily, but a missing one still fails the first
+    # call instead of planning an empty table
+    gone = analyze.ParquetSource(spark, str(tmp_path / "gone.parquet"))
+    with pytest.raises(FileNotFoundError):
+        analyze.column_codec_stats(gone, ["pos", "ln"], ["pos"])
     analyze.clear_run_cache()
 
 

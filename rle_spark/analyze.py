@@ -503,13 +503,14 @@ def column_codec_stats(df, cols: list[str],
     highest-cardinality expand entirely. n/min/max and run counts ride
     the task-fold runner (each task's interior run count and min/max,
     stitched on the driver). Both jobs read the checkpointed arrangement
-    and run concurrently. The O(C) result rows are kept on the
-    arrangement's memo entry, so a later call (codec_selection after
-    column_codec_stats) runs no job.
+    and run concurrently. The O(C) result rows, sorted by col_name on
+    the driver, are kept on the arrangement's memo entry, so a later
+    call (codec_selection after column_codec_stats) runs no job.
     """
     arr = _arranged(df, cols, order)
     if arr.stats is None:
-        arr.stats = _codec_stats_rows(arr, cols, order)
+        arr.stats = sorted(_codec_stats_rows(arr, cols, order),
+                           key=lambda r: r[0])
     return df.sparkSession.createDataFrame(arr.stats, _STATS_DDL)
 
 
@@ -796,7 +797,8 @@ def lru_recurrence(df: DataFrame, col: str, order: list[str],
     emitted-run symbol sequence, counts window membership for positions
     with full local context, and exports its first/last max(K) symbols
     plus its two boundary runs; the driver resolves the O(P·K) edge
-    rows and the boundary-run merges in one pid-ordered walk."""
+    rows and the boundary-run merges in one pid-ordered walk. One row
+    per K, in `ks` order."""
     max_k = max(ks)
     arr = _arranged(df, [col], order)
     vtype = arr.vtype(col)
@@ -859,7 +861,8 @@ def lru_recurrence(df: DataFrame, col: str, order: list[str],
 
 def codec_selection(stats: DataFrame) -> DataFrame:
     """Pick argmin(raw, for_bitpack, dict_bitpack) from column stats —
-    the cost-model selector's decision, SQL-reproducible."""
+    the cost-model selector's decision, SQL-reproducible. Rows keep the
+    order of `stats` (column_codec_stats sorts them by col_name)."""
     # bit_width as a SQL expression: floor(log2(x))+1 is float-unsafe;
     # use the string length of the binary representation instead.
     def bw(colx):
@@ -881,4 +884,4 @@ def codec_selection(stats: DataFrame) -> DataFrame:
         est_for_c.cast("long").alias("est_for_bitpack"),
         est_dict_c.cast("long").alias("est_dict_bitpack"),
         chosen.alias("chosen_codec"),
-    ).orderBy("col_name")
+    )

@@ -3,10 +3,13 @@
 Spark-first equivalents of the reference's execution model
 (SURVEY.md §3.2): the 1 GiB single buffer becomes a stream of bounded
 blocks per partition; rle8m's independently-decodable subsections +
-offset table (/root/reference/src/rle8_low_entropy_cpu.c:126-250)
+offset table (the reference's src/rle8_low_entropy_cpu.c:126-250)
 become (source, bucket) parquet partitions + per-block doc offset
 columns; SIMD dispatch becomes Arrow-vectorized NumPy inside
-mapInArrow. Zero per-row Python anywhere.
+mapInArrow. The encode kernel's loops run once per key and once per
+block of a batch (its one finer step is a slice of the flat token
+buffer per run of a key's consecutive rows), the decode kernel's once
+per block.
 
 Scale design (100 TB / 10^12 sequences):
   * two-pass plan: a cheap stats aggregation over (source, n_tok) —
@@ -218,166 +221,132 @@ def _encode_iter_factory(cfg: EngineConfig, mapside: bool = False):
     """mapInArrow kernel: Arrow RecordBatch in -> block RecordBatch out.
 
     The token column is consumed through the ListArray's FLAT values
-    buffer (`offsets` + `values`) — the per-doc arrays are never
-    materialized as Python objects, so the only O(data) work between
-    the parquet scan and the codec kernel is one contiguous int32
-    slice per block. This is the Spark/Arrow analogue of the
-    reference operating on a single `uint8_t*` buffer
-    (/root/reference/src/rle.h:100-105): the Arrow value buffer IS
-    that buffer. Python loops run per GROUP and per BLOCK, never per
-    row/doc.
+    buffer (`offsets` + `values`): the per-doc arrays are never
+    materialized as Python objects. This is the Spark/Arrow analogue of
+    the reference operating on a single `uint8_t*` buffer (its
+    src/rle.h:100-105): the Arrow value buffer IS that buffer.
 
-    One open block is kept per (source, bucket) key, so input does
-    NOT need to be sorted by key — clustered mode feeds whole-key
-    partitions, mapside mode feeds raw scan splits with interleaved
-    sources; both stream through the same state machine with
-    O(n_keys * block_tokens) memory.
+    One open block is kept per (source, bucket) key, so input need not
+    be sorted by key: clustered mode feeds whole-key partitions, mapside
+    mode feeds raw scan splits with interleaved sources. Per batch, each
+    key's rows are found once (dictionary codes, one stable argsort),
+    and Python loops run once per key and once per block: one cumsum
+    per key and one searchsorted per block cut its docs, a block
+    closing at the first doc that brings it to block_tokens. A block
+    takes its tokens as one slice of the flat buffer per run of
+    consecutive rows, and its doc_ids as one slice (one take when the
+    rows are not consecutive). Blocks that fill in a batch are encoded
+    in the order of the row that filled them, the open ones at the end
+    in first-seen key order; memory is O(n_keys * block_tokens).
     """
     import pyarrow as pa
 
     block_tokens = cfg.block_tokens
-    sel_cfg = cfg.selector
     out_schema = _block_arrow_schema()
 
     def encode_iter(batches):
         memtune.lazy_zip_invalidation()
-        sticky = StickySelector(sel_cfg)
-        seqs: dict = {}
+        sticky = StickySelector(cfg.selector)
         if mapside:
             from pyspark import TaskContext
             tc = TaskContext.get()
             pid = tc.partitionId() if tc is not None else 0
-        # open blocks carried across batch boundaries, one per key:
-        # fragments of the flat token buffer + parallel id/len fragments
-        open_blocks: dict = {}
+        # the open block of each key, in first-seen key order: [token
+        # slices, doc_id arrays, doc_lens arrays, token count]
+        opened: dict = {}
+        seqs: dict = {}
+        closed: list = []  # one record per encoded block, until emitted
+        size = 0           # framed payload bytes in `closed`
 
-        def _fresh():
-            return {"toks": [], "ids": [], "lens": [], "ntok": 0,
-                    "ndocs": 0}
-        # completed-block accumulators (scalars + fragments per block)
-        out: dict = {k: [] for k in ("block_id", "source", "bucket", "seq",
-                                     "n_docs", "n_tokens", "codec",
-                                     "orig_bytes", "comp_bytes", "payload")}
-        out_ids: list = []    # one (list of pa.Array fragments) per block
-        out_lens: list = []   # one np.int32 array per block
-        out_bytes = 0
-
-        def flush_block(key):
-            nonlocal out_bytes
-            cur = open_blocks.get(key)
-            if cur is None or not cur["ndocs"]:
-                return
-            source, bucket = key
-            seq = seqs.get(key, 0)
-            seqs[key] = seq + 1
-            tokens = (cur["toks"][0] if len(cur["toks"]) == 1
-                      else np.concatenate(cur["toks"])
-                      if cur["toks"] else np.zeros(0, np.int32))
+        def close(key, toks, ids, lens, _):
+            nonlocal size
+            seq = seqs[key] = seqs.get(key, -1) + 1
+            tokens = toks[0] if len(toks) == 1 else np.concatenate(toks)
             name, payload = sticky.encode(key, tokens)
             framed = frame_payload(name, len(tokens), payload)
-            out["block_id"].append(_block_id(source, bucket, seq))
-            out["source"].append(source)
-            out["bucket"].append(bucket)
-            out["seq"].append(seq)
-            out["n_docs"].append(cur["ndocs"])
-            out["n_tokens"].append(len(tokens))
-            out["codec"].append(name)
-            out["orig_bytes"].append(4 * len(tokens))
-            out["comp_bytes"].append(len(framed))
-            out["payload"].append(framed)
-            out_ids.append(cur["ids"])
-            out_lens.append(np.concatenate(cur["lens"]) if cur["lens"]
-                            else np.zeros(0, np.int32))
-            out_bytes += len(framed)
-            cur.update(toks=[], ids=[], lens=[], ntok=0, ndocs=0)
+            lens = np.concatenate(lens)
+            closed.append((_block_id(*key, seq), *key, seq, len(lens),
+                           len(tokens), name, 4 * len(tokens), len(framed),
+                           framed, ids, lens))
+            size += len(framed)
 
-        def emit_batch():
-            nonlocal out_bytes
-            id_counts = np.fromiter(
-                (sum(len(f) for f in frags) for frags in out_ids),
-                dtype=np.int64, count=len(out_ids))
-            id_offsets = np.concatenate(([0], np.cumsum(id_counts)))
-            id_values = pa.concat_arrays(
-                [f for frags in out_ids for f in frags])
-            len_counts = np.fromiter((len(a) for a in out_lens),
-                                     dtype=np.int64, count=len(out_lens))
-            len_offsets = np.concatenate(([0], np.cumsum(len_counts)))
-            len_values = np.concatenate(out_lens)
-            batch = pa.record_batch([
-                pa.array(out["block_id"], pa.string()),
-                pa.array(out["source"], pa.string()),
-                pa.array(out["bucket"], pa.int32()),
-                pa.array(out["seq"], pa.int32()),
-                pa.array(out["n_docs"], pa.int32()),
-                pa.array(out["n_tokens"], pa.int64()),
+        def emit():
+            nonlocal size
+            (bid, source, bucket, seq, n_docs, n_tokens, codec, orig, comp,
+             payload, ids, lens) = zip(*closed)
+            offsets = pa.array(np.cumsum((0, *n_docs)), pa.int32())
+            closed.clear()
+            size = 0
+            return pa.record_batch([
+                pa.array(bid, pa.string()),
+                pa.array(source, pa.string()),
+                pa.array(bucket, pa.int32()),
+                pa.array(seq, pa.int32()),
+                pa.array(n_docs, pa.int32()),
+                pa.array(n_tokens, pa.int64()),
                 pa.ListArray.from_arrays(
-                    pa.array(id_offsets, pa.int32()), id_values),
+                    offsets, pa.concat_arrays([a for b in ids for a in b])),
                 pa.ListArray.from_arrays(
-                    pa.array(len_offsets, pa.int32()),
-                    pa.array(len_values.astype(np.int32, copy=False))),
-                pa.array(out["codec"], pa.string()),
-                pa.array(out["orig_bytes"], pa.int64()),
-                pa.array(out["comp_bytes"], pa.int64()),
-                _binary_array(out["payload"], out["comp_bytes"]),
+                    offsets, pa.array(np.concatenate(lens))),
+                pa.array(codec, pa.string()),
+                pa.array(orig, pa.int64()),
+                pa.array(comp, pa.int64()),
+                _binary_array(payload, comp),
             ], schema=out_schema)
-            for v in out.values():
-                v.clear()
-            out_ids.clear()
-            out_lens.clear()
-            out_bytes = 0
-            return batch
 
         for rb in batches:
-            n = rb.num_rows
-            if n == 0:
+            if not rb.num_rows:
                 continue
-            sources = rb.column("source").to_numpy(zero_copy_only=False)
-            if mapside:
-                bucks = np.full(n, pid, dtype=np.int64)
-            else:
-                bucks = rb.column("bucket").to_numpy(zero_copy_only=False)
-            ids_arr = rb.column("doc_id")
-            tok_col = rb.column("tokens")
-            offs = tok_col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            flat = tok_col.values.to_numpy(zero_copy_only=False)
-            if flat.dtype != np.int32:
-                flat = flat.astype(np.int32)
+            # key codes: source dictionary index << 32 | bucket; each
+            # key's rows, ascending, from one stable argsort
+            src = rb.column("source").dictionary_encode(null_encoding="encode")
+            names = src.dictionary.to_pylist()
+            codes = src.indices.to_numpy().astype(np.int64) << 32 | (
+                pid if mapside else rb.column("bucket").to_numpy())
+            order = np.argsort(codes, kind="stable")
+            key_rows = np.split(order,
+                                np.flatnonzero(np.diff(codes[order])) + 1)
+            doc_ids, toks = rb.column("doc_id"), rb.column("tokens")
+            offs = toks.offsets.to_numpy().astype(np.int64)
+            flat = toks.values.to_numpy(zero_copy_only=False).astype(
+                np.int32, copy=False)
             doc_lens = np.diff(offs).astype(np.int32)
-            # group boundaries within the batch (usually 0 or few)
-            chg = np.flatnonzero(
-                (sources[1:] != sources[:-1]) | (bucks[1:] != bucks[:-1])) + 1
-            bounds = np.concatenate(([0], chg, [n]))
-            for g0, g1 in zip(bounds[:-1], bounds[1:]):
-                key = (sources[g0], int(bucks[g0]))
-                cur = open_blocks.get(key)
-                if cur is None:
-                    cur = open_blocks[key] = _fresh()
-                # block cut points via cumulative token counts
-                cum = np.cumsum(doc_lens[g0:g1], dtype=np.int64) + cur["ntok"]
-                cuts = [g0]
-                target = block_tokens
-                while True:
-                    nxt = int(np.searchsorted(cum, target)) + 1
-                    if nxt >= g1 - g0:
-                        break
-                    cuts.append(g0 + nxt)
-                    target = cum[nxt - 1] + block_tokens
-                cuts.append(g1)
-                for c0, c1 in zip(cuts[:-1], cuts[1:]):
-                    cur["toks"].append(flat[offs[c0]:offs[c1]])
-                    cur["ids"].append(ids_arr.slice(c0, c1 - c0))
-                    cur["lens"].append(doc_lens[c0:c1])
-                    cur["ndocs"] += c1 - c0
-                    cur["ntok"] = int(cum[c1 - g0 - 1]
-                                      - (cum[c0 - g0 - 1] if c0 > g0 else 0))
-                    if c1 != g1 or cur["ntok"] >= block_tokens:
-                        flush_block(key)
-                        if out_bytes >= _OUT_FLUSH_BYTES:
-                            yield emit_batch()
-        for key in list(open_blocks):
-            flush_block(key)
-        if out["block_id"]:
-            yield emit_batch()
+            full = []  # (filling row, key, block) of the blocks filled
+            for rows in sorted(key_rows, key=lambda r: r[0]):
+                code = int(codes[rows[0]])
+                key = (names[code >> 32], code & 0xFFFFFFFF)
+                blk = opened.setdefault(key, [[], [], [], 0])
+                cum = np.cumsum(doc_lens[rows], dtype=np.int64) + blk[3]
+                a, base = 0, 0
+                while a < len(rows):
+                    b = min(len(rows),
+                            int(np.searchsorted(cum, base + block_tokens)) + 1)
+                    piece = rows[a:b]
+                    # one token slice per run of consecutive rows
+                    lo, hi = piece[:1], piece[-1:] + 1
+                    if hi[0] - lo[0] != b - a:
+                        brk = np.diff(piece) != 1
+                        lo = piece[np.concatenate(([True], brk))]
+                        hi = piece[np.concatenate((brk, [True]))] + 1
+                    blk[0] += [flat[i:j] for i, j in
+                               zip(offs[lo].tolist(), offs[hi].tolist())]
+                    blk[1].append(doc_ids.slice(lo[0], b - a) if len(lo) == 1
+                                  else doc_ids.take(piece))
+                    blk[2].append(doc_lens[piece])
+                    blk[3] = int(cum[b - 1]) - base
+                    if blk[3] >= block_tokens:
+                        full.append((piece[-1], key, blk))
+                        blk = opened[key] = [[], [], [], 0]
+                    a, base = b, int(cum[b - 1])
+            for _, key, blk in sorted(full, key=lambda f: f[0]):
+                close(key, *blk)
+                if size >= _OUT_FLUSH_BYTES:
+                    yield emit()
+        for key, blk in opened.items():
+            if blk[2]:
+                close(key, *blk)
+        if closed:
+            yield emit()
 
     return encode_iter
 
@@ -468,10 +437,10 @@ def encode_table(spark: SparkSession, df: DataFrame, out_dir: str,
     kept = _start_run(out_dir, None if mapside else _table_plan(df, cfg),
                       resume)
     done = sorted({(s, b) for rec in kept for s, b, *_ in rec["groups"]})
-    kernel, codec = _encode_iter_factory(cfg, mapside), cfg.parquet_codec
+    kernel = _encode_iter_factory(cfg, mapside)
     _encode_input(df, cfg, spark.createDataFrame(
         done, "source string, bucket int") if done else None).mapInArrow(
-        lambda batches: _sink_task(out_dir, codec, kernel(batches),
+        lambda batches: _sink_task(out_dir, kernel(batches),
                                    by_key=not mapside), _TOTALS_DDL).collect()
     return {**refresh_manifest(out_dir), "skipped_partitions": len(done)}
 

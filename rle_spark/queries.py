@@ -56,9 +56,8 @@ def q_run_length_histogram(spark, sf_dir):
 
 
 def q_column_codec_stats(spark, sf_dir):
-    return (analyze.column_codec_stats(_ts(spark, sf_dir, "lineitem"),
-                                       STAT_COLS, LINE_ORDER)
-            .orderBy("col_name"))
+    return analyze.column_codec_stats(_ts(spark, sf_dir, "lineitem"),
+                                      STAT_COLS, LINE_ORDER)
 
 
 def q_width2_run_histogram(spark, sf_dir):
@@ -135,9 +134,8 @@ def q_unaligned16_run_histogram(spark, sf_dir):
 
 
 def q_lru_recurrence(spark, sf_dir):
-    return (analyze.lru_recurrence(_ts(spark, sf_dir, "orders"),
-                                   "o_orderstatus", ["o_orderkey"])
-            .orderBy("k"))
+    return analyze.lru_recurrence(_ts(spark, sf_dir, "orders"),
+                                  "o_orderstatus", ["o_orderkey"])
 
 
 def q_codec_selection(spark, sf_dir):

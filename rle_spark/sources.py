@@ -473,8 +473,8 @@ def _start_run(out_dir: str, plan: list | None, resume: bool) -> list[dict]:
     return list(kept.values())
 
 
-def _sink_task(out_dir: str, codec: str, blocks, subdir: str = "",
-               by_key: bool = False, **lineage):
+def _sink_task(out_dir: str, blocks, subdir: str = "", by_key: bool = False,
+               **lineage):
     """The one block sink, run inside a task over the encode kernel's
     (unstarted) block batches `blocks`; yields the task's one totals
     row. Every encode writer commits through it:
@@ -488,11 +488,12 @@ def _sink_task(out_dir: str, codec: str, blocks, subdir: str = "",
                           one file per key without the source and
                           bucket columns, as partitionBy writes them
 
-    Files are PLAIN parquet, written behind the kernel on the
-    `_bounded_thread` helper, into a tmp named after the task attempt
-    (a speculative duplicate never writes into the live attempt's
-    tmp) and committed by an atomic os.replace, so a re-run or a
-    duplicate overwrites rather than duplicates. Then each file's
+    Files are PLAIN parquet with EngineConfig.parquet_codec pages,
+    written behind the kernel on the `_bounded_thread` helper, into a
+    tmp named after the task attempt (a speculative duplicate never
+    writes into the live attempt's tmp) and committed by an atomic
+    os.replace, so a re-run or a duplicate overwrites rather than
+    duplicates. Then each file's
     lineage JSON commits the same way at the mirrored path under
     lineage/: its totals, its per-(source, bucket, codec) rollup (what
     manifest_from_lineage folds), task_wall_sec and the `lineage`
@@ -522,7 +523,8 @@ def _sink_task(out_dir: str, codec: str, blocks, subdir: str = "",
             # both sides; on a 31 MB task file the block scan took
             # 53 -> 41 ms and the write 80 -> 60-67 ms (4-cpu host)
             os.makedirs(os.path.dirname(f[2]), exist_ok=True)
-            f[0] = pq.ParquetWriter(f[2], rb.schema, compression=codec,
+            f[0] = pq.ParquetWriter(f[2], rb.schema,
+                                    compression=EngineConfig.parquet_codec,
                                     use_dictionary=False)
         f[0].write_batch(rb)
 
@@ -654,8 +656,7 @@ def encode_parquet_dir_direct(spark: SparkSession, src_dir: str,
 
     job, units, n_tasks = _map_splits(
         spark, src_dir, lambda splits: _sink_task(
-            out_dir, cfg.parquet_codec, encode(splits),
-            splits=[list(s) for s in splits]),
+            out_dir, encode(splits), splits=[list(s) for s in splits]),
         _TOTALS_DDL, target_split_bytes, n_tasks)
     # The FULL EngineConfig (selector effort/allow-list, parquet codec,
     # layout, ...) is in the fingerprint: resuming after any

@@ -49,7 +49,7 @@ def _epoch(out_dir: str, cfg: EngineConfig, df: DataFrame,
     for sub in ("blocks", "lineage"):
         shutil.rmtree(os.path.join(out_dir, sub, subdir), ignore_errors=True)
     kernel, prefix = _encode_iter_factory(cfg, mapside=True), f"e{epoch_id}:"
-    df.mapInArrow(lambda batches: _sink_task(out_dir, cfg.parquet_codec, (
+    df.mapInArrow(lambda batches: _sink_task(out_dir, (
         rb.set_column(0, "block_id", pc.binary_join_element_wise(
             prefix, rb.column("block_id"), "")) for rb in kernel(batches)),
         subdir=subdir), _TOTALS_DDL).collect()
@@ -124,9 +124,9 @@ def compact_blocks(spark: SparkSession, out_dir: str,
         os.makedirs(os.path.join(staged, sub, "epoch=-1"))
     (spark.read.schema(BLOCK_SCHEMA_DDL).parquet(blocks_path)
      .drop("epoch").repartition(int(n_files))
-     .mapInArrow(lambda batches: _sink_task(
-         staged, EngineConfig.parquet_codec, batches, subdir="epoch=-1"),
-         _TOTALS_DDL).collect())
+     .mapInArrow(lambda batches: _sink_task(staged, batches,
+                                            subdir="epoch=-1"),
+                 _TOTALS_DDL).collect())
     # pre-marker leftovers only: with no marker on disk, live data is
     # still fully under blocks/, so these copies are redundant garbage
     shutil.rmtree(old, ignore_errors=True)

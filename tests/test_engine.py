@@ -360,6 +360,84 @@ def test_encode_kernel_empty_input():
     assert _binary_array([], []).equals(pa.array([], pa.binary()))
 
 
+def _cut_rule(rows, block_tokens):
+    """The kernel's block cut, doc by doc over (key, doc_id, tokens) rows
+    in arrival order: a key's block closes at the first doc that brings
+    it to block_tokens, closed blocks go out in the order of the row
+    that filled them, and the open ones at the end in first-seen key
+    order. (block_id, doc_ids, doc_lens, tokens) per block."""
+    open_, seqs, out = {}, {}, []
+
+    def close(key):
+        docs, open_[key] = open_[key], []
+        seqs[key] = seq = seqs.get(key, -1) + 1
+        out.append((f"{key[0]}:{key[1]:05d}:{seq:06d}",
+                    [d for d, _ in docs], [len(t) for _, t in docs],
+                    [x for _, t in docs for x in t]))
+
+    for key, doc_id, tokens in rows:
+        open_.setdefault(key, []).append((doc_id, tokens))
+        if sum(len(t) for _, t in open_[key]) >= block_tokens:
+            close(key)
+    for key in [k for k, docs in open_.items() if docs]:
+        close(key)
+    return out
+
+
+def _oracle_case(name):
+    """(batches as pydicts, mapside) of one cut-rule case."""
+    rng = np.random.default_rng(len(name))
+    lens = {"interleaved": rng.integers(1, 40, 90),
+            "zero_length": [0, 0, 5, 0, 30, 0, 0, 12, 0, 33, 0, 0, 7, 0] * 4,
+            "exact_fill": [30, 34, 64, 1, 63, 64, 64, 0, 64, 2] * 3,
+            "null_and_empty_sources": rng.integers(0, 50, 60),
+            "clustered_two_buckets": rng.integers(0, 50, 70)}[name]
+    srcs = {"interleaved": ["a", "b", "c"], "zero_length": ["z", "z", "y"],
+            "exact_fill": ["x"], "null_and_empty_sources": [None, "", "n"],
+            "clustered_two_buckets": ["s"]}[name]
+    rows = [{"doc_id": f"d{i}", "source": srcs[i % len(srcs)],
+             "tokens": rng.integers(0, 9, n).tolist(),
+             "bucket": (i * 7 // 3) % 2} for i, n in enumerate(lens)]
+    step = len(rows) // 3 + 1
+    return ([rows[i:i + step] for i in range(0, len(rows), step)],
+            name != "clustered_two_buckets")
+
+
+@pytest.mark.parametrize("flush_bytes", [None, 1])
+@pytest.mark.parametrize("case", ["interleaved", "zero_length", "exact_fill",
+                                  "null_and_empty_sources",
+                                  "clustered_two_buckets"])
+def test_encode_kernel_matches_cut_rule(monkeypatch, case, flush_bytes):
+    """The kernel's blocks (ids, doc_ids, doc_lens, decoded tokens) and
+    their emission order equal the cut rule written again doc by doc,
+    over keys interleaved row by row across batches, zero-length docs,
+    docs that land exactly on block_tokens, null and "" sources as two
+    keys, and clustered keys with two buckets in one batch."""
+    import pyarrow as pa
+    from rle_spark import engine
+    from rle_spark.blocks import decode_block
+    if flush_bytes is not None:
+        monkeypatch.setattr(engine, "_OUT_FLUSH_BYTES", flush_bytes)
+    batches, mapside = _oracle_case(case)
+    schema = pa.schema([("doc_id", pa.string()),
+                        ("tokens", pa.list_(pa.int32())),
+                        ("source", pa.string())]
+                       + ([] if mapside else [("bucket", pa.int32())]))
+    cfg = EngineConfig(block_tokens=64, layout="mapside" if mapside
+                       else "clustered")
+    out = list(engine._encode_iter_factory(cfg, mapside)(
+        pa.RecordBatch.from_pylist(b, schema=schema) for b in batches))
+    got = [(r["block_id"], r["doc_ids"], r["doc_lens"],
+            decode_block(r["payload"]).tolist())
+           for b in out for r in b.to_pylist()]
+    rows = [((r["source"], 0 if mapside else r["bucket"]), r["doc_id"],
+             r["tokens"]) for b in batches for r in b]
+    assert got == _cut_rule(rows, 64)
+    assert len({key for key, *_ in rows}) > 1 or case == "exact_fill"
+    if flush_bytes == 1:
+        assert [b.num_rows for b in out[:-1]] == [1] * (len(out) - 1)
+
+
 def test_binary_array_offsets_never_wrap():
     """Values past the int32 offsets of a binary array raise before any
     buffer is built, instead of wrapping."""

@@ -557,14 +557,14 @@ def test_sink_retry_skips_committed_file_and_heals_lineage(tmp_path):
                           ("source", pa.string())]))
     out = str(tmp_path)
     blocks = _encode_iter_factory(CFG, mapside=True)(iter([batch]))
-    first = list(_sink_task(out, "zstd", blocks, subdir="epoch=-1"))
+    first = list(_sink_task(out, blocks, subdir="epoch=-1"))
     lin = os.path.join(out, "lineage", "epoch=-1", "part-00000.json")
     os.remove(lin)
 
     def boom(_):
         raise AssertionError("a committed task read its input")
 
-    again = list(_sink_task(out, "zstd", map(boom, [1]), subdir="epoch=-1"))
+    again = list(_sink_task(out, map(boom, [1]), subdir="epoch=-1"))
     assert again[0].to_pydict() == first[0].to_pydict()
     assert first[0].to_pydict()["n_docs"] == [30]
     assert os.path.exists(lin)
@@ -616,7 +616,7 @@ def test_file_transport_streams_block_batches(tmp_path, monkeypatch):
     out = str(tmp_path / "out")
     splits = [(src, 0, pq.ParquetFile(src).metadata.num_row_groups)]
     encode = sources._file_encode_iter(EngineConfig(layout="mapside"))
-    (totals,) = sources._sink_task(out, "zstd", watched(encode(splits)))
+    (totals,) = sources._sink_task(out, watched(encode(splits)))
     assert totals.to_pydict()["n_tokens"] == [flat.size]
     assert sum(pulls) == n_docs
     assert len(pulled_at_emit) >= 3
